@@ -26,6 +26,8 @@ IOT_REMARKS = ["calibrated", "maintenance visit", "battery low", "relocated"]
 IOT_EPOCH = datetime(2021, 10, 1)
 # mtimes of queue files: a fixed origin plus one minute per file
 IOT_MTIME0 = 1_633_046_400
+IOT_ROWS_PER_FILE = 2000
+IOT_SENSORS = 20
 
 
 @dataclass
@@ -34,9 +36,10 @@ class IotFile:
     rows: list[tuple]       # parsed rows, file order: (ts, sid, pm25, ...)
 
 
-def iot_files(out_dir: Path, seed: int, n_files: int, rows_per_file: int,
-              n_sensors: int = 20, first_index: int = 0) -> list[IotFile]:
-    """Write ``n_files`` F-1 IoT CSV files into ``out_dir``.
+def iot_files(out_dir: Path, seed: int, n_files: int,
+              first_index: int = 0) -> list[IotFile]:
+    """Write ``n_files`` F-1 IoT CSV files of ``IOT_ROWS_PER_FILE`` rows
+    into ``out_dir``.
 
     Each file covers a window of minutes for every sensor. Consecutive
     windows overlap by a third, so later files re-send keys of earlier
@@ -47,16 +50,16 @@ def iot_files(out_dir: Path, seed: int, n_files: int, rows_per_file: int,
     """
     out_dir.mkdir(parents=True, exist_ok=True)
     files = []
-    n_keys = max(1, int(rows_per_file / 1.1))
-    minutes = max(1, n_keys // n_sensors)
+    n_keys = int(IOT_ROWS_PER_FILE / 1.1)
+    minutes = n_keys // IOT_SENSORS
     step = max(1, (2 * minutes) // 3)
     for i in range(first_index, first_index + n_files):
         rng = random.Random(f"iot:{seed}:{i}")
         t0 = IOT_EPOCH + timedelta(minutes=i * step)
         keys = [(t0 + timedelta(minutes=m), s)
-                for m in range(minutes) for s in range(n_sensors)]
+                for m in range(minutes) for s in range(IOT_SENSORS)]
         rows = [_iot_row(rng, ts, s, seed) for ts, s in keys]
-        for _ in range(rows_per_file - len(rows)):
+        for _ in range(IOT_ROWS_PER_FILE - len(rows)):
             ts, s = keys[rng.randrange(len(keys))]
             rows.insert(rng.randrange(len(rows) + 1), _iot_row(rng, ts, s, seed))
         path = out_dir / f"zone1_airquality_{i:05d}.csv"
@@ -130,6 +133,16 @@ def _exact_variant(text: str) -> str:
     return text.upper().replace(".", "!")
 
 
+# Shares of a document batch, by design: docs that fail the quality gate
+# (three numbers) and case/punctuation variants of an earlier fresh doc
+# (exact duplicates). Fresh docs are WORDS_PER_DOC words long; a batch
+# holds DOCS_PER_BATCH docs.
+LOW_FRAC = 0.08
+EXACT_FRAC = 0.12
+WORDS_PER_DOC = 80
+DOCS_PER_BATCH = 400
+
+
 @dataclass
 class DocBatch:
     path: Path
@@ -138,17 +151,13 @@ class DocBatch:
     texts: dict[int, str] = field(default_factory=dict)
 
 
-def doc_batches(out_dir: Path, seed: int, n_batches: int, docs_per_batch: int,
-                words_per_doc: int, first_index: int = 0,
-                low_frac: float = 0.08, exact_frac: float = 0.12
-                ) -> list[DocBatch]:
-    """Write ``n_batches`` jsonl files of ``docs_per_batch`` documents.
+def doc_batches(out_dir: Path, seed: int, n_batches: int,
+                first_index: int = 0) -> list[DocBatch]:
+    """Write ``n_batches`` jsonl files of ``DOCS_PER_BATCH`` documents.
 
-    ``low_frac`` of the docs fail the quality gate by design (three
-    numbers); ``exact_frac`` are case/punctuation variants of a fresh doc
-    of this batch or of any earlier batch of the same call, so both the
-    in-batch and the cross-batch exact gates reject a known share; the
-    rest are fresh text.
+    Exact variants copy a fresh doc of this batch or of any earlier batch
+    of the same call, so both the in-batch and the cross-batch exact
+    gates reject a known share; the rest are fresh text.
     """
     vocab = vocabulary(seed)
     out_dir.mkdir(parents=True, exist_ok=True)
@@ -156,18 +165,18 @@ def doc_batches(out_dir: Path, seed: int, n_batches: int, docs_per_batch: int,
     history: list[str] = []
     for b in range(first_index, first_index + n_batches):
         rng = random.Random(f"docs:{seed}:{b}")
-        base = b * 10 * docs_per_batch
+        base = b * 10 * DOCS_PER_BATCH
         batch = DocBatch(out_dir / f"batch_{b:05d}.json", [])
-        for k in range(docs_per_batch):
+        for k in range(DOCS_PER_BATCH):
             doc_id = base + k
             r = rng.random()
-            if r < low_frac:
+            if r < LOW_FRAC:
                 text = " ".join(str(rng.randrange(10**6)) for _ in range(3))
                 batch.low_quality.add(doc_id)
-            elif r < low_frac + exact_frac and history:
+            elif r < LOW_FRAC + EXACT_FRAC and history:
                 text = _exact_variant(history[rng.randrange(len(history))])
             else:
-                text = _render(_sentence_words(rng, vocab, words_per_doc))
+                text = _render(_sentence_words(rng, vocab, WORDS_PER_DOC))
                 history.append(text)
             batch.ids.append(doc_id)
             batch.texts[doc_id] = text

@@ -5,24 +5,29 @@
 Runs one workload (see ``workloads.py``) in one local Spark session from
 the root of a source checkout. Set-up (session start, input generation,
 warm pass) is timed as ``setup_s``; then operations run back to back for
-``--seconds``. The outputs are checked, and the last line of stdout is
-one JSON object ``{"correct", "attempted", "failed", "metrics"}``.
+``--seconds`` (at least one). The outputs are checked, and the last line
+of stdout is one JSON object ``{"correct", "attempted", "failed",
+"metrics"}``.
 
-``--trace 0`` reports the end-to-end metrics. ``--trace 1`` is the traced
-run (``tracing.py``): with Spark's event log on, it sets up every
-workload BENCHMARK.json lists, times the named one once untraced for the
-overhead baseline, then installs the span wrappers and times each
-workload again; it reports the per-layer metrics of all of them.
+``--trace 0`` reports the end-to-end metrics: ``throughput_per_s``
+(records per second of timed wall), ``latency_p50_s`` (median operation
+time, with the sample count printed) and ``setup_s``. Each is measured
+wall time scaled to an idle host by the host-speed reference of
+``reference.py``, run in the same JVM just before and just after the
+timed loop; the measured figures, the scale, peak JVM RSS and the failed
+fraction are printed above the JSON line. A run has one operation when
+an operation outlasts ``--seconds``, so no percentile above the median
+is reported.
+
+``--trace 1`` is the traced run (``tracing.py``): with Spark's event log
+on, it sets up every workload BENCHMARK.json lists, runs each with the
+span wrappers installed, and reports the per-layer metrics of all of
+them; the tracing overhead is printed as a note.
 
 Everything the run writes stays under ``perfbench/.work/`` of the
 checkout. The runtime is set here, not in the package:
 ``SPARK_GRAFT_CPUS`` (all CPUs), ``SPARK_GRAFT_DRIVER_MEM`` (a quarter of
 RAM, at most 4g) and ``PYTHONPATH`` (the checkout, for Python workers).
-
-End-to-end metrics: ``op_cpu_s``, the median CPU seconds (driver process
-plus JVM) per operation, and ``setup_s``. Wall-clock throughput and
-latency, peak JVM RSS and the failed fraction are printed above the JSON
-line with the sample count.
 """
 
 from __future__ import annotations
@@ -37,6 +42,7 @@ import sys
 import time
 from pathlib import Path
 
+from reference import HostReference
 from tracing import TRACE_DIR, finish_traced_run, traced_run
 from workloads import WORK, WORKLOADS, jvm_hwm_mb, timed_loop
 
@@ -151,7 +157,6 @@ def stop_jvm(spark) -> None:
 
 def untraced_run(spark, cls, args, t_setup, session_s) -> dict:
     """Set up, warm, run the timed loop, check; end-to-end metrics."""
-
     wl = cls(spark, WORK, args.seed)
     shutil.rmtree(wl.work, ignore_errors=True)
     t = time.perf_counter()
@@ -162,16 +167,19 @@ def untraced_run(spark, cls, args, t_setup, session_s) -> dict:
     wl.warm()
     warm_s = time.perf_counter() - t
     setup_s = time.perf_counter() - t_setup
+    # the host's speed, measured on both sides of the timed loop
+    ref = HostReference(spark, WORK)
+    ref.measure()
     r = timed_loop(wl, args.seconds)
+    ref.measure()
     rss = jvm_hwm_mb(spark)
     errors = wl.check()
     lat = r["latencies"]
-    # CPU seconds, not wall: on a shared host the wall time of the same
-    # operation doubled in windows where other tenants stole 20-26% of
-    # the CPUs, while its CPU time rose by a third at most
+    k = ref.scale()
     metrics = {
-        "op_cpu_s": (statistics.median(r["cpu"]), "s"),
-        "setup_s": (setup_s, "s"),
+        "throughput_per_s": (r["records"] / (r["wall"] * k), "records/s"),
+        "latency_p50_s": (statistics.median(lat) * k, "s"),
+        "setup_s": (setup_s * k, "s"),
     }
     # a failed correctness check discredits every operation of the run
     failed = r["attempted"] if errors else r["failed"]
@@ -180,17 +188,16 @@ def untraced_run(spark, cls, args, t_setup, session_s) -> dict:
         "attempted": r["attempted"], "failed": failed, "metrics": metrics,
         "notes": {
             "samples": len(lat),
-            f"throughput_per_s ({wl.record}/s)": round(
-                r["records"] / r["wall"], 3),
-            "latency_p50_s": round(statistics.median(lat), 3),
-            "latencies_s": [round(x, 3) for x in lat],
-            "cpu_s": [round(x, 3) for x in r["cpu"]],
+            "host_scale": round(k, 4),
+            "reference_s": [round(x, 3) for x in ref.times],
+            "measured_latencies_s": [round(x, 3) for x in lat],
+            "measured_throughput_per_s": round(r["records"] / r["wall"], 3),
+            "measured_setup_s": {"total": round(setup_s, 3),
+                                 "session": round(session_s, 3),
+                                 "generate": round(gen_s, 3),
+                                 "warm": round(warm_s, 3)},
             "peak_rss_mb": round(rss, 1),
             "failed_frac": failed / max(1, r["attempted"]),
-            "steal_share": round(r["steal"], 3),
-            "setup_parts_s": {"session": round(session_s, 3),
-                              "generate": round(gen_s, 3),
-                              "warm": round(warm_s, 3)},
         },
     }
 

@@ -1,21 +1,24 @@
 """The benchmark workloads.
 
 Each workload is a closed loop with one client (the driver thread). It
-generates its inputs into files during set-up, runs one untimed warm
-operation on an input of its own, and then performs operations one at a
-time until the run's time is up. ``check`` compares the program's
+generates its inputs into files during set-up, runs untimed warm
+operations on inputs of their own, and then performs operations one at
+a time until the run's time is up. ``check`` compares the program's
 outputs with expectations computed in pure Python from the generated
 inputs.
 
 Sizing: an operation takes seconds, never a fraction of one, and none is
-timed before the warm operation; sub-second operations timed in a cold
-JVM moved by several percent between runs of unchanged code. On 4 CPUs
-one operation takes 5-15 s and the cold set-up 20-50 s, so a run times
-one operation: the budget of 4 + 22 x (workloads) runs leaves no room
-for more.
+timed before the warm pass; sub-second operations timed in a cold JVM
+moved by several percent between runs of unchanged code. On an idle
+4-vCPU host an operation takes 3-5 s and the set-up 13-20 s (a cold JVM
+plus the warm pass), and a busy shared host doubles both. So a run
+times one operation: the budget of 4 + 22 x (workloads) runs leaves no
+room for more.
 
 - ``iot_upsert``: one operation drops one IoT CSV file into the job's
-  queue and drains it with ``Pipeline.run_available``.
+  queue and drains it with ``Pipeline.run_available`` (load, dedupe,
+  MERGE upsert, then the descriptive, mode and hourly stats recomputed
+  over the whole table).
 - ``corpus_stream``: one operation drops one jsonl batch into the
   drop-box and drains it with ``StreamingCorpusIngest.drain``
   (AvailableNow, one file per trigger).
@@ -23,7 +26,6 @@ for more.
 
 from __future__ import annotations
 
-import os
 import shutil
 import sys
 import time
@@ -48,50 +50,27 @@ def jvm_hwm_mb(spark) -> float:
     raise RuntimeError("VmHWM not found")
 
 
-_TICK = os.sysconf("SC_CLK_TCK")
-
-
-def cpu_s(pid: int) -> float:
-    """CPU seconds used so far by this (driver) process and the JVM
-    ``pid``. CPU time is not charged while the host steals the CPU, so it
-    stays comparable when other tenants slow the machine down."""
-    with open(f"/proc/{pid}/stat") as f:
-        fields = f.read().rsplit(")", 1)[1].split()
-    return time.process_time() + (int(fields[11]) + int(fields[12])) / _TICK
-
-
-def steal_ticks() -> tuple[int, int]:
-    """(steal, total) CPU ticks of the whole machine so far."""
-    with open("/proc/stat") as f:
-        ticks = [int(x) for x in f.readline().split()[1:]]
-    return ticks[7], sum(ticks[:8])
-
-
 def timed_loop(wl, seconds: float, on_op=None) -> dict:
-    """Closed loop: next operation starts when the previous one ended.
-    Per operation: wall seconds and CPU seconds (driver + JVM)."""
-    pid = jvm_pid(wl.spark)
-    lat, cpu, records, attempted, failed = [], [], 0, 0, 0
-    steal0 = steal_ticks()
+    """Closed loop: the next operation starts when the previous one ended.
+    At least one operation runs. ``on_op(wl)`` replaces ``wl.op()`` (the
+    traced run's hook)."""
+    lat, records, attempted, failed = [], 0, 0, 0
     t0 = time.perf_counter()
     deadline = t0 + seconds
-    while time.perf_counter() < deadline and wl.has_next():
-        s, c = time.perf_counter(), cpu_s(pid)
+    while wl.has_next() and (not lat or time.perf_counter() < deadline):
+        s = time.perf_counter()
         n, ok = wl.op() if on_op is None else on_op(wl)
         lat.append(time.perf_counter() - s)
-        cpu.append(cpu_s(pid) - c)
         attempted += 1
         if ok:
             records += n
         else:
             failed += 1
     wall = time.perf_counter() - t0
-    steal1 = steal_ticks()
     if not wl.has_next() and wall < seconds:
         print(f"[{wl.name}] inputs ran out after {wall:.1f} s", file=sys.stderr)
-    return {"latencies": lat, "cpu": cpu, "records": records,
-            "attempted": attempted, "failed": failed, "wall": wall,
-            "steal": (steal1[0] - steal0[0]) / max(1, steal1[1] - steal0[1])}
+    return {"latencies": lat, "records": records, "attempted": attempted,
+            "failed": failed, "wall": wall}
 
 
 class Workload:
@@ -161,29 +140,33 @@ class Workload:
 
 # ------------------------------------------------------------------ iot_upsert
 
+IOT_COLS = ["DateTime", "Sensor_id", "PM25", "PM10", "AQI", "LAT", "LONG",
+            "Remarks"]
+# The descriptive and mode stats keep a timestamp, a string and a numeric
+# column: every branch of both operators runs, at well under half the
+# jobs of all eight columns (the run budget has no room for more).
+IOT_STATS_COLS = ("DateTime", "Sensor_id", "PM25")
+_NOT_STATS = ",".join(c for c in IOT_COLS if c not in IOT_STATS_COLS)
 IOT_JOB = {
     "TargetOrg": "bench", "TargetPackage": "iot", "TargetResource": "air",
     "PrimaryKey": "DateTime,Sensor_id", "Dedupe": "last", "Truncate": False,
-    "Stats": [{"Kind": "H", "GroupBy": "Sensor_id", "DropColumns": "LAT,LONG"}],
+    "Stats": [{"Kind": "descriptive", "DropColumns": _NOT_STATS},
+              {"Kind": "mode", "DropColumns": _NOT_STATS},
+              {"Kind": "H", "GroupBy": "Sensor_id", "DropColumns": "LAT,LONG"}],
 }
-IOT_COLS = ["DateTime", "Sensor_id", "PM25", "PM10", "AQI", "LAT", "LONG",
-            "Remarks"]
+IOT_FILES = 8
+# pandas describe(include='all') rows of a table with numeric and string
+# columns: count, unique, top, freq, mean, std, min, 25%, 50%, 75%, max
+IOT_DESCRIBE_ROWS = 11
 
 
 class IotUpsert(Workload):
     name = "iot_upsert"
     record = "rows"
 
-    def __init__(self, spark, work, seed, n_files=8, rows_per_file=2000):
-        super().__init__(spark, work, seed)
-        self.n_files = n_files
-        self.rows_per_file = rows_per_file
-
     def generate(self):
-        self.inputs = gen.iot_files(self.stage, self.seed, self.n_files,
-                                    self.rows_per_file)
+        self.inputs = gen.iot_files(self.stage, self.seed, IOT_FILES)
         self.warm_inputs = gen.iot_files(self.warm_stage, self.seed + 1, 1,
-                                         self.rows_per_file,
                                          first_index=90_000)
 
     def _open(self):
@@ -228,34 +211,45 @@ class IotUpsert(Workload):
             errors.append(
                 f"iot table: {len(got_rows)} rows, expected {len(expected)}; "
                 f"{len(got - want)} unexpected, {len(want - got)} missing")
-        # the hourly resample has one row per (sensor, hour)
+        # the hourly resample has one row per (sensor, hour); the mode
+        # table one row per tied modal value of the column with most ties
         hours = {(v[1], v[0].replace(minute=0, second=0))
                  for v in expected.values()}
-        got_n = self.sink.read(self.spark, "air-H").count()
-        if got_n != len(hours):
-            errors.append(f"air-H: {got_n} rows, expected {len(hours)}")
+        rows = {"air-H": len(hours), "air-stats": IOT_DESCRIBE_ROWS,
+                "air-mode": max(_ties([v[i] for v in expected.values()])
+                                for i, c in enumerate(IOT_COLS)
+                                if c in IOT_STATS_COLS)}
+        for name, n in rows.items():
+            got_n = self.sink.read(self.spark, name).count()
+            if got_n != n:
+                errors.append(f"{name}: {got_n} rows, expected {n}")
         return errors
 
 
+def _ties(values: list) -> int:
+    """How many values share the highest count (nulls ignored)."""
+    counts = Counter(v for v in values if v is not None)
+    top = max(counts.values(), default=0)
+    return sum(1 for c in counts.values() if c == top)
+
+
 # --------------------------------------------------------------- corpus_stream
+
+STREAM_BATCHES = 8
+# the stream path's batch time kept falling over its first five batches
+# in a fresh JVM (JIT); after one warm batch the timed batch varied by
+# 15% between runs, after two by 10%
+STREAM_WARM_BATCHES = 2
+
 
 class CorpusStream(Workload):
     name = "corpus_stream"
     record = "docs"
 
-    def __init__(self, spark, work, seed, n_batches=8, docs_per_batch=400,
-                 words_per_doc=80):
-        super().__init__(spark, work, seed)
-        self.n_batches = n_batches
-        self.docs_per_batch = docs_per_batch
-        self.words_per_doc = words_per_doc
-
     def generate(self):
-        self.inputs = gen.doc_batches(self.stage, self.seed, self.n_batches,
-                                      self.docs_per_batch, self.words_per_doc)
-        self.warm_inputs = gen.doc_batches(self.warm_stage, self.seed + 1, 1,
-                                           self.docs_per_batch,
-                                           self.words_per_doc,
+        self.inputs = gen.doc_batches(self.stage, self.seed, STREAM_BATCHES)
+        self.warm_inputs = gen.doc_batches(self.warm_stage, self.seed + 1,
+                                           STREAM_WARM_BATCHES,
                                            first_index=90_000)
 
     def _open(self):
@@ -279,8 +273,7 @@ class CorpusStream(Workload):
         errors = []
         if not self.done:
             return errors
-        audit = {r["__batch_id"]: r for r in
-                 self.spark.read.parquet(self.ingest.audit_dir).collect()}
+        audit = {r["__batch_id"]: r for r in self.audit_rows()}
         seen: set[str] = set()
         batches = self.done
         if len(audit) != len(batches):
