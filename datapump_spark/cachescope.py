@@ -26,6 +26,7 @@ lifetime SHORTER than the unscoped ``.persist()`` it replaces.
 
 from __future__ import annotations
 
+import re
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,18 +44,21 @@ def scoped_persist(df: DataFrame, storage_level=None) -> DataFrame:
     return out
 
 
-# Logical-plan node names whose presence in a frame's lineage makes a
+# Analyzed-plan node names whose presence in a frame's lineage makes a
 # multi-consumer persist worth its materialization barrier: wide steps
 # (each consumer would otherwise repeat an exchange) and Python-boundary
 # kernels (each consumer would otherwise re-run expensive per-row
 # Python). Plain narrow scans/projections are NOT here — recomputing
-# them is cheaper than the barrier (the q_benford lesson, r12).
-_WORTH_PERSISTING = (
-    "Aggregate", "Join", "Window", "Deduplicate", "Distinct",
-    "RepartitionByExpression", "Repartition", "Sort",
-    "MapInPandas", "MapInArrow", "BatchEvalPython", "ArrowEvalPython",
-    "FlatMapGroupsInPandas", "PythonUDF",
-)
+# them is cheaper than the barrier (the q_benford lesson, r12). A plain
+# Python UDF has no node of its own in the analyzed plan (it renders
+# inside a Project), so it does not count. Matched as a whole node name
+# at the start of a plan-tree line, after the tree-drawing prefix — never
+# as a substring, which a column alias like ``Join_Sort`` would hit.
+_WORTH_PERSISTING = re.compile(
+    r"^[\s:+-]*(?:Aggregate|Join|Window|Deduplicate|Distinct"
+    r"|RepartitionByExpression|Repartition|Sort"
+    r"|MapInPandas|MapInArrow|FlatMapGroupsInPandas)\b",
+    re.MULTILINE)
 
 
 def persist_shared(df: DataFrame, grows: bool = False) -> DataFrame:
@@ -81,7 +85,7 @@ def persist_shared(df: DataFrame, grows: bool = False) -> DataFrame:
         plan = df._jdf.queryExecution().analyzed().toString()
     except Exception:  # noqa: BLE001 — policy must never fail a query
         return scoped_persist(df)
-    if not any(n in plan for n in _WORTH_PERSISTING):
+    if not _WORTH_PERSISTING.search(plan):
         return df
     return scoped_persist(df)
 

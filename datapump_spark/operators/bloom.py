@@ -15,14 +15,16 @@ public primitives, both sides whole-stage-codegen:
   each key tests its k positions with ``element_at`` + bit masking inside
   ``forall`` — no Python, no shuffle, no join.
 
-Why a pipeline wants it: the incremental exact-dedup gate anti-joins
-every batch against the persisted fingerprint index — correct, but the
-join shuffles the whole batch even when 99% of it is novel. A Bloom
-pre-filter built FROM the index routes definite-novel rows (no false
-negatives, by construction) straight through with zero shuffle; only the
-``might``-members (true dups + fpp false positives) pay the exact
-anti-join. At 100 TB/day with a mostly-novel stream this converts the
-dedup gate from join-bound to scan-bound.
+What it is for: :func:`bloom_incremental_dedup` is an answer-identical
+variant of the incremental exact-dedup gate (operators/incremental), used
+by the ``q_bloom_dedup`` query; the streaming corpus ingest runs the plain
+gate. The plain gate anti-joins every batch against the fingerprint
+index, which shuffles the whole batch even when 99% of it is novel. A
+Bloom pre-filter built FROM the index routes definite-novel rows (no
+false negatives, by construction) straight through with zero shuffle;
+only the ``might``-members (true dups + fpp false positives) pay the
+exact anti-join, so on a mostly-novel batch the gate is scan-bound
+instead of join-bound.
 
 Reference parity: the reference has no membership index at all (its
 upsert re-reads the whole table, datapump.py:375-376); this is part of

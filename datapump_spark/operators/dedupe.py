@@ -7,24 +7,22 @@ means *file row order*, plus a ``DUPES: n/m`` diagnostic
 
 Spark design: "file row order" does not exist on a distributed scan, so the
 caller must provide (or we synthesize) an explicit ordering column. For batch
-CSV ingestion we synthesize one from ``monotonically_increasing_id()`` — it is
-monotone within each file-split and files are single-split at reference-scale
-inputs; for the oracle-checked variants we order by an existing unique key.
-Keep-first = ``row_number() OVER (PARTITION BY pk ORDER BY ord ASC) = 1``;
-keep-last flips to DESC. A plain ``dropDuplicates`` is NOT faithful for
-``last`` (SURVEY §2.3 F4).
+CSV ingestion we synthesize one with :func:`with_file_order`; for the
+oracle-checked variants we order by an existing unique key. Keep-first =
+``min_by(struct(row), ord)`` per PK group; keep-last = ``max_by``. A plain
+``dropDuplicates`` is NOT faithful for ``last`` (SURVEY §2.3 F4).
 
-Scale: the window shuffles once on the PK — the same shuffle an aggregation
-would need, no extra pass. At 100 TB the PK partitioning is the natural
-clustering for the downstream MERGE sink, so this shuffle is reused, and AQE
-splits skewed PK partitions. No collect, no Python rows.
+Scale: the aggregation shuffles once on the PK, with a map-side partial
+combine (one state row per key, so hot keys collapse before the shuffle) and
+no sort. At 100 TB the PK partitioning is the natural clustering for the
+downstream MERGE sink, so this shuffle is reused. No collect, no Python rows.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -48,44 +46,22 @@ def dedupe_by_key(
     keys: Sequence[str],
     order_col: str | Column,
     keep: str = "first",
-    strategy: str = "agg",
 ) -> DataFrame:
     """Keep exactly one row per key group: the one with min (keep='first')
     or max (keep='last') ``order_col``. Faithful port of datapump.py:446-456
     with explicit, deterministic ordering.
 
     ``keep=''`` (reference's falsy no-op, datapump.py:446) returns df as-is.
-
-    Strategies (identical results, different physical plans):
-    - ``agg`` (default): ``min_by/max_by(struct(*cols), ord)`` — a hash
-      aggregation with map-side partial combine and NO sort; each partial
-      state is one row per key. The scale winner: survives skewed keys
-      (partial combine collapses hot keys map-side) and never sorts 100 TB.
-    - ``window``: ``row_number() OVER (PARTITION BY keys ORDER BY ord)`` —
-      sort-based; kept for plan comparison and as the shape SQL users expect.
     """
     if not keep:
         return df
     if keep not in ("first", "last"):
         raise ValueError(f"keep must be 'first', 'last' or '' — got {keep!r}")
     ord_c = F.col(order_col) if isinstance(order_col, str) else order_col
-
-    if strategy == "agg":
-        pick = F.min_by if keep == "first" else F.max_by
-        row = F.struct(*[F.col(c) for c in df.columns])
-        out = df.groupBy(*[F.col(k) for k in keys]).agg(
-            pick(row, ord_c).alias("__row")
-        )
-        return out.select("__row.*")
-
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
-        ord_c.asc() if keep == "first" else ord_c.desc()
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    pick = F.min_by if keep == "first" else F.max_by
+    row = F.struct(*[F.col(c) for c in df.columns])
+    out = df.groupBy(*[F.col(k) for k in keys]).agg(pick(row, ord_c).alias("__row"))
+    return out.select("__row.*")
 
 
 def with_file_order(df: DataFrame, col_name: str = "__file_order") -> DataFrame:

@@ -12,7 +12,10 @@ no native upsert, so two profiles:
   a crash never leaves a missing/torn table, and upserted tables are
   partitioned by a PK hash bucket (``pk_bucket``) so a batch rewrites ONLY
   the buckets containing its keys — unaffected buckets are hardlinked into
-  the new version, byte-identical, O(1) data movement. At production scale
+  the new version, byte-identical, O(1) data movement. ``upsert`` and the
+  CDC ``apply_cdc`` share that one bucket-rewrite path and differ only in
+  the per-bucket merge, so both accept a table in either layout (a table
+  last written by ``overwrite`` is migrated into buckets). At production scale
   the same call shape maps to Delta ``MERGE INTO`` (log-backed ACID,
   partition-pruned merge-on-read); this class documents the seam and keeps
   semantics testable with zero extra dependencies. Single-writer: version
@@ -141,12 +144,8 @@ class ParquetMergeSink:
         history = [v for v in self.versions(table) if v != version]
         history.append(version)
         kept = history[-self.retain_versions:]
-        tmp = tdir / f"._hist-{time.time_ns()}"
-        tmp.write_text("\n".join(kept) + "\n")
-        tmp.replace(self._history_path(table))
-        tmp = tdir / f"._current-{time.time_ns()}"
-        tmp.write_text(version)
-        tmp.replace(self._pointer(table))
+        self._write_history(table, kept)
+        _replace_text(self._pointer(table), version)
         keep = set(kept)
         for d in tdir.glob("v-*"):
             if d.name not in keep and d.is_dir():
@@ -159,13 +158,13 @@ class ParquetMergeSink:
         only bytes no retained version references are freed."""
         versions = self.versions(table)
         kept, dropped = versions[-max(1, keep_last):], versions[:-max(1, keep_last)]
-        tdir = self.path(table)
-        tmp = tdir / f"._hist-{time.time_ns()}"
-        tmp.write_text("\n".join(kept) + "\n")
-        tmp.replace(self._history_path(table))
+        self._write_history(table, kept)
         for name in dropped:
-            shutil.rmtree(tdir / name, ignore_errors=True)
+            shutil.rmtree(self.path(table) / name, ignore_errors=True)
         return dropped
+
+    def _write_history(self, table: str, kept: Sequence[str]) -> None:
+        _replace_text(self._history_path(table), "\n".join(kept) + "\n")
 
     def _new_version(self, table: str) -> tuple[str, Path]:
         tdir = self.path(table)
@@ -275,63 +274,16 @@ class ParquetMergeSink:
                keys: Sequence[str]) -> None:
         """K2 MERGE: batch rows win on PK collision (reference upsert
         semantics; Delta equivalent: WHEN MATCHED UPDATE ALL / WHEN NOT
-        MATCHED INSERT ALL).
+        MATCHED INSERT ALL) — anti-join(current, batch keys) ∪ batch over
+        the affected buckets, see :meth:`_merge_buckets`."""
+        keys = list(keys)
 
-        Bounded cost: the table is partitioned by ``pk_bucket =
-        pmod(xxhash64(pk), n_buckets)``; only buckets containing batch keys
-        are scanned (partition-pruned), anti-joined, and rewritten.
-        Unaffected buckets are hardlinked into the new version —
-        byte-identical files, no data copied — matching the reference's
-        incremental upsert cost model (datapump.py:560-566) instead of a
-        full-table rewrite per batch."""
-        props = self.get_properties(table)
-        n = int(props.get("bucket_count", self.n_buckets))
-        stored_keys = props.get("bucket_keys")
-        if stored_keys is not None and list(stored_keys) != list(keys):
-            raise ValueError(
-                f"table {table!r} bucketed by {stored_keys}, upsert keyed by {list(keys)}")
-        bdf = df.withColumn(BUCKET_COL, self._bucket_expr(keys, n))
+        def merge(current: DataFrame, batch: DataFrame) -> DataFrame:
+            kept = current.join(batch.select(*keys).distinct(), on=keys,
+                                how="left_anti")
+            return kept.unionByName(batch, allowMissingColumns=True)
 
-        cur_dir = self.current_version(table)
-        bucketed = cur_dir is not None and any(cur_dir.glob(f"{BUCKET_COL}=*"))
-        if cur_dir is None or not bucketed:
-            # first write (or one-time migration of a non-bucketed table)
-            if cur_dir is not None:
-                current = self.read(spark, table)
-                batch_keys = df.select(*keys).distinct()
-                kept = current.join(batch_keys, on=list(keys), how="left_anti")
-                bdf = kept.withColumn(BUCKET_COL, self._bucket_expr(keys, n)) \
-                          .unionByName(bdf, allowMissingColumns=True)
-            name, vdir = self._new_version(table)
-            bdf.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(str(vdir))
-            self._publish(table, name)
-            self.set_properties(table, bucket_count=n, bucket_keys=list(keys))
-            return
-
-        affected = sorted(
-            r[BUCKET_COL] for r in bdf.select(BUCKET_COL).distinct().collect())
-        # mergeSchema for the same reason as read(): earlier evolutions
-        # may have left mixed-schema buckets behind
-        current = spark.read.option("mergeSchema", "true").parquet(
-            str(cur_dir))  # includes pk_bucket
-        cur_aff = current.where(F.col(BUCKET_COL).isin(affected))
-        batch_keys = df.select(*keys).distinct()
-        kept = cur_aff.join(batch_keys, on=list(keys), how="left_anti")
-        merged = kept.unionByName(bdf, allowMissingColumns=True)
-
-        name, vdir = self._new_version(table)
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(str(vdir))
-        # carry unaffected buckets over via hardlinks (same inode, zero copy)
-        affected_dirs = {f"{BUCKET_COL}={b}" for b in affected}
-        for bucket_dir in cur_dir.glob(f"{BUCKET_COL}=*"):
-            if bucket_dir.name in affected_dirs:
-                continue
-            dst = vdir / bucket_dir.name
-            dst.mkdir()
-            for fpath in bucket_dir.iterdir():
-                if fpath.is_file():
-                    (dst / fpath.name).hardlink_to(fpath)
-        self._publish(table, name)
+        self._merge_buckets(spark, df, table, keys, merge)
 
     def apply_cdc(self, spark: SparkSession, changes: DataFrame, table: str,
                   keys: Sequence[str], seq_cols: Sequence[str],
@@ -352,10 +304,10 @@ class ParquetMergeSink:
           state with :meth:`read_state`; compaction may drop tombstones
           older than the feed's reordering horizon.
 
-        Cost model identical to :meth:`upsert`: only buckets containing
-        batch keys are rewritten, the rest hardlink forward. Replaying
-        the same changelog is a no-op (idempotent), which is what a
-        streaming foreachBatch needs after a retry."""
+        Same write path and cost model as :meth:`upsert`: only buckets
+        containing batch keys are rewritten, the rest hardlink forward.
+        Replaying the same changelog is a no-op (idempotent), which is
+        what a streaming foreachBatch needs after a retry."""
         keys, seq_cols = list(keys), list(seq_cols)
         payload = [c for c in changes.columns
                    if c not in set(keys) | set(seq_cols) | {op_col}]
@@ -370,50 +322,86 @@ class ParquetMergeSink:
                     *[F.col(f"__w.{c}").alias(c) for c in seq_cols + payload],
                     F.col(f"__w.{TOMBSTONE_COL}").alias(TOMBSTONE_COL))
         )
-        if not self.exists(table):
-            self.upsert(spark, winners, table, keys)
-            return
+
+        def merge(current: DataFrame, batch: DataFrame) -> DataFrame:
+            # stored row survives unless a batch winner with seq >= its
+            # own exists for the key
+            w_seq = batch.select(*keys, seq_struct.alias("__wseq"))
+            kept = (
+                current.join(F.broadcast(w_seq), on=keys, how="left")
+                .where(F.col("__wseq").isNull()
+                       | (F.col("__wseq") < seq_struct))
+                .drop("__wseq")
+            )
+            c_seq = current.select(*keys, seq_struct.alias("__cseq"))
+            incoming = (
+                batch.join(F.broadcast(c_seq), on=keys, how="left")
+                .where(F.col("__cseq").isNull()
+                       | (seq_struct >= F.col("__cseq")))
+                .drop("__cseq")
+            )
+            return kept.unionByName(incoming, allowMissingColumns=True)
+
+        self._merge_buckets(spark, winners, table, keys, merge)
+
+    def _merge_buckets(self, spark: SparkSession, df: DataFrame, table: str,
+                       keys: list[str],
+                       merge: Callable[[DataFrame, DataFrame], DataFrame],
+                       ) -> None:
+        """The one MERGE write path. ``merge(current, batch)`` receives
+        the stored rows of the buckets the batch touches and the batch,
+        both carrying ``pk_bucket``, and returns those buckets' new rows.
+
+        Bounded cost: the table is partitioned by ``pk_bucket =
+        pmod(xxhash64(pk), n_buckets)``; only buckets containing batch keys
+        are scanned (partition-pruned), merged, and rewritten. Unaffected
+        buckets are hardlinked into the new version — byte-identical
+        files, no data copied — matching the reference's incremental
+        upsert cost model (datapump.py:560-566) instead of a full-table
+        rewrite per batch. A first write is the batch alone; a table last
+        written by :meth:`overwrite` migrates once, every row moved into
+        its bucket."""
         props = self.get_properties(table)
         n = int(props.get("bucket_count", self.n_buckets))
-        if props.get("bucket_keys") is not None \
-                and list(props["bucket_keys"]) != keys:
+        stored_keys = props.get("bucket_keys")
+        if stored_keys is not None and list(stored_keys) != keys:
             raise ValueError(
-                f"table {table!r} bucketed by {props['bucket_keys']}, "
-                f"CDC keyed by {keys}")
+                f"table {table!r} bucketed by {stored_keys}, merge keyed by {keys}")
+        bdf = df.withColumn(BUCKET_COL, self._bucket_expr(keys, n))
+
         cur_dir = self.current_version(table)
-        bw = winners.withColumn(BUCKET_COL, self._bucket_expr(keys, n))
-        affected = sorted(
-            r[BUCKET_COL] for r in bw.select(BUCKET_COL).distinct().collect())
-        current = spark.read.option("mergeSchema", "true").parquet(str(cur_dir))
-        cur_aff = current.where(F.col(BUCKET_COL).isin(affected))
-        w_seq = winners.select(
-            *keys, seq_struct.alias("__wseq"))
-        # stored row survives unless a batch winner with seq >= its own
-        # exists for the key
-        kept = (
-            cur_aff.join(F.broadcast(w_seq), on=keys, how="left")
-            .where(F.col("__wseq").isNull() | (F.col("__wseq") < seq_struct))
-            .drop("__wseq")
-        )
-        c_seq = cur_aff.select(*keys, seq_struct.alias("__cseq"))
-        incoming = (
-            bw.join(F.broadcast(c_seq), on=keys, how="left")
-            .where(F.col("__cseq").isNull() | (seq_struct >= F.col("__cseq")))
-            .drop("__cseq")
-        )
-        merged = kept.unionByName(incoming, allowMissingColumns=True)
+        affected = None
+        if cur_dir is None:
+            merged = bdf
+        elif not any(cur_dir.glob(f"{BUCKET_COL}=*")):
+            current = self.read(spark, table)
+            merged = merge(
+                current.withColumn(BUCKET_COL, self._bucket_expr(keys, n)), bdf)
+        else:
+            affected = sorted(
+                r[BUCKET_COL] for r in bdf.select(BUCKET_COL).distinct().collect())
+            # mergeSchema for the same reason as read(): earlier evolutions
+            # may have left mixed-schema buckets behind
+            current = spark.read.option("mergeSchema", "true").parquet(
+                str(cur_dir))  # includes pk_bucket
+            merged = merge(current.where(F.col(BUCKET_COL).isin(affected)), bdf)
+
         name, vdir = self._new_version(table)
         merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(str(vdir))
-        affected_dirs = {f"{BUCKET_COL}={b}" for b in affected}
-        for bucket_dir in cur_dir.glob(f"{BUCKET_COL}=*"):
-            if bucket_dir.name in affected_dirs:
-                continue
-            dst = vdir / bucket_dir.name
-            dst.mkdir()
-            for fpath in bucket_dir.iterdir():
-                if fpath.is_file():
-                    (dst / fpath.name).hardlink_to(fpath)
+        if affected is not None:
+            # carry unaffected buckets over via hardlinks (same inode, zero copy)
+            affected_dirs = {f"{BUCKET_COL}={b}" for b in affected}
+            for bucket_dir in cur_dir.glob(f"{BUCKET_COL}=*"):
+                if bucket_dir.name in affected_dirs:
+                    continue
+                dst = vdir / bucket_dir.name
+                dst.mkdir()
+                for fpath in bucket_dir.iterdir():
+                    if fpath.is_file():
+                        (dst / fpath.name).hardlink_to(fpath)
         self._publish(table, name)
+        if affected is None:   # first write or migration: record the layout
+            self.set_properties(table, bucket_count=n, bucket_keys=keys)
 
     def read_state(self, spark: SparkSession, table: str) -> DataFrame:
         """Live CDC state: the table minus tombstone marker rows (and
@@ -423,6 +411,13 @@ class ParquetMergeSink:
             df = df.where(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))) \
                 .drop(TOMBSTONE_COL)
         return df
+
+
+def _replace_text(dst: Path, text: str) -> None:
+    """Write ``text`` to ``dst`` atomically (tmp file + os.replace)."""
+    tmp = dst.with_name(f".{dst.name}-{time.time_ns()}")
+    tmp.write_text(text)
+    tmp.replace(dst)
 
 
 def dedupe_batch_by_pk(batch: list[tuple], key_idx: Sequence[int]) -> list[tuple]:

@@ -52,6 +52,9 @@ DUCKDB_DATE_FORMATS = [
 # inference scan stays O(1) as the input grows.
 DEFAULT_INFER_SAMPLE_ROWS = 100_000
 
+# S4 scan options, shared by the batch reader and the streaming file source
+CSV_OPTIONS = {"header": True, "ignoreLeadingWhiteSpace": True, "nullValue": ""}
+
 
 def _shape_regex(fmt: str) -> str | None:
     """Anchored digit-shape regex for a fixed-width numeric format, or None
@@ -107,12 +110,7 @@ def read_csv_raw(spark: SparkSession, path: str) -> DataFrame:
     (datapump.py:444); empty strings become NULL like pandas' default NaN
     handling of empty fields.
     """
-    return (
-        spark.read.option("header", True)
-        .option("ignoreLeadingWhiteSpace", True)
-        .option("nullValue", "")
-        .csv(path)
-    )
+    return spark.read.options(**CSV_OPTIONS).csv(path)
 
 
 @dataclass(frozen=True)
@@ -198,13 +196,23 @@ def ingest_csv(
     ts_formats: Sequence[str] = DEFAULT_DATE_FORMATS,
     sample_rows: int | None = DEFAULT_INFER_SAMPLE_ROWS,
 ) -> DataFrame:
-    """S4+S5+P5 composed: raw scan → infer → typed projection.
-
-    The typed projection is pure column expressions (try_cast /
-    multi_format_ts) — whole-stage codegen, no Python.
-    """
+    """S4+S5+P5 composed: raw scan → infer → typed projection."""
     raw = read_csv_raw(spark, path)
-    fields = infer_ckan_fields(raw, ts_formats, sample_rows)
+    return project_typed(raw, infer_ckan_fields(raw, ts_formats, sample_rows),
+                         ts_formats)
+
+
+def project_typed(
+    df: DataFrame,
+    fields: Sequence[InferredField],
+    ts_formats: Sequence[str] = DEFAULT_DATE_FORMATS,
+) -> DataFrame:
+    """Cast each inferred field to its type; every other column of ``df``
+    (row-order or source-file bookkeeping) passes through after them.
+
+    Pure column expressions (try_cast / multi_format_ts) — whole-stage
+    codegen, no Python.
+    """
     cols = []
     for f in fields:
         if f.ckan_type == "timestamp":
@@ -213,4 +221,5 @@ def ingest_csv(
             cols.append(F.col(f.name))
         else:
             cols.append(F.col(f.name).try_cast(f.spark_type).alias(f.name))
-    return raw.select(*cols)
+    names = {f.name for f in fields}
+    return df.select(*cols, *[c for c in df.columns if c not in names])

@@ -36,6 +36,9 @@ from datapump_spark.operators.incremental import incremental_dedup
 from datapump_spark.operators.quality import gopher_filter
 
 DOC_SCHEMA = ("doc_id bigint, text string, lang string, source string")
+# the near-dup gate's persisted MinHash signature index
+MH_COLS = [f"mh{i}" for i in range(16)]
+SIG_SCHEMA = "doc_id bigint, " + ", ".join(f"{c} bigint" for c in MH_COLS)
 
 
 @dataclass
@@ -59,12 +62,6 @@ class StreamingCorpusIngest:
     # batch doc near-identical to PAST admitted content is rejected even
     # though that content's text is gone. None = exact-only (fp index).
     near_dup_threshold: float | None = None
-    # Bloom fast path for the exact cross-batch gate: build a filter from
-    # the persisted fp index each batch and route definite-novel rows
-    # around the anti-join (operators/bloom; answer-identical by the
-    # no-false-negative guarantee). Worth it when batches are mostly
-    # novel — the common pretraining-ingest shape.
-    use_bloom: bool = False
     # Input format of the drop-box: 'jsonl' (DOC_SCHEMA files),
     # 'jsonl-compressed' (r12: the same files in any per-file
     # compression the corpus dispatch decodes) or 'wet'
@@ -100,30 +97,21 @@ class StreamingCorpusIngest:
     def gram_index_dir(self) -> str:
         return str(Path(self.out_dir) / "gram_index")
 
-    def _read_gram_index(self) -> DataFrame:
-        if os.path.isdir(self.gram_index_dir) and any(
-                f.endswith(".parquet")
-                for _, _, fs in os.walk(self.gram_index_dir) for f in fs):
-            return self.spark.read.parquet(self.gram_index_dir) \
-                .select("gram")
-        return self.spark.createDataFrame([], "gram bigint")
-
-    def _read_index(self) -> DataFrame:
-        if os.path.isdir(self.index_dir) and any(
-                f.endswith(".parquet") for _, _, fs in os.walk(self.index_dir)
-                for f in fs):
-            return self.spark.read.parquet(self.index_dir).select("fp")
-        return self.spark.createDataFrame([], "fp string")
-
-    def _read_sig_index(self) -> DataFrame:
-        if os.path.isdir(self.sig_index_dir) and any(
-                f.endswith(".parquet")
-                for _, _, fs in os.walk(self.sig_index_dir) for f in fs):
-            return self.spark.read.parquet(self.sig_index_dir) \
-                .select("doc_id", *[f"mh{i}" for i in range(16)])
-        schema = "doc_id bigint, " + ", ".join(
-            f"mh{i} bigint" for i in range(16))
+    def _read_index(self, path: str, schema: str,
+                    cols: list[str]) -> DataFrame:
+        """A persisted index's ``cols``, or an empty ``schema`` frame
+        before its first batch lands."""
+        if any(f.endswith(".parquet") for _, _, fs in os.walk(path)
+               for f in fs):
+            return self.spark.read.parquet(path).select(*cols)
         return self.spark.createDataFrame([], schema)
+
+    def _write_batch(self, df: DataFrame, batch_id: int, path: str) -> None:
+        """Overwrite this batch's ``__batch_id`` partition of ``path``."""
+        (df.withColumn("__batch_id", F.lit(batch_id))
+         .write.partitionBy("__batch_id")
+         .option("partitionOverwriteMode", "dynamic")
+         .mode("overwrite").parquet(path))
 
     def _handle_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # one row per doc id per batch: every downstream gate (and the
@@ -151,16 +139,9 @@ class StreamingCorpusIngest:
                     q.where(F.col("keep")).select("doc_id"), "doc_id", "semi")
                     .persist())
             n_good = good.count()
-            if self.use_bloom:
-                from datapump_spark.operators.bloom import (
-                    bloom_incremental_dedup,
-                )
-
-                admitted = bloom_incremental_dedup(
-                    good, self._read_index()).persist()
-            else:
-                admitted = incremental_dedup(good, self._read_index()) \
-                    .persist()
+            admitted = incremental_dedup(
+                good, self._read_index(self.index_dir, "fp string", ["fp"])
+            ).persist()
             sigs = None
             if self.near_dup_threshold is not None:
                 from datapump_spark.operators.incremental import (
@@ -174,17 +155,17 @@ class StreamingCorpusIngest:
                 # ZERO rows for the signature write. Cutting lineage
                 # freezes the pre-write state.
                 admitted2 = incremental_near_dup(
-                    admitted, self._read_sig_index(),
+                    admitted, self._read_index(
+                        self.sig_index_dir, SIG_SCHEMA, ["doc_id", *MH_COLS]),
                     threshold=self.near_dup_threshold) \
                     .localCheckpoint(eager=True)
                 # sub-shingle docs are admitted with null signatures —
                 # they carry nothing to probe against, keep them out of
                 # the persisted index
-                sigs = admitted2.select(
-                    "doc_id", *[f"mh{i}" for i in range(16)]) \
+                sigs = admitted2.select("doc_id", *MH_COLS) \
                     .where(F.col("mh0").isNotNull())
                 admitted.unpersist()
-                admitted = admitted2.drop(*[f"mh{i}" for i in range(16)])
+                admitted = admitted2.drop(*MH_COLS)
             grams_out = None
             if self.span_dedup_n is not None:
                 from datapump_spark.operators.incremental import (
@@ -196,7 +177,8 @@ class StreamingCorpusIngest:
                 # gram-index write below refreshes a path this plan read,
                 # so freeze the pre-write state
                 spans = incremental_span_dedup(
-                    admitted, self._read_gram_index(),
+                    admitted, self._read_index(
+                        self.gram_index_dir, "gram bigint", ["gram"]),
                     n=self.span_dedup_n).localCheckpoint(eager=True)
                 survivors = spans.where(F.col("clean_text") != "")
                 admitted = (
@@ -211,27 +193,17 @@ class StreamingCorpusIngest:
                     n=self.span_dedup_n)
             n_adm = admitted.count()
 
-            part = {"partitionOverwriteMode": "dynamic"}
-            (admitted.drop("fp").withColumn("__batch_id", F.lit(batch_id))
-             .write.partitionBy("__batch_id").options(**part)
-             .mode("overwrite").parquet(self.corpus_dir))
-            (admitted.select("fp").withColumn("__batch_id", F.lit(batch_id))
-             .write.partitionBy("__batch_id").options(**part)
-             .mode("overwrite").parquet(self.index_dir))
+            self._write_batch(admitted.drop("fp"), batch_id, self.corpus_dir)
+            self._write_batch(admitted.select("fp"), batch_id, self.index_dir)
             if sigs is not None:
-                (sigs.withColumn("__batch_id", F.lit(batch_id))
-                 .write.partitionBy("__batch_id").options(**part)
-                 .mode("overwrite").parquet(self.sig_index_dir))
+                self._write_batch(sigs, batch_id, self.sig_index_dir)
             if grams_out is not None:
-                (grams_out.withColumn("__batch_id", F.lit(batch_id))
-                 .write.partitionBy("__batch_id").options(**part)
-                 .mode("overwrite").parquet(self.gram_index_dir))
+                self._write_batch(grams_out, batch_id, self.gram_index_dir)
             audit = self.spark.createDataFrame(
-                [(batch_id, n_in, n_in - n_good, n_good - n_adm, n_adm)],
-                "__batch_id bigint, n_in bigint, n_low_quality bigint, "
-                "n_dup bigint, n_admitted bigint")
-            (audit.write.partitionBy("__batch_id").options(**part)
-             .mode("overwrite").parquet(self.audit_dir))
+                [(n_in, n_in - n_good, n_good - n_adm, n_adm)],
+                "n_in bigint, n_low_quality bigint, n_dup bigint, "
+                "n_admitted bigint")
+            self._write_batch(audit, batch_id, self.audit_dir)
             good.unpersist()
             admitted.unpersist()
         finally:

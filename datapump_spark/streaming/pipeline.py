@@ -33,19 +33,21 @@ import time
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datapump_spark.jobspec import JobSpec, StatSpec
-from datapump_spark.operators.dedupe import dedupe_by_key
+from datapump_spark.operators.dedupe import dedupe_by_key, with_file_order
 from datapump_spark.operators.describe import describe_table
 from datapump_spark.operators.mode import column_modes
-from datapump_spark.operators.resample import freq_resample, numeric_columns
+from datapump_spark.operators.resample import freq_resample
 from datapump_spark.sinks.upsert import ParquetMergeSink
 from datapump_spark.sources.csv_ingest import (
+    CSV_OPTIONS,
     DEFAULT_DATE_FORMATS,
+    DEFAULT_INFER_SAMPLE_ROWS,
     infer_ckan_fields,
-    multi_format_ts,
+    project_typed,
     read_csv_raw,
 )
 
@@ -87,40 +89,23 @@ class Pipeline:
 
     # ------------------------------------------------------------ ingestion
 
-    def _typed_reader(self, sample_path: str):
-        """Infer the CKAN-style schema once from the present files, return
-        (raw streaming-compatible schema, typed projection fn)."""
-        raw = read_csv_raw(self.spark, sample_path)
-        from datapump_spark.sources.csv_ingest import DEFAULT_INFER_SAMPLE_ROWS
-        fields = infer_ckan_fields(raw, self.date_formats,
-                                   sample_rows=DEFAULT_INFER_SAMPLE_ROWS)
-
-        def project(df: DataFrame) -> DataFrame:
-            cols = []
-            for f in fields:
-                if f.ckan_type == "timestamp":
-                    cols.append(multi_format_ts(f.name, self.date_formats).alias(f.name))
-                elif f.ckan_type == "text":
-                    cols.append(F.col(f.name))
-                else:
-                    cols.append(F.col(f.name).try_cast(f.spark_type).alias(f.name))
-            return df.select(*cols, *[c for c in df.columns if c.startswith("__")])
-
-        return raw.schema, project
-
     def _load_file(self, path: Path) -> tuple[DataFrame, int, int]:
         """Read + type + dedupe ONE queue file (the reference's per-file
         loop, datapump.py:427-456). Returns (df, n_rows, n_dupes)."""
         raw = read_csv_raw(self.spark, str(path))
-        _, project = self._typed_reader(str(path))
-        from datapump_spark.operators.dedupe import with_file_order
-        typed = project(with_file_order(raw))
-        n_rows = typed.count()
+        fields = infer_ckan_fields(raw, self.date_formats,
+                                   DEFAULT_INFER_SAMPLE_ROWS)
+        typed = project_typed(with_file_order(raw), fields, self.date_formats)
         pk = self.job.primary_key
-        n_dupes = n_rows - typed.select(*pk).distinct().count()
+        # rows and distinct PK groups from one aggregation over per-key
+        # counts (a null key is one group, like pandas' duplicated)
+        n_rows, n_keys = (
+            typed.groupBy(*pk).agg(F.count(F.lit(1)).alias("cnt"))
+            .agg(F.sum("cnt"), F.count(F.lit(1))).first())
+        n_rows = n_rows or 0
         if self.job.dedupe:
             typed = dedupe_by_key(typed, pk, "__file_order", self.job.dedupe)
-        return typed.drop("__file_order"), n_rows, n_dupes
+        return typed.drop("__file_order"), n_rows, n_rows - n_keys
 
     # ------------------------------------------------------------ stats (Entry 3)
 
@@ -238,26 +223,24 @@ class Pipeline:
         sample = self.queue_files()
         if not sample:
             raise FileNotFoundError(f"no files match {self.job.input_file}")
-        schema, project = self._typed_reader(str(sample[0]))
-        reader = (
-            self.spark.readStream.schema(schema)
-            .option("header", True)
-            .option("ignoreLeadingWhiteSpace", True)
-            .option("nullValue", "")
-        )
+        raw = read_csv_raw(self.spark, str(sample[0]))
+        fields = infer_ckan_fields(raw, self.date_formats,
+                                   DEFAULT_INFER_SAMPLE_ROWS)
+        reader = self.spark.readStream.schema(raw.schema).options(**CSV_OPTIONS)
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        glob_dir = str(Path(self.job.input_file).parent / Path(self.job.input_file).name)
         # carry source-file identity so a multi-file trigger reproduces the
         # batch path's per-file-dedupe + oldest-first-upsert semantics
         stream_df = (
-            reader.csv(glob_dir)
+            reader.csv(self.job.input_file)
             .withColumn("__src_mtime", F.col("_metadata.file_modification_time"))
             .withColumn("__src_path", F.col("_metadata.file_path"))
         )
 
         def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-            typed = project(batch_df.withColumn("__row", F.monotonically_increasing_id()))
+            typed = project_typed(
+                batch_df.withColumn("__row", F.monotonically_increasing_id()),
+                fields, self.date_formats)
             pk = list(self.job.primary_key)
             if self.job.dedupe:
                 # 1) reference per-FILE dedupe (keep first/last in file row

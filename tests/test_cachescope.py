@@ -103,3 +103,20 @@ def test_persist_shared_policy(spark):
     # grows=True must return the input unchanged (no new persist)
     assert grown is wide
     release_scope(spark)
+
+
+def test_persist_shared_matches_node_names_not_aliases(spark):
+    """The policy reads plan NODE names: a narrow projection whose alias
+    spells node names stays unpersisted, an aggregate still persists."""
+    from pyspark.sql import functions as F
+
+    from datapump_spark.cachescope import persist_shared, release_scope
+
+    release_scope(spark)
+    aliased = spark.range(100).select(F.col("id").alias("Join_Sort"))
+    assert persist_shared(aliased).storageLevel.useMemory is False
+
+    agg = spark.range(100).groupBy((F.col("id") % 3).alias("Join_Sort")) \
+        .agg(F.count("*").alias("n"))
+    assert persist_shared(agg).storageLevel.useMemory is True
+    release_scope(spark)

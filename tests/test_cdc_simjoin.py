@@ -188,6 +188,25 @@ def test_apply_cdc_replay_idempotent(spark, tmp_path):
     assert {k: (s, v) for k, s, v in once} == _expected_state()
 
 
+def test_apply_cdc_migrates_overwrite_layout(spark, tmp_path):
+    """A table last written by overwrite() has no pk_bucket directories;
+    apply_cdc migrates it into buckets on the way, exactly as upsert
+    does (one merge write path)."""
+    from datapump_spark.sinks.upsert import BUCKET_COL, ParquetMergeSink
+
+    sink = ParquetMergeSink(tmp_path / "sink", n_buckets=4)
+    sink.overwrite(spark.createDataFrame(
+        [(1, 1, "a"), (2, 1, "b")], "k long, seq long, v string"), "t")
+    changes = spark.createDataFrame(
+        [(2, 2, "U", "B"), (3, 1, "I", "c"), (1, 2, "D", None)],
+        "k long, seq long, op string, v string")
+    sink.apply_cdc(spark, changes, "t", ["k"], ["seq"])
+    got = {(r["k"], r["seq"], r["v"])
+           for r in sink.read_state(spark, "t").collect()}
+    assert got == {(2, 2, "B"), (3, 1, "c")}
+    assert any(sink.current_version("t").glob(f"{BUCKET_COL}=*"))
+
+
 @pytest.mark.slow  # semantics gated in-default by
 # test_apply_cdc_micro_batches_match_batch (same operator, same log)
 def test_apply_cdc_streaming_foreachbatch(spark, tmp_path):

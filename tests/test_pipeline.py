@@ -74,6 +74,41 @@ def test_end_to_end(spark, env):
     assert audit.where("ok").count() >= 2
 
 
+AUDIT_CSV = """DateTime,Sensor_id,PM25
+2021-10-01 00:00:00,S01,1.0
+2021-10-01 00:00:00,S01,2.0
+2021-10-01 01:00:00,S01,3.0
+2021-10-01 00:00:00,S02,4.0
+2021-10-01 00:00:00, S02,5.0
+2021-10-01 00:00:00,S02,6.0
+2021-10-01 02:00:00,,7.0
+2021-10-01 02:00:00,S03,8.0
+"""
+
+
+@pytest.mark.parametrize("keep", ["first", "last"])
+def test_audit_counts_match_pandas(spark, tmp_path, keep):
+    """The audit row's processed/dupes are the reference's len(df) and
+    df.duplicated(subset=pk).sum() (datapump.py:449-450), in-file dupes
+    and an empty (null) key included."""
+    import pandas as pd
+
+    inbox = tmp_path / "input"
+    inbox.mkdir()
+    (inbox / "f.csv").write_text(AUDIT_CSV)
+    env = {"inbox": inbox, "sink": ParquetMergeSink(tmp_path / "lake"),
+           "processed": tmp_path / "processed",
+           "problems": tmp_path / "problems"}
+    expected = pd.read_csv(inbox / "f.csv", skipinitialspace=True)
+    pipe, job = make_pipeline(spark, env, Dedupe=keep, Stats=[])
+    assert pipe.run_available().processed
+
+    (row,) = env["sink"].read(spark, AUDIT_TABLE).collect()
+    assert row["ok"] and row["error"] is None
+    assert row["processed"] == len(expected) == 8
+    assert row["dupes"] == expected.duplicated(subset=job.primary_key).sum() == 3
+
+
 @pytest.mark.slow
 def test_idempotent_rerun(spark, env):
     pipe, job = make_pipeline(spark, env)

@@ -160,40 +160,6 @@ def test_cross_batch_near_dup_index(spark, tmp_path):
     assert sorted(r["doc_id"] for r in sig.collect()) == [1, 21]
 
 
-@pytest.mark.slow
-def test_bloom_fast_path_identical_admissions(spark, tmp_path):
-    """use_bloom=True routes definite-novel rows around the fp-index
-    anti-join (operators/bloom) — admissions and audit must be identical
-    to the exact path's on the same stream (no false negatives ⇒ the
-    filter is answer-transparent), including the mostly-duplicate second
-    batch that exercises the maybe-member join branch.
-
-    slow: answer transparency is driver-oracle-gated every round
-    (q_bloom_dedup's oracle IS the plain anti-join SQL) and pinned by
-    test_bloom's equals-exact-path test; the streaming index mechanics
-    run in-default through the exact-path ingest tests above."""
-    inp = tmp_path / "in"
-    inp.mkdir()
-    _write(inp, "b0.json", 1_000_000_000,
-           [_doc(1), _doc(2), _doc(3, "too short")])
-    _write(inp, "b1.json", 1_000_001_000,
-           [_doc(10), _doc(11, f"{GOOD} extra1"), _doc(2)])
-    ing = StreamingCorpusIngest(spark, str(inp), str(tmp_path / "out"),
-                                use_bloom=True)
-    ing.drain(tmp_path / "cp")
-    corpus = spark.read.parquet(ing.corpus_dir)
-    assert sorted(r["doc_id"] for r in corpus.collect()) == [1, 2, 10]
-    audit = {r["__batch_id"]: r for r in
-             spark.read.parquet(ing.audit_dir).collect()}
-    assert audit[0]["n_admitted"] == 2
-    assert audit[1]["n_dup"] == 2 and audit[1]["n_admitted"] == 1
-    # index stays consistent for a further batch
-    _write(inp, "b2.json", 1_000_002_000, [_doc(20), _doc(21, f"{GOOD} extra10")])
-    ing.drain(tmp_path / "cp")
-    assert sorted(r["doc_id"] for r in
-                  spark.read.parquet(ing.corpus_dir).collect()) == [1, 2, 10, 20]
-
-
 def _wet_bytes(records):
     """Minimal WET shard: (uri, text) pairs as conversion records."""
     out = b""
