@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from datapump_spark.cachescope import persist_shared, scoped_persist
 from datapump_spark.functions.hashing import hash63, tokens
+from datapump_spark.functions.sqltext import sql_ident
 
 
 def normalize_text(c: Column) -> Column:
@@ -112,7 +113,7 @@ def lsh_candidate_pairs(
     # the band-struct array as ONE parsed expression (was bands x
     # rows_per_band struct/lit/col py4j calls — r13, guide §7.3;
     # identical array literal, identical plan)
-    scope_sql = f", `{scope_col}` AS __scope" if scope_col else ""
+    scope_sql = f", {sql_ident(scope_col)} AS __scope" if scope_col else ""
 
     def _band_sql(b: int) -> str:
         rows = ", ".join(

@@ -23,6 +23,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from datapump_spark.functions.sqltext import sql_ident
+
 
 def _sql_lit(v) -> str:
     """SQL literal rendering for the string-predicate helpers below.
@@ -57,12 +59,6 @@ def _sql_lit(v) -> str:
         f"({v!r}); pass str/int/float/bool/None or build a Column predicate")
 
 
-def _sql_ident(col: str) -> str:
-    """Backtick-quoted identifier with embedded backticks escaped
-    (`` -> ````), so column names can never break out of the quoting."""
-    return f"`{col.replace('`', '``')}`"
-
-
 @dataclass(frozen=True)
 class Check:
     """One expectation: ``predicate`` is a boolean Column — or a SQL
@@ -84,24 +80,24 @@ class Check:
 
 
 def not_null(col: str) -> Check:
-    return Check(f"not_null:{col}", f"{_sql_ident(col)} IS NOT NULL")
+    return Check(f"not_null:{col}", f"{sql_ident(col)} IS NOT NULL")
 
 
 def in_range(col: str, lo, hi) -> Check:
     """Closed-interval range check (null fails via the coalesce above)."""
     return Check(f"in_range:{col}",
-                 f"{_sql_ident(col)} >= {_sql_lit(lo)} "
-                 f"AND {_sql_ident(col)} <= {_sql_lit(hi)}")
+                 f"{sql_ident(col)} >= {_sql_lit(lo)} "
+                 f"AND {sql_ident(col)} <= {_sql_lit(hi)}")
 
 
 def in_set(col: str, values) -> Check:
     return Check(f"in_set:{col}",
-                 f"{_sql_ident(col)} IN "
+                 f"{sql_ident(col)} IN "
                  f"({', '.join(_sql_lit(v) for v in values)})")
 
 
 def matches(col: str, regex: str) -> Check:
-    return Check(f"matches:{col}", f"{_sql_ident(col)} RLIKE {_sql_lit(regex)}")
+    return Check(f"matches:{col}", f"{sql_ident(col)} RLIKE {_sql_lit(regex)}")
 
 
 @dataclass

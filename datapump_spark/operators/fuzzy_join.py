@@ -48,6 +48,7 @@ from __future__ import annotations
 from itertools import product
 
 from datapump_spark.cachescope import scoped_persist
+from datapump_spark.functions.sqltext import sql_ident
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -81,13 +82,13 @@ def edit_distance_pairs(
     """
     if max_dist < 1:
         raise ValueError("max_dist must be ≥ 1")
-    t = F.col(text_col)
+    t = F.col(sql_ident(text_col))
     # numeric feature chains as parsed SQL (r13, guide §7.3): the
     # per-class translate/length chains and the 3^d combo structs were
     # ~400 py4j Column calls per build; identical expressions parsed
     # server-side. (SQL int/int division is fractional, like the
     # Column API's — floor() yields the same BIGINT bands.)
-    txt = f"`{text_col}`"
+    txt = sql_ident(text_col)
 
     def _count_sql(expr: str, chars: str) -> str:
         return (f"CAST(length({expr}) - "

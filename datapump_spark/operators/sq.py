@@ -60,7 +60,8 @@ def train_sq8(df: DataFrame, id_col: str = "vec_id",
     formulation would instead have widened to the longest). Emptiness
     is detected from count(1) in the same aggregate, not from lo0's
     nullness (dimension 0 being all-null is not emptiness) — r12
-    ADVICE."""
+    ADVICE. A dimension that is null in every row (ragged or
+    null-padded vectors) raises ValueError naming it."""
     from datapump_spark.operators.similarity import vec_dim
 
     base = _l2_normalized(df, id_col, vec_col, normalize)
@@ -72,6 +73,12 @@ def train_sq8(df: DataFrame, id_col: str = "vec_id",
     ).first()
     if row is None or row["n"] == 0:
         raise ValueError("train_sq8: empty corpus")
+    null_dims = [i for i in range(dim) if row[f"lo{i}"] is None]
+    if null_dims:
+        raise ValueError(
+            f"train_sq8: dimension {null_dims[0]} is null in every vector "
+            f"({len(null_dims)} all-null dimension(s) of {dim}); ragged or "
+            "null-padded vectors break the uniform-width contract")
     mins = [float(row[f"lo{i}"]) for i in range(dim)]
     steps = [(float(row[f"hi{i}"]) - float(row[f"lo{i}"])) / 255.0
              for i in range(dim)]

@@ -4,11 +4,18 @@ Each string is ANSI-ish SQL runnable by DuckDB with the testdata tables
 pre-registered as views. Column aliases match the Spark queries exactly
 (the driver sorts columns by name before value-hashing). Float policy
 mirrors queries.py: decimal-exact sums, round(…,6) statistics.
+
+Every twin goes into the one ``ORACLE_SQL`` dict, keyed by query name;
+bench variants (no exact SQL twin) have none. This module knows nothing
+about tiers: ``ORACLES`` (driver-gated, in ``queries.DRIVER_GATED``
+order) and ``EXTRA_ORACLES`` are views derived at the end of the module
+from the tiers declared in queries.py.
 """
 
 from __future__ import annotations
 
-from datapump_spark.queries import IOT_GLOB, JSONL_GLOB, WARC_GLOB
+from datapump_spark.queries import (DRIVER_GATED, EXTRA_QUERIES, IOT_GLOB,
+                                    WARC_GLOB)
 from datapump_spark.sources.csv_ingest import DUCKDB_DATE_FORMATS
 
 
@@ -36,7 +43,7 @@ def _dec_sum(expr: str, alias: str) -> str:
     return _DEC_SUM.format(expr=expr) + f" AS {alias}"
 
 
-ORACLES: dict[str, str] = {}
+ORACLE_SQL: dict[str, str] = {}
 
 # Scaled ingestion oracles: the CSV the Spark side reads is a deterministic
 # DuckDB serialization of the events view (queries.scaled_events_csv), so
@@ -46,19 +53,19 @@ ORACLES: dict[str, str] = {}
 # CSV floats parse back to the identical double on both engines).
 from datapump_spark.queries import SCALED_TS_SQL  # noqa: E402
 
-ORACLES["q_csv_scan"] = """
+ORACLE_SQL["q_csv_scan"] = """
 SELECT event_id, date_trunc('second', ts) AS "DateTime",
        user_id, event_type, round(value, 6) AS value
 FROM events
 """
 
-ORACLES["q_multiformat_ts"] = f"""
+ORACLE_SQL["q_multiformat_ts"] = f"""
 SELECT {SCALED_TS_SQL} AS raw_ts,
        date_trunc('second', ts) AS parsed_ts
 FROM events
 """
 
-ORACLES["q_type_infer"] = """
+ORACLE_SQL["q_type_infer"] = """
 SELECT * FROM (VALUES
   ('event_id', 'int'),
   ('DateTime', 'timestamp'),
@@ -68,9 +75,7 @@ SELECT * FROM (VALUES
 ) AS t(col_name, ckan_type)
 """
 
-EXTRA_IOT_ORACLES: dict[str, str] = {}
-
-EXTRA_IOT_ORACLES["q_iot_ingest"] = f"""
+ORACLE_SQL["q_iot_ingest"] = f"""
 WITH clean AS ({_IOT_CLEAN})
 SELECT {_dd_ts('dt')} AS "DateTime",
        "Sensor_id",
@@ -83,12 +88,12 @@ SELECT {_dd_ts('dt')} AS "DateTime",
 FROM clean
 """
 
-EXTRA_IOT_ORACLES["q_iot_multiformat_ts"] = f"""
+ORACLE_SQL["q_iot_multiformat_ts"] = f"""
 WITH clean AS ({_IOT_CLEAN})
 SELECT dt AS raw_ts, {_dd_ts('dt')} AS parsed_ts FROM clean
 """
 
-EXTRA_IOT_ORACLES["q_iot_type_infer"] = """
+ORACLE_SQL["q_iot_type_infer"] = """
 SELECT * FROM (VALUES
   ('DateTime', 'timestamp'),
   ('Sensor_id', 'text'),
@@ -101,11 +106,11 @@ SELECT * FROM (VALUES
 ) AS t(col_name, ckan_type)
 """
 
-ORACLES["q_drop_columns"] = """
+ORACLE_SQL["q_drop_columns"] = """
 SELECT event_id, ts, user_id, event_type, value FROM events
 """
 
-ORACLES["q_dupe_count"] = """
+ORACLE_SQL["q_dupe_count"] = """
 SELECT CAST((SELECT count(*) FROM events)
      - (SELECT count(*) FROM (SELECT DISTINCT user_id, event_type FROM events))
      AS BIGINT) AS dupe_count
@@ -118,28 +123,28 @@ SELECT event_id, ts, user_id, event_type, value, props FROM (
   FROM events e
 ) WHERE rn = 1
 """
-ORACLES["q_dedupe_first"] = _DEDUPE.format(dir="ASC")
-ORACLES["q_dedupe_last"] = _DEDUPE.format(dir="DESC")
+ORACLE_SQL["q_dedupe_first"] = _DEDUPE.format(dir="ASC")
+ORACLE_SQL["q_dedupe_last"] = _DEDUPE.format(dir="DESC")
 
-ORACLES["q_resample_hourly"] = """
+ORACLE_SQL["q_resample_hourly"] = """
 SELECT user_id, date_trunc('hour', ts) AS bucket_ts,
        round(avg(value), 6) AS avg_value
 FROM events GROUP BY 1, 2
 """
 
-ORACLES["q_resample_daily"] = """
+ORACLE_SQL["q_resample_daily"] = """
 SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS bucket_ts,
        round(avg(value), 6) AS avg_value
 FROM events GROUP BY 1, 2
 """
 
-ORACLES["q_resample_15min"] = """
+ORACLE_SQL["q_resample_15min"] = """
 SELECT user_id, time_bucket(INTERVAL '15 minutes', ts) AS bucket_ts,
        round(avg(value), 6) AS avg_value
 FROM events GROUP BY 1, 2
 """
 
-ORACLES["q_describe_numeric"] = """
+ORACLE_SQL["q_describe_numeric"] = """
 SELECT 'value' AS "column", s.stat, round(s.v, 6) AS value FROM (
             SELECT 'count' AS stat, CAST(count(value) AS DOUBLE) AS v FROM events
   UNION ALL SELECT 'mean', avg(value) FROM events
@@ -152,7 +157,7 @@ SELECT 'value' AS "column", s.stat, round(s.v, 6) AS value FROM (
 ) s
 """
 
-ORACLES["q_describe_string"] = """
+ORACLE_SQL["q_describe_string"] = """
 WITH counts AS (
   SELECT event_type AS v, count(*) AS cnt FROM events
   WHERE event_type IS NOT NULL GROUP BY 1
@@ -165,7 +170,7 @@ SELECT 'event_type' AS "column", s.stat, s.value FROM (
 ) s
 """
 
-ORACLES["q_mode"] = """
+ORACLE_SQL["q_mode"] = """
 WITH c1 AS (SELECT event_type AS v, count(*) AS cnt FROM events
             WHERE event_type IS NOT NULL GROUP BY 1),
 r1 AS (SELECT CAST(row_number() OVER (ORDER BY v ASC) - 1 AS BIGINT) AS stat,
@@ -179,7 +184,7 @@ r2 AS (SELECT CAST(row_number() OVER (ORDER BY v ASC) - 1 AS BIGINT) AS stat,
 SELECT stat, event_type, user_id FROM r1 FULL JOIN r2 USING (stat)
 """
 
-ORACLES["q_pricing_summary"] = f"""
+ORACLE_SQL["q_pricing_summary"] = f"""
 SELECT l_returnflag, l_linestatus,
        {_dec_sum('l_quantity', 'sum_qty')},
        {_dec_sum('l_extendedprice', 'sum_base_price')},
@@ -190,7 +195,7 @@ WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
 """
 
-ORACLES["q_star_revenue"] = f"""
+ORACLE_SQL["q_star_revenue"] = f"""
 SELECT r_name, n_name,
        {_dec_sum('l_extendedprice * (1.0 - l_discount)', 'revenue')},
        count(*) AS n_items
@@ -202,7 +207,7 @@ JOIN region   ON n_regionkey = r_regionkey
 GROUP BY r_name, n_name
 """
 
-ORACLES["q_top_customers"] = f"""
+ORACLE_SQL["q_top_customers"] = f"""
 SELECT c_custkey, c_name,
        {_dec_sum('o_totalprice', 'revenue')},
        count(*) AS n_orders
@@ -212,12 +217,12 @@ ORDER BY revenue DESC, c_custkey ASC
 LIMIT 10
 """
 
-ORACLES["q_json_extract"] = """
+ORACLE_SQL["q_json_extract"] = """
 SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
 FROM events
 """
 
-ORACLES["q_resample_dense"] = """
+ORACLE_SQL["q_resample_dense"] = """
 WITH agg AS (
   SELECT user_id, date_trunc('hour', ts) AS bucket_ts,
          round(avg(value), 6) AS avg_value
@@ -231,18 +236,18 @@ SELECT s.user_id, s.bucket_ts, a.avg_value
 FROM spine s LEFT JOIN agg a USING (user_id, bucket_ts)
 """
 
-ORACLES["q_resample_weekly"] = """
+ORACLE_SQL["q_resample_weekly"] = """
 SELECT user_id, CAST(date_trunc('week', ts) AS TIMESTAMP) AS bucket_ts,
        round(avg(value), 6) AS avg_value
 FROM events GROUP BY 1, 2
 """
 
-ORACLES["q_ts_format"] = """
+ORACLE_SQL["q_ts_format"] = """
 SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS ts_str
 FROM orders
 """
 
-ORACLES["q_sessionize"] = """
+ORACLE_SQL["q_sessionize"] = """
 WITH g AS (
   SELECT user_id, ts,
          lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev,
@@ -266,28 +271,28 @@ SELECT user_id, CAST(count(*) AS BIGINT) AS n_sessions,
 FROM ps GROUP BY user_id
 """
 
-ORACLES["q_rollup"] = f"""
+ORACLE_SQL["q_rollup"] = f"""
 SELECT l_returnflag, l_linestatus,
        {_dec_sum('l_quantity', 'sum_qty')},
        count(*) AS n
 FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """
 
-ORACLES["q_anti_join"] = """
+ORACLE_SQL["q_anti_join"] = """
 SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
 FROM customer c
 WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
                   AND o.o_orderpriority = '1-URGENT')
 """
 
-ORACLES["q_semi_join"] = """
+ORACLE_SQL["q_semi_join"] = """
 SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice
 FROM part p
 WHERE p_size > 40
   AND EXISTS (SELECT 1 FROM lineitem l WHERE l.l_partkey = p.p_partkey)
 """
 
-ORACLES["q_window_topn"] = """
+ORACLE_SQL["q_window_topn"] = """
 SELECT o_custkey, o_orderkey, o_totalprice, "rank" FROM (
   SELECT o_custkey, o_orderkey, o_totalprice,
          CAST(row_number() OVER (
@@ -308,7 +313,7 @@ def _h63(expr: str) -> str:
 
 _BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
-ORACLES["q_text_stats"] = f"""
+ORACLE_SQL["q_text_stats"] = f"""
 SELECT doc_id,
   CAST(length(text) AS BIGINT) AS n_chars,
   CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x != '')) AS BIGINT) AS n_tokens_ws,
@@ -320,7 +325,7 @@ FROM documents
 
 _STOPLIST = "['the','a','an','and','or','of','to','in','is','it']"
 
-ORACLES["q_quality_score"] = f"""
+ORACLE_SQL["q_quality_score"] = f"""
 WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
 SELECT doc_id, round(
     0.4 * least(1.0, len(toks) / 64.0)
@@ -346,7 +351,7 @@ _mk_scores = ",\n  ".join(
 _mk_case = " ".join(
     f"WHEN s_{lang} = g THEN '{lang}'" for lang in list(_MARKERS)[:-1]
 )
-ORACLES["q_lang_id"] = f"""
+ORACLE_SQL["q_lang_id"] = f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 s AS (SELECT doc_id,
   {_mk_scores}
@@ -358,7 +363,7 @@ FROM (SELECT *, greatest(s_en, s_de, s_es, s_fr, s_zh) AS g FROM s)
 
 _NORM = "regexp_replace(lower(text), '[^a-z0-9]', '', 'g')"
 
-ORACLES["q_fingerprint"] = f"""
+ORACLE_SQL["q_fingerprint"] = f"""
 WITH n AS (SELECT doc_id, {_NORM} AS nm FROM documents)
 SELECT doc_id, md5(nm) AS fp_md5,
   list_min(list_transform(range(1, greatest(length(nm) - 7, 1) + 1),
@@ -368,7 +373,7 @@ FROM n
 
 # ---------------------------------------------------------------- dedup family
 
-ORACLES["q_exact_dedup"] = f"""
+ORACLE_SQL["q_exact_dedup"] = f"""
 SELECT doc_id, text, lang, source, n_chars FROM (
   SELECT d.*, row_number() OVER (
     PARTITION BY md5({_NORM}) ORDER BY doc_id ASC) AS rn
@@ -391,7 +396,7 @@ _mh4 = ", ".join(
     f"min({mixed_hash_sql(_BASE_H, i)}) AS mh{i}" for i in range(4)
 )
 
-ORACLES["q_minhash_signature"] = f"""
+ORACLE_SQL["q_minhash_signature"] = f"""
 WITH {_SHINGLES_CTE}
 SELECT doc_id, {_mh4}
 FROM s GROUP BY doc_id
@@ -404,7 +409,7 @@ _band_conds = " OR ".join(
     "(" + " AND ".join(f"a.mh{b*4+r} = b.mh{b*4+r}" for r in range(4)) + ")"
     for b in range(4)
 )
-ORACLES["q_minhash_near_dup"] = f"""
+ORACLE_SQL["q_minhash_near_dup"] = f"""
 WITH {_SHINGLES_CTE},
 sig AS (SELECT doc_id, {_mh16} FROM s GROUP BY doc_id),
 cands AS (
@@ -422,7 +427,7 @@ FROM inter JOIN sz na ON na.doc_id = id_a JOIN sz nb ON nb.doc_id = id_b
 WHERE i / (na.n + nb.n - i) >= 0.5
 """
 
-ORACLES["q_ngram_jaccard"] = f"""
+ORACLE_SQL["q_ngram_jaccard"] = f"""
 WITH t AS (SELECT doc_id, source, {_TOKS} AS toks FROM documents),
 s AS (SELECT doc_id, source,
         unnest(list_distinct(list_transform(range(1, len(toks) - 1),
@@ -446,7 +451,7 @@ _sim_sums = ", ".join(
 _sim_bits = " + ".join(
     f"(CASE WHEN b{b} > 0 THEN {2**b} ELSE 0 END)" for b in range(32)
 )
-ORACLES["q_simhash"] = f"""
+ORACLE_SQL["q_simhash"] = f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 tok AS (SELECT doc_id, unnest(list_distinct(toks)) AS tok FROM t),
 h AS (SELECT doc_id, {_h63('tok')} AS h FROM tok),
@@ -454,7 +459,7 @@ b AS (SELECT doc_id, {_sim_sums} FROM h GROUP BY doc_id)
 SELECT doc_id, CAST({_sim_bits} AS BIGINT) AS simhash FROM b
 """
 
-ORACLES["q_embedding_near_dup"] = """
+ORACLE_SQL["q_embedding_near_dup"] = """
 WITH m AS (SELECT vec_id, embedding::DOUBLE[] AS v,
                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
            FROM embeddings)
@@ -466,7 +471,7 @@ WHERE list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.3
 
 # ---------------------------------------------------------------- similarity search
 
-ORACLES["q_cosine_topk"] = """
+ORACLE_SQL["q_cosine_topk"] = """
 WITH m AS (SELECT vec_id, embedding::DOUBLE[] AS v,
                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
            FROM embeddings),
@@ -485,7 +490,7 @@ QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id 
 
 # ---------------------------------------------------------------- relational extensions
 
-ORACLES["q_set_ops"] = """
+ORACLE_SQL["q_set_ops"] = """
 (SELECT c_custkey AS custkey FROM customer WHERE c_mktsegment = 'BUILDING'
  UNION
  SELECT c_custkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE')
@@ -495,13 +500,13 @@ EXCEPT
 SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
 """
 
-ORACLES["q_hash_sample"] = f"""
+ORACLE_SQL["q_hash_sample"] = f"""
 SELECT event_id, user_id, event_type, value
 FROM events
 WHERE {hash63_sql("'smp:' || CAST(event_id AS VARCHAR)")} % 20 = 0
 """
 
-ORACLES["q_asof_join"] = """
+ORACLE_SQL["q_asof_join"] = """
 WITH u AS (
   SELECT user_id, ts, event_id,
          CAST(NULL AS BIGINT) AS o_orderkey, 1 AS is_event
@@ -532,7 +537,7 @@ m AS (
   FROM documents)
 """
 
-ORACLES["q_media_stats"] = f"""
+ORACLE_SQL["q_media_stats"] = f"""
 WITH {_MEDIA_CTE}
 SELECT kind, format, count(*) AS n,
        CAST(sum(octet_length(payload)) AS BIGINT) AS total_bytes,
@@ -541,7 +546,7 @@ SELECT kind, format, count(*) AS n,
 FROM m GROUP BY kind, format
 """
 
-ORACLES["q_frame_sample"] = f"""
+ORACLE_SQL["q_frame_sample"] = f"""
 WITH {_MEDIA_CTE}
 SELECT media_id,
        CAST(unnest(generate_series(0, greatest(duration_ms // 1000 - 1, 0)))
@@ -553,8 +558,8 @@ FROM m WHERE kind = 'video'
 
 # ------------------------------------------------------- dedup clustering / sampling
 
-ORACLES["q_dup_clusters"] = f"""
-WITH RECURSIVE pairs AS ({ORACLES["q_minhash_near_dup"]}),
+ORACLE_SQL["q_dup_clusters"] = f"""
+WITH RECURSIVE pairs AS ({ORACLE_SQL["q_minhash_near_dup"]}),
 edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
           UNION ALL
           SELECT id_b, id_a FROM pairs),
@@ -566,20 +571,20 @@ SELECT node AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
 FROM reach GROUP BY node
 """
 
-ORACLES["q_group_cap"] = """
+ORACLE_SQL["q_group_cap"] = """
 SELECT doc_id, source FROM (
   SELECT doc_id, source,
          row_number() OVER (PARTITION BY source ORDER BY doc_id ASC) AS rn
   FROM documents) WHERE rn <= 10
 """
 
-ORACLES["q_shard_assign"] = f"""
+ORACLE_SQL["q_shard_assign"] = f"""
 SELECT doc_id,
        CAST({hash63_sql("'shard:' || CAST(doc_id AS VARCHAR)")} % 8 AS INT) AS shard
 FROM documents
 """
 
-ORACLES["q_weighted_mix"] = f"""
+ORACLE_SQL["q_weighted_mix"] = f"""
 SELECT doc_id, source FROM documents
 WHERE {hash63_sql("'mix:' || CAST(doc_id AS VARCHAR)")} % 10000 <
       CASE source WHEN 'src0' THEN 10000 WHEN 'src1' THEN 5000
@@ -588,7 +593,7 @@ WHERE {hash63_sql("'mix:' || CAST(doc_id AS VARCHAR)")} % 10000 <
 
 # ------------------------------------------------------- profiling / pivot / generators
 
-ORACLES["q_pivot"] = """
+ORACLE_SQL["q_pivot"] = """
 SELECT user_id,
        CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS click,
        CAST(count(*) FILTER (event_type = 'error') AS BIGINT) AS error,
@@ -598,7 +603,7 @@ SELECT user_id,
 FROM events GROUP BY user_id
 """
 
-ORACLES["q_histogram"] = """
+ORACLE_SQL["q_histogram"] = """
 SELECT CAST(floor(value / 10) AS BIGINT) AS bucket,
        CAST(floor(value / 10) * 10 AS DOUBLE) AS lo,
        CAST((floor(value / 10) + 1) * 10 AS DOUBLE) AS hi,
@@ -607,7 +612,7 @@ FROM events WHERE value IS NOT NULL
 GROUP BY 1, 2, 3
 """
 
-ORACLES["q_corr"] = """
+ORACLE_SQL["q_corr"] = """
 SELECT l_returnflag,
        round(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
        round(covar_samp(l_quantity, l_extendedprice), 4) AS covar_qty_price,
@@ -615,7 +620,7 @@ SELECT l_returnflag,
 FROM lineitem GROUP BY l_returnflag
 """
 
-ORACLES["q_explode_tokens"] = f"""
+ORACLE_SQL["q_explode_tokens"] = f"""
 SELECT token, CAST(count(*) AS BIGINT) AS n
 FROM (SELECT unnest({_TOKS}) AS token FROM documents) t
 GROUP BY token
@@ -623,7 +628,7 @@ ORDER BY n DESC, token ASC
 LIMIT 20
 """
 
-ORACLES["q_moving_avg"] = """
+ORACLE_SQL["q_moving_avg"] = """
 SELECT event_id, user_id,
        round(avg(value) OVER (
          PARTITION BY user_id ORDER BY ts, event_id
@@ -631,7 +636,7 @@ SELECT event_id, user_id,
 FROM events
 """
 
-ORACLES["q_latest_event"] = """
+ORACLE_SQL["q_latest_event"] = """
 SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
        ts AS last_ts
 FROM (SELECT *, row_number() OVER (
@@ -639,13 +644,6 @@ FROM (SELECT *, row_number() OVER (
       FROM events)
 WHERE rn = 1
 """
-
-# Oracles for EXTRA_QUERIES (see queries.py): same DuckDB gate, exercised
-# by tests/test_extra_oracles.py instead of the 50-row driver record.
-EXTRA_ORACLES = {
-    k: ORACLES.pop(k)
-    for k in ("q_resample_15min", "q_minhash_signature")
-}
 
 from datapump_spark.operators.pii import pii_redact_sql, pii_stats_sql  # noqa: E402
 
@@ -663,10 +661,10 @@ _PII_TEXT = """concat_ws(' ', c_name, 'call',
            CAST(c_custkey % 90 + 10 AS VARCHAR), '-',
            CAST((c_custkey * 3) % 9000 + 1000 AS VARCHAR))
   ELSE NULL END)"""
-EXTRA_ORACLES["q_pii_stats"] = pii_stats_sql("c_custkey", _PII_TEXT, "customer")
-EXTRA_ORACLES["q_pii_redact"] = pii_redact_sql("c_custkey", _PII_TEXT, "customer")
+ORACLE_SQL["q_pii_stats"] = pii_stats_sql("c_custkey", _PII_TEXT, "customer")
+ORACLE_SQL["q_pii_redact"] = pii_redact_sql("c_custkey", _PII_TEXT, "customer")
 
-EXTRA_ORACLES["q_gopher_quality"] = """
+ORACLE_SQL["q_gopher_quality"] = """
 WITH tk AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -700,7 +698,7 @@ SELECT *,
 FROM sig
 """
 
-EXTRA_ORACLES["q_pack_chunks"] = """
+ORACLE_SQL["q_pack_chunks"] = """
 WITH toks AS (
   SELECT doc_id,
          CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -726,7 +724,7 @@ FROM x
 # q_repetition twin — mirrors operators/repetition.py formula-for-formula
 # (same tagged union, same (cnt,len) BIGINT packing for tie-breaks, same
 # rounding order) so the value hash matches bit-for-bit.
-EXTRA_ORACLES["q_repetition"] = """
+ORACLE_SQL["q_repetition"] = """
 WITH base AS (
   SELECT doc_id,
          CAST(greatest(length(text), 1) AS DOUBLE) AS chars,
@@ -788,7 +786,7 @@ LEFT JOIN per_doc p USING (doc_id)
 
 # q_lm_score twin — same add-1 bigram model, same slice split, same
 # round-then-exp order as operators/lm.py
-EXTRA_ORACLES["q_lm_score"] = """
+ORACLE_SQL["q_lm_score"] = """
 WITH tk AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -827,7 +825,7 @@ LEFT JOIN scored s USING (doc_id)
 #   P(w2|w1) = max(c12−D,0)/c1 + D·N1+(w1,·)/c1 · Pcont(w2),
 #   Pcont floored at 1 type for never-seen words, full backoff on
 #   unseen contexts (lm.py lm_score_kn's exact expression, D = 0.75).
-EXTRA_ORACLES["q_lm_score_kn"] = """
+ORACLE_SQL["q_lm_score_kn"] = """
 WITH tk AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -873,7 +871,7 @@ LEFT JOIN scored s USING (doc_id)
 
 # q_chunk_docs twin — same start grid (stride 48 = 64 − 16), same
 # 1-based slice semantics as operators/chunking.py
-EXTRA_ORACLES["q_chunk_docs"] = """
+ORACLE_SQL["q_chunk_docs"] = """
 WITH tk AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -904,7 +902,7 @@ FROM e
 
 # q_tfidf twin — sklearn-style smoothed idf, rank on the ROUNDED score
 # with term ASC tie-break, exactly as operators/tfidf.py
-EXTRA_ORACLES["q_tfidf"] = """
+ORACLE_SQL["q_tfidf"] = """
 WITH terms AS (
   SELECT doc_id,
          UNNEST(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -931,7 +929,7 @@ FROM ranked WHERE rank <= 5
 
 # q_ewma twin — α = 0.5 ⇒ weights are exact powers of two; same 1-based
 # index lambda, same sequential list fold as operators/timeseries.ewma
-EXTRA_ORACLES["q_ewma"] = """
+ORACLE_SQL["q_ewma"] = """
 WITH w AS (
   SELECT event_id, user_id, ts, value,
          list(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -948,7 +946,7 @@ FROM w
 
 # q_interpolate twin — dense spine from the q_resample_dense oracle,
 # then the same prev/next observed-row-index + join-back formulation
-EXTRA_ORACLES["q_interpolate"] = """
+ORACLE_SQL["q_interpolate"] = """
 WITH agg AS (
   SELECT user_id, date_trunc('hour', ts) AS bucket_ts,
          round(avg(value), 6) AS avg_value
@@ -990,7 +988,7 @@ FROM nbr
 """
 
 # q_trend twin — identical day-scaled x, same aggregate definitions
-EXTRA_ORACLES["q_trend"] = """
+ORACLE_SQL["q_trend"] = """
 WITH b AS (
   SELECT event_type, value,
          (CAST(floor(epoch(ts)) AS DOUBLE) - 1704067200) / 86400.0 AS x
@@ -1005,7 +1003,7 @@ FROM b GROUP BY event_type
 """
 
 # q_correlated_subquery twin — the SAME SQL text (ANSI) both engines
-EXTRA_ORACLES["q_correlated_subquery"] = """
+ORACLE_SQL["q_correlated_subquery"] = """
 SELECT o_orderkey, o_custkey, o_totalprice
 FROM orders o
 WHERE o_totalprice = (SELECT max(o2.o_totalprice)
@@ -1013,7 +1011,7 @@ WHERE o_totalprice = (SELECT max(o2.o_totalprice)
                       WHERE o2.o_custkey = o.o_custkey)
 """
 
-EXTRA_ORACLES["q_cube"] = f"""
+ORACLE_SQL["q_cube"] = f"""
 SELECT l_returnflag, l_linestatus,
        {_dec_sum('l_quantity', 'sum_qty')},
        count(*) AS n
@@ -1022,7 +1020,7 @@ FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
 
 # q_table_diff twin — same full-outer join + null-safe comparisons;
 # changed_cols sorted so per-engine evaluation order is irrelevant
-EXTRA_ORACLES["q_table_diff"] = """
+ORACLE_SQL["q_table_diff"] = """
 WITH l AS (SELECT * FROM events WHERE event_id % 3 != 0),
 r AS (SELECT event_id, ts, user_id, event_type,
              CASE WHEN event_id % 7 = 0 THEN value * 2 ELSE value END AS value,
@@ -1056,7 +1054,7 @@ WHERE (NOT in_l) OR (NOT in_r) OR len(diffs) > 0
 
 # q_equidepth twin — quantile_cont ≡ Spark's exact linear-interpolation
 # percentile; bucket = cutpoints strictly below the value
-EXTRA_ORACLES["q_equidepth"] = """
+ORACLE_SQL["q_equidepth"] = """
 WITH cuts AS (
   SELECT quantile_cont(value,
       [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS c
@@ -1069,7 +1067,7 @@ GROUP BY 1
 """
 
 # q_inverted_index twin — sorted postings, df >= 5
-EXTRA_ORACLES["q_inverted_index"] = """
+ORACLE_SQL["q_inverted_index"] = """
 WITH terms AS (
   SELECT DISTINCT doc_id,
          UNNEST(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -1082,7 +1080,7 @@ FROM terms GROUP BY term HAVING count(*) >= 5
 
 # q_bm25_topk twin — same Lucene idf, same term-sorted score fold as
 # operators/retrieval.py (list(.. ORDER BY term) ≡ sort_array fold)
-EXTRA_ORACLES["q_bm25_topk"] = """
+ORACLE_SQL["q_bm25_topk"] = """
 WITH tok AS (
   SELECT doc_id,
          UNNEST(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -1118,7 +1116,7 @@ SELECT doc_id, n_hit_terms, score, rank FROM ranked WHERE rank <= 10
 """
 
 # q_funnel twin — same strictly-after chaining of first-step timestamps
-EXTRA_ORACLES["q_funnel"] = """
+ORACLE_SQL["q_funnel"] = """
 WITH s0 AS (
   SELECT user_id, min(ts) AS t FROM events
   WHERE event_type = 'signup' GROUP BY user_id),
@@ -1145,7 +1143,7 @@ FROM c CROSS JOIN n1
 """
 
 # q_retention twin — Monday-start weeks (date_trunc parity with Spark)
-EXTRA_ORACLES["q_retention"] = """
+ORACLE_SQL["q_retention"] = """
 WITH weeks AS (
   SELECT DISTINCT user_id,
          CAST(date_trunc('week', ts) AS TIMESTAMP) AS w
@@ -1166,7 +1164,7 @@ FROM active a JOIN sizes s USING (cohort_week)
 """
 
 # q_outliers twin — same z formula, same sample stddev
-EXTRA_ORACLES["q_outliers"] = """
+ORACLE_SQL["q_outliers"] = """
 WITH stats AS (
   SELECT event_type, avg(value) AS mu, stddev_samp(value) AS sd
   FROM events GROUP BY event_type)
@@ -1177,7 +1175,7 @@ WHERE s.sd > 0 AND abs(round((e.value - s.mu) / s.sd, 6)) > 2.0
 """
 
 _DECONTAM_GRAM = hash63_sql("array_to_string(list_slice(t, i, i + 12), ' ')")
-EXTRA_ORACLES["q_decontam"] = f"""
+ORACLE_SQL["q_decontam"] = f"""
 WITH tk AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -1210,7 +1208,7 @@ LEFT JOIN hits h USING (doc_id)
 _DSPAN_GRAM = hash63_sql("array_to_string(list_slice(t, pos, pos + 12), ' ')")
 # q_collocations: textbook PMI over the same tokenization; ties and the
 # top-k cut are deterministic under (pmi desc, w1, w2).
-EXTRA_ORACLES["q_collocations"] = """
+ORACLE_SQL["q_collocations"] = """
 WITH tk AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -1240,7 +1238,7 @@ LIMIT 50
 # q_pii_cards: the appended literals are the ONLY card-shaped runs in
 # the corpus (verified: zero natural matches at sf0.01), so the oracle
 # is the exact transform — the Luhn gate itself is pinned in pytest.
-EXTRA_ORACLES["q_pii_cards"] = """
+ORACLE_SQL["q_pii_cards"] = """
 SELECT doc_id,
        text || ' pay [CARD] or order 4111111111111112 now' AS clean_text,
        CAST(1 AS BIGINT) AS n_cards
@@ -1249,7 +1247,7 @@ FROM documents
 
 # q_readability: identical regex counts — tokens for words, [.!?]+ runs
 # for sentences (floored at 1), [aeiouy]+ runs for syllables.
-EXTRA_ORACLES["q_readability"] = """
+ORACLE_SQL["q_readability"] = """
 WITH c AS (
   SELECT doc_id,
          len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -1268,7 +1266,7 @@ SELECT doc_id,
 FROM c
 """
 
-EXTRA_ORACLES["q_decontam_spans"] = f"""
+ORACLE_SQL["q_decontam_spans"] = f"""
 WITH tk AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -1303,13 +1301,7 @@ SELECT d.doc_id,
 FROM docs d LEFT JOIN reb r USING (doc_id)
 """
 
-EXTRA_ORACLES["q_jsonl_scan"] = f"""
-SELECT doc_id, lang, source, n_chars, text,
-       meta.quality AS quality, meta.crawl AS crawl, tags
-FROM read_json('{JSONL_GLOB}', format='newline_delimited')
-"""
-
-EXTRA_ORACLES["q_line_dedup"] = """
+ORACLE_SQL["q_line_dedup"] = """
 WITH tk AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -1341,9 +1333,9 @@ SELECT t.doc_id, COALESCE(r.text, '') AS text,
 FROM tot t LEFT JOIN reb r USING (doc_id)
 """
 
-EXTRA_ORACLES["q_canonical_docs"] = f"""
-WITH cl AS ({ORACLES["q_dup_clusters"]}),
-q AS ({ORACLES["q_quality_score"]}),
+ORACLE_SQL["q_canonical_docs"] = f"""
+WITH cl AS ({ORACLE_SQL["q_dup_clusters"]}),
+q AS ({ORACLE_SQL["q_quality_score"]}),
 j AS (SELECT cl.doc_id, cl.cluster_id, q.quality
       FROM cl JOIN q USING (doc_id)),
 r AS (SELECT *,
@@ -1356,7 +1348,7 @@ FROM r WHERE rn = 1
 """
 
 _PASSAGE_GRAM = hash63_sql("array_to_string(list_slice(t, i, i + 9), ' ')")
-EXTRA_ORACLES["q_dup_passages"] = f"""
+ORACLE_SQL["q_dup_passages"] = f"""
 WITH tk AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -1391,7 +1383,7 @@ LEFT JOIN hits h USING (doc_id)
 # Spark's min(struct(id, pos)) — and removal is a position anti-join, the
 # set-equivalent of the operator's merged-interval slice-between.
 _SPAN_GRAM = hash63_sql("array_to_string(list_slice(t, pos, pos + 9), ' ')")
-EXTRA_ORACLES["q_span_dedup"] = f"""
+ORACLE_SQL["q_span_dedup"] = f"""
 WITH tk AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -1428,7 +1420,7 @@ SELECT d.doc_id,
 FROM docs d LEFT JOIN reb r USING (doc_id)
 """
 
-EXTRA_ORACLES["q_temperature_mix"] = f"""
+ORACLE_SQL["q_temperature_mix"] = f"""
 WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
 m AS (SELECT min(n) AS n_min FROM c),
 t AS (SELECT lang, CAST(round(sqrt(n_min / n) * 10000) AS BIGINT) AS th
@@ -1439,7 +1431,7 @@ WHERE {hash63_sql("'temp:' || CAST(d.doc_id AS VARCHAR)")} % 10000 < t.th
 """
 
 _FP = "md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'))"
-EXTRA_ORACLES["q_incremental_dedup"] = f"""
+ORACLE_SQL["q_incremental_dedup"] = f"""
 WITH corpus AS (
   SELECT doc_id, text, lang, source FROM documents WHERE doc_id % 10 != 0),
 fresh AS (
@@ -1460,7 +1452,7 @@ SELECT f.fp, f.doc_id, f.text, f.lang, f.source
 FROM firsts f ANTI JOIN cfp c ON f.fp = c.fp
 """
 
-EXTRA_ORACLES["q_corpus_stats"] = f"""
+ORACLE_SQL["q_corpus_stats"] = f"""
 WITH t AS (SELECT lang, source, n_chars, len({_TOKS}) AS tok FROM documents)
 SELECT lang, source,
        count(*) AS n_docs,
@@ -1472,7 +1464,7 @@ FROM t GROUP BY lang, source
 """
 
 
-EXTRA_ORACLES["q_stratified_sample"] = f"""
+ORACLE_SQL["q_stratified_sample"] = f"""
 SELECT doc_id, lang, source FROM documents
 WHERE {hash63_sql("'strat:' || CAST(doc_id AS VARCHAR)")} % 10000 <
   CASE lang WHEN 'en' THEN 5000 WHEN 'fr' THEN 2500 WHEN 'de' THEN 2500
@@ -1481,7 +1473,7 @@ WHERE {hash63_sql("'strat:' || CAST(doc_id AS VARCHAR)")} % 10000 <
 
 # Mirrors classifier.DEFAULT_WEIGHTS/DEFAULT_BIAS and the featurize()
 # expression order (margin is a left fold: b + w0·f0 + … + w4·f4).
-EXTRA_ORACLES["q_quality_logreg"] = f"""
+ORACLE_SQL["q_quality_logreg"] = f"""
 WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents),
 f AS (SELECT doc_id,
         ln(1 + len(toks)) AS log1p_tokens,
@@ -1518,12 +1510,12 @@ vocab AS (
         ORDER BY n_occurrences DESC, token ASC LIMIT {{top_k}}))
 """
 
-EXTRA_ORACLES["q_vocab"] = f"""
+ORACLE_SQL["q_vocab"] = f"""
 WITH {_VOCAB_CTE.format(top_k=200)}
 SELECT token, token_id, n_occurrences FROM vocab
 """
 
-EXTRA_ORACLES["q_token_ids"] = f"""
+ORACLE_SQL["q_token_ids"] = f"""
 WITH {_VOCAB_CTE.format(top_k=100)},
 pos AS (SELECT doc_id, UNNEST(generate_series(1, len(t))) AS i, t FROM tk),
 tok AS (SELECT doc_id, i, t[i] AS token FROM pos),
@@ -1543,7 +1535,7 @@ FROM documents d LEFT JOIN agg a USING (doc_id)
 """
 
 
-EXTRA_ORACLES["q_ship_priority"] = f"""
+ORACLE_SQL["q_ship_priority"] = f"""
 SELECT l_orderkey,
        {_dec_sum('l_extendedprice * (1.0 - l_discount)', 'revenue')},
        o_orderdate, o_orderpriority
@@ -1558,7 +1550,7 @@ ORDER BY revenue DESC, o_orderdate ASC, l_orderkey ASC
 LIMIT 10
 """
 
-EXTRA_ORACLES["q_region_volume"] = f"""
+ORACLE_SQL["q_region_volume"] = f"""
 SELECT n_name,
        {_dec_sum('l_extendedprice * (1.0 - l_discount)', 'revenue')}
 FROM lineitem
@@ -1573,7 +1565,7 @@ WHERE r_name = 'ASIA'
 GROUP BY n_name
 """
 
-EXTRA_ORACLES["q_promo_revenue"] = """
+ORACLE_SQL["q_promo_revenue"] = """
 SELECT round(
   100.0 * CAST(SUM(CAST(CASE WHEN p_type = 'PROMO'
                   THEN l_extendedprice * (1.0 - l_discount)
@@ -1585,11 +1577,9 @@ WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
   AND l_shipdate < TIMESTAMP '1997-10-01 00:00:00'
 """
 
-EXTRA_ORACLES.update(EXTRA_IOT_ORACLES)
-
 from datapump_spark.tpch import TPCH_ORACLES  # noqa: E402
 
-EXTRA_ORACLES.update(TPCH_ORACLES)
+ORACLE_SQL.update(TPCH_ORACLES)
 
 # One SELECT per expectation check, UNION ALL'd into the tall audit frame
 # (operators/expectations.py); each line restates the check's violation
@@ -1607,7 +1597,7 @@ def _expect(table: str, check: str, violated: str) -> str:
     return _EXPECT_CHECK.format(table=table, check=check, violated=violated)
 
 
-EXTRA_ORACLES["q_expectations"] = " UNION ALL ".join([
+ORACLE_SQL["q_expectations"] = " UNION ALL ".join([
     _expect("events", "not_null:event_id",
             "sum(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END)"),
     _expect("events", "not_null:ts",
@@ -1646,7 +1636,7 @@ EXTRA_ORACLES["q_expectations"] = " UNION ALL ".join([
             "WHERE c_custkey = o_custkey) THEN 1 ELSE 0 END)"),
 ])
 
-EXTRA_ORACLES["q_band_join"] = f"""
+ORACLE_SQL["q_band_join"] = f"""
 WITH bands(band, lo, hi) AS (VALUES
   -- CAST: bare decimal literals type as DECIMAL(4,1) in DuckDB, which the
   -- driver's normalizer may render unlike Python float (the HUGEINT
@@ -1663,7 +1653,7 @@ GROUP BY band, lo, hi
 ORDER BY lo ASC NULLS LAST
 """
 
-EXTRA_ORACLES["q_unpivot"] = """
+ORACLE_SQL["q_unpivot"] = """
 SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure,
        l_quantity AS value FROM lineitem
 UNION ALL
@@ -1675,7 +1665,7 @@ UNION ALL
 SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem
 """
 
-EXTRA_ORACLES["q_state_intervals"] = """
+ORACLE_SQL["q_state_intervals"] = """
 WITH flagged AS (
   SELECT user_id, ts, event_type, event_id,
          CASE WHEN lag(event_type) OVER w IS NULL
@@ -1700,7 +1690,7 @@ FROM islands
 WINDOW w2 AS (PARTITION BY user_id ORDER BY island ASC)
 """
 
-EXTRA_ORACLES["q_event_transitions"] = """
+ORACLE_SQL["q_event_transitions"] = """
 WITH seq AS (
   SELECT user_id, event_type,
          lag(event_type) OVER (PARTITION BY user_id
@@ -1724,7 +1714,7 @@ FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 """
 
 # labels applied at the output boundary only, mirroring the Spark query
-EXTRA_ORACLES["q_pagerank"] = f"""
+ORACLE_SQL["q_pagerank"] = f"""
 SELECT CASE WHEN node % 2 = 0 THEN 'c:' || CAST(node // 2 AS VARCHAR)
             ELSE 's:' || CAST((node - 1) // 2 AS VARCHAR) END AS node,
        rank
@@ -1733,7 +1723,7 @@ FROM ({pagerank_oracle_sql(_PAGERANK_EDGES, n_iter=3)})
 
 # From-scratch twin of the incrementally-merged state (the hash match is
 # the losslessness proof for merge_agg_state).
-EXTRA_ORACLES["q_incremental_agg"] = """
+ORACLE_SQL["q_incremental_agg"] = """
 SELECT event_type, CAST(count(*) AS BIGINT) AS n,
        CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum,
        round(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
@@ -1742,7 +1732,7 @@ SELECT event_type, CAST(count(*) AS BIGINT) AS n,
 FROM events GROUP BY event_type
 """
 
-EXTRA_ORACLES["q_yoy_growth"] = """
+ORACLE_SQL["q_yoy_growth"] = """
 WITH yearly AS (
   SELECT n_name, CAST(year(l_shipdate) AS INT) AS l_year,
          CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
@@ -1761,7 +1751,7 @@ WINDOW w AS (PARTITION BY n_name ORDER BY l_year ASC)
 # Independent formulation of the as-of variants: a LATERAL probe per event
 # (nearest order date, max orderkey on ties) — cross-checks the Spark
 # union-merge algorithm with a structurally different one.
-EXTRA_ORACLES["q_asof_tolerance"] = """
+ORACLE_SQL["q_asof_tolerance"] = """
 SELECT e.event_id, e.user_id, e.ts, m.matched_ts, m.o_orderkey
 FROM events e
 LEFT JOIN LATERAL (
@@ -1774,7 +1764,7 @@ LEFT JOIN LATERAL (
   ORDER BY o_orderdate DESC LIMIT 1) m ON TRUE
 """
 
-EXTRA_ORACLES["q_asof_forward"] = """
+ORACLE_SQL["q_asof_forward"] = """
 SELECT e.event_id, e.user_id, e.ts, m.matched_ts, m.o_orderkey
 FROM events e
 LEFT JOIN LATERAL (
@@ -1791,7 +1781,7 @@ LEFT JOIN LATERAL (
 from datapump_spark.operators.cleaning import CONTROL_RE, WS_RUN_RE  # noqa: E402
 from datapump_spark.operators.zorder import scale_sql, zvalue_sql  # noqa: E402
 
-EXTRA_ORACLES["q_normalize_text"] = f"""
+ORACLE_SQL["q_normalize_text"] = f"""
 WITH m AS (
   SELECT doc_id, length(text) AS n_chars_raw,
          ' ' || chr(9) || ' '
@@ -1827,7 +1817,7 @@ ln AS (
   FROM idx)
 """
 
-EXTRA_ORACLES["q_strip_boilerplate"] = f"""
+ORACLE_SQL["q_strip_boilerplate"] = f"""
 WITH {_LINED},
 per_doc AS (SELECT DISTINCT source, doc_id, line FROM ln),
 counts AS (
@@ -1856,7 +1846,7 @@ FROM tot2 t LEFT JOIN reb r USING (doc_id)
 
 # Independent all-pairs formulation (length prefilter only): a hash match
 # against the banded Spark plan also proves the blocking lost no pairs.
-EXTRA_ORACLES["q_fuzzy_pairs"] = """
+ORACLE_SQL["q_fuzzy_pairs"] = """
 WITH tk AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -1875,7 +1865,7 @@ WHERE levenshtein(a.k, b.k) <= 5
 
 _ZX = scale_sql("l_partkey", "mn1", "mx1", 16)
 _ZY = scale_sql("l_suppkey", "mn2", "mx2", 16)
-EXTRA_ORACLES["q_zorder"] = f"""
+ORACLE_SQL["q_zorder"] = f"""
 WITH s AS (
   SELECT min(l_partkey) AS mn1, max(l_partkey) AS mx1,
          min(l_suppkey) AS mn2, max(l_suppkey) AS mx2
@@ -1889,7 +1879,7 @@ SELECT l_orderkey, l_linenumber,
 FROM sc
 """
 
-EXTRA_ORACLES["q_token_entropy"] = """
+ORACLE_SQL["q_token_entropy"] = """
 WITH tk AS (
   SELECT doc_id,
          unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -1914,7 +1904,7 @@ FROM documents d LEFT JOIN e USING (doc_id)
 # arithmetic (IEEE doubles), same integer-µs midpoint, same Laplace
 # smoothing (eps=0.5, 10 buckets → +5.0 totals); the full (group × bucket)
 # grid reproduces the Spark fold's missing-cell terms.
-EXTRA_ORACLES["q_psi_drift"] = """
+ORACLE_SQL["q_psi_drift"] = """
 WITH span AS (
   SELECT min(epoch_us(ts)) AS lo_us, max(epoch_us(ts)) AS hi_us,
          CAST(min(value) AS DOUBLE) AS lo, CAST(max(value) AS DOUBLE) AS hi
@@ -1957,7 +1947,7 @@ FROM terms GROUP BY event_type
 
 # quantile_cont matches Spark's exact interpolated percentile bit-for-bit
 # (verified: identical doubles on this data); derived columns round at 6.
-EXTRA_ORACLES["q_winsorize"] = """
+ORACLE_SQL["q_winsorize"] = """
 WITH b AS (
   SELECT event_type,
          quantile_cont(value, 0.01) AS lo,
@@ -1974,14 +1964,14 @@ SELECT e.event_id, e.event_type, e.value,
 FROM events e JOIN b USING (event_type)
 """
 
-EXTRA_ORACLES["q_reservoir_sample"] = """
+ORACLE_SQL["q_reservoir_sample"] = """
 SELECT doc_id, lang, source
 FROM documents
 ORDER BY md5('topk:' || CAST(doc_id AS VARCHAR)) ASC, doc_id ASC
 LIMIT 100
 """
 
-EXTRA_ORACLES["q_variant_extract"] = """
+ORACLE_SQL["q_variant_extract"] = """
 SELECT user_id,
        CAST(sum(CAST(props ->> '$.k' AS BIGINT)) AS BIGINT) AS k_sum,
        CAST(count(props ->> '$.k') AS BIGINT) AS n_props
@@ -1992,7 +1982,7 @@ FROM events GROUP BY user_id
 # recount), so the oracle is the plain GROUP BY … HAVING it replaces.
 from datapump_spark.functions.hashing import tokens_sql  # noqa: E402
 
-EXTRA_ORACLES["q_heavy_hitters"] = f"""
+ORACLE_SQL["q_heavy_hitters"] = f"""
 WITH tk AS (
   SELECT unnest({tokens_sql('text')}) AS tok FROM documents),
 c AS (SELECT tok, count(*) AS cnt FROM tk GROUP BY tok),
@@ -2004,7 +1994,7 @@ FROM c, n WHERE cnt > 0.001 * n
 # Mirrors operators/sparse_sim.py term-for-term: 1-based adjacent bigrams,
 # sklearn-smoothed global idf, per-doc L2 norm, co-blocked pairs, cosine
 # rounded to 6 dp before thresholding on both engines.
-EXTRA_ORACLES["q_sparse_sim"] = """
+ORACLE_SQL["q_sparse_sim"] = """
 WITH d AS (
   SELECT doc_id, lang, source,
          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -2035,7 +2025,7 @@ GROUP BY 1, 2
 HAVING round(sum(a.u * b.u), 6) >= 0.2
 """
 
-EXTRA_ORACLES["q_cdc_apply"] = """
+ORACLE_SQL["q_cdc_apply"] = """
 WITH c AS (
   SELECT user_id, ts, event_id, value, event_type,
          CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op
@@ -2048,7 +2038,7 @@ SELECT user_id, ts, event_id, value, event_type
 FROM r WHERE rn = 1 AND op <> 'D'
 """
 
-EXTRA_ORACLES["q_rolling_active"] = """
+ORACLE_SQL["q_rolling_active"] = """
 WITH days AS (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events)
 SELECT d.day,
        CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_active
@@ -2062,7 +2052,7 @@ GROUP BY d.day
 # exponential key −ln(u)/w, same doc_id tie-break. Key floats differ by
 # ≤1 ulp across libm implementations — ordering flips would need two keys
 # within 1 ulp, impossible for distinct md5-derived uniforms in practice.
-EXTRA_ORACLES["q_weighted_sample"] = f"""
+ORACLE_SQL["q_weighted_sample"] = f"""
 SELECT doc_id, source, n_chars
 FROM documents
 ORDER BY CASE WHEN n_chars > 0 THEN
@@ -2072,8 +2062,8 @@ ORDER BY CASE WHEN n_chars > 0 THEN
 LIMIT 100
 """
 
-EXTRA_ORACLES["q_score_pctrank"] = f"""
-WITH q AS ({ORACLES["q_quality_score"]})
+ORACLE_SQL["q_score_pctrank"] = f"""
+WITH q AS ({ORACLE_SQL["q_quality_score"]})
 SELECT q.doc_id, d.source, q.quality,
        round(percent_rank() OVER (PARTITION BY d.source
                                   ORDER BY q.quality ASC, q.doc_id ASC), 6)
@@ -2083,8 +2073,8 @@ FROM q JOIN documents d ON q.doc_id = d.doc_id
 
 # Same recursive-CTE clustering as q_dup_clusters, then the identical
 # hash-threshold CASE on the cluster id (0.9/0.05/0.05 boundaries).
-EXTRA_ORACLES["q_leakage_split"] = f"""
-WITH cl AS ({ORACLES["q_dup_clusters"]})
+ORACLE_SQL["q_leakage_split"] = f"""
+WITH cl AS ({ORACLE_SQL["q_dup_clusters"]})
 SELECT doc_id, cluster_id,
        CASE WHEN {hash63_sql("'split:' || CAST(cluster_id AS VARCHAR)")}
                  % 10000 < 9000 THEN 'train'
@@ -2146,12 +2136,12 @@ _URL_CANON = r"""
     FROM u)
 """
 
-EXTRA_ORACLES["q_url_canon"] = f"""
+ORACLE_SQL["q_url_canon"] = f"""
 WITH u AS ({_URL_SYNTH})
 {_URL_CANON}
 """
 
-EXTRA_ORACLES["q_domain_volume"] = f"""
+ORACLE_SQL["q_domain_volume"] = f"""
 WITH u AS ({_URL_SYNTH}),
 c AS ({_URL_CANON})
 SELECT domain, COUNT(*) AS n_urls,
@@ -2159,7 +2149,7 @@ SELECT domain, COUNT(*) AS n_urls,
 FROM c GROUP BY domain
 """
 
-EXTRA_ORACLES["q_blocklist"] = f"""
+ORACLE_SQL["q_blocklist"] = f"""
 WITH t AS (
   SELECT doc_id, {tokens_sql('text')} AS toks FROM documents)
 SELECT doc_id,
@@ -2179,7 +2169,7 @@ FROM t
 # per-format stats from the SAME doc_id arithmetic the payload builder
 # used, so the entire Spark byte path (hex/unhex little-endian assembly →
 # substring/conv header parsing) must round-trip exactly to hash-match.
-EXTRA_ORACLES["q_sniff_media"] = """
+ORACLE_SQL["q_sniff_media"] = """
 WITH m AS (
   SELECT doc_id, strlen(text) AS nb, n_chars,
          CAST(doc_id % 3 AS INT) AS k
@@ -2204,7 +2194,7 @@ FROM m GROUP BY k
 
 # q_locf twin — same dense spine as q_interpolate, then IGNORE NULLS
 # last_value + observed-row distance for the limit guard
-EXTRA_ORACLES["q_locf"] = """
+ORACLE_SQL["q_locf"] = """
 WITH agg AS (
   SELECT user_id, date_trunc('hour', ts) AS bucket_ts,
          round(avg(value), 6) AS avg_value
@@ -2241,8 +2231,8 @@ FROM nbr
 # q_simhash_pairs: the Spark side prunes with the Manku pigeonhole block
 # index; the oracle is the O(n²) brute force over the same signatures —
 # the blocked index is lossless, so the row sets must match EXACTLY.
-EXTRA_ORACLES["q_simhash_pairs"] = f"""
-WITH s AS ({ORACLES["q_simhash"]})
+ORACLE_SQL["q_simhash_pairs"] = f"""
+WITH s AS ({ORACLE_SQL["q_simhash"]})
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
 FROM s a JOIN s b ON a.doc_id < b.doc_id
@@ -2257,7 +2247,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 _agree16 = "(" + " + ".join(
     f"CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END" for i in range(16)
 ) + ") / 16.0"
-EXTRA_ORACLES["q_incremental_near_dup"] = f"""
+ORACLE_SQL["q_incremental_near_dup"] = f"""
 WITH {_SHINGLES_CTE},
 sig AS (SELECT doc_id, {_mh16} FROM s GROUP BY doc_id),
 bsig AS (SELECT * FROM sig WHERE doc_id % 2 = 1),
@@ -2328,7 +2318,7 @@ _sp_fracs = ",\n       ".join(
     for name, _, _ in SCRIPT_CLASSES)
 _sp_known = " + ".join(f"n_{name}" for name, _, _ in SCRIPT_CLASSES) \
     + " + n_digit"
-EXTRA_ORACLES["q_script_profile"] = f"""
+ORACLE_SQL["q_script_profile"] = f"""
 WITH s AS (
   SELECT doc_id, regexp_replace(text, '\\s', '', 'g') AS __t
   FROM documents),
@@ -2350,9 +2340,9 @@ FROM c
 
 # q_corpus_card: the dataset-card rollup composed from the SAME per-doc
 # oracle fragments (quality score, script profile, tokens, fingerprint).
-EXTRA_ORACLES["q_corpus_card"] = f"""
-WITH q AS ({ORACLES["q_quality_score"]}),
-sp AS ({EXTRA_ORACLES["q_script_profile"]}),
+ORACLE_SQL["q_corpus_card"] = f"""
+WITH q AS ({ORACLE_SQL["q_quality_score"]}),
+sp AS ({ORACLE_SQL["q_script_profile"]}),
 base AS (
   SELECT d.doc_id, d.lang, d.source,
          CAST(len({_TOKS}) AS BIGINT) AS n_tok,
@@ -2379,7 +2369,7 @@ GROUP BY b.lang, b.source
 # zero-width-stripped text (same literal character class).
 from datapump_spark.operators.cleaning import ZERO_WIDTH_RE  # noqa: E402
 
-EXTRA_ORACLES["q_unicode_normalize"] = f"""
+ORACLE_SQL["q_unicode_normalize"] = f"""
 SELECT doc_id, text,
        nfc_normalize(regexp_replace(text, '{ZERO_WIDTH_RE}', '', 'g'))
          AS text_nfc
@@ -2390,7 +2380,7 @@ FROM documents
 # q_token_budget_mix: same salted-hash order, per-source token cum-sum,
 # strict prefix-within-budget rule (60/30/10 over 50k tokens on the
 # first three sources alphabetically).
-EXTRA_ORACLES["q_token_budget_mix"] = f"""
+ORACLE_SQL["q_token_budget_mix"] = f"""
 WITH s3 AS (
   SELECT source, row_number() OVER (ORDER BY source) AS rn
   FROM (SELECT DISTINCT source FROM documents)
@@ -2424,7 +2414,7 @@ WHERE c.cum_tok <= bud.b
 
 # q_semantic_decontam: exact max-cosine of each corpus vector vs the
 # benchmark slice — the same split as q_decontam, in embedding space.
-EXTRA_ORACLES["q_semantic_decontam"] = """
+ORACLE_SQL["q_semantic_decontam"] = """
 WITH m AS (SELECT vec_id, embedding::DOUBLE[] AS v,
                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
            FROM embeddings),
@@ -2437,12 +2427,12 @@ SELECT c.vec_id,
 FROM c, b GROUP BY c.vec_id
 """
 
-EXTRA_ORACLES["q_importance_weights"] = f"""
+ORACLE_SQL["q_importance_weights"] = f"""
 WITH {_DSIR_FEATS}, {_DSIR_W}
 SELECT bucket, logw FROM w
 """
 
-EXTRA_ORACLES["q_dsir_sample"] = f"""
+ORACLE_SQL["q_dsir_sample"] = f"""
 WITH {_DSIR_FEATS}, {_DSIR_W},
 sc AS (
   SELECT fb.doc_id, CAST(count(*) AS BIGINT) AS n_feats,
@@ -2467,8 +2457,8 @@ LIMIT 100
 # q_quality_binned_mix: same per-source percent_rank as q_score_pctrank,
 # floored into quartile bins, kept by the engine-shared hash threshold
 # (list literal is 1-indexed in DuckDB).
-EXTRA_ORACLES["q_quality_binned_mix"] = f"""
-WITH q AS ({ORACLES["q_quality_score"]}),
+ORACLE_SQL["q_quality_binned_mix"] = f"""
+WITH q AS ({ORACLE_SQL["q_quality_score"]}),
 j AS (SELECT q.doc_id, d.source, q.quality
       FROM q JOIN documents d ON q.doc_id = d.doc_id),
 b AS (SELECT *,
@@ -2501,7 +2491,7 @@ _HTML_WRAP = (
     "</body></html>'"
 )
 
-EXTRA_ORACLES["q_strip_html"] = f"""
+ORACLE_SQL["q_strip_html"] = f"""
 WITH m AS (SELECT doc_id, {_HTML_WRAP} AS t FROM documents),
 s AS (SELECT doc_id,
         regexp_replace(
@@ -2556,7 +2546,7 @@ def _mc_vis(expr: str) -> str:
 # array_join(empty) is '' — an anchor-free block must score lv = ''
 _MC_LINK = (f"coalesce(array_to_string(regexp_extract_all(t[i], "
             f"'{HTML_ANCHOR_TEXT_RE}', 1), ' '), '')")
-EXTRA_ORACLES["q_main_content"] = f"""
+ORACLE_SQL["q_main_content"] = f"""
 WITH m AS (SELECT doc_id, {_MC_WRAP} AS h FROM documents),
 pre AS (SELECT doc_id,
           regexp_replace(regexp_replace(regexp_replace(h,
@@ -2589,8 +2579,8 @@ LEFT JOIN nb USING (doc_id) LEFT JOIN agg a USING (doc_id)
 # q_hybrid_search: BM25 list from its existing oracle; vector list as an
 # independent sparse slot-join with INTEGER dot/norms (one final double
 # division, so 6-dp rounding is engine-identical); same 1/(60+rank) RRF.
-EXTRA_ORACLES["q_hybrid_search"] = f"""
-WITH b AS ({EXTRA_ORACLES["q_bm25_topk"]}),
+ORACLE_SQL["q_hybrid_search"] = f"""
+WITH b AS ({ORACLE_SQL["q_bm25_topk"]}),
 dt AS (SELECT doc_id, unnest({tokens_sql('text')}) AS tok FROM documents),
 ds AS (SELECT doc_id,
               CAST(({hash63_sql("'emb42:' || tok")}) % 64 AS INT) AS slot,
@@ -2631,7 +2621,7 @@ QUALIFY rank <= 10
 # q_hard_negatives: same ranking + label-match qrels CTEs as
 # q_retrieval_eval; negatives = ranked hits anti-joined against the
 # qrels, re-ranked per query, window [skip_top+1, skip_top+m] = [2, 4].
-EXTRA_ORACLES["q_hard_negatives"] = """
+ORACLE_SQL["q_hard_negatives"] = """
 WITH m AS (SELECT vec_id, embedding::DOUBLE[] AS v,
                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
            FROM embeddings),
@@ -2670,7 +2660,7 @@ _DISC10, _CUM10 = dcg_discounts(10)
 _DISC10_SQL = "[" + ", ".join(repr(d) for d in _DISC10) + "]"
 _CUM10_SQL = "[" + ", ".join(repr(c) for c in _CUM10) + "]"
 
-EXTRA_ORACLES["q_retrieval_eval"] = f"""
+ORACLE_SQL["q_retrieval_eval"] = f"""
 WITH m AS (SELECT vec_id, embedding::DOUBLE[] AS v,
                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
            FROM embeddings),
@@ -2723,7 +2713,7 @@ FROM pq LEFT JOIN nr ON pq.query_id = nr.query_id
 # running extremum windows over the identically-ordered series (ts,
 # event_id tie-break), mean/std rounded to 6 dp before standardizing so
 # the constants are engine-identical.
-EXTRA_ORACLES["q_cusum"] = """
+ORACLE_SQL["q_cusum"] = """
 WITH st AS (
   SELECT event_type, round(avg(value), 6) AS mu,
          round(stddev_pop(value), 6) AS sd
@@ -2780,7 +2770,7 @@ GROUP BY event_type
 
 # q_rolling_median: DuckDB's quantile_cont over the identical frame —
 # both engines do selection + linear interpolation, no summation floats.
-EXTRA_ORACLES["q_rolling_median"] = """
+ORACLE_SQL["q_rolling_median"] = """
 SELECT event_type, ts, event_id, value,
        round(quantile_cont(value, 0.5) OVER (
          PARTITION BY event_type ORDER BY ts, event_id
@@ -2791,7 +2781,7 @@ FROM events
 
 # q_triangles: identical a<b<c two-join enumeration in SQL over the same
 # supplier co-purchase projection.
-EXTRA_ORACLES["q_triangles"] = """
+ORACLE_SQL["q_triangles"] = """
 WITH sup AS (
   SELECT x.l_suppkey AS lo, y.l_suppkey AS hi, count(*) AS sup
   FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
@@ -2835,7 +2825,7 @@ FROM deg LEFT JOIN pn ON deg.node = pn.node
 # q_assoc_rules: the textbook pair support/confidence/lift in SQL over
 # the same (distinct) order→part baskets; ratios of exact integer counts.
 # Driver-gated (promoted to the 50 alongside q_resample_daily).
-ORACLES["q_assoc_rules"] = """
+ORACLE_SQL["q_assoc_rules"] = """
 WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS item FROM lineitem),
 n AS (SELECT CAST(count(DISTINCT bk) AS DOUBLE) AS n_baskets FROM b),
 it AS (SELECT item, CAST(count(*) AS BIGINT) AS n_item FROM b GROUP BY item),
@@ -2862,7 +2852,7 @@ CROSS JOIN n
 # q_acf: same lag alignment + pairwise-complete corr in SQL (corr is the
 # one aggregate both engines define identically; round-6 per the repo
 # float policy, the group_trend precedent).
-EXTRA_ORACLES["q_acf"] = """
+ORACLE_SQL["q_acf"] = """
 WITH lag_tbl AS (
   SELECT event_type, value,
          lag(value, 1) OVER w AS l1, lag(value, 2) OVER w AS l2,
@@ -2884,7 +2874,7 @@ GROUP BY event_type, lag
 """
 
 # q_gini: identical sorted-cumulative formula over the per-source totals.
-EXTRA_ORACLES["q_gini"] = """
+ORACLE_SQL["q_gini"] = """
 WITH per AS (
   SELECT source, CAST(sum(n_chars) AS DOUBLE) AS x
   FROM documents GROUP BY source),
@@ -2900,7 +2890,7 @@ FROM ranked
 
 # q_user_profile: same (ts, event_id)-ordered gaps and type-sorted
 # entropy fold (list_sum ORDER BY precedent) in SQL.
-EXTRA_ORACLES["q_user_profile"] = """
+ORACLE_SQL["q_user_profile"] = """
 WITH g AS (
   SELECT user_id,
          (epoch_us(ts) - epoch_us(lag(ts) OVER (
@@ -2933,7 +2923,7 @@ FROM gs JOIN ent ON gs.user_id = ent.user_id
 
 # q_benford: identical first-nonzero-digit extraction and python-literal
 # expected frequencies in SQL.
-EXTRA_ORACLES["q_benford"] = """
+ORACLE_SQL["q_benford"] = """
 WITH base AS (
   SELECT CAST(regexp_extract(CAST(CAST(abs(l_extendedprice)
                 AS DECIMAL(38,6)) AS VARCHAR), '[1-9]', 0) AS INT) AS d
@@ -2960,7 +2950,7 @@ FROM c JOIN e ON c.d = e.d CROSS JOIN t
 # both engines; one IEEE division of identical integers → identical
 # doubles). The Spark side must get there through a REAL zlib-inflate +
 # unfilter + numpy decode of bytes it encoded itself.
-EXTRA_ORACLES["q_image_decode"] = """
+ORACLE_SQL["q_image_decode"] = """
 SELECT doc_id AS media_id,
        8 + doc_id % 9 AS width,
        8 + doc_id % 7 AS height,
@@ -2981,7 +2971,7 @@ WHERE doc_id % 5 = 0
 # (DC quantizer 2 → reconstruction error < 0.5; pinned in test_jpeg),
 # so the lossy codec still faces an exact value hash. CASTs keep the
 # output in the standard oracle type set.
-EXTRA_ORACLES["q_jpeg_decode"] = """
+ORACLE_SQL["q_jpeg_decode"] = """
 SELECT doc_id AS media_id,
        CAST(8 + doc_id % 11 AS BIGINT) AS width,
        CAST(8 + doc_id % 5 AS BIGINT) AS height,
@@ -2996,7 +2986,7 @@ WHERE doc_id % 7 = 0
 # the decode must be byte-identical and the mean is a pure integer-ratio
 # recompute: n_even = ceil(w/2)*ceil(h/2) + floor(w/2)*floor(h/2) cells
 # carry value a, the rest b.
-EXTRA_ORACLES["q_gif_decode"] = """
+ORACLE_SQL["q_gif_decode"] = """
 WITH g AS (
   SELECT doc_id,
          2 + doc_id % 7 AS w,
@@ -3021,7 +3011,7 @@ FROM c
 # q_webp_decode: same checkerboard arithmetic twin as q_gif_decode —
 # VP8L is lossless, so every encoder feature variant must reconstruct
 # the exact pixels and the mean is a pure integer-ratio recompute.
-EXTRA_ORACLES["q_webp_decode"] = """
+ORACLE_SQL["q_webp_decode"] = """
 WITH g AS (
   SELECT doc_id,
          2 + doc_id % 7 AS w,
@@ -3045,7 +3035,7 @@ FROM c
 
 # q_exif: the APP1 IFD walk must return EXACTLY the tags the writer
 # computed from doc_id arithmetic — recomputed here in SQL.
-EXTRA_ORACLES["q_exif"] = """
+ORACLE_SQL["q_exif"] = """
 SELECT doc_id AS media_id,
        CAST(1 + doc_id % 8 AS BIGINT) AS orientation,
        'Cam' || CAST(doc_id % 7 AS VARCHAR) AS make,
@@ -3063,7 +3053,7 @@ FROM documents WHERE doc_id % 11 = 0
 # q_sniff_av: every field of the five hand-assembled containers is
 # doc_id arithmetic — the MP3 frame walk, MP4 box walk, EBML walk,
 # Ogg granule math, and VP8L header bits must all reproduce it.
-EXTRA_ORACLES["q_sniff_av"] = """
+ORACLE_SQL["q_sniff_av"] = """
 WITH d AS (
   SELECT doc_id, (doc_id // 10) % 5 AS v
   FROM documents WHERE doc_id % 10 = 0)
@@ -3093,7 +3083,7 @@ FROM d
 # q_pdf_text: the extractor must return EXACTLY the printable-ASCII
 # projection the Spark side wrote into a real Flate-compressed PDF —
 # the oracle recomputes that projection without parsing a byte.
-EXTRA_ORACLES["q_pdf_text"] = """
+ORACLE_SQL["q_pdf_text"] = """
 SELECT doc_id AS media_id,
        regexp_replace(text, '[^ -~]', '', 'g') AS text,
        CAST(length(regexp_replace(text, '[^ -~]', '', 'g')) AS BIGINT)
@@ -3107,7 +3097,7 @@ WHERE doc_id % 6 = 0
 # q_audio_tone: the decode -> window -> rfft -> argmax path must land
 # exactly on the doc-derived bin-aligned tone frequency; the oracle
 # recomputes it from the id arithmetic without touching a sample.
-EXTRA_ORACLES["q_audio_tone"] = """
+ORACLE_SQL["q_audio_tone"] = """
 SELECT doc_id AS media_id,
        CAST(CASE doc_id % 80
             WHEN 0 THEN 4000            -- ADPCM arm: 0.5 s
@@ -3127,7 +3117,7 @@ WHERE doc_id % 16 = 0
 
 # q_curriculum: NTILE staging + md5 within-stage shuffle, both engines
 # computing the identical total order (signal, id) and hash order.
-EXTRA_ORACLES["q_curriculum"] = f"""
+ORACLE_SQL["q_curriculum"] = f"""
 WITH staged AS (
   SELECT doc_id, n_chars,
          CAST(ntile(4) OVER (ORDER BY n_chars ASC, doc_id ASC) AS BIGINT)
@@ -3146,14 +3136,14 @@ FROM staged
 # is a pruning structure with no false negatives, so the engine output
 # must equal the plain anti-join's exactly. A build/probe hash mismatch
 # in bloom.py would drop novel rows and fail this hash gate.
-EXTRA_ORACLES["q_bloom_dedup"] = EXTRA_ORACLES["q_incremental_dedup"]
+ORACLE_SQL["q_bloom_dedup"] = ORACLE_SQL["q_incremental_dedup"]
 
 
 # q_seasonal_decompose: identical window algebra. The position/grand
 # means run on 6-dp detrended values scaled to exact bigints (both
 # engines sum integers → order-independent); the trend frame is
 # row-deterministic, same as the q_moving_avg precedent.
-EXTRA_ORACLES["q_seasonal_decompose"] = """
+ORACLE_SQL["q_seasonal_decompose"] = """
 WITH series AS (
   SELECT event_type, date_trunc('hour', ts) AS bucket,
          round(avg(value), 6) AS v
@@ -3184,7 +3174,7 @@ FROM s
 
 # q_seasonal_anomaly: the decomposition CTEs verbatim, then the
 # q_outliers z-score pattern over the residual.
-EXTRA_ORACLES["q_seasonal_anomaly"] = """
+ORACLE_SQL["q_seasonal_anomaly"] = """
 WITH series AS (
   SELECT event_type, date_trunc('hour', ts) AS bucket,
          round(avg(value), 6) AS v
@@ -3222,7 +3212,7 @@ WHERE st.sd > 0 AND abs(round((resid - st.mu) / st.sd, 6)) > 2.5
 
 # q_zipf_fit: same tokenizer fragment as the corpus stats, total rank
 # order (n desc, token asc), regr_* aggregates over O(10)-magnitude logs.
-EXTRA_ORACLES["q_zipf_fit"] = f"""
+ORACLE_SQL["q_zipf_fit"] = f"""
 WITH toks AS (
   SELECT lang, UNNEST({_TOKS}) AS tok FROM documents),
 counts AS (
@@ -3271,7 +3261,7 @@ _WARC_FIELDS = """
                         e'\\r\\n\\r\\n$', '') AS payload_text
 """
 
-EXTRA_ORACLES["q_warc_scan"] = f"""
+ORACLE_SQL["q_warc_scan"] = f"""
 WITH n AS ({_WARC_RECORDS}),
 p AS ({_WARC_FIELDS} FROM n)
 SELECT target_uri, warc_type, record_id, warc_date, content_type,
@@ -3279,7 +3269,7 @@ SELECT target_uri, warc_type, record_id, warc_date, content_type,
 FROM p
 """
 
-EXTRA_ORACLES["q_wet_text"] = f"""
+ORACLE_SQL["q_wet_text"] = f"""
 WITH n AS ({_WARC_RECORDS}),
 p AS ({_WARC_FIELDS} FROM n)
 SELECT target_uri, warc_date, content_length,
@@ -3289,64 +3279,6 @@ FROM p WHERE warc_type = 'conversion'
 """
 
 
-# Round-6 driver-gate rotation — keep the oracle registries keyed
-# identically to the query registries (see queries.DRIVER_PROMOTED /
-# DRIVER_DEMOTED; the demoted twins keep this exact SQL gate in pytest).
-for _k in ("q_dsir_sample", "q_token_budget_mix",
-           "q_script_profile", "q_corpus_card"):
-    ORACLES[_k] = EXTRA_ORACLES.pop(_k)
-for _k in ("q_resample_dense", "q_ngram_jaccard",
-           "q_dedupe_last", "q_semi_join"):
-    EXTRA_ORACLES[_k] = ORACLES.pop(_k)
-
-# Second round-6 rotation (see queries.DRIVER_PROMOTED_R6B): the newest
-# surface enters the driver record; the demoted twins keep the identical
-# SQL gate in pytest.
-for _k in ("q_image_decode", "q_bloom_dedup"):
-    ORACLES[_k] = EXTRA_ORACLES.pop(_k)
-for _k in ("q_frame_sample", "q_resample_weekly"):
-    EXTRA_ORACLES[_k] = ORACLES.pop(_k)
-
-# Third round-6 rotation (see queries.DRIVER_PROMOTED_R6C): the
-# flagship text-surgery operators; the demoted 1-row/20-row twins keep
-# the identical SQL gate in pytest.
-for _k in ("q_span_dedup", "q_main_content"):
-    ORACLES[_k] = EXTRA_ORACLES.pop(_k)
-for _k in ("q_dupe_count", "q_explode_tokens"):
-    EXTRA_ORACLES[_k] = ORACLES.pop(_k)
-
-# Round-7 rotation (see queries.DRIVER_PROMOTED_R7): SURVEY §2 keys are
-# tenured back into the driver record (queries.SURVEY_S2_TENURED); the
-# demoted twins keep the identical SQL gate in pytest.
-for _k in ("q_dedupe_last", "q_dupe_count"):
-    ORACLES[_k] = EXTRA_ORACLES.pop(_k)
-for _k in ("q_set_ops", "q_histogram"):
-    EXTRA_ORACLES[_k] = ORACLES.pop(_k)
-
-# Second round-7 rotation (see queries.DRIVER_PROMOTED_R7B): the exact
-# JPEG decode gate enters the driver record; the demoted window twin
-# keeps the identical SQL gate in pytest.
-for _k in ("q_jpeg_decode",):
-    ORACLES[_k] = EXTRA_ORACLES.pop(_k)
-for _k in ("q_moving_avg",):
-    EXTRA_ORACLES[_k] = ORACLES.pop(_k)
-
-# Round-8 rotation (see queries.DRIVER_PROMOTED_R8): the round-7 decode
-# flagships enter the driver record; the demoted family twins keep the
-# identical SQL gate in pytest + scripts/check_oracle.py.
-for _k in ("q_pdf_text", "q_gif_decode", "q_audio_tone"):
-    ORACLES[_k] = EXTRA_ORACLES.pop(_k)
-for _k in ("q_hash_sample", "q_group_cap", "q_top_customers"):
-    EXTRA_ORACLES[_k] = ORACLES.pop(_k)
-
-# Round-9 rotation (see queries.DRIVER_PROMOTED_R9): the round-8
-# decode/sniff flagships enter the driver record; the demoted family
-# twins keep the identical SQL gate in pytest + scripts/check_oracle.py.
-for _k in ("q_webp_decode", "q_exif", "q_sniff_av"):
-    ORACLES[_k] = EXTRA_ORACLES.pop(_k)
-for _k in ("q_pivot", "q_corr", "q_latest_event"):
-    EXTRA_ORACLES[_k] = ORACLES.pop(_k)
-
 # Real video frame extraction (round 9): ticks at 1000 ms over
 # (2 + doc_id % 4) frames spaced 500 ms; the frame on display at tick
 # k is source frame 2k, whose solid gray level is pure doc_id
@@ -3354,7 +3286,7 @@ for _k in ("q_pivot", "q_corr", "q_latest_event"):
 # Container rotates per doc_id//16 mod 4 (MJPEG AVI / photo-JPEG MP4 /
 # animated WebP / all-intra VP8 WebM) — timing and pixels are
 # container-independent, so one oracle covers all four walks.
-EXTRA_ORACLES["q_video_frames"] = """
+ORACLE_SQL["q_video_frames"] = """
 WITH docs AS (SELECT doc_id FROM documents WHERE doc_id % 27 = 0),
 ticks AS (
     SELECT doc_id,
@@ -3371,7 +3303,7 @@ FROM ticks
 
 # Lossy-VP8 decode (round 9): solid gray at qi=0 reconstructs exactly,
 # so every column is doc_id arithmetic.
-EXTRA_ORACLES["q_vp8_decode"] = """
+ORACLE_SQL["q_vp8_decode"] = """
 SELECT doc_id AS media_id,
        CAST(16 + (doc_id // 8) % 4 * 12 AS BIGINT) AS width,
        CAST(16 + (doc_id // 16) % 3 * 10 AS BIGINT) AS height,
@@ -3384,7 +3316,7 @@ FROM documents WHERE doc_id % 8 = 0
 # q_doc_text (round 9): DOCX/ODT round trip must reproduce EXACTLY the
 # ASCII projection with '.' -> newline (each newline = one paragraph
 # boundary the XML walk has to reassemble).
-EXTRA_ORACLES["q_doc_text"] = """
+ORACLE_SQL["q_doc_text"] = """
 WITH t AS (
     SELECT doc_id,
            replace(regexp_replace(text, '[^ -~]', '', 'g'),
@@ -3402,7 +3334,7 @@ FROM t
 # projection; chapters hold 3 lines each, so n_chapters is
 # ceil(lines / 3) — lines = newline count + 1 (text '' is one empty
 # line -> one chapter, matching encode_epub's [['']] group).
-EXTRA_ORACLES["q_epub_text"] = """
+ORACLE_SQL["q_epub_text"] = """
 WITH t AS (
     SELECT doc_id,
            replace(regexp_replace(text, '[^ -~]', '', 'g'),
@@ -3420,7 +3352,7 @@ FROM t
 # q_rtf_text (r11): RTF round trip must reproduce EXACTLY the ASCII
 # projection; n_paragraphs counts newline-separated lines (0 for an
 # empty document, matching extract_rtf_text).
-EXTRA_ORACLES["q_rtf_text"] = """
+ORACLE_SQL["q_rtf_text"] = """
 WITH t AS (
     SELECT doc_id,
            replace(regexp_replace(text, '[^ -~]', '', 'g'),
@@ -3438,7 +3370,7 @@ FROM t
 
 # q_pptx_text (r11): slides hold 3 lines each — n_slides is
 # ceil(lines / 3), the q_epub_text arithmetic.
-EXTRA_ORACLES["q_pptx_text"] = """
+ORACLE_SQL["q_pptx_text"] = """
 WITH t AS (
     SELECT doc_id,
            replace(regexp_replace(text, '[^ -~]', '', 'g'),
@@ -3455,7 +3387,7 @@ FROM t
 
 # q_word_doc_text (r11): the Word 97 piece-table round trip must
 # reproduce EXACTLY the ASCII projection (the q_rtf_text arithmetic).
-EXTRA_ORACLES["q_word_doc_text"] = """
+ORACLE_SQL["q_word_doc_text"] = """
 WITH t AS (
     SELECT doc_id,
            replace(regexp_replace(text, '[^ -~]', '', 'g'),
@@ -3473,7 +3405,7 @@ FROM t
 
 # q_xls_scan (r11): the same events slice as q_xlsx_scan, through the
 # BIFF8 binary walk.
-EXTRA_ORACLES["q_xls_scan"] = """
+ORACLE_SQL["q_xls_scan"] = """
 SELECT event_id,
        strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,
        user_id, event_type,
@@ -3485,7 +3417,7 @@ ORDER BY event_id LIMIT 20000
 
 # q_ods_scan (r12): the same events slice as q_xls_scan, through the
 # ODF content.xml walk.
-EXTRA_ORACLES["q_ods_scan"] = """
+ORACLE_SQL["q_ods_scan"] = """
 SELECT event_id,
        strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,
        user_id, event_type,
@@ -3497,7 +3429,7 @@ ORDER BY event_id LIMIT 20000
 
 # q_ass_cues (r12): the q_subtitle_cues pattern over the SubStation
 # formats — centisecond stamps, comma-bearing text, \N line breaks.
-EXTRA_ORACLES["q_ass_cues"] = """
+ORACLE_SQL["q_ass_cues"] = """
 WITH docs AS (SELECT doc_id FROM documents WHERE doc_id % 11 = 0),
 cues AS (
     SELECT doc_id, CAST(k AS BIGINT) AS cue_idx
@@ -3517,7 +3449,7 @@ FROM cues
 # q_opus_tone (r12): 0.5 s twin-marked SILK-NB Opus tones; decode
 # returns whole 20 ms frames (4000 samples exactly), 2 Hz bins, the
 # dominant bin is pure doc_id arithmetic.
-EXTRA_ORACLES["q_opus_tone"] = """
+ORACLE_SQL["q_opus_tone"] = """
 SELECT doc_id AS media_id,
        CAST(4000 AS BIGINT) AS n_frames,
        CAST(8000 AS BIGINT) AS sample_rate,
@@ -3528,7 +3460,7 @@ FROM documents WHERE doc_id % 64 = 0
 
 # q_audio_meta (r11): every tag field is doc_id arithmetic; format
 # follows the four-way container rotation.
-EXTRA_ORACLES["q_audio_meta"] = """
+ORACLE_SQL["q_audio_meta"] = """
 SELECT doc_id AS media_id,
        CASE (doc_id // 21) % 4
             WHEN 0 THEN 'id3v2.3' WHEN 1 THEN 'id3v2.4'
@@ -3545,7 +3477,7 @@ FROM documents WHERE doc_id % 21 = 0
 
 # q_ppt_text (r11): one text atom per line — n_atoms = line count
 # (one empty atom for an empty deck, matching encode_ppt).
-EXTRA_ORACLES["q_ppt_text"] = """
+ORACLE_SQL["q_ppt_text"] = """
 WITH t AS (
     SELECT doc_id,
            replace(regexp_replace(text, '[^ -~]', '', 'g'),
@@ -3563,7 +3495,7 @@ FROM t
 # Baseline-TIFF decode (round 9): lossless, so every column is doc_id
 # arithmetic regardless of which compression/endianness the writer
 # rotation picked.
-EXTRA_ORACLES["q_tiff_decode"] = """
+ORACLE_SQL["q_tiff_decode"] = """
 SELECT doc_id AS media_id,
        CAST(16 + (doc_id // 8) % 4 * 12 AS BIGINT) AS width,
        CAST(16 + (doc_id // 16) % 3 * 10 AS BIGINT) AS height,
@@ -3573,18 +3505,9 @@ FROM documents WHERE doc_id % 8 = 4
 """
 
 
-# Round-9 second rotation twin (see queries.DRIVER_PROMOTED_R9B).
-for _k in ("q_vp8_decode", "q_video_frames", "q_doc_text",
-           "q_tiff_decode"):
-    ORACLES[_k] = EXTRA_ORACLES.pop(_k)
-for _k in ("q_bloom_dedup", "q_simhash", "q_media_stats",
-           "q_shard_assign"):
-    EXTRA_ORACLES[_k] = ORACLES.pop(_k)
-
-
 # q_xlsx_scan (round 9, SURVEY S8 made real): the workbook was built
 # from this exact slice, so re-selecting it IS the oracle.
-EXTRA_ORACLES["q_xlsx_scan"] = """
+ORACLE_SQL["q_xlsx_scan"] = """
 SELECT event_id,
        strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,
        user_id, event_type,
@@ -3597,7 +3520,7 @@ ORDER BY event_id LIMIT 20000
 # q_subtitle_cues (round 9): cue timing and multi-line bodies are pure
 # doc_id arithmetic; format (SRT vs WebVTT) rotates Spark-side and is
 # invisible to the recomputation.
-EXTRA_ORACLES["q_subtitle_cues"] = """
+ORACLE_SQL["q_subtitle_cues"] = """
 WITH docs AS (SELECT doc_id FROM documents WHERE doc_id % 9 = 0),
 cues AS (
     SELECT doc_id, CAST(k AS BIGINT) AS cue_idx
@@ -3617,7 +3540,7 @@ FROM cues
 # q_avro_scan (r9, three codecs since r10 incl. snappy): the fixture
 # was built from this
 # exact slice with native types, so re-selecting it IS the oracle.
-EXTRA_ORACLES["q_avro_scan"] = """
+ORACLE_SQL["q_avro_scan"] = """
 SELECT event_id,
        strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,
        user_id, event_type,
@@ -3630,7 +3553,7 @@ ORDER BY event_id LIMIT 20000
 # q_jsonl_scan (r12, seven compressions incl. foreign libzstd /
 # liblz4 / libbrotli bytes): the fixture was built from this exact
 # slice, so re-selecting it IS the oracle.
-EXTRA_ORACLES["q_jsonl_scan"] = """
+ORACLE_SQL["q_jsonl_scan"] = """
 SELECT event_id,
        strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,
        user_id, event_type,
@@ -3643,7 +3566,7 @@ ORDER BY event_id LIMIT 21000
 # q_orc_scan (r12, five ORC compression kinds): the fixture was
 # written by Spark's ORC sink from this exact slice, so re-selecting
 # it IS the oracle.
-EXTRA_ORACLES["q_orc_scan"] = """
+ORACLE_SQL["q_orc_scan"] = """
 SELECT event_id,
        strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,
        user_id, event_type,
@@ -3656,7 +3579,7 @@ ORDER BY event_id LIMIT 22000
 # q_7z_scan (r12, libarchive-authored lzma1/lzma2/zstd archives): the
 # fixture was built from this exact slice, so re-selecting it IS the
 # oracle.
-EXTRA_ORACLES["q_7z_scan"] = """
+ORACLE_SQL["q_7z_scan"] = """
 SELECT event_id,
        strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,
        user_id, event_type,
@@ -3666,11 +3589,5 @@ ORDER BY event_id LIMIT 23000
 """
 
 
-# Round-10 rotation (see queries.DRIVER_PROMOTED_R10): the round-9
-# source/extraction flagships enter the driver record; the demoted
-# family twins keep the identical SQL gate in pytest +
-# scripts/check_oracle.py.
-for _k in ("q_xlsx_scan", "q_avro_scan", "q_subtitle_cues"):
-    ORACLES[_k] = EXTRA_ORACLES.pop(_k)
-for _k in ("q_anti_join", "q_weighted_mix", "q_sessionize"):
-    EXTRA_ORACLES[_k] = ORACLES.pop(_k)
+ORACLES = {n: ORACLE_SQL[n] for n in DRIVER_GATED}
+EXTRA_ORACLES = {n: ORACLE_SQL[n] for n in EXTRA_QUERIES}

@@ -1,5 +1,12 @@
 """Query registry: every operator as (spark, sf_dir) -> DataFrame, with a
-DuckDB oracle twin in :mod:`datapump_spark.oracles`.
+DuckDB oracle twin in :mod:`datapump_spark.oracles` (bench variants have
+none).
+
+Each query is registered once, where it is defined, by :func:`query`;
+registering a name twice raises. Its tier is declared once, in the
+``DRIVER_GATED`` and ``BENCH_VARIANTS_NAMES`` tuples; everything else is
+extra. ``QUERIES``, ``EXTRA_QUERIES``, ``BENCH_VARIANTS`` and
+``ALL_QUERIES`` are views derived from the two at the end of the module.
 
 Float-determinism policy (the driver hash-compares values):
 - Money-style SUM/AVG over many rows: per-row double expression (IEEE-
@@ -23,7 +30,8 @@ from __future__ import annotations
 
 import os
 import weakref
-from functools import lru_cache
+from collections.abc import Callable
+from functools import lru_cache, wraps
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -128,6 +136,109 @@ def _exact_mean6(col_expr, alias: str):
             / F.lit(1e6)).alias(alias)
 
 
+# ---------------------------------------------------------------- registry
+
+# name -> cache-scoped query; filled only by @query (see module docstring)
+_REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+
+
+# Cache-scope query boundary (r13, guide §5): operators persist shared
+# subtrees for the duration of ONE query; the registry in cachescope.py
+# records them, and this wrapper releases the PREVIOUS query's
+# registrations when the next query build begins. In a long session (the
+# 174-query bench, a notebook) storage then holds at most one query's
+# caches instead of accumulating all of them — the r12 defect where
+# late-bench-order queries regressed ~2x at 32 cores under ~10^2 pinned
+# stale entries. Results are unaffected: an unpersisted frame recomputes
+# from lineage; each query still computes end-to-end from its parquet
+# inputs with its own caches warm while it runs.
+def _with_cache_scope(fn):
+    from datapump_spark.cachescope import release_scope
+
+    @wraps(fn)
+    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+        release_scope(spark)
+        return fn(spark, sf_dir)
+
+    return wrapped
+
+
+def query(fn):
+    """Register ``fn`` under ``fn.__name__``, wrapped in the cache-scope
+    boundary; raise ValueError if the name is already registered.
+
+    Returns ``fn`` unwrapped: a query whose build calls another query's
+    function directly must not release its own scoped caches part-way
+    through that build."""
+    name = fn.__name__
+    if name in _REGISTRY:
+        raise ValueError(f"query {name!r} is already registered")
+    _REGISTRY[name] = _with_cache_scope(fn)
+    return fn
+
+
+# The driver's correctness gate records at most 50 entries per round, so
+# exactly 50 queries are driver-gated, in this order (the order
+# __spark_entry__.queries() and oracle_sql() hand the driver). Every
+# SURVEY §2 key — what the reference itself computes — is always one of
+# them; the other slots go to the strongest evidence for the rest of the
+# surface. Every other registered query that is not a bench variant is
+# in the extra tier and goes through the SAME DuckDB oracle gate via
+# tests/test_extra_oracles.py and scripts/check_oracle.py.
+DRIVER_GATED = (
+    "q_csv_scan", "q_multiformat_ts", "q_type_infer", "q_drop_columns",
+    "q_dedupe_first", "q_resample_hourly", "q_describe_numeric",
+    "q_describe_string", "q_mode", "q_pricing_summary", "q_star_revenue",
+    "q_json_extract", "q_ts_format", "q_rollup", "q_window_topn",
+    "q_text_stats", "q_quality_score", "q_lang_id", "q_fingerprint",
+    "q_exact_dedup", "q_minhash_near_dup", "q_embedding_near_dup",
+    "q_cosine_topk", "q_resample_daily", "q_dup_clusters", "q_asof_join",
+    "q_assoc_rules", "q_dsir_sample", "q_token_budget_mix",
+    "q_script_profile", "q_corpus_card", "q_image_decode", "q_span_dedup",
+    "q_main_content", "q_dedupe_last", "q_dupe_count", "q_jpeg_decode",
+    "q_pdf_text", "q_gif_decode", "q_audio_tone", "q_webp_decode",
+    "q_exif", "q_sniff_av", "q_vp8_decode", "q_video_frames",
+    "q_doc_text", "q_tiff_decode", "q_xlsx_scan", "q_avro_scan",
+    "q_subtitle_cues",
+)
+
+SURVEY_S2_TENURED = frozenset({
+    "q_csv_scan", "q_multiformat_ts", "q_drop_columns", "q_ts_format",
+    "q_type_infer", "q_dedupe_first", "q_dedupe_last", "q_dupe_count",
+    "q_resample_hourly", "q_resample_daily", "q_describe_numeric",
+    "q_describe_string", "q_mode",
+})
+
+assert len(DRIVER_GATED) == 50, f"driver cap: {len(DRIVER_GATED)}"
+assert SURVEY_S2_TENURED <= set(DRIVER_GATED), (
+    "SURVEY §2 keys must stay in the driver-gated set: missing "
+    f"{sorted(SURVEY_S2_TENURED - set(DRIVER_GATED))}")
+
+# Production-path strategy variants of oracle-gated queries: approximate or
+# order-sequential algorithms with NO exact SQL twin (that is what makes a
+# query a variant). They are pytest-graded (recall / packing invariants)
+# and included in bench.py so the strategies a 100 TB deployment would
+# actually run carry timings every round.
+BENCH_VARIANTS_NAMES = (
+    # Approximate ANN — recall-gated in tests/test_pq.py and
+    # scripts/ann_recall.py, timed in bench.py.
+    "q_lsh_topk", "q_ivf_topk", "q_simhash_pairs_capped",
+    "q_tokenizer_fertility", "q_ccnet_buckets",
+    "q_embedding_near_dup_gemm_lsh", "q_pack_greedy_bins",
+    "q_semantic_dedup", "q_bpe_encode", "q_approx_profile",
+    "q_compression_ratio", "q_hll_rollup", "q_pq_topk", "q_unigram_encode",
+    "q_ivfpq_topk", "q_sq8_topk",
+    # xxhash64 production profiles of the md5-oracle-keyed dedup pair
+    # queries — the verifiability-cost quantifiers (PERF 'Known costs')
+    "q_minhash_near_dup_fast", "q_dup_clusters_fast",
+    # Perceptual image dedup — Python-side decode; pair semantics pinned
+    # in test_multimodal.
+    "q_image_dedup",
+    # contrastive training-data bootstrap (composition, pytest-pinned)
+    "q_contrastive_triples",
+)
+
+
 # ---------------------------------------------------------------- reference parity
 
 # The ingestion queries read a CSV serialization of the sf-scaled events
@@ -182,6 +293,7 @@ def scaled_events_csv(sf_dir: str, n_shards: int = 32) -> str:
     return str(out_dir / "events_*.csv")
 
 
+@query
 def q_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4+S5+P5: typed ingestion — raw all-string scan, one-pass type
     inference, codegen'd multi-format timestamp parse — of the sf-scaled
@@ -190,6 +302,7 @@ def q_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ingest_csv(spark, scaled_events_csv(sf_dir))
 
 
+@query
 def q_multiformat_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 standalone: raw string + parsed timestamp (datapump.py:439-443),
     over the sf-scaled CSV's per-row format mix."""
@@ -201,6 +314,7 @@ def q_multiformat_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_type_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5: inferred CKAN type per column of the scaled CSV, exhaustive pass
     (datapump.py:149-166)."""
@@ -212,6 +326,7 @@ def q_type_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_iot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-parity twin of q_csv_scan on the verbatim IoT fixture —
     keeps the whitespace/empty-string quirks (datapump.py:442-444) gated."""
@@ -219,6 +334,7 @@ def q_iot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ingest_csv(spark, IOT_GLOB)
 
 
+@query
 def q_iot_multiformat_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-parity multi-format parse on the IoT fixture."""
     ensure_utc(spark)
@@ -229,6 +345,7 @@ def q_iot_multiformat_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_iot_type_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-parity exhaustive type inference on the IoT fixture."""
     ensure_utc(spark)
@@ -238,17 +355,20 @@ def q_iot_type_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_drop_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1: drop-columns projection (datapump.py:291-293). Catalyst prunes the
     parquet scan to the surviving columns (ReadSchema excludes props)."""
     return _t(spark, sf_dir, "events").drop("props")
 
 
+@query
 def q_dupe_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3 DUPES diagnostic on events (user_id, event_type) (datapump.py:449)."""
     return dupe_count(_t(spark, sf_dir, "events"), ["user_id", "event_type"])
 
 
+@query
 def q_dedupe_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4 keep-first by explicit order (event_id ≈ file row order)."""
     return dedupe_by_key(
@@ -256,6 +376,7 @@ def q_dedupe_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_dedupe_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4 keep-last — the variant plain dropDuplicates cannot express."""
     return dedupe_by_key(
@@ -263,6 +384,7 @@ def q_dedupe_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_resample_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 hourly resample: the sample jobs' {"Kind":"H","GroupBy":"Sensor_id"}
     (datapump.py:294) on events(user_id, ts, value)."""
@@ -273,6 +395,7 @@ def q_resample_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("user_id", "bucket_ts", F.round("value", 6).alias("avg_value"))
 
 
+@query
 def q_resample_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 daily resample (Kind='D')."""
     df = freq_resample(
@@ -282,6 +405,7 @@ def q_resample_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("user_id", "bucket_ts", F.round("value", 6).alias("avg_value"))
 
 
+@query
 def q_resample_15min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 fixed-interval resample (Kind='15T') via epoch-aligned window()."""
     df = freq_resample(
@@ -291,17 +415,20 @@ def q_resample_15min(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("user_id", "bucket_ts", F.round("value", 6).alias("avg_value"))
 
 
+@query
 def q_describe_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 numeric describe over events.value (datapump.py:329-336)."""
     d = describe_numeric(_t(spark, sf_dir, "events"), ["value"])
     return d.select("column", "stat", F.round("value", 6).alias("value"))
 
 
+@query
 def q_describe_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 string describe (count/unique/top/freq) over events.event_type."""
     return describe_string(_t(spark, sf_dir, "events"), ["event_type"])
 
 
+@query
 def q_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 mode-with-ties over (event_type, user_id) (datapump.py:337-344)."""
     return column_modes(_t(spark, sf_dir, "events"), ["event_type", "user_id"])
@@ -309,6 +436,7 @@ def q_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- star-schema joins
 
+@query
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped pricing summary. Single shuffle on the two grouping
     columns; the shipdate filter pushes to the parquet scan."""
@@ -326,6 +454,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue by nation: lineitem⋈orders⋈customer⋈nation⋈region.
 
@@ -349,6 +478,7 @@ def q_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 customers by order revenue — deterministic tie-break on key.
     Aggregate first (shuffle on custkey), then a single top-k sort of the
@@ -367,6 +497,7 @@ def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.props JSON string → typed field (from_json → MapType per
     SURVEY §1.2; here a direct path extract, codegen'd)."""
@@ -377,6 +508,7 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_resample_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 dense variant: gap buckets emitted as null rows (pandas resample
     gap-fill parity, SURVEY §2.13.3) via sequence+explode spine."""
@@ -387,6 +519,7 @@ def q_resample_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("user_id", "bucket_ts", F.round("value", 6).alias("avg_value"))
 
 
+@query
 def q_resample_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 calendar-unit resample (Kind='W', Monday-start weeks)."""
     df = freq_resample(
@@ -396,6 +529,7 @@ def q_resample_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("user_id", "bucket_ts", F.round("value", 6).alias("avg_value"))
 
 
+@query
 def q_ts_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4: timestamp→string cast at the sink boundary (datapump.py:470-471)."""
     return _t(spark, sf_dir, "orders").select(
@@ -404,6 +538,7 @@ def q_ts_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: a >30-min gap starts a new session (lag + running
     sum — the batch formulation of a session window; the streaming twin is
@@ -437,6 +572,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouping-sets surface (absent in the reference, SURVEY §2.4):
     ROLLUP(returnflag, linestatus) with exact decimal sums."""
@@ -448,6 +584,7 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE(returnflag, linestatus): all 4 grouping sets in one pass —
     completes the grouping-sets surface next to q_rollup (SURVEY §2.4
@@ -461,6 +598,7 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with no URGENT order (left anti ≡ NOT EXISTS).
 
@@ -473,6 +611,7 @@ def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                      "left_anti")
 
 
+@query
 def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Large parts that ship at least once (left semi ≡ EXISTS)."""
     part = _t(spark, sf_dir, "part").where(F.col("p_size") > 40)
@@ -480,6 +619,7 @@ def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return part.join(li, part["p_partkey"] == li["l_partkey"], "left_semi")
 
 
+@query
 def q_window_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders by value per customer (ranking window, deterministic
     tie-break on orderkey)."""
@@ -495,24 +635,28 @@ def q_window_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- text analysis
 
+@query
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting + char-class stats over documents (operators/text.py)."""
     from datapump_spark.operators.text import text_stats
     return text_stats(_t(spark, sf_dir, "documents"))
 
 
+@query
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite document quality score."""
     from datapump_spark.operators.text import quality_score
     return quality_score(_t(spark, sf_dir, "documents"))
 
 
+@query
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language ID."""
     from datapump_spark.operators.text import lang_id
     return lang_id(_t(spark, sf_dir, "documents"))
 
 
+@query
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """md5 + rolling 8-gram min-hash document fingerprints."""
     from datapump_spark.operators.text import fingerprint
@@ -521,18 +665,21 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- dedup family
 
+@query
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on normalized-text fingerprint (keep lowest doc_id)."""
     from datapump_spark.operators.dedup_fuzzy import exact_dedup
     return exact_dedup(_t(spark, sf_dir, "documents"))
 
 
+@query
 def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k=4 MinHash signatures over word-3-gram shingles."""
     from datapump_spark.operators.dedup_fuzzy import minhash_signatures
     return minhash_signatures(_t(spark, sf_dir, "documents"), k=4)
 
 
+@query
 def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline (4 bands × 4 rows, verify ≥ 0.5)."""
     from datapump_spark.operators.dedup_fuzzy import minhash_near_dup_pairs
@@ -540,6 +687,7 @@ def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
+@query
 def q_minhash_near_dup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The q_minhash_near_dup pipeline on the xxhash64 production profile
     — bench variant quantifying the md5-for-oracle-verifiability cost the
@@ -551,6 +699,7 @@ def q_minhash_near_dup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
+@query
 def q_dup_clusters_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_dup_clusters on the xxhash64 production profile (bench variant;
     same clustering semantics, fast engine-internal hashes)."""
@@ -559,18 +708,21 @@ def q_dup_clusters_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
                              threshold=0.5, hash_fn="xxhash64")
 
 
+@query
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard pairs within source blocks (≥ 0.5)."""
     from datapump_spark.operators.dedup_fuzzy import ngram_jaccard_pairs
     return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
 
 
+@query
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document."""
     from datapump_spark.operators.dedup_fuzzy import simhash
     return simhash(_t(spark, sf_dir, "documents"))
 
 
+@query
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (hamming ≤ 3) via the Manku pigeonhole
     block index — equi-join candidates, never all-pairs; LOSSLESS, so the
@@ -580,6 +732,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_near_dup(_t(spark, sf_dir, "documents"), max_hamming=3)
 
 
+@query
 def q_corpus_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dataset card: one row per (lang, source) summarizing volume
     (docs/tokens), mean quality score, script composition (latin/digit
@@ -612,6 +765,7 @@ def q_corpus_card(spark: SparkSession, sf_dir: str) -> DataFrame:
          / F.count(F.lit(1))).alias("dup_rate")))
 
 
+@query
 def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail perplexity routing per language
     (operators/lm.py ccnet_buckets). Bench variant: depends on the
@@ -621,6 +775,7 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ccnet_buckets(docs, group_cols=["lang"])
 
 
+@query
 def q_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document Unicode-script composition report (operators/text.py
     script_profile) — the language-ID complement for mixed-script /
@@ -629,6 +784,7 @@ def q_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return script_profile(_t(spark, sf_dir, "documents"))
 
 
+@query
 def q_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NFC unicode canonicalization + zero-width strip over the corpus
     (operators/cleaning.py unicode_normalize) — the pass multilingual
@@ -639,6 +795,7 @@ def q_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unicode_normalize(docs, out_col="text_nfc")
 
 
+@query
 def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language tokenizer fertility / unk-rate report over the BPE
     encode (operators/vocab.py tokenizer_fertility) — the acceptance
@@ -651,6 +808,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tokenizer_fertility(enc, docs, group_cols=["lang"])
 
 
+@query
 def q_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget corpus mixing (operators/sampling.py
     token_budget_mix): per-source hash-ordered prefixes whose cumulative
@@ -666,6 +824,7 @@ def q_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "source", "n_tok", "cum_tok")
 
 
+@query
 def q_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space benchmark decontamination (operators/decontam.py
     semantic_decontaminate): flag corpus vectors whose max cosine vs the
@@ -679,6 +838,7 @@ def q_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.where(F.col("vec_id") % 20 == 0), threshold=0.3)
 
 
+@query
 def q_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR model state: per-bucket log(p_target/p_raw) under hashed
     unigram+bigram multinomials (operators/importance.py
@@ -690,6 +850,7 @@ def q_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.where(F.col("doc_id") % 10 == 0), docs, n_buckets=1024)
 
 
+@query
 def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance resampling (operators/importance.py dsir_sample):
     Gumbel top-100 of the corpus toward the target slice's n-gram
@@ -701,6 +862,7 @@ def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "n_feats", "score", "rank")
 
 
+@query
 def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup admission against a persisted MinHash
     signature index (operators/incremental.py incremental_near_dup):
@@ -720,6 +882,7 @@ def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", *[f"mh{i}" for i in range(16)])
 
 
+@query
 def q_simhash_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production-profile SimHash pair index: per-block degree cap bounds
     the dense-graph worst case (~B² pairs from B near-identical docs) so
@@ -730,6 +893,7 @@ def q_simhash_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
                             max_block_size=256)
 
 
+@query
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs cosine near-dup baseline over embeddings (cos ≥ 0.3)."""
     from datapump_spark.operators.dedup_fuzzy import embedding_near_dup
@@ -738,12 +902,14 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- similarity search
 
+@query
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force top-5 cosine neighbors for query ids < 10."""
     from datapump_spark.operators.similarity import cosine_topk
     return cosine_topk(_t(spark, sf_dir, "embeddings"), k=5, query_max_id=10)
 
 
+@query
 def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe OR-ed-table LSH approximate top-5 (rows-only check;
     recall graded in tests/scripts/ann_recall.py against the exact
@@ -754,6 +920,7 @@ def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     dim=_emb_dim(sf_dir), n_planes=6, n_probe=8, n_tables=4)
 
 
+@query
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization compressed-corpus top-5 with ADC shortlist +
     exact re-rank (operators/pq.py). Bench-only: measures train + encode +
@@ -765,6 +932,7 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_topk(emb, cb, k=5, query_max_id=10, rerank_factor=8)
 
 
+@query
 def q_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQ8 scalar-quantized top-5 (operators/sq.py): per-dim affine 8-bit
     codes (dim bytes/vector, near-exact recall — the compression point
@@ -780,6 +948,7 @@ def q_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     strategy="pandas")
 
 
+@query
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (k-means cells + n_probe) approximate top-5 (rows-only check;
     recall graded in tests against the exact baseline)."""
@@ -788,25 +957,15 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     n_cells=16, n_probe=4)
 
 
-# near_dup_clusters is the upstream of BOTH q_dup_clusters and
-# q_canonical_docs (clustering feeds representative selection in the real
-# pipeline); memoize the persisted frame per (session, sf_dir) so a run that
-# executes both pays the MinHash+CC cost once — the "reuse a partitioning
-# across stages" rule applied across the query boundary.
-_CLUSTER_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def _clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """near_dup_clusters over the documents — the upstream of
+    q_dup_clusters, q_canonical_docs and q_leakage_split."""
     from datapump_spark.operators.dedup_fuzzy import near_dup_clusters
 
-    key = (id(spark), sf_dir)
-    if key not in _CLUSTER_CACHE:
-        _CLUSTER_CACHE[key] = near_dup_clusters(
-            _t(spark, sf_dir, "documents"), threshold=0.5
-        ).persist()
-    return _CLUSTER_CACHE[key]
+    return near_dup_clusters(_t(spark, sf_dir, "documents"), threshold=0.5)
 
 
+@query
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: MinHash pairs → connected components (min-label
     propagation). Every doc gets a cluster_id = min id of its component;
@@ -814,6 +973,7 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _clusters(spark, sf_dir)
 
 
+@query
 def q_group_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cap-per-group sampling: at most 10 docs per source, lowest doc_id
     first (the "cap documents per domain" training-data op)."""
@@ -823,6 +983,7 @@ def q_group_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "source")
 
 
+@query
 def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 8-way shard assignment by doc_id hash (write-side
     sharding for training-data output)."""
@@ -832,6 +993,7 @@ def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "shard")
 
 
+@query
 def q_weighted_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted dataset mixing: keep 100% of src0, 50% of src1, 25% of
     src2, drop everything else — one hash predicate, no shuffle."""
@@ -844,6 +1006,7 @@ def q_weighted_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- relational extensions
 
+@query
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set-operation surface (absent in the reference, SURVEY §2.8):
     (BUILDING ∪ AUTOMOBILE segments) ∩ customers-with-orders ∖
@@ -865,6 +1028,7 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.union(b).intersect(with_order).subtract(urgent)
 
 
+@query
 def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 5% Bernoulli sample: hash(event_id) % 20 == 0.
 
@@ -878,6 +1042,7 @@ def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.where(h % 20 == 0).select("event_id", "user_id", "event_type", "value")
 
 
+@query
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each event picks the customer's latest order at-or-before
     the event time (Spark has no ASOF JOIN; DuckDB does — oracle uses the
@@ -912,6 +1077,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window-frame surface: 4-row trailing moving average of value per
     user (ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), deterministic order.
@@ -925,6 +1091,7 @@ def q_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_latest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Argmax surface: each user's latest event via max_by on the ordering
     struct — a hash aggregation (map-side partials, no sort), the same
@@ -938,6 +1105,7 @@ def q_latest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT surface: events per (user, event_type) as columns. Explicit
     pivot values = one pass (no extra distinct scan) and a fixed schema."""
@@ -951,6 +1119,7 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram of events.value (50 buckets of 10 over
     [0, 500)): one groupBy on the computed bucket — the profiling op for
@@ -967,6 +1136,7 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlation / covariance surface: per returnflag Pearson corr and
     sample covariance of quantity vs extendedprice."""
@@ -981,6 +1151,7 @@ def q_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generator (explode/UNNEST) surface: top-20 corpus tokens by
     frequency, deterministic tie-break. Shuffles only (token, count)
@@ -1060,6 +1231,7 @@ def _media_real_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
         " ELSE " + mp4 + " END AS payload")
 
 
+@query
 def q_sniff_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Header sniff over real container bytes, pure-codegen strategy —
     per-format count, avg dimensions, avg sample rate (operators/
@@ -1082,6 +1254,7 @@ def q_sniff_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Relational metadata stats over the media table (no decode): per
     (kind, format) count, payload bytes, avg duration."""
@@ -1089,6 +1262,7 @@ def q_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media_stats(_media(spark, sf_dir))
 
 
+@query
 def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame sampling plan (one row per second of duration) — the
     explode/sequence side of the multimodal decode pipeline; the codec
@@ -1098,6 +1272,7 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(media, every_ms=1000)
 
 
+@query
 def q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL pixel decode gate. One solid-RGB PNG per sampled document is
     built by the pure-stdlib encoder (operators/codecs.py: zlib deflate,
@@ -1149,6 +1324,7 @@ def q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL JPEG decode gate — the q_image_decode pattern over the
     Huffman+IDCT path (operators/jpeg.py). One solid GRAYSCALE JPEG per
@@ -1202,6 +1378,7 @@ def q_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL GIF decode gate (operators/gif.py: LZW + palette). GIF is
     palette-exact, so unlike JPEG no quantization argument is needed:
@@ -1246,6 +1423,7 @@ def q_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL PDF text-extraction gate (operators/pdftext.py). Each
     sampled document's printable-ASCII projection is written into a
@@ -1302,6 +1480,7 @@ def q_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("n_pages").cast("long").alias("n_pages")))
 
 
+@query
 def q_webp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL lossless-WebP (VP8L) decode gate (operators/webp.py, r8).
     Same checkerboard arithmetic twin as q_gif_decode — VP8L is
@@ -1356,6 +1535,7 @@ def q_webp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL EXIF extraction gate (mediasniff.parse_exif via the
     multimodal.extract_exif kernel, r8). Each sampled document becomes
@@ -1405,6 +1585,7 @@ def q_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("pixel_y").cast("long").alias("pixel_y")))
 
 
+@query
 def q_sniff_av(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio/video container-sniff gate (r8): each sampled doc
     becomes one of five hand-assembled containers — CBR MP3, MP4 moov,
@@ -1502,6 +1683,7 @@ def q_sniff_av(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("duration_ms").cast("long").alias("duration_ms"))
 
 
+@query
 def q_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curriculum ordering (operators/sampling.py curriculum_order,
     exact profile): length-quantile stages over documents (short = easy)
@@ -1548,6 +1730,7 @@ def _ogg_tone_payload(f: int) -> bytes:
     return encode_vorbis(0.5 * np.sin(2 * np.pi * f * t), 8000)
 
 
+@query
 def q_audio_tone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio analysis gate (operators/audiofeat.py). Each sampled
     document becomes a one-second PCM WAV carrying a pure sine at a
@@ -1637,6 +1820,7 @@ def q_audio_tone(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("dominant_hz", 0).cast("long").alias("dominant_hz"))
 
 
+@query
 def q_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image near-dedup (operators/multimodal.py
     image_near_dup): one textured PNG per sampled document, built so
@@ -1677,6 +1861,7 @@ def q_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return image_near_dup(media, max_hamming=6)
 
 
+@query
 def q_contrastive_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive-triples bootstrap over the documents corpus
     (recipes.contrastive_triples): near-dup paraphrase positives + ANN
@@ -1688,62 +1873,7 @@ def q_contrastive_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents").select("doc_id", "text"))
 
 
-QUERIES = {
-    "q_csv_scan": q_csv_scan,
-    "q_multiformat_ts": q_multiformat_ts,
-    "q_type_infer": q_type_infer,
-    "q_drop_columns": q_drop_columns,
-    "q_dupe_count": q_dupe_count,
-    "q_dedupe_first": q_dedupe_first,
-    "q_dedupe_last": q_dedupe_last,
-    "q_resample_hourly": q_resample_hourly,
-    "q_describe_numeric": q_describe_numeric,
-    "q_describe_string": q_describe_string,
-    "q_mode": q_mode,
-    "q_pricing_summary": q_pricing_summary,
-    "q_star_revenue": q_star_revenue,
-    "q_top_customers": q_top_customers,
-    "q_json_extract": q_json_extract,
-    "q_resample_dense": q_resample_dense,
-    "q_resample_weekly": q_resample_weekly,
-    "q_ts_format": q_ts_format,
-    "q_sessionize": q_sessionize,
-    "q_rollup": q_rollup,
-    "q_anti_join": q_anti_join,
-    "q_semi_join": q_semi_join,
-    "q_window_topn": q_window_topn,
-    "q_text_stats": q_text_stats,
-    "q_quality_score": q_quality_score,
-    "q_lang_id": q_lang_id,
-    "q_fingerprint": q_fingerprint,
-    "q_exact_dedup": q_exact_dedup,
-    "q_minhash_near_dup": q_minhash_near_dup,
-    "q_ngram_jaccard": q_ngram_jaccard,
-    "q_simhash": q_simhash,
-    "q_embedding_near_dup": q_embedding_near_dup,
-    "q_cosine_topk": q_cosine_topk,
-    # q_lsh_topk / q_ivf_topk are approximate-ANN variants with no exact SQL
-    # twin — they live in BENCH_VARIANTS (recall-gated by tests/test_pq.py +
-    # scripts/ann_recall.py, timed by bench.py); the driver-gated set here
-    # carries q_resample_daily + q_assoc_rules instead, both oracle-checked.
-    "q_resample_daily": q_resample_daily,
-    "q_dup_clusters": q_dup_clusters,
-    "q_group_cap": q_group_cap,
-    "q_shard_assign": q_shard_assign,
-    "q_weighted_mix": q_weighted_mix,
-    "q_set_ops": q_set_ops,
-    "q_hash_sample": q_hash_sample,
-    "q_asof_join": q_asof_join,
-    "q_media_stats": q_media_stats,
-    "q_frame_sample": q_frame_sample,
-    "q_moving_avg": q_moving_avg,
-    "q_latest_event": q_latest_event,
-    "q_pivot": q_pivot,
-    "q_histogram": q_histogram,
-    "q_corr": q_corr,
-    "q_explode_tokens": q_explode_tokens,
-}
-
+@query
 def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher/C4-style rule filter: repetition + naturalness signals and a
     keep verdict per document."""
@@ -1776,6 +1906,7 @@ def _pii_input(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                 text.alias("text"))
 
 
+@query
 def q_pii_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row PII match counts (email/ssn/phone/ipv4)."""
     from datapump_spark.operators.pii import pii_stats
@@ -1783,6 +1914,7 @@ def q_pii_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pii_stats(_pii_input(spark, sf_dir), id_col="c_custkey")
 
 
+@query
 def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Category-token redaction of the same corpus."""
     from datapump_spark.operators.pii import pii_redact
@@ -1790,6 +1922,7 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pii_redact(_pii_input(spark, sf_dir), id_col="c_custkey")
 
 
+@query
 def q_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag corpus docs sharing a distinct
     13-gram with the held-out benchmark slice (doc_id % 20 == 0)."""
@@ -1801,6 +1934,7 @@ def q_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decontaminate(corpus, bench)
 
 
+@query
 def q_decontam_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURGICAL decontamination (operators/decontam.py
     remove_contaminated_spans): instead of dropping flagged docs, cut
@@ -1814,6 +1948,7 @@ def q_decontam_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return remove_contaminated_spans(corpus, bench)
 
 
+@query
 def q_pii_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Luhn-gated payment-card redaction (operators/pii.py redact_cards):
     every doc gets one VALID test card and one checksum-failing 16-digit
@@ -1830,6 +1965,7 @@ def q_pii_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
     return redact_cards(d)
 
 
+@query
 def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flesch reading-ease per document (operators/text.py readability):
     vowel-group syllables, [.!?]-run sentences, normalized-token words —
@@ -1840,6 +1976,7 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                              "text"))
 
 
+@query
 def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 PMI collocations over the documents corpus
     (operators/lm.py collocations): word-count aggs + broadcast join +
@@ -1850,6 +1987,7 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .select("doc_id", "text"))
 
 
+@query
 def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signals: duplicate-line fraction/chars,
     most-frequent-2-gram char coverage, duplicated-5-gram char coverage
@@ -1859,6 +1997,7 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_signals(_t(spark, sf_dir, "documents"))
 
 
+@query
 def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM filtering: add-1 bigram model trained on the
     doc_id % 5 != 0 slice scores the held-out slice (operators/lm.py)."""
@@ -1869,6 +2008,7 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return train_and_score(corpus, docs.where(F.col("doc_id") % 5 == 0))
 
 
+@query
 def q_lm_score_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser–Ney bigram scoring (operators/lm.py
     lm_score_kn — the KenLM smoothing, vs q_lm_score's add-1 baseline):
@@ -1880,6 +2020,7 @@ def q_lm_score_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lm_score_kn(docs.where(F.col("doc_id") % 5 == 0), uni, bi)
 
 
+@query
 def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window chunking: 64-token windows, 16-token overlap
     (operators/chunking.py)."""
@@ -1888,6 +2029,7 @@ def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_documents(_t(spark, sf_dir, "documents"))
 
 
+@query
 def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 TF-IDF keywords per document (operators/tfidf.py)."""
     from datapump_spark.operators.tfidf import tfidf_topk
@@ -1895,6 +2037,7 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tfidf_topk(_t(spark, sf_dir, "documents"), k=5)
 
 
+@query
 def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-window EWMA smoothing per user series
     (operators/timeseries.py). α = 0.5 so the weights are exact powers
@@ -1907,6 +2050,7 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
                 order_cols=["event_id"])
 
 
+@query
 def q_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear gap interpolation over the dense hourly resample (null gap
     buckets become interpolated values; series edges stay null)."""
@@ -1920,6 +2064,7 @@ def q_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return interpolate_linear(dense, ["user_id"], "bucket_ts", "avg_value")
 
 
+@query
 def q_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward-fill (LOCF, limit=3) over the dense hourly resample —
     the staleness-bounded imputation twin of q_interpolate
@@ -1936,6 +2081,7 @@ def q_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
                         limit=3)
 
 
+@query
 def q_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type least-squares trend of value over time
     (regr_slope/regr_intercept/corr aggregates, one pass)."""
@@ -1953,6 +2099,7 @@ def q_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 BM25_QUERY = "data model training pipeline"
 
 
+@query
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted index over documents: sorted posting list per term with
     df ≥ 5 (operators/retrieval.py)."""
@@ -1961,6 +2108,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return inverted_index(_t(spark, sf_dir, "documents"), min_df=5)
 
 
+@query
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 top-10 documents for a fixed query
     (operators/retrieval.py; term-sorted score fold, Lucene idf)."""
@@ -1969,6 +2117,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_topk(_t(spark, sf_dir, "documents"), BM25_QUERY, k=10)
 
 
+@query
 def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval: BM25 top-10 ⊕ hashing-vectorizer cosine top-10,
     fused by reciprocal-rank fusion (operators/retrieval.py rrf_fuse;
@@ -2021,6 +2170,7 @@ def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rrf_fuse({"bm25": bm, "vec": vec}, k=10)
 
 
+@query
 def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford first-digit screen over lineitem extended prices
     (operators/expectations.py benford_deviation): per-digit observed vs
@@ -2031,6 +2181,7 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "lineitem"), "l_extendedprice")
 
 
+@query
 def q_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user behavioral profile (operators/events_analytics.py
     user_activity_profile): inter-arrival mean/CV, Goh-Barabási
@@ -2042,6 +2193,7 @@ def q_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return user_activity_profile(_t(spark, sf_dir, "events"))
 
 
+@query
 def q_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation of event values per event type at lags 1..5
     (operators/timeseries.py autocorrelation): one window sort serves
@@ -2052,6 +2204,7 @@ def q_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value", max_lag=5)
 
 
+@query
 def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus concentration report: Gini coefficient of character mass
     across document sources (operators/describe.py gini_concentration)
@@ -2061,6 +2214,7 @@ def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"), "source", "n_chars")
 
 
+@query
 def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise association rules over order baskets of parts
     (operators/assoc.py pair_rules): support/confidence/lift for part
@@ -2072,12 +2226,7 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pair_rules(li, "l_orderkey", "l_partkey", min_support_count=3)
 
 
-# Driver-gated (defined after the QUERIES literal, so registered here):
-# promoted alongside q_resample_daily in place of the two oracle-less ANN
-# variants now living in BENCH_VARIANTS.
-QUERIES["q_assoc_rules"] = q_assoc_rules
-
-
+@query
 def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counts + local clustering coefficients (operators/
     graph.py triangle_stats) over the supplier co-purchase kNN graph:
@@ -2111,6 +2260,7 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_stats(knn)
 
 
+@query
 def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-24-row exact rolling median of value per event type
     (operators/timeseries.py rolling_quantile) — the robust smoother; a
@@ -2125,6 +2275,7 @@ def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("med", F.round("med", 6))
 
 
+@query
 def q_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type CUSUM change-point report over the events value
     series (operators/drift.py cusum_changepoints): window-only prefix
@@ -2136,6 +2287,7 @@ def q_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value", kappa=0.5, h=5.0)
 
 
+@query
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for retriever training (operators/raneval.py
     hard_negatives): per query, the 3 top-ranked exact-cosine hits that
@@ -2162,6 +2314,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hard_negatives(res, qrels, m=3, skip_top=1)
 
 
+@query
 def q_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking-quality metrics (operators/raneval.py) of the exact cosine
     top-10 against label-match relevance (same embedding label ⇒
@@ -2193,6 +2346,7 @@ def q_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 FUNNEL_STEPS = ["signup", "view", "purchase"]
 
 
+@query
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-step conversion funnel signup → view → purchase
     (operators/events_analytics.py)."""
@@ -2201,6 +2355,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return funnel(_t(spark, sf_dir, "events"), FUNNEL_STEPS)
 
 
+@query
 def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention over events
     (operators/events_analytics.py)."""
@@ -2209,6 +2364,7 @@ def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return retention(_t(spark, sf_dir, "events"))
 
 
+@query
 def q_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type z-score outliers, |z| > 2
     (operators/events_analytics.py)."""
@@ -2227,6 +2383,7 @@ WHERE o_totalprice = (SELECT max(o2.o_totalprice)
 """
 
 
+@query
 def q_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery THROUGH the SQL surface
     (sql_surface.run_sql): each customer's priciest order(s). Catalyst
@@ -2238,6 +2395,7 @@ def q_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_sql(spark, sf_dir, CORRELATED_SQL)
 
 
+@query
 def q_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot diff (operators/diff.py): events slice A vs slice B with
     value edits — added/removed/changed rows with the changed columns."""
@@ -2252,6 +2410,7 @@ def q_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table_diff(left, right, ["event_id"])
 
 
+@query
 def q_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth histogram of event values: exact percentile cutpoints
     + scan-speed bucket assignment, no global sort
@@ -2261,24 +2420,7 @@ def q_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return equidepth_histogram(_t(spark, sf_dir, "events"), "value")
 
 
-def q_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSONL ingestion: schema-inferred scan of the docs fixture, nested
-    meta struct flattened to typed columns (sources/jsonl.py)."""
-    from datapump_spark.sources.jsonl import read_jsonl
-
-    d = read_jsonl(spark, JSONL_GLOB)
-    return d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "lang",
-        "source",
-        F.col("n_chars").cast("bigint").alias("n_chars"),
-        "text",
-        F.col("meta.quality").cast("double").alias("quality"),
-        F.col("meta.crawl").alias("crawl"),
-        "tags",
-    )
-
-
+@query
 def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style corpus-wide duplicate-line removal. The synthetic docs are
     single-line, so the query first rechunks each document into pseudo-lines
@@ -2305,6 +2447,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_lines(lined)
 
 
+@query
 def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact repeated-substring REMOVAL (Lee et al. 2022 ExactSubstr,
     distributed): every 10-token gram occurring ≥2× corpus-wide keeps only
@@ -2318,10 +2461,11 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return remove_duplicate_spans(docs, n=10)
 
 
+@query
 def q_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup pipeline composition: near-dup clusters → per-cluster
-    representative by quality score (ties → lowest doc_id). Reuses the
-    persisted cluster frame from q_dup_clusters (see _clusters)."""
+    representative by quality score (ties → lowest doc_id). Computes
+    its own clustering (see _clusters), read once by canonical_docs."""
     from datapump_spark.operators.dedup_fuzzy import canonical_docs
     from datapump_spark.operators.text import quality_score
 
@@ -2329,6 +2473,7 @@ def q_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return canonical_docs(_clusters(spark, sf_dir), quality_score(docs))
 
 
+@query
 def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus report card: per (lang, source) doc counts, token/char
     volume, and exact median length — the profiling pass that sizes a
@@ -2347,6 +2492,7 @@ def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ))
 
 
+@query
 def q_dup_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicated-passage detection: share of each doc's rolling 10-token
     windows that also occur in another document."""
@@ -2356,6 +2502,7 @@ def q_dup_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dup_passages(docs, n=10, threshold=0.2)
 
 
+@query
 def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled language rebalancing (alpha=0.5): rare langs
     kept whole, dominant langs down-sampled to sqrt-proportional share."""
@@ -2365,6 +2512,7 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return temperature_mix(docs, group_col="lang", key_col="doc_id")
 
 
+@query
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ingest dedup: an incoming batch (fresh docs + re-crawls
     of corpus content + an in-batch duplicate slice) is admitted against
@@ -2385,6 +2533,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_dedup(batch, fingerprints(corpus))
 
 
+@query
 def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Additive seasonal decomposition (operators/timeseries.py) of the
     hourly per-event-type series: centered-MA trend (±12 h), period-24
@@ -2402,6 +2551,7 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
                               period=24)
 
 
+@query
 def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonally-adjusted anomaly flags: the decomposition residual
     z-scored per event_type (stddev_samp precedent: q_outliers), rows
@@ -2427,6 +2577,7 @@ def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_type", "bucket", "value", "resid", "z"))
 
 
+@query
 def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law fit per language: token frequencies ranked (freq desc,
     token asc — a total, engine-agnostic order), top 200 ranks with
@@ -2455,6 +2606,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.round(F.corr("ln_n", "ln_rank"), 6).alias("r_loglog")))
 
 
+@query
 def q_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The q_incremental_dedup scenario through the Bloom fast path
     (operators/bloom.py): a filter built from the corpus index routes
@@ -2481,6 +2633,7 @@ def q_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bloom_incremental_dedup(batch, fingerprints(corpus))
 
 
+@query
 def q_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPT-style concat-and-chunk sequence packing at a 1024-token budget:
     one row per (sequence, document) overlap."""
@@ -2489,6 +2642,7 @@ def q_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_concat_chunks(_t(spark, sf_dir, "documents"), budget=1024)
 
 
+@query
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language deterministic sampling: 50% en, 25% fr/de, 12.5% es,
     6.25% default — pure hash predicate, zero shuffle, reproducible
@@ -2503,6 +2657,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang", "source")
 
 
+@query
 def q_quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learned quality filter: σ(w·x+b) over 5 native text features with
     pinned weights (train_logreg learns them; pytest-verified)."""
@@ -2511,6 +2666,7 @@ def q_quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return score_logreg(_t(spark, sf_dir, "documents"))
 
 
+@query
 def q_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary: top-200 tokens by frequency (min_count 2), ids
     dense in (count DESC, token ASC) order — TakeOrderedAndProject cut,
@@ -2520,6 +2676,7 @@ def q_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return build_vocab(_t(spark, sf_dir, "documents"), top_k=200, min_count=2)
 
 
+@query
 def q_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode every document as token ids against the top-100 vocab
     (OOV → 0): posexplode → broadcast vocab join → ordered reassembly."""
@@ -2530,6 +2687,7 @@ def q_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return encode_tokens(docs, vocab)
 
 
+@query
 def q_ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: segment-filtered customer ⋈ orders ⋈ lineitem,
     revenue per order, top-10. Filters reach the scans (predicate
@@ -2551,6 +2709,7 @@ def q_ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: local-supplier volume per nation in ASIA, 1996.
     nation/region are explicitly broadcast (25/5 rows at any SF);
@@ -2576,6 +2735,7 @@ def q_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: PROMO share of revenue for one ship month —
     lineitem ⋈ part with a conditional aggregate; month filter pushed to
@@ -2598,80 +2758,15 @@ def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The driver's correctness gate records at most 50 entries per round
-# (round 1 checked exactly the first 50 of 53 keys), so QUERIES above is
-# capped at 50. Redundant variants live here and go through the SAME
-# DuckDB oracle gate via tests/test_extra_oracles.py — they are
-# pytest-verified, not silently dropped.
-EXTRA_QUERIES = {
-    "q_resample_15min": q_resample_15min,
-    "q_minhash_signature": q_minhash_signature,
-    "q_gopher_quality": q_gopher_quality,
-    "q_pii_stats": q_pii_stats,
-    "q_pii_redact": q_pii_redact,
-    "q_pack_chunks": q_pack_chunks,
-    "q_decontam": q_decontam,
-    "q_decontam_spans": q_decontam_spans,
-    "q_readability": q_readability,
-    "q_pii_cards": q_pii_cards,
-    "q_collocations": q_collocations,
-    "q_repetition": q_repetition,
-    "q_lm_score": q_lm_score,
-    "q_lm_score_kn": q_lm_score_kn,
-    "q_chunk_docs": q_chunk_docs,
-    "q_tfidf": q_tfidf,
-    "q_ewma": q_ewma,
-    "q_interpolate": q_interpolate,
-    "q_trend": q_trend,
-    "q_inverted_index": q_inverted_index,
-    "q_bm25_topk": q_bm25_topk,
-    "q_funnel": q_funnel,
-    "q_retention": q_retention,
-    "q_outliers": q_outliers,
-    "q_correlated_subquery": q_correlated_subquery,
-    "q_table_diff": q_table_diff,
-    "q_equidepth": q_equidepth,
-    "q_cube": q_cube,
-    "q_jsonl_scan": q_jsonl_scan,
-    "q_line_dedup": q_line_dedup,
-    "q_span_dedup": q_span_dedup,
-    "q_canonical_docs": q_canonical_docs,
-    "q_corpus_stats": q_corpus_stats,
-    "q_incremental_dedup": q_incremental_dedup,
-    "q_temperature_mix": q_temperature_mix,
-    "q_dup_passages": q_dup_passages,
-    "q_stratified_sample": q_stratified_sample,
-    "q_quality_logreg": q_quality_logreg,
-    "q_vocab": q_vocab,
-    "q_token_ids": q_token_ids,
-    "q_ship_priority": q_ship_priority,
-    "q_region_volume": q_region_volume,
-    "q_promo_revenue": q_promo_revenue,
-    "q_iot_ingest": q_iot_ingest,
-    "q_image_decode": q_image_decode,
-    "q_jpeg_decode": q_jpeg_decode,
-    "q_gif_decode": q_gif_decode,
-    "q_webp_decode": q_webp_decode,
-    "q_exif": q_exif,
-    "q_sniff_av": q_sniff_av,
-    "q_pdf_text": q_pdf_text,
-    "q_audio_tone": q_audio_tone,
-    "q_curriculum": q_curriculum,
-    "q_bloom_dedup": q_bloom_dedup,
-    "q_seasonal_decompose": q_seasonal_decompose,
-    "q_seasonal_anomaly": q_seasonal_anomaly,
-    "q_zipf_fit": q_zipf_fit,
-    "q_iot_multiformat_ts": q_iot_multiformat_ts,
-    "q_iot_type_infer": q_iot_type_infer,
-}
-
 # TPC-H-shape relational pack (Q2/Q4/Q6-Q13/Q15-Q19/Q21/Q22 adapted to the
 # driver schema) — see datapump_spark/tpch.py; same DuckDB oracle gate.
 from datapump_spark.tpch import TPCH_QUERIES  # noqa: E402
 
-EXTRA_QUERIES.update(TPCH_QUERIES)
+for fn in TPCH_QUERIES.values():
+    query(fn)
 
 
+@query
 def q_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-quality expectation suite over the star schema: row-level
     checks compile to ONE aggregate pass per table; referential-integrity
@@ -2708,6 +2803,7 @@ def q_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_suites(suites).orderBy("table_name", "check")
 
 
+@query
 def q_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded range join: events.value against an inline tier table of
     [lo, hi) bands — broadcast nested-loop probe, zero shuffle of the
@@ -2729,6 +2825,7 @@ def q_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (melt): lineitem's four measure columns to tall
     (measure, value) rows via the native UNPIVOT — a zero-shuffle
@@ -2741,6 +2838,7 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "measure", "value")
 
 
+@query
 def q_state_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gaps-and-islands → SCD2 intervals: collapse each user's contiguous
     runs of the same event_type into [effective_from, effective_to)
@@ -2754,6 +2852,7 @@ def q_state_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
                            tiebreak_col="event_id")
 
 
+@query
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix of event types per user
     sequence (operators/events_analytics.py): one window shuffle to form
@@ -2763,6 +2862,7 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return event_transitions(_t(spark, sf_dir, "events"))
 
 
+@query
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-point integer PageRank (operators/graph.py) over the
     customer↔supplier co-purchase graph, 3 iterations. Integer
@@ -2804,6 +2904,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pr.select(label.alias("node"), "rank")
 
 
+@query
 def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental aggregate maintenance (operators/incremental_agg.py):
     three disjoint batches of events are partial-aggregated separately,
@@ -2821,6 +2922,7 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return finalize_agg(merged, ["event_type"], ["value"])
 
 
+@query
 def q_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Year-over-year revenue growth per supplier nation: decimal-exact
     yearly rollup, then a lag window over the (tiny) aggregate — the
@@ -2841,18 +2943,6 @@ def q_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         "yoy_pct", F.round((F.col("revenue") - prev) / prev, 6))
 
 
-EXTRA_QUERIES.update({
-    "q_expectations": q_expectations,
-    "q_band_join": q_band_join,
-    "q_unpivot": q_unpivot,
-    "q_state_intervals": q_state_intervals,
-    "q_event_transitions": q_event_transitions,
-    "q_pagerank": q_pagerank,
-    "q_incremental_agg": q_incremental_agg,
-    "q_yoy_growth": q_yoy_growth,
-})
-
-
 def _asof_inputs(spark: SparkSession, sf_dir: str):
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts"))
@@ -2861,6 +2951,7 @@ def _asof_inputs(spark: SparkSession, sf_dir: str):
     return ev, orders
 
 
+@query
 def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """merge_asof parity, backward + tolerance: each event matches the
     customer's latest order within the preceding 30 days, else null.
@@ -2877,6 +2968,7 @@ def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "user_id", "ts", "matched_ts", "o_orderkey")
 
 
+@query
 def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """merge_asof parity, forward: each event matches the customer's
     EARLIEST order at-or-after the event (same union-merge pass run on a
@@ -2890,12 +2982,7 @@ def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "user_id", "ts", "matched_ts", "o_orderkey")
 
 
-EXTRA_QUERIES.update({
-    "q_asof_tolerance": q_asof_tolerance,
-    "q_asof_forward": q_asof_forward,
-})
-
-
+@query
 def q_embedding_near_dup_gemm_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production-path variant of q_embedding_near_dup: LSH-bucketed GEMM
     (linear shuffle, pruned pair space) — the 100 TB strategy. Approximate
@@ -2908,6 +2995,7 @@ def q_embedding_near_dup_gemm_lsh(spark: SparkSession, sf_dir: str) -> DataFrame
         strategy="gemm_lsh", dim=_emb_dim(sf_dir))
 
 
+@query
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style pruning: k-means clusters + within-cluster
     union-find over cos ≥ t (operators/semantic_dedup.py). k-means +
@@ -2920,6 +3008,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "embeddings"), n_clusters=16, threshold=0.5)
 
 
+@query
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer: distributed word count → driver merge loop on
     counts → broadcast-dict encode scan (operators/bpe.py). Iterative
@@ -2932,6 +3021,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_encode(docs, train_bpe(docs, n_merges=200))
 
 
+@query
 def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full IVF-PQ index (operators/pq.py ivfpq_topk): coarse-cell
     equi-join candidate pruning × residual-PQ compressed scoring × exact
@@ -2946,6 +3036,7 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                       lloyd_iters=1, dim=_emb_dim(sf_dir))
 
 
+@query
 def q_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM tokenizer (SentencePiece-style): distributed word count
     → driver EM+prune on counts → broadcast Viterbi encode scan
@@ -2964,6 +3055,7 @@ def q_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unigram_encode(docs, model)
 
 
+@query
 def q_approx_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch profiling: HLL++ distinct + quantile-sketch percentiles per
     return flag in ONE aggregation pass (operators/sketches.py). Sketch
@@ -2977,6 +3069,7 @@ def q_approx_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["l_orderkey", "l_extendedprice", "l_quantity"])
 
 
+@query
 def q_pack_greedy_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production-path variant of q_pack_chunks: boundary-respecting FFD
     bin packing (no document split across sequences). The greedy loop is
@@ -2987,6 +3080,7 @@ def q_pack_greedy_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_greedy_bins(_t(spark, sf_dir, "documents"), budget=1024)
 
 
+@query
 def q_strip_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTML → visible text (operators/cleaning.py strip_html): documents
     wrapped codegen-side in realistic markup (script+style payloads,
@@ -3007,6 +3101,7 @@ def q_strip_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     return strip_html(d.select("doc_id", messy.alias("text")))
 
 
+@query
 def q_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     """jusText/Arc90-style main-content extraction (operators/cleaning.py
     extract_main_content): documents wrapped codegen-side in a full page
@@ -3032,6 +3127,7 @@ def q_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "n_blocks", "n_kept", "main_text")
 
 
+@query
 def q_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text normalization (operators/cleaning.py): control-char strip,
     whitespace-run collapse, trim. The synthetic docs are already clean,
@@ -3055,6 +3151,7 @@ def q_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "text_norm"))
 
 
+@query
 def q_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source boilerplate-line removal, CCNet/RefinedWeb style
     (operators/cleaning.py): lines appearing in ≥5% (and ≥2) of a
@@ -3082,6 +3179,7 @@ def q_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return strip_boilerplate(lined, min_docs_frac=0.05, min_docs=2)
 
 
+@query
 def q_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked edit-distance similarity join (operators/fuzzy_join.py):
     document pairs whose 10-token prefix keys are within levenshtein
@@ -3099,6 +3197,7 @@ def q_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return edit_distance_pairs(docs, "doc_id", "key", max_dist=5)
 
 
+@query
 def q_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) key computation (operators/zorder.py): min/max
     scale l_partkey and l_suppkey to 16 bits each and interleave — the
@@ -3113,6 +3212,7 @@ def q_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_linenumber", "zval")
 
 
+@query
 def q_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """zlib compressibility quality signal (operators/cleaning.py):
     Arrow-batched mapInPandas, deterministic for a fixed level. No SQL
@@ -3123,6 +3223,7 @@ def q_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compression_ratio(_t(spark, sf_dir, "documents"))
 
 
+@query
 def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram token entropy per document (operators/text.py) — the
     gibberish/word-salad quality signal: one explode + two skew-safe
@@ -3132,6 +3233,7 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_entropy(_t(spark, sf_dir, "documents"))
 
 
+@query
 def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable HLL sketch-cube rollup (operators/sketches.py): distinct
     users sketched once per (event_type, day) cell, then rolled up to
@@ -3149,6 +3251,7 @@ def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("event_type"))
 
 
+@query
 def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution drift (operators/drift.py): PSI / KL / TVD of the
     `value` distribution per event_type between the first and second
@@ -3160,6 +3263,7 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "events"), "ts", "value", ["event_type"])
 
 
+@query
 def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust numeric conditioning (operators/robust.py): per-event_type
     winsorized + median/IQR-scaled `value`. One exact-percentile pass +
@@ -3171,6 +3275,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "value", "value_w", "value_robust")
 
 
+@query
 def q_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-k deterministic uniform sample (operators/sampling.py):
     k smallest salted-md5 keys via TakeOrderedAndProject — reservoir-
@@ -3182,6 +3287,7 @@ def q_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source")
 
 
+@query
 def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured analytics through Spark 4's VARIANT type:
     try_parse_json once into the binary variant encoding, then typed
@@ -3198,6 +3304,7 @@ def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact phi-heavy hitters over the token stream via two-pass
     distributed Misra-Gries (operators/sketches.py): bounded-memory
@@ -3213,6 +3320,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "item", "tok")
 
 
+@query
 def q_sparse_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse TF-IDF cosine all-pairs similarity join
     (operators/sparse_sim.py): bigram inverted index, co-blocked by
@@ -3225,6 +3333,7 @@ def q_sparse_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
         block_cols=["lang", "source"], threshold=0.2)
 
 
+@query
 def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC changelog apply (operators/cdc.py): events as an upsert/
     delete feed keyed by user (error = tombstone), collapsed to current
@@ -3242,17 +3351,18 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         payload_cols=["value", "event_type"])
 
 
+@query
 def q_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe train/val/test split (operators/splits.py): split
     assignment hashed on the near-dup CLUSTER id, so paraphrase pairs
     can never straddle train/test (Lee et al. 2021). Scan-speed on top
-    of the clustering; shares the cached cluster frame with
-    q_dup_clusters/q_canonical_docs."""
+    of the clustering, which it computes itself (see _clusters)."""
     from datapump_spark.operators.splits import leakage_safe_split
 
     return leakage_safe_split(_clusters(spark, sf_dir))
 
 
+@query
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sample without replacement, Efraimidis-Spirakis
     (operators/sampling.py): 100 docs drawn ∝ n_chars via deterministic
@@ -3264,6 +3374,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "n_chars")
 
 
+@query
 def q_quality_binned_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curriculum mix: per-source quality quartiles kept at rates
     [0.1, 0.3, 0.6, 1.0] — worst decimated, best kept whole
@@ -3280,6 +3391,7 @@ def q_quality_binned_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "source", "quality", "bin")
 
 
+@query
 def q_score_pctrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source percentile rank of the quality score — calibrates
     scores ACROSS sources so one threshold means the same thing
@@ -3298,6 +3410,7 @@ def q_score_pctrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.percent_rank().over(w), 6).alias("pct_rank"))
 
 
+@query
 def q_rolling_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day distinct active users per observed day
     (operators/events_analytics.py): exact windowed count-distinct via
@@ -3333,6 +3446,7 @@ def _doc_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", url.alias("url"))
 
 
+@query
 def q_url_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization + host/registered-domain extraction
     (operators/urls.py): tracking params, fragments, default ports, www
@@ -3344,6 +3458,7 @@ def q_url_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_url_parts(_doc_urls(spark, sf_dir))
 
 
+@query
 def q_domain_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain raw vs canonical-distinct URL volume (operators/urls.py
     domain_volume) — the table per-domain caps and crawl budgets read;
@@ -3352,6 +3467,7 @@ def q_domain_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     return domain_volume(_doc_urls(spark, sf_dir))
 
 
+@query
 def q_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wordlist-gate stats (operators/urls.py blocklist_hit_stats): per-doc
     blocklisted-token count and fraction — the C4-style adult/spam filter
@@ -3361,6 +3477,7 @@ def q_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"), words=["slow", "dup", "spam"])
 
 
+@query
 def q_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC exact scan (sources/warc.py read_warc): Content-Length-framed
     record inventory with payload digests — the Common Crawl ingest edge.
@@ -3373,6 +3490,7 @@ def q_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sha2(F.col("payload"), 256).alias("payload_sha"))
 
 
+@query
 def q_wet_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WET text extraction on the splittable zero-Python fast path
     (sources/warc.py read_wet): record split at scan via lineSep, codegen
@@ -3384,241 +3502,7 @@ def q_wet_text(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.length("text").alias("n_chars"), "text")
 
 
-EXTRA_QUERIES.update({
-    "q_warc_scan": q_warc_scan,
-    "q_wet_text": q_wet_text,
-    "q_sniff_media": q_sniff_media,
-    "q_locf": q_locf,
-    "q_simhash_pairs": q_simhash_pairs,
-    "q_incremental_near_dup": q_incremental_near_dup,
-    "q_importance_weights": q_importance_weights,
-    "q_dsir_sample": q_dsir_sample,
-    "q_semantic_decontam": q_semantic_decontam,
-    "q_token_budget_mix": q_token_budget_mix,
-    "q_unicode_normalize": q_unicode_normalize,
-    "q_script_profile": q_script_profile,
-    "q_corpus_card": q_corpus_card,
-    "q_quality_binned_mix": q_quality_binned_mix,
-    "q_strip_html": q_strip_html,
-    "q_main_content": q_main_content,
-    "q_hybrid_search": q_hybrid_search,
-    "q_retrieval_eval": q_retrieval_eval,
-    "q_hard_negatives": q_hard_negatives,
-    "q_cusum": q_cusum,
-    "q_rolling_median": q_rolling_median,
-    "q_triangles": q_triangles,
-    "q_acf": q_acf,
-    "q_gini": q_gini,
-    "q_user_profile": q_user_profile,
-    "q_benford": q_benford,
-    "q_url_canon": q_url_canon,
-    "q_domain_volume": q_domain_volume,
-    "q_blocklist": q_blocklist,
-    "q_normalize_text": q_normalize_text,
-    "q_strip_boilerplate": q_strip_boilerplate,
-    "q_fuzzy_pairs": q_fuzzy_pairs,
-    "q_zorder": q_zorder,
-    "q_token_entropy": q_token_entropy,
-    "q_psi_drift": q_psi_drift,
-    "q_winsorize": q_winsorize,
-    "q_reservoir_sample": q_reservoir_sample,
-    "q_variant_extract": q_variant_extract,
-    "q_heavy_hitters": q_heavy_hitters,
-    "q_sparse_sim": q_sparse_sim,
-    "q_cdc_apply": q_cdc_apply,
-    "q_rolling_active": q_rolling_active,
-    "q_weighted_sample": q_weighted_sample,
-    "q_score_pctrank": q_score_pctrank,
-    "q_leakage_split": q_leakage_split,
-})
-
-
-# Production-path strategy variants of oracle-gated queries: approximate or
-# order-sequential algorithms with no exact SQL twin. They are pytest-graded
-# (recall / packing invariants) and included in bench.py so the strategies a
-# 100 TB deployment would actually run carry timings every round.
-BENCH_VARIANTS = {
-    # Approximate ANN — no exact SQL twin; recall-gated in tests/test_pq.py
-    # and scripts/ann_recall.py, timed in bench.py.
-    "q_lsh_topk": q_lsh_topk,
-    "q_ivf_topk": q_ivf_topk,
-    "q_simhash_pairs_capped": q_simhash_pairs_capped,
-    "q_tokenizer_fertility": q_tokenizer_fertility,
-    "q_ccnet_buckets": q_ccnet_buckets,
-    "q_embedding_near_dup_gemm_lsh": q_embedding_near_dup_gemm_lsh,
-    "q_pack_greedy_bins": q_pack_greedy_bins,
-    "q_semantic_dedup": q_semantic_dedup,
-    "q_bpe_encode": q_bpe_encode,
-    "q_approx_profile": q_approx_profile,
-    "q_compression_ratio": q_compression_ratio,
-    "q_hll_rollup": q_hll_rollup,
-    "q_pq_topk": q_pq_topk,
-    "q_unigram_encode": q_unigram_encode,
-    "q_ivfpq_topk": q_ivfpq_topk,
-    "q_sq8_topk": q_sq8_topk,
-    # xxhash64 production profiles of the md5-oracle-keyed dedup pair
-    # queries — the verifiability-cost quantifiers (PERF 'Known costs')
-    "q_minhash_near_dup_fast": q_minhash_near_dup_fast,
-    "q_dup_clusters_fast": q_dup_clusters_fast,
-    # Perceptual image dedup — Python-side decode, no SQL twin; pair
-    # semantics pinned in test_multimodal.
-    "q_image_dedup": q_image_dedup,
-    # contrastive training-data bootstrap (composition, pytest-pinned)
-    "q_contrastive_triples": q_contrastive_triples,
-}
-
-
-# Round-6 driver-gate rotation (VERDICT r5 #3): promote the round-5
-# flagship operators into the 50-row driver-gated set so the driver's own
-# correctness record covers the newest surface; demote twins whose
-# semantics stay gated by the IDENTICAL DuckDB comparison in
-# tests/test_extra_oracles.py + scripts/check_oracle.py:
-#   - q_resample_dense duplicates the gap-fill flag already covered by
-#     q_resample_hourly/q_resample_weekly,
-#   - q_ngram_jaccard's 1-row output is weak evidence,
-#   - q_dedupe_last is the keep-rule mirror of q_dedupe_first,
-#   - q_semi_join is the join-shape mirror of q_anti_join.
-DRIVER_PROMOTED = ("q_dsir_sample", "q_token_budget_mix",
-                   "q_script_profile", "q_corpus_card")
-DRIVER_DEMOTED = ("q_resample_dense", "q_ngram_jaccard",
-                  "q_dedupe_last", "q_semi_join")
-for _k in DRIVER_PROMOTED:
-    QUERIES[_k] = EXTRA_QUERIES.pop(_k)
-for _k in DRIVER_DEMOTED:
-    EXTRA_QUERIES[_k] = QUERIES.pop(_k)
-
-# Second round-6 rotation: cover the newest surface in the driver's own
-# record.
-#   + q_image_decode — the REAL stdlib decode gate (strictly stronger
-#     multimodal evidence than q_frame_sample's fake-metadata explode
-#     plan, which it replaces),
-#   + q_bloom_dedup — the Bloom-pruned incremental dedup (its oracle is
-#     the plain anti-join SQL, so the driver hash also proves the filter
-#     answer-transparent);
-#   - q_frame_sample stays EXTRA-rows-gated via pytest (no oracle — it
-#     never had one),
-#   - q_resample_weekly's anchored-week semantics remain gated by the
-#     identical DuckDB comparison in test_extra_oracles/check_oracle
-#     (the resample family keeps hourly+daily in the driver set).
-DRIVER_PROMOTED_R6B = ("q_image_decode", "q_bloom_dedup")
-DRIVER_DEMOTED_R6B = ("q_frame_sample", "q_resample_weekly")
-for _k in DRIVER_PROMOTED_R6B:
-    QUERIES[_k] = EXTRA_QUERIES.pop(_k)
-for _k in DRIVER_DEMOTED_R6B:
-    EXTRA_QUERIES[_k] = QUERIES.pop(_k)
-
-# Third round-6 rotation: the late-round flagship text operators.
-#   + q_span_dedup — distributed ExactSubstr removal (500-row hash gate
-#     over reassembled text: the strongest text-surgery evidence),
-#   + q_main_content — block-scored HTML main-content extraction;
-#   - q_dupe_count's 1-row output is weak evidence (the q_ngram_jaccard
-#     argument) and its semantics stay inside q_dedupe_first's gate,
-#   - q_explode_tokens' 20-row top-list is a subset of what q_text_stats
-#     and the tokenizer gates already prove.
-# Both demotions keep the IDENTICAL DuckDB comparison in
-# tests/test_extra_oracles.py + scripts/check_oracle.py.
-DRIVER_PROMOTED_R6C = ("q_span_dedup", "q_main_content")
-DRIVER_DEMOTED_R6C = ("q_dupe_count", "q_explode_tokens")
-for _k in DRIVER_PROMOTED_R6C:
-    QUERIES[_k] = EXTRA_QUERIES.pop(_k)
-for _k in DRIVER_DEMOTED_R6C:
-    EXTRA_QUERIES[_k] = QUERIES.pop(_k)
-
-# SURVEY §2 keys are TENURED — never rotation candidates (VERDICT r6 #4:
-# rotating reference-parity keys out of the driver record to make room
-# for extended operators trades the wrong way; the judge checks §2 line
-# by line against the driver's own green rows). Everything the reference
-# itself computes stays driver-witnessed every round.
-SURVEY_S2_TENURED = frozenset({
-    "q_csv_scan", "q_multiformat_ts", "q_drop_columns", "q_ts_format",
-    "q_type_infer", "q_dedupe_first", "q_dedupe_last", "q_dupe_count",
-    "q_resample_hourly", "q_resample_daily", "q_describe_numeric",
-    "q_describe_string", "q_mode",
-})
-
-# Round-7 rotation (VERDICT r6 #3): restore the two §2 keys the round-6
-# rotations pushed out.
-#   + q_dedupe_last — reference keep-last semantics, the single trickiest
-#     §2 behavior (SURVEY §2.3 F4: dropDuplicates is NOT faithful for
-#     last; sortless max_by over exact multi-split file order),
-#   + q_dupe_count — the reference's audit-log dupe counter (§2.3 F3);
-#   - q_set_ops' INTERSECT/EXCEPT shapes are the join-shape relatives of
-#     the still-gated q_anti_join (and q_semi_join's EXTRA gate),
-#   - q_histogram's fixed-width buckets have the q_equidepth relative and
-#     the same width-arithmetic is inside q_describe_numeric's gate.
-# Both demotions keep the IDENTICAL DuckDB comparison in
-# tests/test_extra_oracles.py + scripts/check_oracle.py.
-DRIVER_PROMOTED_R7 = ("q_dedupe_last", "q_dupe_count")
-DRIVER_DEMOTED_R7 = ("q_set_ops", "q_histogram")
-for _k in DRIVER_PROMOTED_R7:
-    QUERIES[_k] = EXTRA_QUERIES.pop(_k)
-for _k in DRIVER_DEMOTED_R7:
-    EXTRA_QUERIES[_k] = QUERIES.pop(_k)
-
-# Second round-7 rotation: the flagship new decode surface.
-#   + q_jpeg_decode — the baseline-JPEG Huffman+IDCT path facing an
-#     exact value hash (solid grayscale at q95 reconstructs exactly);
-#     strictly stronger multimodal evidence than a second window query,
-#   - q_moving_avg — the windowed-frame family keeps q_window_topn in
-#     the driver set and q_ewma / q_rolling_median in the EXTRA gate.
-DRIVER_PROMOTED_R7B = ("q_jpeg_decode",)
-DRIVER_DEMOTED_R7B = ("q_moving_avg",)
-for _k in DRIVER_PROMOTED_R7B:
-    QUERIES[_k] = EXTRA_QUERIES.pop(_k)
-for _k in DRIVER_DEMOTED_R7B:
-    EXTRA_QUERIES[_k] = QUERIES.pop(_k)
-# Round-8 rotation (VERDICT r7 #3): the round-7 decode flagships enter
-# the driver record — all three already pass the identical exact-hash
-# DuckDB gate as EXTRA keys.
-#   + q_pdf_text — PDF object-scan text extraction, exact-hash vs the
-#     fixture writer's known text,
-#   + q_gif_decode — GIF87a/89a LZW decode facing a checkerboard
-#     arithmetic twin (palette-exact reconstruction),
-#   + q_audio_tone — WAV decode → Hann window → rfft → argmax landing
-#     on the known synthesis frequency;
-#   - q_hash_sample — the sampling family keeps q_dsir_sample,
-#     q_weighted_mix and q_token_budget_mix in the driver set,
-#   - q_group_cap — the per-group top-k shape stays witnessed by
-#     q_window_topn,
-#   - q_top_customers — the join-agg shape stays witnessed by
-#     q_star_revenue and q_pricing_summary.
-# All demotions keep the IDENTICAL DuckDB comparison in
-# tests/test_extra_oracles.py + scripts/check_oracle.py.
-DRIVER_PROMOTED_R8 = ("q_pdf_text", "q_gif_decode", "q_audio_tone")
-DRIVER_DEMOTED_R8 = ("q_hash_sample", "q_group_cap", "q_top_customers")
-for _k in DRIVER_PROMOTED_R8:
-    QUERIES[_k] = EXTRA_QUERIES.pop(_k)
-for _k in DRIVER_DEMOTED_R8:
-    EXTRA_QUERIES[_k] = QUERIES.pop(_k)
-
-# Round-9 rotation (VERDICT r8 #6): the round-8 decode/sniff flagships
-# enter the driver record — all three already pass the identical
-# exact-hash DuckDB gate as EXTRA keys and were independently re-run by
-# the r8 judge (scripts/check_oracle.py, ALL OK).
-#   + q_webp_decode — VP8L lossless decode (prefix codes, transforms)
-#     facing an exact reconstruction hash,
-#   + q_exif — EXIF IFD walk with an exact-hash gate,
-#   + q_sniff_av — MP3 frame walk / MP4 moov / Matroska EBML / Ogg
-#     granule duration behind one exact SQL oracle;
-#   - q_pivot — the reshaping family keeps q_rollup and q_cube in the
-#     driver set,
-#   - q_corr — the statistics family keeps q_trend and q_acf,
-#   - q_latest_event — the per-key latest shape stays witnessed by
-#     q_window_topn (and q_latest_event's own EXTRA gate).
-# All demotions keep the IDENTICAL DuckDB comparison in
-# tests/test_extra_oracles.py + scripts/check_oracle.py.
-DRIVER_PROMOTED_R9 = ("q_webp_decode", "q_exif", "q_sniff_av")
-DRIVER_DEMOTED_R9 = ("q_pivot", "q_corr", "q_latest_event")
-for _k in DRIVER_PROMOTED_R9:
-    QUERIES[_k] = EXTRA_QUERIES.pop(_k)
-for _k in DRIVER_DEMOTED_R9:
-    EXTRA_QUERIES[_k] = QUERIES.pop(_k)
-
-assert SURVEY_S2_TENURED <= set(QUERIES), (
-    "SURVEY §2 keys must stay in the driver-gated set: missing "
-    f"{sorted(SURVEY_S2_TENURED - set(QUERIES))}")
-
-
+@query
 def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video frame extraction gate (operators/avi.py +
     operators/mp4video.py, round 9 — the path that cleared the
@@ -3713,9 +3597,8 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
               "width int, height int, gray double")
 
 
-EXTRA_QUERIES["q_video_frames"] = q_video_frames
 
-
+@query
 def q_vp8_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL lossy-WebP (VP8 key-frame) decode gate (operators/vp8.py,
     round 9): one solid-gray VP8 WebP per sampled document at qi=0 —
@@ -3763,9 +3646,8 @@ def q_vp8_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["q_vp8_decode"] = q_vp8_decode
 
-
+@query
 def q_doc_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL document text-extraction gate (operators/docx.py +
     operators/rtf.py + operators/doc.py, round 9; rotation widened
@@ -3813,9 +3695,8 @@ def q_doc_text(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .alias("n_paragraphs")))
 
 
-EXTRA_QUERIES["q_doc_text"] = q_doc_text
 
-
+@query
 def q_epub_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL EPUB text-extraction gate (operators/docx.py, r11 —
     VERDICT r10 #7). Each sampled document's printable-ASCII
@@ -3854,9 +3735,8 @@ def q_epub_text(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "kind"))
 
 
-EXTRA_QUERIES["q_epub_text"] = q_epub_text
 
-
+@query
 def q_rtf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL RTF text-extraction gate (operators/rtf.py, r11 — the
     legacy rich-text third of VERDICT r10 missing #5). The printable-
@@ -3892,9 +3772,8 @@ def q_rtf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "kind"))
 
 
-EXTRA_QUERIES["q_rtf_text"] = q_rtf_text
 
-
+@query
 def q_pptx_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL PPTX text-extraction gate (operators/docx.py, r11 — the
     slide third of VERDICT r10 missing #5). The ASCII projection is
@@ -3931,9 +3810,8 @@ def q_pptx_text(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "kind"))
 
 
-EXTRA_QUERIES["q_pptx_text"] = q_pptx_text
 
-
+@query
 def q_word_doc_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL legacy .doc text-extraction gate (operators/doc.py +
     operators/cfb.py, r11 — the binary Word format was previously a
@@ -3968,8 +3846,6 @@ def q_word_doc_text(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("n_units").cast("long").alias("n_paragraphs"),
                     "kind"))
 
-
-EXTRA_QUERIES["q_word_doc_text"] = q_word_doc_text
 
 
 def scaled_events_xls(sf_dir: str, n_rows: int = 20000,
@@ -4008,6 +3884,7 @@ def scaled_events_xls(sf_dir: str, n_rows: int = 20000,
     return str(out_dir / "events_*.xls")
 
 
+@query
 def q_xls_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Legacy BIFF8 .xls ingestion gate (sources/xls.py, r11): CFB
     container walk, SST shared strings, LABELSST cells — the same
@@ -4025,9 +3902,8 @@ def q_xls_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["q_xls_scan"] = q_xls_scan
 
-
+@query
 def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio tag-extraction gate (operators/audiometa.py, r11 —
     the audio sibling of q_exif): each sampled document becomes a
@@ -4091,9 +3967,8 @@ def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "date", "track", "genre"))
 
 
-EXTRA_QUERIES["q_audio_meta"] = q_audio_meta
 
-
+@query
 def q_ppt_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Legacy binary PowerPoint text gate (operators/doc.py, r11 —
     completes the OLE2 trio): the ASCII projection becomes a real
@@ -4127,9 +4002,8 @@ def q_ppt_text(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "kind"))
 
 
-EXTRA_QUERIES["q_ppt_text"] = q_ppt_text
 
-
+@query
 def q_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL baseline-TIFF decode gate (operators/tiff.py, round 9).
     Each sampled document becomes a solid-color TIFF whose compression
@@ -4178,29 +4052,6 @@ def q_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["q_tiff_decode"] = q_tiff_decode
-
-
-# Round-9 second rotation: this round's decode/extraction flagships
-# enter the driver record (all exact-hash gated above); the demoted
-# keys keep the IDENTICAL gate in pytest + scripts/check_oracle.py —
-# each is the family twin of a key that stays (q_bloom_dedup ~
-# q_exact_dedup incremental arm, q_simhash ~ q_minhash_near_dup,
-# q_media_stats ~ q_sniff_av, q_shard_assign ~ q_weighted_mix).
-DRIVER_PROMOTED_R9B = ("q_vp8_decode", "q_video_frames",
-                       "q_doc_text", "q_tiff_decode")
-DRIVER_DEMOTED_R9B = ("q_bloom_dedup", "q_simhash",
-                      "q_media_stats", "q_shard_assign")
-for _k in DRIVER_PROMOTED_R9B:
-    QUERIES[_k] = EXTRA_QUERIES.pop(_k)
-for _k in DRIVER_DEMOTED_R9B:
-    EXTRA_QUERIES[_k] = QUERIES.pop(_k)
-
-assert SURVEY_S2_TENURED <= set(QUERIES), (
-    "SURVEY §2 keys must stay in the driver-gated set: missing "
-    f"{sorted(SURVEY_S2_TENURED - set(QUERIES))}")
-assert len(QUERIES) == 50, f"driver cap: {len(QUERIES)}"
-
 
 def scaled_events_xlsx(sf_dir: str, n_rows: int = 20000,
                        n_shards: int = 8) -> str:
@@ -4243,6 +4094,7 @@ def scaled_events_xlsx(sf_dir: str, n_rows: int = 20000,
     return str(out_dir / "events_*.xlsx")
 
 
+@query
 def q_xlsx_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY S8 made real (round 9): typed ingestion of an XLSX
     workbook — ZIP + SpreadsheetML parse (shared strings, numbers) via
@@ -4262,9 +4114,8 @@ def q_xlsx_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["q_xlsx_scan"] = q_xlsx_scan
 
-
+@query
 def q_subtitle_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Codegen SRT/WebVTT cue parsing gate (operators/subtitles.py,
     round 9). Each sampled document becomes a genuine subtitle file —
@@ -4305,8 +4156,6 @@ def q_subtitle_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "start_ms", "end_ms", "cue_text")
 
 
-EXTRA_QUERIES["q_subtitle_cues"] = q_subtitle_cues
-
 
 def scaled_events_ods(sf_dir: str, n_rows: int = 20000,
                       n_shards: int = 8) -> str:
@@ -4343,6 +4192,7 @@ def scaled_events_ods(sf_dir: str, n_rows: int = 20000,
     return str(out_dir / "events_*.ods")
 
 
+@query
 def q_ods_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OpenDocument .ods ingestion gate (sources/ods.py, r12 — the
     third spreadsheet family member): content.xml table walk with the
@@ -4361,9 +4211,8 @@ def q_ods_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["q_ods_scan"] = q_ods_scan
 
-
+@query
 def q_ass_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Codegen ASS/SSA cue parsing gate (operators/subtitles.py, r12
     — the third subtitle wire format): each sampled document becomes
@@ -4403,9 +4252,8 @@ def q_ass_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "start_ms", "end_ms", "cue_text")
 
 
-EXTRA_QUERIES["q_ass_cues"] = q_ass_cues
 
-
+@query
 def q_opus_tone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ogg Opus audio gate (operators/opus.py, r12 — SILK-NB mono per
     the stand-in doctrine, twin-marked): each sampled document becomes
@@ -4443,8 +4291,6 @@ def q_opus_tone(spark: SparkSession, sf_dir: str) -> DataFrame:
         "media_id", "n_frames", "sample_rate",
         F.round("dominant_hz", 0).cast("long").alias("dominant_hz"))
 
-
-EXTRA_QUERIES["q_opus_tone"] = q_opus_tone
 
 
 def scaled_events_avro(sf_dir: str, n_rows: int = 20000) -> str:
@@ -4491,6 +4337,7 @@ def scaled_events_avro(sf_dir: str, n_rows: int = 20000) -> str:
     return str(out_dir)
 
 
+@query
 def q_avro_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Avro object-container read gate (sources/avro.py, round 9):
     container magic + metadata map, zigzag varints, sync-framed
@@ -4504,8 +4351,6 @@ def q_avro_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type",
         F.round("value", 6).alias("value"))
 
-
-EXTRA_QUERIES["q_avro_scan"] = q_avro_scan
 
 
 def scaled_events_jsonl(sf_dir: str, n_rows: int = 21000) -> str:
@@ -4567,6 +4412,7 @@ def scaled_events_jsonl(sf_dir: str, n_rows: int = 21000) -> str:
     return str(out_dir)
 
 
+@query
 def q_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed-JSONL corpus read gate (sources/jsonl.py, round 12):
     per-file magic dispatch over plain / gzip / bz2 / xz / lzma-alone
@@ -4583,8 +4429,6 @@ def q_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id long, ts string, user_id long, event_type string, "
         "value double")
 
-
-EXTRA_QUERIES["q_jsonl_scan"] = q_jsonl_scan
 
 
 def scaled_events_orc(spark: SparkSession, sf_dir: str,
@@ -4634,6 +4478,7 @@ def scaled_events_orc(spark: SparkSession, sf_dir: str,
     return str(out_dir)
 
 
+@query
 def q_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC at-rest format gate (round 12): Spark-native columnar
     read over five compression kinds (none/zlib/snappy/zstd/lz4, one
@@ -4643,8 +4488,6 @@ def q_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet, so the 100 TB story carries over unchanged."""
     return spark.read.orc(scaled_events_orc(spark, sf_dir))
 
-
-EXTRA_QUERIES["q_orc_scan"] = q_orc_scan
 
 
 def scaled_events_7z(sf_dir: str, n_rows: int = 23000) -> str:
@@ -4714,6 +4557,7 @@ def scaled_events_7z(sf_dir: str, n_rows: int = 23000) -> str:
     return str(out_dir)
 
 
+@query
 def q_7z_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """7z corpus read gate (sources/sevenzip.py, round 12): libarchive-
     authored archives (lzma1 / lzma2 / zstd folders — foreign bytes
@@ -4734,66 +4578,10 @@ def q_7z_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lines.select(F.from_json("value", st).alias("_r")).select("_r.*")
 
 
-EXTRA_QUERIES["q_7z_scan"] = q_7z_scan
+# ---------------------------------------------------------------- derived views
 
-
-# Round-10 rotation (VERDICT r9 #5): the round-9 source/extraction
-# flagships enter the driver record — all three already pass the
-# identical exact-hash DuckDB gate as EXTRA keys and were
-# independently re-run by the r9 judge (scripts/check_oracle.py,
-# ALL OK).
-#   + q_xlsx_scan — SpreadsheetML cell walk + typed table read
-#     (SURVEY S8 made real) facing the exact fixture slice,
-#   + q_avro_scan — Avro object-container decode (zigzag varints,
-#     sync framing, both codecs) facing the exact fixture slice,
-#   + q_subtitle_cues — zero-Python SRT/WebVTT cue parsing with exact
-#     millisecond arithmetic;
-#   - q_anti_join — the join family keeps q_asof_join, q_star_revenue
-#     and q_pricing_summary in the driver set, and the anti-join shape
-#     stays witnessed by the q_incremental_dedup/q_bloom_dedup EXTRA
-#     gates (both ARE anti-joins with identical DuckDB twins),
-#   - q_weighted_mix — the sampling-mix family keeps q_dsir_sample and
-#     q_token_budget_mix in the driver set,
-#   - q_sessionize — the window family keeps q_window_topn; the
-#     gaps-and-islands shape keeps its own EXTRA gate.
-# All demotions keep the IDENTICAL DuckDB comparison in
-# tests/test_extra_oracles.py + scripts/check_oracle.py.
-DRIVER_PROMOTED_R10 = ("q_xlsx_scan", "q_avro_scan", "q_subtitle_cues")
-DRIVER_DEMOTED_R10 = ("q_anti_join", "q_weighted_mix", "q_sessionize")
-for _k in DRIVER_PROMOTED_R10:
-    QUERIES[_k] = EXTRA_QUERIES.pop(_k)
-for _k in DRIVER_DEMOTED_R10:
-    EXTRA_QUERIES[_k] = QUERIES.pop(_k)
-
-assert SURVEY_S2_TENURED <= set(QUERIES), (
-    "SURVEY §2 keys must stay in the driver-gated set: missing "
-    f"{sorted(SURVEY_S2_TENURED - set(QUERIES))}")
-assert len(QUERIES) == 50, f"driver cap: {len(QUERIES)}"
-
-
-# --- cache-scope query boundary (r13, guide §5) -------------------------
-# Operators persist shared subtrees for the duration of ONE query; the
-# registry in cachescope.py records them, and this wrapper releases the
-# PREVIOUS query's registrations when the next query build begins. In a
-# long session (the 174-query bench, a notebook) storage then holds at
-# most one query's caches instead of accumulating all of them — the r12
-# defect where late-bench-order queries regressed ~2x at 32 cores under
-# ~10^2 pinned stale entries. Results are unaffected: an unpersisted
-# frame recomputes from lineage; each query still computes end-to-end
-# from its parquet inputs with its own caches warm while it runs.
-def _with_cache_scope(fn):
-    from functools import wraps
-
-    from datapump_spark.cachescope import release_scope
-
-    @wraps(fn)
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        release_scope(spark)
-        return fn(spark, sf_dir)
-
-    return wrapped
-
-
-for _d in (QUERIES, EXTRA_QUERIES, BENCH_VARIANTS):
-    for _k in list(_d):
-        _d[_k] = _with_cache_scope(_d[_k])
+ALL_QUERIES = dict(_REGISTRY)
+QUERIES = {n: _REGISTRY[n] for n in DRIVER_GATED}
+BENCH_VARIANTS = {n: _REGISTRY[n] for n in BENCH_VARIANTS_NAMES}
+EXTRA_QUERIES = {n: fn for n, fn in _REGISTRY.items()
+                 if n not in QUERIES and n not in BENCH_VARIANTS}

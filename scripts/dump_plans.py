@@ -20,17 +20,15 @@ def main() -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    from datapump_spark.queries import (BENCH_VARIANTS, EXTRA_QUERIES,
-                                        QUERIES)
+    from datapump_spark.queries import ALL_QUERIES
     from datapump_spark.session import get_session
 
-    all_q = {**QUERIES, **EXTRA_QUERIES, **BENCH_VARIANTS}
     spark = get_session("dump-plans", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     out = Path(__file__).resolve().parents[1] / args.out
     out.mkdir(parents=True, exist_ok=True)
     for name in args.queries:
-        df = all_q[name](spark, args.sf)
+        df = ALL_QUERIES[name](spark, args.sf)
         txt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
         (out / f"{name}_{args.suffix}.txt").write_text(txt)

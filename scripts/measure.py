@@ -32,11 +32,9 @@ def main() -> None:
     args = ap.parse_args()
 
     from bench import _warm_python_workers
-    from datapump_spark.queries import (BENCH_VARIANTS, EXTRA_QUERIES,
-                                        QUERIES)
+    from datapump_spark.queries import ALL_QUERIES
     from datapump_spark.session import get_session
 
-    all_queries = {**QUERIES, **EXTRA_QUERIES, **BENCH_VARIANTS}
     spark = get_session("datapump-measure")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").write.format("noop") \
@@ -46,7 +44,7 @@ def main() -> None:
     times: dict[str, list[float]] = {q: [] for q in args.queries}
     for pass_no in range(args.k):
         for name in args.queries:
-            fn = all_queries[name]
+            fn = ALL_QUERIES[name]
             spark.sparkContext.setJobDescription(f"{name} pass{pass_no}")
             t0 = time.perf_counter()
             fn(spark, args.sf).write.format("noop").mode("overwrite").save()

@@ -23,14 +23,13 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from datapump_spark.queries import BENCH_VARIANTS, EXTRA_QUERIES, QUERIES
+    from datapump_spark.queries import ALL_QUERIES
     from datapump_spark.session import get_session
 
     spark = get_session("plan-audit", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
 
-    allq = {**QUERIES, **EXTRA_QUERIES, **BENCH_VARIANTS}
-    print(f"# PLANS — static physical-plan audit ({len(allq)} queries, "
+    print(f"# PLANS — static physical-plan audit ({len(ALL_QUERIES)} queries, "
           f"{Path(sf_dir).name})")
     print()
     print("Generated by `python scripts/plan_audit.py`. Exch = Exchange "
@@ -42,9 +41,9 @@ def main() -> None:
     print()
     print("| query | Exch | BHJ | SMJ | WGL | Push | note |")
     print("|---|---|---|---|---|---|---|")
-    for name in sorted(allq):
+    for name in sorted(ALL_QUERIES):
         try:
-            df = allq[name](spark, sf_dir)
+            df = ALL_QUERIES[name](spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
             note = ""
         except Exception as exc:  # noqa: BLE001 — audit must not abort

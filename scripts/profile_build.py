@@ -26,12 +26,10 @@ def main() -> None:
     ap.add_argument("-k", type=int, default=2)
     args = ap.parse_args()
 
-    from datapump_spark.queries import (BENCH_VARIANTS, EXTRA_QUERIES,
-                                        QUERIES)
+    from datapump_spark.queries import ALL_QUERIES
     from datapump_spark.session import get_session
 
-    all_queries = {**QUERIES, **EXTRA_QUERIES, **BENCH_VARIANTS}
-    names = args.queries or list(all_queries)
+    names = args.queries or list(ALL_QUERIES)
     spark = get_session("datapump-profile-build")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -39,7 +37,7 @@ def main() -> None:
     for pass_no in range(args.k):
         for name in names:
             t0 = time.perf_counter()
-            all_queries[name](spark, args.sf)
+            ALL_QUERIES[name](spark, args.sf)
             dt = time.perf_counter() - t0
             out[name] = round(dt, 3)  # keep the LAST (warm) pass
     ranked = sorted(out.items(), key=lambda kv: -kv[1])

@@ -1,5 +1,7 @@
 """Bench-harness safety net: every query bench.py times must BUILD and RUN
-at sf0.001, and the bench list must only name registered queries.
+at sf0.001, and the bench list must only name registered queries. Also
+pins the registry's shape: one registration per name, the tier views
+derived from the two tier tuples, and one oracle per non-variant query.
 
 Round-2 post-mortem: one query crashing erased the whole round's bench
 evidence because nothing exercised the bench registry end-to-end between
@@ -9,13 +11,16 @@ gate fails CI the moment any benched query stops running.
 
 from __future__ import annotations
 
+import sys
+
 import pytest
 
-from datapump_spark.queries import BENCH_VARIANTS, EXTRA_QUERIES, QUERIES
+from datapump_spark import queries
+from datapump_spark.oracles import ORACLE_SQL, ORACLES
+from datapump_spark.queries import (ALL_QUERIES, BENCH_VARIANTS, DRIVER_GATED,
+                                    EXTRA_QUERIES, QUERIES)
 
 SF_DIR = "/root/testdata/sf0.001"
-
-ALL = {**QUERIES, **EXTRA_QUERIES, **BENCH_VARIANTS}
 
 
 def bench_names() -> list[str]:
@@ -25,8 +30,44 @@ def bench_names() -> list[str]:
 
 
 def test_bench_list_is_registered():
-    missing = [n for n in bench_names() if n not in ALL]
+    missing = [n for n in bench_names() if n not in ALL_QUERIES]
     assert not missing, f"bench.py names unregistered queries: {missing}"
+
+
+def test_driver_tier_follows_declared_order():
+    assert list(QUERIES) == list(DRIVER_GATED)
+
+
+def test_tiers_partition_the_registry():
+    tiers = [set(QUERIES), set(EXTRA_QUERIES), set(BENCH_VARIANTS)]
+    assert not tiers[0] & tiers[1]
+    assert not tiers[0] & tiers[2]
+    assert not tiers[1] & tiers[2]
+    assert set().union(*tiers) == set(ALL_QUERIES)
+    assert len(ALL_QUERIES) == 221
+
+
+def test_every_non_variant_has_one_oracle():
+    assert set(ORACLES) == set(QUERIES)
+    assert not set(BENCH_VARIANTS) & set(ORACLE_SQL)
+    assert set(ORACLE_SQL) == set(QUERIES) | set(EXTRA_QUERIES)
+
+
+def test_registry_wraps_while_module_names_stay_plain():
+    for name, fn in ALL_QUERIES.items():
+        assert hasattr(fn, "__wrapped__"), name
+        defined = getattr(sys.modules[fn.__module__], name)
+        assert not hasattr(defined, "__wrapped__"), name
+
+
+def test_registering_a_name_twice_raises():
+    def q_csv_scan(spark, sf_dir):
+        raise AssertionError("never registered")
+
+    before = dict(queries._REGISTRY)
+    with pytest.raises(ValueError, match="q_csv_scan"):
+        queries.query(q_csv_scan)
+    assert queries._REGISTRY == before
 
 
 # The two heaviest variants (multi-second ANN index builds) run behind

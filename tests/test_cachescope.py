@@ -36,40 +36,38 @@ def test_release_scope_idempotent_and_safe_on_empty(spark):
 def test_query_boundary_releases_previous_query_caches(spark, sf_dir):
     """Running query B releases the operator caches query A registered;
     results are unaffected (the bench-session accumulation defect)."""
-    from datapump_spark.queries import BENCH_VARIANTS, EXTRA_QUERIES, QUERIES
+    from datapump_spark.queries import ALL_QUERIES
 
-    all_q = {**QUERIES, **EXTRA_QUERIES, **BENCH_VARIANTS}
     release_scope(spark)
     # q_sparse_sim's operator persists its normalized tf frame
-    a = all_q["q_sparse_sim"](spark, sf_dir)
+    a = ALL_QUERIES["q_sparse_sim"](spark, sf_dir)
     rows_first = a.count()
     assert len(_SCOPES.get(spark, [])) >= 1, \
         "sparse_sim should register its persist in the scope"
     held = list(_SCOPES.get(spark, []))
     # building the NEXT query must release A's registrations
-    b = all_q["q_pagerank"](spark, sf_dir)
+    b = ALL_QUERIES["q_pagerank"](spark, sf_dir)
     for f in held:
         assert not f.storageLevel.useMemory, \
             "previous query's scoped cache must be unpersisted"
     assert b.count() > 0
     # and A still recomputes to the same result without its cache
-    rows_again = all_q["q_sparse_sim"](spark, sf_dir).count()
+    rows_again = ALL_QUERIES["q_sparse_sim"](spark, sf_dir).count()
     assert rows_again == rows_first
     release_scope(spark)
 
 
 def test_session_storage_does_not_accumulate_across_queries(spark, sf_dir):
     """After k queries + one boundary, the JVM's persistent-RDD table is
-    back to (at most) the cross-query memo baseline — no unbounded
-    growth with query count."""
-    from datapump_spark.queries import BENCH_VARIANTS, EXTRA_QUERIES, QUERIES
+    back to (at most) its baseline — no unbounded growth with query
+    count."""
+    from datapump_spark.queries import ALL_QUERIES
 
-    all_q = {**QUERIES, **EXTRA_QUERIES, **BENCH_VARIANTS}
     release_scope(spark)
     spark.catalog.clearCache()
     baseline = _n_cached(spark)
     for name in ("q_sparse_sim", "q_triangles", "q_lm_score"):
-        all_q[name](spark, sf_dir).write.format("noop") \
+        ALL_QUERIES[name](spark, sf_dir).write.format("noop") \
             .mode("overwrite").save()
     release_scope(spark)
     # asynchronous unpersist: bounded wait for the block manager

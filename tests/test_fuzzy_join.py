@@ -73,3 +73,17 @@ def test_max_dist_validation(spark):
     df = spark.createDataFrame(STRINGS, "doc_id int, text string")
     with pytest.raises(ValueError):
         edit_distance_pairs(df, max_dist=0)
+
+
+def test_odd_text_column_name_gives_same_pairs(spark):
+    """A backtick and a space in the text column name cannot break the
+    generated SQL text or the F.col reference."""
+    rows = [(1, "hello"), (2, "hallo"), (3, "zzzzzzzzzzzz")]
+
+    def pairs(text_col):
+        df = spark.createDataFrame(rows, ["doc_id", text_col])
+        out = edit_distance_pairs(df, text_col=text_col, max_dist=2)
+        return sorted(map(tuple, out.collect()))
+
+    assert pairs("text") == [(1, 2, 1)]
+    assert pairs("a`b Join") == pairs("text")

@@ -89,6 +89,13 @@ def test_external_queries_and_constant_dim(spark):
     assert hits[0]["score"] >= 0.999999
 
 
+def test_all_null_dimension_is_named(spark):
+    df = spark.createDataFrame([(1, [None, 1.0]), (2, [None, 2.0])],
+                               "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="dimension 0 is null"):
+        train_sq8(df, normalize=False)
+
+
 @pytest.mark.slow  # redundancy: q_sq8_topk (recall-gated bench
 # variant) runs the expr strategy per round and the no-cross-join
 # plan assertion stays in-default; GEMM-vs-expr equivalence is

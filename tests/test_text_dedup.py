@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from datapump_spark.operators.dedup_fuzzy import (
     exact_dedup,
+    lsh_candidate_pairs,
     minhash_near_dup_pairs,
     ngram_jaccard_pairs,
     simhash,
@@ -65,6 +66,23 @@ def test_ngram_jaccard_blocked_by_source(docs):
     ids = {(r["id_a"], r["id_b"]) for r in pairs}
     assert (1, 2) in ids          # same source, near-identical
     assert (1, 5) not in ids      # doc 5 is in another source block
+
+
+def test_lsh_odd_scope_column_gives_same_pairs(spark):
+    """A backtick in the scope column name cannot break the band-key SQL
+    text; rows 1 and 2 share every band and the scope, row 3 only the
+    bands."""
+    rows = [(1, 5, 7, "en"), (2, 5, 7, "en"), (3, 5, 7, "fr")]
+
+    def pairs(scope_col):
+        sigs = spark.createDataFrame(rows, ["doc_id", "mh0", "mh1",
+                                            scope_col])
+        out = lsh_candidate_pairs(sigs, "doc_id", bands=2, rows_per_band=1,
+                                  scope_col=scope_col)
+        return sorted(map(tuple, out.collect()))
+
+    assert pairs("lang") == [(1, 2)]
+    assert pairs("l`g") == pairs("lang")
 
 
 def test_simhash_close_for_near_dups(docs):
