@@ -37,7 +37,7 @@ from __future__ import annotations
 
 import math
 
-from datapump_spark.cachescope import persist_shared, scoped_persist
+from datapump_spark.cachescope import scoped_persist
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -164,7 +164,7 @@ def bloom_incremental_dedup(
     # this frame is the persisted bucketed index (a scan, not a
     # recompute — see incremental.py), in-bench it is a computed md5
     # distinct that would otherwise run twice.
-    corpus_fps = persist_shared(corpus_fps)  # Distinct lineage -> persists
+    corpus_fps = scoped_persist(corpus_fps)
     bloom = build_bloom(corpus_fps, "fp", n_items=n_index, fpp=fpp)
     fp = F.md5(normalize_text(F.col(text_col)))
     stamped = with_bloom_contains(
@@ -181,7 +181,7 @@ def bloom_incremental_dedup(
     )
     # persisted: the novel filter and the maybe anti-join both consume
     # the winner frame (one md5+probe+groupBy pass instead of two)
-    firsts = persist_shared(firsts)  # Aggregate lineage -> persists
+    firsts = scoped_persist(firsts)
     # Null-text rows have a null fp, so bloom_maybe is null (three-valued
     # probe above) and would fail BOTH filters — silently dropping rows
     # the exact path keeps. Route null verdicts through the anti-join

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from datapump_spark.cachescope import persist_shared, scoped_persist
+from datapump_spark.cachescope import scoped_persist
 from datapump_spark.functions.hashing import hash63, tokens
 from datapump_spark.functions.sqltext import sql_ident
 
@@ -844,15 +844,7 @@ def hamming_pairs(
     # lineage is the full signature computation (SimHash: a token
     # explode + 32 conditional sums) — r12, guide §1.2/§5. nb+1
     # ints/row, the cheapest frame in the operator.
-    # persist_shared: persists iff the keyed stream's lineage carries a
-    # wide step or a Python kernel. All current callers qualify — the
-    # SimHash signature is itself a groupBy(doc) aggregate and the
-    # image/audio signatures come through mapInPandas decode kernels —
-    # but the policy guards any future caller whose signature frame is
-    # a plain narrow scan, where the barrier would cost more than the
-    # recompute (r13 policy, guide §5; plans/r13 shows the persist
-    # retained: InMemoryRelation 4 -> 4).
-    keyed = persist_shared(keyed)
+    keyed = scoped_persist(keyed)
     a = keyed.select(F.col("id").alias("id_a"),
                      F.col("__sig").alias("sig_a"), "bno", "bval")
     b = keyed.select(F.col("id").alias("id_b"),

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from datapump_spark.cachescope import persist_shared, scoped_persist
+from datapump_spark.cachescope import scoped_persist
 from datapump_spark.functions.hashing import tokens
 
 
@@ -258,18 +258,12 @@ def ccnet_buckets(
         raise ValueError(f"smoothing must be 'addk' or 'kn': {smoothing!r}")
     ref = reference if reference is not None else docs
     # Default reference (score the corpus you train on): the per-doc
-    # bigram stream is the SAME frame on both sides, so explode the
-    # corpus once, persist, and hand it to trainer and scorer (r12
-    # optimization round, guide §1.2/§5 — the sparse_sim/dsir persist
-    # pattern; computed inside the query, nothing crosses runs).
-    # persist_shared(grows=True): the exploded per-doc bigram stream is
-    # LARGER than the corpus slice it derives from, so the policy says
-    # recompute — the r12 caveat ("a cluster profile may prefer
-    # recompute") codified. The shared LAZY frame still deduplicates the
-    # plan construction; trainer and scorer each re-run the narrow
-    # tokenize+explode, which map-side-aggregates before any exchange.
-    shared = (persist_shared(_doc_bigrams(docs, id_col, text_col),
-                             grows=True)
+    # bigram stream is the SAME frame on both sides, so build it once
+    # and hand it to trainer and scorer. It is not persisted: the
+    # exploded stream is LARGER than the corpus slice it derives from,
+    # and trainer and scorer each re-run the narrow tokenize+explode,
+    # which map-side-aggregates before any exchange.
+    shared = (_doc_bigrams(docs, id_col, text_col)
               if reference is None else None)
     uni, bi = train_bigram_lm(ref, id_col, text_col, bigram_stream=shared)
     if smoothing == "kn":

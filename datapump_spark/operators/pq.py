@@ -375,83 +375,100 @@ def ivfpq_topk(
     # sequential job at the end. Job descriptions are thread-local;
     # inheritable_thread_target propagates the JVM-local properties.
     # qrows' VALUES are identical either way (same frame, same collect) —
-    # the trained model and result cannot change.
-    from concurrent.futures import ThreadPoolExecutor
+    # the trained model and result cannot change. The collect runs under
+    # a job tag: if training raises, the job is cancelled and the thread
+    # drained before the error propagates, so no orphan job outlives it.
+    import uuid
+    from concurrent.futures import ThreadPoolExecutor, wait
 
     from pyspark import inheritable_thread_target
 
     qsrc = queries if queries is not None \
         else df.where(F.col(id_col) < query_max_id)
+    sc = spark.sparkContext
+    tag = f"ivfpq-query-collect-{uuid.uuid4().hex}"
 
     def _collect_queries():
-        spark.sparkContext.setJobDescription("ivfpq: query-side collect")
-        return _l2_normalized(qsrc, id_col, vec_col).collect()
+        sc.setJobDescription("ivfpq: query-side collect")
+        sc.addJobTag(tag)
+        try:
+            return _l2_normalized(qsrc, id_col, vec_col).collect()
+        finally:
+            sc.removeJobTag(tag)
 
     pool = ThreadPoolExecutor(max_workers=1)
     q_future = pool.submit(inheritable_thread_target(_collect_queries))
     pool.shutdown(wait=False)
+    try:
+        C = _kmeans_centroids(base.select("id", "v"), n_cells, lloyd_iters)
+        if C is None:
+            q_future.result()   # drain before returning (empty corpus path)
+            return spark.createDataFrame(
+                [], "query_id bigint, neighbor_id bigint, score double")
 
-    C = _kmeans_centroids(base.select("id", "v"), n_cells, lloyd_iters)
-    if C is None:
-        q_future.result()   # drain before returning (empty corpus path)
-        return spark.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, score double")
+        # corpus: cell assignment (cosine, vs the trainer's normalized
+        # centroids), then residual vs the cell MEAN — not the normalized
+        # centroid. The decomposition ⟨q,x⟩ = ⟨q,c⟩ + ⟨q,x−c⟩ holds for
+        # any c, but quantization error scales with ‖x−c‖, which the mean
+        # minimizes; measured on this corpus the normalized-centroid
+        # residual costs ~0.3 recall@10 (0.52 vs 0.81).
+        # persist: the assignment kernel feeds FOUR downstream actions
+        # (cell means, PQ training, encoding, and — transitively — search);
+        # without it each one replays the whole mapInPandas chain. State
+        # is (id, cell, v): rows × (dim+2) doubles, the already-bounded
+        # corpus projection. with_v passes v through the kernel, so the
+        # former cells0.join(base, "id") corpus re-shuffle is gone (r12,
+        # guide §2).
+        with_cell = (_assign_cells(base, C, n_probe=1, with_v=True)
+                     .select("id", F.col("cells")[0].alias("cell"), "v")
+                     .persist())
+        mean_rows = (
+            with_cell.select("cell", F.posexplode("v").alias("pos", "val"))
+            .groupBy("cell", "pos").agg(F.avg("val").alias("m"))
+            .collect()
+        )
+        dim_full = len(C[0])
+        M = np.zeros((len(C), dim_full))
+        for r in mean_rows:
+            M[r["cell"], r["pos"]] = r["m"]
+        cent_df = spark.createDataFrame(
+            [(i, [float(x) for x in M[i]]) for i in range(len(M))],
+            "cell int, cent array<double>")
+        assigned = (
+            with_cell
+            .join(F.broadcast(cent_df), "cell")
+            .withColumn("v_res", F.zip_with("v", "cent", lambda a, b: a - b))
+            .persist()
+        )
+        cb = train_pq(assigned, id_col="id", vec_col="v_res", m=m, k=kc,
+                      lloyd_iters=lloyd_iters, dim=dim or len(C[0]),
+                      normalize=False)
+        # cell rides through the encode kernel — no id join back onto the
+        # corpus to re-attach it (r12, guide §2)
+        from datapump_spark.cachescope import scoped_persist
+        codes = scoped_persist(pq_encode(assigned, cb, id_col="id",
+                                         vec_col="v_res",
+                                         normalize=False, extra=("cell",)))
+        # materialize the (small: id, codes, cell) index, then release the
+        # corpus-sized upstream caches — leaving them pinned for the
+        # session would crowd out the very scan caching the layout
+        # depends on
+        codes.count()
+        assigned.unpersist()
+        with_cell.unpersist()
 
-    # corpus: cell assignment (cosine, vs the trainer's normalized
-    # centroids), then residual vs the cell MEAN — not the normalized
-    # centroid. The decomposition ⟨q,x⟩ = ⟨q,c⟩ + ⟨q,x−c⟩ holds for any c,
-    # but quantization error scales with ‖x−c‖, which the mean minimizes;
-    # measured on this corpus the normalized-centroid residual costs
-    # ~0.3 recall@10 (0.52 vs 0.81).
-    # persist: the assignment kernel feeds FOUR downstream actions (cell
-    # means, PQ training, encoding, and — transitively — search); without
-    # it each one replays the whole mapInPandas chain. State is
-    # (id, cell, v): rows × (dim+2) doubles, the already-bounded corpus
-    # projection. with_v passes v through the kernel, so the former
-    # cells0.join(base, "id") corpus re-shuffle is gone (r12, guide §2).
-    with_cell = (_assign_cells(base, C, n_probe=1, with_v=True)
-                 .select("id", F.col("cells")[0].alias("cell"), "v")
-                 .persist())
-    mean_rows = (
-        with_cell.select("cell", F.posexplode("v").alias("pos", "val"))
-        .groupBy("cell", "pos").agg(F.avg("val").alias("m"))
-        .collect()
-    )
-    dim_full = len(C[0])
-    M = np.zeros((len(C), dim_full))
-    for r in mean_rows:
-        M[r["cell"], r["pos"]] = r["m"]
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in M[i]]) for i in range(len(M))],
-        "cell int, cent array<double>")
-    assigned = (
-        with_cell
-        .join(F.broadcast(cent_df), "cell")
-        .withColumn("v_res", F.zip_with("v", "cent", lambda a, b: a - b))
-        .persist()
-    )
-    cb = train_pq(assigned, id_col="id", vec_col="v_res", m=m, k=kc,
-                  lloyd_iters=lloyd_iters, dim=dim or len(C[0]),
-                  normalize=False)
-    # cell rides through the encode kernel — no id join back onto the
-    # corpus to re-attach it (r12, guide §2)
-    from datapump_spark.cachescope import scoped_persist
-    codes = scoped_persist(pq_encode(assigned, cb, id_col="id",
-                                     vec_col="v_res",
-                                     normalize=False, extra=("cell",)))
-    # materialize the (small: id, codes, cell) index, then release the
-    # corpus-sized upstream caches — leaving them pinned for the session
-    # would crowd out the very scan caching the layout depends on
-    codes.count()
-    assigned.unpersist()
-    with_cell.unpersist()
-
-    # queries: exact vectors, n_probe best cells, one LUT each. External
-    # (id, vec) query frames are first-class (same contract as pq_topk:
-    # ids must not collide with corpus ids); default is the
-    # corpus-rows-below-query_max_id driver convention. Collected by the
-    # thread submitted at the top of this function (guide §2.6).
-    qrows = q_future.result()
+        # queries: exact vectors, n_probe best cells, one LUT each. External
+        # (id, vec) query frames are first-class (same contract as pq_topk:
+        # ids must not collide with corpus ids); default is the
+        # corpus-rows-below-query_max_id driver convention. Collected by the
+        # thread submitted at the top of this function (guide §2.6).
+        qrows = q_future.result()
+    except BaseException:
+        # cancel until the thread is done: a job submitted after one
+        # cancel call would otherwise run to completion
+        while not wait([q_future], timeout=0.2).done:
+            sc.cancelJobsWithTag(tag)
+        raise
     if not qrows:
         return spark.createDataFrame(
             [], "query_id bigint, neighbor_id bigint, score double")

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from datapump_spark.cachescope import persist_shared, scoped_persist
+from datapump_spark.cachescope import scoped_persist
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -176,7 +176,7 @@ def freq_resample(
     # The resampled aggregate feeds BOTH the spine derivation and the
     # join's right side — persist it (bucket-count-sized) so the
     # groupBy-over-the-fact-table runs once (r12, guide §1.2/§5).
-    agg = persist_shared(agg)  # Aggregate lineage -> persists (policy)
+    agg = scoped_persist(agg)
     if spec_kind == "trunc":
         step = {"hour": "1 hour", "day": "1 day", "week": "7 days",
                 "month": "1 month", "quarter": "3 months", "year": "1 year"}[spec]

@@ -231,14 +231,16 @@ def quarantine_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     Good rows drop the corrupt column; quarantined rows keep only the raw
     line, mirroring the file-level quarantine dir of the ingest pipeline
-    (streaming/pipeline.py). Spark requires a cache barrier to materialize
-    ``_corrupt_record`` before referencing it in a filter — done here so
-    callers can't hit the AnalysisException.
+    (streaming/pipeline.py). Spark requires a materialization barrier
+    before a filter on ``_corrupt_record`` — done here so callers can't
+    hit the AnalysisException. The barrier is a checkpoint, not a scoped
+    persist: the cache scope's release at the next query build would
+    remove a persist and bring the AnalysisException back for any later
+    read of ``good`` or ``bad``.
     """
     if CORRUPT_COL not in df.columns:
         raise ValueError(f"scan was not read with keep_corrupt=True: {df.columns}")
-    from datapump_spark.cachescope import scoped_persist
-    df = scoped_persist(df)
+    df = df.localCheckpoint(eager=False)
     good = df.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.where(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
     return good, bad

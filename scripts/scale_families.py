@@ -61,13 +61,10 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from datapump_spark.queries import _t
-    from datapump_spark.session import get_session
+    from run_queries import start
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    spark = get_session("scale-families")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").write.format("noop") \
-        .mode("overwrite").save()
+    spark = start("scale-families")
 
     sf_dir, mult = args.sf, args.mult
     reps = F.explode(F.sequence(F.lit(0), F.lit(mult - 1))).alias("__rep")

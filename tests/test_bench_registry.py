@@ -6,12 +6,16 @@ derived from the two tier tuples, and one oracle per non-variant query.
 Round-2 post-mortem: one query crashing erased the whole round's bench
 evidence because nothing exercised the bench registry end-to-end between
 testdata regenerations. bench.py is now per-query fault-tolerant AND this
-gate fails CI the moment any benched query stops running.
+gate fails CI the moment any benched query stops running. The query
+runner (scripts/run_queries.py) is driven here on two queries without
+its warm-up, so a registry change that breaks a subcommand fails here.
 """
 
 from __future__ import annotations
 
+import importlib.util
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -86,3 +90,43 @@ def test_bench_variant_runs(spark, name):
     df = BENCH_VARIANTS[name](spark, SF_DIR)
     assert df.schema.fields
     assert df.count() >= 0
+
+
+def _load_runner():
+    path = Path(__file__).resolve().parents[1] / "scripts" / "run_queries.py"
+    spec = importlib.util.spec_from_file_location("run_queries", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+RUNNER_NAMES = ["q_mode", "q_pricing_summary"]
+
+
+def test_runner_passes_report_old_json_shapes(spark, sf_dir):
+    runner = _load_runner()
+    build, wall = runner.passes(spark, RUNNER_NAMES, sf_dir, 1, run=False)
+    assert wall is None
+    report = runner.build_report(build)
+    assert set(report) == {"total_build_sec", "build"}
+    assert set(report["build"]) == set(RUNNER_NAMES)
+
+    build, wall = runner.passes(spark, RUNNER_NAMES, sf_dir, 1, run=True)
+    assert set(build) == set(RUNNER_NAMES)
+    for name, row in runner.time_report(wall).items():
+        assert set(row) == {"min", "med", "max", "all"}, name
+        assert len(row["all"]) == 1
+        assert row["all"][0] >= build[name][0]
+
+
+def test_runner_plan_table_and_dumps(spark, sf_dir, tmp_path):
+    runner = _load_runner()
+    lines = runner.plan(spark, RUNNER_NAMES, sf_dir, out=tmp_path)
+    rows = [ln for ln in lines if ln.startswith("| q_")]
+    assert [r.split(" | ")[0][2:] for r in rows] == RUNNER_NAMES
+    for row in rows:
+        cells = [c.strip() for c in row.strip("|").split("|")]
+        assert len(cells) == 7
+        assert all(c.isdigit() for c in cells[1:6]), row
+    for name in RUNNER_NAMES:
+        assert (tmp_path / f"{name}.txt").read_text().strip()

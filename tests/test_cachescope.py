@@ -78,43 +78,3 @@ def test_session_storage_does_not_accumulate_across_queries(spark, sf_dir):
         time.sleep(0.1)
     assert _n_cached(spark) <= baseline
 
-
-def test_persist_shared_policy(spark):
-    """persist_shared persists only frames whose lineage carries a wide
-    step or Python kernel, and never frames declared larger than input."""
-    from pyspark.sql import functions as F
-
-    from datapump_spark.cachescope import persist_shared, release_scope
-
-    release_scope(spark)
-    narrow = spark.range(100).select((F.col("id") * 2).alias("x"))
-    out = persist_shared(narrow)
-    assert out.storageLevel.useMemory is False      # narrow -> recompute
-
-    wide = spark.range(100).groupBy((F.col("id") % 3).alias("g")) \
-        .agg(F.count("*").alias("n"))
-    out2 = persist_shared(wide)
-    assert out2.storageLevel.useMemory is True      # Aggregate -> persist
-
-    grown = persist_shared(wide, grows=True)
-    assert grown.storageLevel.useMemory is True or grown is wide
-    # grows=True must return the input unchanged (no new persist)
-    assert grown is wide
-    release_scope(spark)
-
-
-def test_persist_shared_matches_node_names_not_aliases(spark):
-    """The policy reads plan NODE names: a narrow projection whose alias
-    spells node names stays unpersisted, an aggregate still persists."""
-    from pyspark.sql import functions as F
-
-    from datapump_spark.cachescope import persist_shared, release_scope
-
-    release_scope(spark)
-    aliased = spark.range(100).select(F.col("id").alias("Join_Sort"))
-    assert persist_shared(aliased).storageLevel.useMemory is False
-
-    agg = spark.range(100).groupBy((F.col("id") % 3).alias("Join_Sort")) \
-        .agg(F.count("*").alias("n"))
-    assert persist_shared(agg).storageLevel.useMemory is True
-    release_scope(spark)

@@ -45,6 +45,24 @@ def test_quarantine_split(spark, tmp_path):
                                    '{"doc_id": 3 "text": "missing comma"}']
 
 
+def test_quarantine_split_survives_scope_release(spark, tmp_path):
+    """The split stays readable after the cache scope is released (the
+    next query build does that): the barrier is a checkpoint, which a
+    release cannot undo."""
+    from datapump_spark.cachescope import release_scope
+
+    p = tmp_path / "one_bad.jsonl"
+    p.write_text('{"doc_id": 1, "text": "ok"}\n'
+                 'this is not json\n'
+                 '{"doc_id": 2, "text": "also ok"}\n')
+    scan = read_jsonl(spark, str(p), schema="doc_id bigint, text string",
+                      keep_corrupt=True)
+    good, bad = quarantine_split(scan)
+    release_scope(spark)
+    assert good.count() == 2
+    assert bad.count() == 1
+
+
 def test_quarantine_requires_corrupt_scan(spark):
     df = read_jsonl(spark, JSONL_GLOB, schema=DDL)
     with pytest.raises(ValueError):

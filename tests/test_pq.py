@@ -233,3 +233,40 @@ def test_ivfpq_external_queries(emb, spark):
     got = {r["query_id"]: r["neighbor_id"] for r in hits}
     assert got == {-3: 3, -17: 17}
     assert all(r["score"] >= 0.999999 for r in hits)
+
+
+def test_ivfpq_training_failure_cancels_query_collect(emb, spark,
+                                                       monkeypatch):
+    """If training raises while the query-side collect runs on its
+    background thread, ivfpq_topk cancels that job before the error
+    propagates: no orphan job keeps the executors busy."""
+    import time
+
+    from datapump_spark.operators import pq, similarity
+
+    tracker = spark.sparkContext.statusTracker()
+    real_l2 = pq._l2_normalized
+
+    @F.udf("bigint")
+    def sleepy(x):
+        time.sleep(60)
+        return x
+
+    def slow_l2(df, id_col, vec_col, *args, **kwargs):
+        out = real_l2(df, id_col, vec_col, *args, **kwargs)
+        return out.withColumn("id", sleepy("id"))
+
+    def failing_kmeans(*args, **kwargs):
+        deadline = time.monotonic() + 30    # fail once the collect runs
+        while not tracker.getActiveJobsIds() and time.monotonic() < deadline:
+            time.sleep(0.1)
+        raise RuntimeError("training failed")
+
+    monkeypatch.setattr(pq, "_l2_normalized", slow_l2)
+    monkeypatch.setattr(similarity, "_kmeans_centroids", failing_kmeans)
+    with pytest.raises(RuntimeError, match="training failed"):
+        pq.ivfpq_topk(emb, k=1, n_cells=4, n_probe=2)
+    deadline = time.monotonic() + 20
+    while tracker.getActiveJobsIds() and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert list(tracker.getActiveJobsIds()) == []
