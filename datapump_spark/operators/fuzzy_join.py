@@ -62,10 +62,6 @@ _CLASSES = ["aeiou", "bcd", "fgh", "jkl", "mnp", "qrs", "tvw", "xyz",
             "0123", "4567", "89", " "]
 
 
-def _count_of(t: Column, chars: str) -> Column:
-    return (F.length(t) - F.length(F.translate(t, chars, ""))).cast("int")
-
-
 def edit_distance_pairs(
     df: DataFrame,
     id_col: str = "doc_id",

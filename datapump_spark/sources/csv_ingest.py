@@ -97,12 +97,6 @@ def multi_format_ts(col: str | Column, formats: Sequence[str] = DEFAULT_DATE_FOR
     return F.coalesce(*tries)
 
 
-def duckdb_multi_format_ts_sql(col: str, formats: Sequence[str] = DUCKDB_DATE_FORMATS) -> str:
-    """The oracle-side twin of :func:`multi_format_ts` as a SQL fragment."""
-    tries = ", ".join(f"try_strptime({col}, '{f}')" for f in formats)
-    return f"coalesce({tries})"
-
-
 def read_csv_raw(spark: SparkSession, path: str) -> DataFrame:
     """S4 scan, all columns as strings (typing happens in :func:`ingest_csv`).
 

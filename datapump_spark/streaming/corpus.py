@@ -1,39 +1,40 @@
 """Streaming corpus ingestion: the training-data twin of the job
 pipeline — new documents arrive as files, each micro-batch is quality-
-gated and deduplicated against everything already admitted, survivors
-append to the corpus and their fingerprints to the persisted index.
+gated and deduplicated against everything already admitted, and the
+survivors append to the corpus.
 
     doc files ──readStream──▶ gopher quality gate
-        ─▶ incremental_dedup vs fingerprint index (operators/incremental)
+        ─▶ incremental_dedup vs the corpus's fp column (operators/incremental)
         ─▶ corpus append (partitioned by batch id)
-        ─▶ index append  (same partitioning)
         ─▶ audit row (n_in / n_low_quality / n_dup / n_admitted)
 
-Exactly-once without MERGE: every sink write is partitioned by
-``__batch_id`` with dynamic partition overwrite, so a replayed batch
-(after a crash between writes) OVERWRITES its own partition instead of
-appending twice — idempotent by layout, the same trick as the shard
-sink. The fingerprint index is additionally rebuildable from the corpus
-itself (it is derived state).
+Exactly-once without MERGE: every store uses the batch layout of
+streaming/batches.py, so a replayed batch (after a crash between writes,
+or a fresh checkpoint) overwrites its own partitions and repeats its
+first run's decisions. The corpus keeps each doc's ``fp`` and is its own
+exact-dup index; only the optional signature and gram indexes, whose
+rows do not fit the corpus row, are separate stores.
 
-At 100 TB: the index is the only cross-batch state and it shuffles
-nothing on read here (the anti-join ships the daily batch to the index's
-buckets; see operators/incremental docstring); the corpus write is an
-append of already-filtered data. State never lives in the streaming
-state store, so checkpoints stay tiny.
+At 100 TB: the corpus's ``fp`` column is the only cross-batch state of
+the exact gate and it shuffles nothing on read here (the anti-join ships
+the daily batch to the index's buckets; see operators/incremental
+docstring); the corpus write is an append of already-filtered data.
+State never lives in the streaming state store, so checkpoints stay
+tiny.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datapump_spark.cachescope import release_scope, scoped_persist
 from datapump_spark.operators.incremental import incremental_dedup
 from datapump_spark.operators.quality import gopher_filter
+from datapump_spark.streaming.batches import read_before, write_batch
 
 DOC_SCHEMA = ("doc_id bigint, text string, lang string, source string")
 # the near-dup gate's persisted MinHash signature index
@@ -83,7 +84,8 @@ class StreamingCorpusIngest:
 
     @property
     def index_dir(self) -> str:
-        return str(Path(self.out_dir) / "fp_index")
+        """The exact-dup index: the corpus itself (one ``fp`` per doc)."""
+        return self.corpus_dir
 
     @property
     def audit_dir(self) -> str:
@@ -97,66 +99,46 @@ class StreamingCorpusIngest:
     def gram_index_dir(self) -> str:
         return str(Path(self.out_dir) / "gram_index")
 
-    def _read_index(self, path: str, schema: str,
-                    cols: list[str]) -> DataFrame:
-        """A persisted index's ``cols``, or an empty ``schema`` frame
-        before its first batch lands."""
-        if any(f.endswith(".parquet") for _, _, fs in os.walk(path)
-               for f in fs):
-            return self.spark.read.parquet(path).select(*cols)
-        return self.spark.createDataFrame([], schema)
-
-    def _write_batch(self, df: DataFrame, batch_id: int, path: str) -> None:
-        """Overwrite this batch's ``__batch_id`` partition of ``path``."""
-        (df.withColumn("__batch_id", F.lit(batch_id))
-         .write.partitionBy("__batch_id")
-         .option("partitionOverwriteMode", "dynamic")
-         .mode("overwrite").parquet(path))
-
     def _handle_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # one row per doc id per batch: every downstream gate (and the
         # append-only corpus sink) assumes unique ids; a duplicated id in
         # one batch (re-crawled URI in a WET shard, a re-sent jsonl row)
         # collapses deterministically (max text wins)
         others = [c for c in batch_df.columns if c != "doc_id"]
-        batch_df = (batch_df.groupBy("doc_id")
-                    .agg(F.max_by(F.struct(*others),
-                                  F.col("text")).alias("__r"))
-                    .select("doc_id", "__r.*"))
-        batch_df = batch_df.persist()
+        batch_df = scoped_persist(
+            batch_df.groupBy("doc_id")
+            .agg(F.max_by(F.struct(*others), F.col("text")).alias("__r"))
+            .select("doc_id", "__r.*"))
         try:
             n_in = batch_df.count()
             if self.recipe is not None:
                 from datapump_spark.recipes import pretrain_corpus
 
                 streams = pretrain_corpus(batch_df, recipe=self.recipe)
-                good = streams["clean"].persist()
+                good = scoped_persist(streams["clean"])
             else:
                 q = gopher_filter(batch_df, "doc_id", "text",
                                   min_words=self.min_words,
                                   **self.gopher_kwargs)
-                good = (batch_df.join(
-                    q.where(F.col("keep")).select("doc_id"), "doc_id", "semi")
-                    .persist())
+                good = scoped_persist(batch_df.join(
+                    q.where(F.col("keep")).select("doc_id"), "doc_id", "semi"))
             n_good = good.count()
-            admitted = incremental_dedup(
-                good, self._read_index(self.index_dir, "fp string", ["fp"])
-            ).persist()
+            admitted = scoped_persist(incremental_dedup(
+                good, read_before(self.spark, self.corpus_dir, "fp string",
+                                  batch_id)))
             sigs = None
             if self.near_dup_threshold is not None:
                 from datapump_spark.operators.incremental import (
                     incremental_near_dup,
                 )
 
-                # localCheckpoint (NOT persist): the fp-index write below
-                # refreshes that path and would invalidate a cache whose
-                # lineage read it — the recompute would then see the
-                # batch's own fingerprints already in the index and emit
-                # ZERO rows for the signature write. Cutting lineage
-                # freezes the pre-write state.
+                # localCheckpoint (NOT persist): the corpus write below
+                # refreshes a path this plan read, which drops a cache
+                # built on it; the signature write after it would then
+                # rerun the MinHash pass. Cutting lineage keeps one pass.
                 admitted2 = incremental_near_dup(
-                    admitted, self._read_index(
-                        self.sig_index_dir, SIG_SCHEMA, ["doc_id", *MH_COLS]),
+                    admitted, read_before(self.spark, self.sig_index_dir,
+                                          SIG_SCHEMA, batch_id),
                     threshold=self.near_dup_threshold) \
                     .localCheckpoint(eager=True)
                 # sub-shingle docs are admitted with null signatures —
@@ -164,7 +146,6 @@ class StreamingCorpusIngest:
                 # the persisted index
                 sigs = admitted2.select("doc_id", *MH_COLS) \
                     .where(F.col("mh0").isNotNull())
-                admitted.unpersist()
                 admitted = admitted2.drop(*MH_COLS)
             grams_out = None
             if self.span_dedup_n is not None:
@@ -173,12 +154,11 @@ class StreamingCorpusIngest:
                     incremental_span_dedup,
                 )
 
-                # same lineage hazard as the signature index: the
-                # gram-index write below refreshes a path this plan read,
-                # so freeze the pre-write state
+                # localCheckpoint for the same reason as the signatures:
+                # the gram write below runs after the corpus write
                 spans = incremental_span_dedup(
-                    admitted, self._read_index(
-                        self.gram_index_dir, "gram bigint", ["gram"]),
+                    admitted, read_before(self.spark, self.gram_index_dir,
+                                          "gram bigint", batch_id),
                     n=self.span_dedup_n).localCheckpoint(eager=True)
                 survivors = spans.where(F.col("clean_text") != "")
                 admitted = (
@@ -193,26 +173,23 @@ class StreamingCorpusIngest:
                     n=self.span_dedup_n)
             n_adm = admitted.count()
 
-            self._write_batch(admitted.drop("fp"), batch_id, self.corpus_dir)
-            self._write_batch(admitted.select("fp"), batch_id, self.index_dir)
+            # nothing may read `admitted` after this write: it refreshes
+            # the corpus path that `admitted`'s plan read
+            write_batch(admitted, batch_id, self.corpus_dir)
             if sigs is not None:
-                self._write_batch(sigs, batch_id, self.sig_index_dir)
+                write_batch(sigs, batch_id, self.sig_index_dir)
             if grams_out is not None:
-                self._write_batch(grams_out, batch_id, self.gram_index_dir)
+                write_batch(grams_out, batch_id, self.gram_index_dir)
             audit = self.spark.createDataFrame(
                 [(n_in, n_in - n_good, n_good - n_adm, n_adm)],
                 "n_in bigint, n_low_quality bigint, n_dup bigint, "
                 "n_admitted bigint")
-            self._write_batch(audit, batch_id, self.audit_dir)
-            good.unpersist()
-            admitted.unpersist()
+            write_batch(audit, batch_id, self.audit_dir)
         finally:
-            batch_df.unpersist()
-            # operators called in this batch (incremental dedup, quality,
-            # fingerprints) register their internal persists in the
-            # session cache scope — release them so a long-running stream
-            # holds at most one batch's caches (r13, guide §5)
-            from datapump_spark.cachescope import release_scope
+            # this batch's frames and the operators' internal persists
+            # (incremental dedup, quality, fingerprints) share the
+            # session cache scope — release them, on success or failure,
+            # so a long-running stream holds at most one batch's caches
             release_scope(batch_df.sparkSession)
 
     def stream(self, checkpoint_dir: str | Path):

@@ -18,9 +18,11 @@ watch a directory for arriving media files and, per micro-batch,
    ``quarantine`` store with the reason — nothing is dropped silently,
    the same no-silent-loss contract as the corpus ingest's audit.
 
-Writes are partitioned by ``__batch_id`` with dynamic partition
-overwrite, so a replayed batch overwrites its own partition —
-idempotent under checkpoint loss, same doctrine as streaming/corpus.py.
+Both stores use the batch layout of streaming/batches.py, so a
+replayed batch overwrites its own partitions and repeats its first
+run's routing — idempotent under checkpoint loss. With the perceptual
+gate on, ``features`` rows carry their ``dHash`` and the store is its own
+near-dup index.
 
 At scale: payload bytes never shuffle (every stage is a scan-side
 projection or Arrow kernel over the batch); the feature store carries
@@ -36,6 +38,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datapump_spark.cachescope import release_scope
+from datapump_spark.streaming.batches import read_before, write_batch
+
 
 @dataclass
 class StreamingMediaIngest:
@@ -47,10 +52,10 @@ class StreamingMediaIngest:
     out_dir: str
     glob: str | None = None
     max_files_per_trigger: int | None = 8
-    # Optional cross-batch perceptual image dedup: keep a persisted
-    # dHash index of admitted images; a batch image within this hamming
-    # distance of ANY admitted one (or of a lower-id image in its own
-    # batch) routes to quarantine as 'near_dup'. None = off.
+    # Optional cross-batch perceptual image dedup: features rows keep
+    # their dHash, and a batch image within this hamming distance of ANY
+    # admitted one (or of a lower-id image in its own batch) routes to
+    # quarantine as 'near_dup'. None = off.
     image_dedup_hamming: int | None = None
 
     @property
@@ -60,20 +65,6 @@ class StreamingMediaIngest:
     @property
     def quarantine_dir(self) -> str:
         return str(Path(self.out_dir) / "quarantine")
-
-    @property
-    def dhash_index_dir(self) -> str:
-        return str(Path(self.out_dir) / "dhash_index")
-
-    def _read_dhash_index(self) -> DataFrame:
-        import os
-
-        if os.path.isdir(self.dhash_index_dir) and any(
-                f.endswith(".parquet")
-                for _, _, fs in os.walk(self.dhash_index_dir) for f in fs):
-            return self.spark.read.parquet(self.dhash_index_dir) \
-                .select("dhash")
-        return self.spark.createDataFrame([], "dhash bigint")
 
     def _handle_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         from datapump_spark.operators.mediasniff import sniff_media
@@ -102,7 +93,6 @@ class StreamingMediaIngest:
                     .when(F.col("features").isNull(), F.lit("undecodable")))
                 .localCheckpoint(eager=True)
             )
-            dhashes = None
             if self.image_dedup_hamming is not None:
                 from datapump_spark.operators.dedup_fuzzy import (
                     hamming_pairs,
@@ -114,13 +104,16 @@ class StreamingMediaIngest:
                     joined.where(F.col("reason").isNull())
                     .select("media_id"), "media_id", "semi")
                     .where(F.col("meta.kind") == "image"))
-                # freeze: the dhash-index write below refreshes a path
-                # this plan read (the corpus.py lineage lesson)
+                # freeze: the probe, the in-batch pairs and the features
+                # rows all read the signatures
                 sigs = image_dhash(ok_imgs).where(
                     F.col("dhash").isNotNull()).localCheckpoint(eager=True)
                 k = self.image_dedup_hamming
-                cross = hamming_probe(sigs, self._read_dhash_index(),
-                                      "media_id", "dhash", max_hamming=k)
+                index = read_before(self.spark, self.features_dir,
+                                    "dhash bigint", batch_id) \
+                    .where(F.col("dhash").isNotNull())
+                cross = hamming_probe(sigs, index, "media_id", "dhash",
+                                      max_hamming=k)
                 in_batch = hamming_pairs(sigs, "media_id", "dhash",
                                          max_hamming=k) \
                     .select(F.col("id_b").alias("id"))
@@ -136,30 +129,19 @@ class StreamingMediaIngest:
                         F.coalesce("reason",
                                    F.when(F.col("__dup"),
                                           F.lit("near_dup"))))
-                    .drop("__dup"))
-                dhashes = sigs.join(dup_ids, "media_id", "anti") \
-                    .select("media_id", "dhash")
-            part = {"partitionOverwriteMode": "dynamic"}
-            (joined.where(F.col("reason").isNull())
-             .select("media_id", "path", "sniffed_format", "n_bytes",
-                     "features")
-             .withColumn("__batch_id", F.lit(batch_id))
-             .write.partitionBy("__batch_id").options(**part)
-             .mode("overwrite").parquet(self.features_dir))
-            (joined.where(F.col("reason").isNotNull())
-             .select("media_id", "path", "claimed_format", "sniffed_format",
-                     "n_bytes", "reason")
-             .withColumn("__batch_id", F.lit(batch_id))
-             .write.partitionBy("__batch_id").options(**part)
-             .mode("overwrite").parquet(self.quarantine_dir))
-            if dhashes is not None:
-                (dhashes.withColumn("__batch_id", F.lit(batch_id))
-                 .write.partitionBy("__batch_id").options(**part)
-                 .mode("overwrite").parquet(self.dhash_index_dir))
+                    .drop("__dup")
+                    .join(sigs.select("media_id", "dhash"), "media_id",
+                          "left"))
+            write_batch(joined.where(F.col("reason").isNull())
+                        .drop("meta", "claimed_format", "reason"),
+                        batch_id, self.features_dir)
+            write_batch(joined.where(F.col("reason").isNotNull())
+                        .select("media_id", "path", "claimed_format",
+                                "sniffed_format", "n_bytes", "reason"),
+                        batch_id, self.quarantine_dir)
         finally:
             media.unpersist()
             # release operator-internal scoped caches per batch (r13)
-            from datapump_spark.cachescope import release_scope
             release_scope(media.sparkSession)
 
     def stream(self, checkpoint_dir: str | Path):

@@ -1,5 +1,5 @@
-"""Streaming corpus ingestion: cross-batch dedup against the persisted
-index, quality routing, idempotent replay-by-partition."""
+"""Streaming corpus ingestion: cross-batch dedup against the corpus's
+own fingerprints, quality routing, idempotent replay-by-partition."""
 
 from __future__ import annotations
 
@@ -42,15 +42,23 @@ def ingest(spark, tmp_path):
     return StreamingCorpusIngest(spark, str(inp), str(tmp_path / "out"))
 
 
+def _audit(spark, ing):
+    return sorted((r["__batch_id"], r["n_in"], r["n_low_quality"],
+                   r["n_dup"], r["n_admitted"])
+                  for r in spark.read.parquet(ing.audit_dir).collect())
+
+
 def test_cross_batch_dedup_and_audit(spark, ingest, tmp_path):
     ingest.drain(tmp_path / "cp")
     corpus = spark.read.parquet(ingest.corpus_dir)
     assert sorted(r["doc_id"] for r in corpus.collect()) == [1, 2, 10]
     # content is unique corpus-wide
     assert corpus.select("text").distinct().count() == corpus.count()
-    # index matches corpus content exactly
+    # the corpus is its own index: one distinct fingerprint per doc, and
+    # no separate index store
     fps = spark.read.parquet(ingest.index_dir)
     assert fps.select("fp").distinct().count() == 3
+    assert sorted(os.listdir(tmp_path / "out")) == ["audit", "corpus"]
     audit = {r["__batch_id"]: r for r in
              spark.read.parquet(ingest.audit_dir).collect()}
     assert audit[0]["n_in"] == 3 and audit[0]["n_low_quality"] == 1
@@ -58,28 +66,69 @@ def test_cross_batch_dedup_and_audit(spark, ingest, tmp_path):
     assert audit[1]["n_dup"] == 2 and audit[1]["n_admitted"] == 1
 
 
-@pytest.mark.slow  # replay idempotence is the pytest.ini slow-tier
-# category: the partition-overwrite doctrine is default-gated by the
-# media-ingest twin's feature/quarantine assertions and the merge-sink
-# upsert tests; this adds only the fresh-checkpoint replay walk
-# (r10 rebalance)
 def test_replay_is_idempotent(spark, ingest, tmp_path):
     ingest.drain(tmp_path / "cp")
     before = sorted(map(tuple, spark.read.parquet(ingest.corpus_dir)
                         .select("doc_id", "text").collect()))
+    audit = _audit(spark, ingest)
+    assert audit == [(0, 3, 1, 0, 2), (1, 3, 0, 2, 1)]
     # same checkpoint: nothing new to process
     ingest.drain(tmp_path / "cp")
     after = sorted(map(tuple, spark.read.parquet(ingest.corpus_dir)
                        .select("doc_id", "text").collect()))
     assert before == after
-    # FRESH checkpoint (worst-case replay of every batch): the
-    # partition-overwrite layout absorbs the rerun — no duplicates
+    # FRESH checkpoint (worst-case replay of every batch): each batch
+    # dedups against earlier batches only, so the rerun repeats every
+    # decision and overwrites its own partitions — no duplicates, and the
+    # audit keeps one row per batch with the first run's values
     ingest.drain(tmp_path / "cp2")
     replay = sorted(map(tuple, spark.read.parquet(ingest.corpus_dir)
                         .select("doc_id", "text").collect()))
     assert replay == before
-    audit = spark.read.parquet(ingest.audit_dir)
-    assert audit.count() == 2          # one row per batch, not per run
+    assert _audit(spark, ingest) == audit
+
+
+def test_empty_first_batch_reads_as_empty_store(spark, tmp_path):
+    """A first batch that admits nothing leaves a corpus directory with
+    no parquet files; the next batch dedups against it as an empty
+    store."""
+    inp = tmp_path / "in"
+    inp.mkdir()
+    _write(inp, "b0.json", 1_000_000_000,
+           [_doc(1, "too short"), _doc(2, "also too short")])
+    ingest = StreamingCorpusIngest(spark, str(inp), str(tmp_path / "out"))
+    ingest.drain(tmp_path / "cp")
+    assert os.path.isdir(ingest.corpus_dir)
+    assert not [f for _, _, fs in os.walk(ingest.corpus_dir) for f in fs
+                if f.endswith(".parquet")]
+    # batch 1: a new doc and an in-batch copy of it under a higher id
+    _write(inp, "b1.json", 1_000_001_000,
+           [_doc(10), _doc(11, f"{GOOD} extra10")])
+    ingest.drain(tmp_path / "cp")
+    corpus = spark.read.parquet(ingest.corpus_dir)
+    assert [r["doc_id"] for r in corpus.collect()] == [10]
+    assert _audit(spark, ingest) == [(0, 2, 2, 0, 0), (1, 2, 0, 1, 1)]
+
+
+def test_failed_batch_releases_its_persists(spark, ingest, tmp_path,
+                                             monkeypatch):
+    """A corpus write that raises fails the drain and leaves no persisted
+    frame of the batch behind."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    parquet = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        if path == ingest.corpus_dir:
+            raise RuntimeError("corpus write failed")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    baseline = persistent().size()
+    with pytest.raises(Exception, match="corpus write failed"):
+        ingest.drain(tmp_path / "cp")
+    assert persistent().size() <= baseline
 
 
 @pytest.mark.slow  # every stage is oracle-/unit-gated in-default;

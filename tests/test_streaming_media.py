@@ -146,8 +146,11 @@ def test_stream_replay_is_idempotent(spark, media_dir, tmp_path):
 def test_cross_batch_perceptual_dedup(spark, tmp_path):
     """image_dedup_hamming: a later batch's noisy re-encode of an
     admitted image routes to quarantine as near_dup; distinct images
-    keep flowing; the dHash index holds only admitted images."""
+    keep flowing; only admitted images carry a dHash in the features
+    store, and a fresh-checkpoint replay repeats every routing."""
     import os
+
+    from pyspark.sql import functions as F
 
     d = tmp_path / "in"
     d.mkdir()
@@ -167,13 +170,20 @@ def test_cross_batch_perceptual_dedup(spark, tmp_path):
     ing = StreamingMediaIngest(spark, str(d), str(tmp_path / "out"),
                                max_files_per_trigger=1,
                                image_dedup_hamming=6)
-    ing.drain(tmp_path / "cp")
+    def routed():
+        feats = {r["path"].rsplit("/", 1)[-1] for r in
+                 spark.read.parquet(ing.features_dir).collect()}
+        quar = {r["path"].rsplit("/", 1)[-1]: r["reason"] for r in
+                spark.read.parquet(ing.quarantine_dir).collect()}
+        return feats, quar
 
-    feats = {r["path"].rsplit("/", 1)[-1] for r in
-             spark.read.parquet(ing.features_dir).collect()}
-    quar = {r["path"].rsplit("/", 1)[-1]: r["reason"] for r in
-            spark.read.parquet(ing.quarantine_dir).collect()}
-    assert feats == {"base.png", "fresh.png"}
-    assert quar == {"copy.png": "near_dup"}
-    idx = spark.read.parquet(ing.dhash_index_dir)
+    ing.drain(tmp_path / "cp")
+    assert routed() == ({"base.png", "fresh.png"}, {"copy.png": "near_dup"})
+    idx = spark.read.parquet(ing.features_dir) \
+        .where(F.col("dhash").isNotNull())
     assert idx.count() == 2          # admitted images only
+    assert sorted(os.listdir(tmp_path / "out")) == ["features", "quarantine"]
+    # fresh checkpoint: each batch probes earlier batches only, so the
+    # replay routes every image as the first run did
+    ing.drain(tmp_path / "cp2")
+    assert routed() == ({"base.png", "fresh.png"}, {"copy.png": "near_dup"})
