@@ -25,6 +25,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datapump_spark.functions.sqltext import sql_ident
+
 
 def dupe_count(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Count of rows that share a PK with an earlier row (reference
@@ -59,8 +61,9 @@ def dedupe_by_key(
         raise ValueError(f"keep must be 'first', 'last' or '' — got {keep!r}")
     ord_c = F.col(order_col) if isinstance(order_col, str) else order_col
     pick = F.min_by if keep == "first" else F.max_by
-    row = F.struct(*[F.col(c) for c in df.columns])
-    out = df.groupBy(*[F.col(k) for k in keys]).agg(pick(row, ord_c).alias("__row"))
+    row = F.struct(*[F.col(sql_ident(c)) for c in df.columns])
+    out = df.groupBy(*[F.col(sql_ident(k)) for k in keys]) \
+        .agg(pick(row, ord_c).alias("__row"))
     return out.select("__row.*")
 
 

@@ -10,24 +10,42 @@ the primary key. Percentiles use linear interpolation — Spark's exact
 
 Scale design: all numeric stats for all columns are computed in ONE global
 aggregation (map-side partial aggregates, single-row result — no shuffle of
-data rows, only of partial states). ``unique``/``top``/``freq`` need per-column
-value counts: each is a groupBy on that column alone (shuffle of distinct
-values only) with the modal row picked via ``max_by`` over a (count, value)
-struct — no window over the full data. The row-per-stat pivot happens on the
-single-row aggregate output — driver-side-sized, not data-sized.
+data rows, only of partial states). ``unique``/``top``/``freq`` come from ONE
+``mode.value_counts`` table over all string columns (one scan, one groupBy:
+a shuffle of distinct values only) and one global aggregate over it, each
+column's stats conditional aggregates — no window, no join, no per-column
+pass. The row-per-stat pivot happens on the single-row aggregate output.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from datapump_spark.functions.sqltext import sql_ident
+from datapump_spark.operators.mode import value_counts
+from datapump_spark.operators.resample import numeric_columns
 
 NUMERIC_STATS = ["count", "mean", "std", "min", "25%", "50%", "75%", "max"]
 STRING_STATS = ["count", "unique", "top", "freq"]
 ALL_STATS = ["count", "unique", "top", "freq", "mean", "std", "min",
              "25%", "50%", "75%", "max"]
+
+
+def _long(row: DataFrame, cols: Sequence[str], stats: Sequence[str]) -> DataFrame:
+    """(column, stat, value) rows from a one-row aggregate whose columns
+    are aliased ``{column index}__{stat}``."""
+    structs = [
+        F.struct(F.lit(c).alias("column"), F.lit(s).alias("stat"),
+                 F.col(f"{i}__{s}").alias("value"))
+        for i, c in enumerate(cols)
+        for s in stats
+    ]
+    return row.select(F.explode(F.array(*structs)).alias("kv")).select("kv.*")
 
 
 def describe_numeric(df: DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -36,86 +54,53 @@ def describe_numeric(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     One aggregation pass for every column; stats ordered as NUMERIC_STATS.
     """
     aggs = []
-    for c in cols:
-        aggs += [
-            F.count(F.col(c)).cast("double").alias(f"{c}__count"),
-            F.avg(F.col(c)).alias(f"{c}__mean"),
-            F.stddev_samp(F.col(c)).alias(f"{c}__std"),
-            F.min(F.col(c)).cast("double").alias(f"{c}__min"),
-            F.percentile(F.col(c), F.lit(0.25)).alias(f"{c}__25%"),
-            F.percentile(F.col(c), F.lit(0.5)).alias(f"{c}__50%"),
-            F.percentile(F.col(c), F.lit(0.75)).alias(f"{c}__75%"),
-            F.max(F.col(c)).cast("double").alias(f"{c}__max"),
-        ]
-    row = df.agg(*aggs)
-    structs = [
-        F.struct(
-            F.lit(c).alias("column"),
-            F.lit(s).alias("stat"),
-            F.col(f"{c}__{s}").alias("value"),
-        )
-        for c in cols
-        for s in NUMERIC_STATS
-    ]
-    return row.select(F.explode(F.array(*structs)).alias("kv")).select("kv.*")
+    for i, name in enumerate(cols):
+        c = F.col(sql_ident(name))
+        stats = [F.count(c), F.avg(c), F.stddev_samp(c), F.min(c),
+                 *[F.percentile(c, F.lit(q)) for q in (0.25, 0.5, 0.75)],
+                 F.max(c)]
+        aggs += [e.cast("double").alias(f"{i}__{s}")
+                 for s, e in zip(NUMERIC_STATS, stats)]
+    return _long(df.agg(*aggs), cols, NUMERIC_STATS)
 
 
 def describe_string(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Long-format string describe: (column, stat, value string).
 
-    count / unique are global aggregates; top / freq come from a per-column
-    value-count groupBy with the modal value picked by (count desc, value asc)
-    via ``max_by`` — ties resolve to the smallest value, deterministic.
+    One global aggregate over the value-count table: per column, count =
+    sum of its counts, unique = number of its values, freq = max count,
+    top = the value with the highest count, ties resolved to the smallest
+    value (``min_by`` on (-count, value)) — deterministic. An all-null
+    column has no value counts: unique "0", the rest NULL.
     """
-    out = None
-    for c in cols:
-        counts = (
-            df.where(F.col(c).isNotNull())
-            .groupBy(F.col(c).alias("v"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        # max_by over a struct: highest cnt wins; on cnt ties the *largest*
-        # struct wins, so invert the value ordering by using min_by on
-        # (-cnt, value) — (lowest -cnt = highest cnt, then smallest value).
-        one = counts.agg(
-            F.count(F.lit(1)).cast("string").alias("unique"),
-            F.sum("cnt").cast("string").alias("count"),
-            F.min_by(F.col("v"), F.struct((-F.col("cnt")).alias("n"), F.col("v").alias("v"))).alias("top"),
-            F.max("cnt").cast("string").alias("freq"),
-        ).select(
-            F.explode(
-                F.array(*[
-                    F.struct(F.lit(c).alias("column"), F.lit(s).alias("stat"),
-                             F.col(s).alias("value"))
-                    for s in STRING_STATS
-                ])
-            ).alias("kv")
-        ).select("kv.*")
-        out = one if out is None else out.unionByName(one)
-    return out
+    aggs = []
+    for i in range(len(cols)):
+        mine, v = F.col("__col") == i, F.col(f"_{i}")
+        cnt = F.when(mine, F.col("__cnt"))
+        stats = [F.sum(cnt), F.count(F.when(mine, 1)),
+                 F.min_by(v, F.when(mine, F.struct(-F.col("__cnt"), v))),
+                 F.max(cnt)]
+        aggs += [e.cast("string").alias(f"{i}__{s}")
+                 for s, e in zip(STRING_STATS, stats)]
+    return _long(value_counts(df, cols).agg(*aggs), cols, STRING_STATS)
 
 
-def describe_table(
-    df: DataFrame,
-    numeric_cols: Sequence[str] | None = None,
-    string_cols: Sequence[str] | None = None,
-) -> DataFrame:
+def describe_table(df: DataFrame) -> DataFrame:
     """Reference-shaped wide describe: ``stat`` + one all-string column per
-    input column, rows ordered like pandas describe(include='all')
-    (datapump.py:332-336). Inapplicable cells are NULL (elided at the sink by
-    the sparse-record writer, SURVEY §2.3 F2).
+    numeric or string input column, rows ordered like pandas
+    describe(include='all') (datapump.py:332-336). Inapplicable cells are
+    NULL (elided at the sink by the sparse-record writer, SURVEY §2.3 F2).
+    Other columns (timestamps, …) are left out; a frame with none of
+    either kind raises ``ValueError`` naming its columns and types.
     """
-    from pyspark.sql import types as T
-
-    if numeric_cols is None or string_cols is None:
-        from datapump_spark.operators.resample import numeric_columns
-        nc = numeric_columns(df)
-        numeric_cols = nc if numeric_cols is None else numeric_cols
-        string_cols = (
-            [f.name for f in df.schema.fields
-             if isinstance(f.dataType, T.StringType)]
-            if string_cols is None else string_cols
-        )
+    numeric_cols = numeric_columns(df)
+    string_cols = [f.name for f in df.schema.fields
+                   if isinstance(f.dataType, T.StringType)]
+    if not numeric_cols and not string_cols:
+        got = ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                        for f in df.schema.fields)
+        raise ValueError(f"describe needs a numeric or string column, got: "
+                         f"{got or 'no columns'}")
 
     longs = []
     if numeric_cols:
@@ -125,20 +110,15 @@ def describe_table(
         )
     if string_cols:
         longs.append(describe_string(df, string_cols))
-    long_df = longs[0]
-    for other in longs[1:]:
-        long_df = long_df.unionByName(other)
-
     order = F.lit(list(ALL_STATS))
-    wide = (
-        long_df.groupBy("stat")
+    return (
+        reduce(DataFrame.unionByName, longs).groupBy("stat")
         .pivot("column", [*numeric_cols, *string_cols])
         .agg(F.first("value"))
         .withColumn("__ord", F.array_position(order, F.col("stat")))
         .orderBy("__ord")
         .drop("__ord")
     )
-    return wide
 
 
 def gini_concentration(

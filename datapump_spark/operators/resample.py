@@ -31,6 +31,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from datapump_spark.cachescope import scoped_persist
+from datapump_spark.functions.sqltext import sql_ident
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -150,25 +151,24 @@ def freq_resample(
         value_cols = numeric_columns(df, exclude=[*group_by, ts_col])
     out_ts = bucket_alias or ts_col
 
+    ts = F.col(sql_ident(ts_col))
     if spec_kind == "trunc":
-        bucket = F.date_trunc(spec, F.col(ts_col))
+        bucket = F.date_trunc(spec, ts)
     elif spec_kind == "window":
-        bucket = F.window(F.col(ts_col), spec)["start"]
+        bucket = F.window(ts, spec)["start"]
     elif spec_kind == "months":
         # k-month periods anchored at 1970-01: floor months-since-epoch
-        m = (F.year(ts_col) - F.lit(1970)) * 12 + F.month(ts_col) - 1
+        m = (F.year(ts) - F.lit(1970)) * 12 + F.month(ts) - 1
         p = F.floor(m / spec) * spec
         bucket = F.to_timestamp(
             F.add_months(F.lit("1970-01-01").cast("date"), p))
     else:  # week_anchor: shift so date_trunc('week') lands on the anchor
         delta = F.expr(f"interval {spec} days")
-        bucket = F.date_trunc("week", F.col(ts_col) + delta) - delta
+        bucket = F.date_trunc("week", ts + delta) - delta
 
-    aggs = [F.avg(c).alias(c) for c in value_cols]
-    agg = (
-        df.groupBy(*[F.col(g) for g in group_by], bucket.alias(out_ts))
-        .agg(*aggs)
-    )
+    keys = [F.col(sql_ident(g)) for g in group_by]
+    aggs = [F.avg(F.col(sql_ident(c))).alias(c) for c in value_cols]
+    agg = df.groupBy(*keys, bucket.alias(out_ts)).agg(*aggs)
     if not dense:
         return agg
 
@@ -189,9 +189,10 @@ def freq_resample(
     n, u = step.split(" ", 1)
     ival = F.expr(f"interval {n} {u}")
     spine = (
-        agg.groupBy(*group_by)
-        .agg(F.min(out_ts).alias("__lo"), F.max(out_ts).alias("__hi"))
-        .select(*group_by,
+        agg.groupBy(*keys)
+        .agg(F.min(sql_ident(out_ts)).alias("__lo"),
+             F.max(sql_ident(out_ts)).alias("__hi"))
+        .select(*keys,
                 F.explode(F.sequence("__lo", "__hi", ival)).alias(out_ts))
     )
     return spine.join(agg, on=[*group_by, out_ts], how="left")

@@ -47,6 +47,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datapump_spark.functions.sqltext import sql_ident
+
 # Reference description stamp: '… (UPDATED: 2021-01-01 00:00:00)' appended /
 # rewritten in place (datapump.py:616-630, regex datapump.py:618).
 _UPDATED_RE = re.compile(r" \(UPDATED: (.*?)\)$")
@@ -268,7 +270,8 @@ class ParquetMergeSink:
         self._swap_write(df, table)
 
     def _bucket_expr(self, keys: Sequence[str], n: int):
-        return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n)).cast("int")
+        return F.pmod(F.xxhash64(*[F.col(sql_ident(k)) for k in keys]),
+                      F.lit(n)).cast("int")
 
     def upsert(self, spark: SparkSession, df: DataFrame, table: str,
                keys: Sequence[str]) -> None:
@@ -279,8 +282,9 @@ class ParquetMergeSink:
         keys = list(keys)
 
         def merge(current: DataFrame, batch: DataFrame) -> DataFrame:
-            kept = current.join(batch.select(*keys).distinct(), on=keys,
-                                how="left_anti")
+            kept = current.join(
+                batch.select(*[F.col(sql_ident(k)) for k in keys]).distinct(),
+                on=keys, how="left_anti")
             return kept.unionByName(batch, allowMissingColumns=True)
 
         self._merge_buckets(spark, df, table, keys, merge)

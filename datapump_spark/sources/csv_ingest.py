@@ -30,6 +30,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datapump_spark.functions.sqltext import sql_ident
+
 # Reference defaults (datapump.py:89-92), strptime → Spark DateTimeFormatter.
 # Order preserved: 2-digit-year formats are tried first, like the reference.
 DEFAULT_DATE_FORMATS = [
@@ -88,7 +90,7 @@ def multi_format_ts(col: str | Column, formats: Sequence[str] = DEFAULT_DATE_FOR
     (expensive), while a regex miss is a cheap scan — on non-matching
     strings (numeric or text columns probed during inference, and every
     format before the one that fits) the guard is ~3× faster."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col(sql_ident(col)) if isinstance(col, str) else col
     tries = []
     for f in formats:
         rx = _shape_regex(f)
@@ -142,8 +144,8 @@ def infer_ckan_fields(
     else:
         df = raw
     aggs = []
-    for c in raw.columns:
-        col = F.col(c)
+    for i, c in enumerate(raw.columns):
+        col = F.col(sql_ident(c))
         nn = col.isNotNull()
         # A double-castable string can never match a timestamp format (every
         # format has space-separated time parts), so count it as a ts-parse
@@ -157,27 +159,27 @@ def infer_ckan_fields(
         # overflow, which try_cast itself still catches.
         int_shape = col.rlike(r"^\s*[+-]?\d+\s*$")
         aggs += [
-            F.sum(F.when(nn, 1).otherwise(0)).alias(f"{c}__nn"),
+            F.sum(F.when(nn, 1).otherwise(0)).alias(f"{i}__nn"),
             F.sum(F.when(nn & (~int_shape | col.try_cast("bigint").isNull()),
-                         1).otherwise(0)).alias(f"{c}__badint"),
-            F.sum(F.when(nn & col.try_cast("double").isNull(), 1).otherwise(0)).alias(f"{c}__badfloat"),
+                         1).otherwise(0)).alias(f"{i}__badint"),
+            F.sum(F.when(nn & col.try_cast("double").isNull(), 1).otherwise(0)).alias(f"{i}__badfloat"),
             F.sum(
                 F.when(nn & col.try_cast("double").isNotNull(), 1)
                  .when(nn & multi_format_ts(col, ts_formats).isNull(), 1)
                  .otherwise(0)
-            ).alias(f"{c}__badts"),
+            ).alias(f"{i}__badts"),
         ]
     row = df.agg(*aggs).collect()[0].asDict()
     fields = []
-    for c in raw.columns:
-        nn = row[f"{c}__nn"] or 0
+    for i, c in enumerate(raw.columns):
+        nn = row[f"{i}__nn"] or 0
         if nn == 0:
             fields.append(InferredField(c, "text"))
-        elif row[f"{c}__badint"] == 0:
+        elif row[f"{i}__badint"] == 0:
             fields.append(InferredField(c, "int"))
-        elif row[f"{c}__badfloat"] == 0:
+        elif row[f"{i}__badfloat"] == 0:
             fields.append(InferredField(c, "float"))
-        elif row[f"{c}__badts"] == 0:
+        elif row[f"{i}__badts"] == 0:
             fields.append(InferredField(c, "timestamp"))
         else:
             fields.append(InferredField(c, "text"))
@@ -209,11 +211,13 @@ def project_typed(
     """
     cols = []
     for f in fields:
+        c = F.col(sql_ident(f.name))
         if f.ckan_type == "timestamp":
-            cols.append(multi_format_ts(f.name, ts_formats).alias(f.name))
+            cols.append(multi_format_ts(c, ts_formats).alias(f.name))
         elif f.ckan_type == "text":
-            cols.append(F.col(f.name))
+            cols.append(c)
         else:
-            cols.append(F.col(f.name).try_cast(f.spark_type).alias(f.name))
+            cols.append(c.try_cast(f.spark_type).alias(f.name))
     names = {f.name for f in fields}
-    return df.select(*cols, *[c for c in df.columns if c not in names])
+    return df.select(*cols, *[F.col(sql_ident(c)) for c in df.columns
+                              if c not in names])

@@ -36,6 +36,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datapump_spark.functions.sqltext import sql_ident
 from datapump_spark.jobspec import JobSpec, StatSpec
 from datapump_spark.operators.dedupe import dedupe_by_key, with_file_order
 from datapump_spark.operators.describe import describe_table
@@ -100,7 +101,8 @@ class Pipeline:
         # rows and distinct PK groups from one aggregation over per-key
         # counts (a null key is one group, like pandas' duplicated)
         n_rows, n_keys = (
-            typed.groupBy(*pk).agg(F.count(F.lit(1)).alias("cnt"))
+            typed.groupBy(*[F.col(sql_ident(k)) for k in pk])
+            .agg(F.count(F.lit(1)).alias("cnt"))
             .agg(F.sum("cnt"), F.count(F.lit(1))).first())
         n_rows = n_rows or 0
         if self.job.dedupe:

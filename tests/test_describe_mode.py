@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 import pandas as pd
 import pytest
@@ -107,3 +108,98 @@ def test_gini_concentration(spark):
     # invariance to input layout
     r3 = gini_concentration(skewed.repartition(5), "g", "w").collect()[0]
     assert r3["gini"] == r2["gini"]
+
+
+def test_stats_operators_accept_odd_column_names(spark):
+    """Caller names reach Spark only as quoted identifiers: every stats
+    operator gives the same answer over ``a.b`` / ``a`b Join`` / ``t.s``
+    as over plain names."""
+    from datapump_spark.operators.resample import freq_resample
+
+    rows = [(1.0, "x", "2021-10-01 00:10:00"), (2.0, "y", "2021-10-01 00:20:00"),
+            (2.0, "x", "2021-10-01 01:00:00"), (None, None, "2021-10-01 01:30:00")]
+    plain = spark.createDataFrame(rows, "v double, s string, ts string") \
+        .selectExpr("v", "s", "cast(ts as timestamp) AS ts")
+    odd = plain.toDF("a.b", "a`b Join", "t.s")
+
+    def same(got, want):
+        assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))
+
+    names = {"v": "a.b", "s": "a`b Join"}
+    same(describe_numeric(odd, ["a.b"]).replace(names, subset=["column"]),
+         describe_numeric(plain, ["v"]).replace(names, subset=["column"]))
+    same(describe_string(odd, ["a`b Join"]),
+         describe_string(plain, ["s"]).replace(names, subset=["column"]))
+    wide = describe_table(odd)
+    assert wide.columns == ["stat", "a.b", "a`b Join"]
+    same(wide, describe_table(plain))
+    modes = column_modes(odd, ["a.b", "a`b Join"])
+    assert modes.columns == ["stat", "a.b", "a`b Join"]
+    same(modes, column_modes(plain, ["v", "s"]))
+    hourly = freq_resample(odd, ["a`b Join"], "t.s", "H", value_cols=["a.b"])
+    assert hourly.columns == ["a`b Join", "t.s", "a.b"]
+    same(hourly, freq_resample(plain, ["s"], "ts", "H", value_cols=["v"]))
+
+
+def test_describe_table_without_describable_columns_names_them(spark):
+    """A frame left with only a timestamp (e.g. DropColumns kept just
+    DateTime) fails with the columns and their types, not an IndexError."""
+    only_ts = spark.createDataFrame([(1,)], "k int").selectExpr(
+        "current_timestamp() AS DateTime")
+    with pytest.raises(ValueError, match=r"numeric or string.*DateTime timestamp"):
+        describe_table(only_ts)
+
+
+def test_describe_string_two_columns_one_all_null_matches_pandas(spark):
+    rows = [("b", None), ("a", None), ("c", None), ("a", None), ("b", None),
+            ("a", None)]
+    df = spark.createDataFrame(rows, "s string, n string")
+    pdf = pd.DataFrame(rows, columns=["s", "n"], dtype=object)
+    got = {(r["column"], r["stat"]): r["value"]
+           for r in describe_string(df, ["s", "n"]).collect()}
+    assert len(got) == 8
+    desc = pdf["s"].describe()
+    assert got["s", "count"] == str(desc["count"])
+    assert got["s", "unique"] == str(desc["unique"])
+    assert got["s", "top"] == desc["top"] == "a"
+    assert got["s", "freq"] == str(desc["freq"])
+    desc_n = pdf["n"].describe()
+    assert got["n", "unique"] == str(desc_n["unique"]) == "0"
+    assert pd.isna(desc_n["top"]) and got["n", "top"] is None
+    assert pd.isna(desc_n["freq"]) and got["n", "freq"] is None
+    # the sum over no value counts is NULL (pandas says 0; the SQL oracle
+    # of q_describe_string agrees with NULL)
+    assert got["n", "count"] is None
+
+
+def test_mode_all_null_column_next_to_three_way_tie(spark):
+    rows = [(None, 3, 1.5, "q"), (None, 1, 1.5, "q"), (None, 2, 0.5, "r"),
+            (None, 3, None, "q"), (None, 2, 1.5, None), (None, 1, 0.5, "r")]
+    df = spark.createDataFrame(rows, "n string, t int, d double, s string")
+    got = column_modes(df, df.columns).toPandas()
+    assert list(got.columns) == ["stat", "n", "t", "d", "s"]
+    assert list(got["stat"]) == [0, 1, 2]
+    expected = pd.DataFrame(rows, columns=["n", "t", "d", "s"]).mode()
+    assert got["n"].isna().all() and expected["n"].isna().all()
+    assert list(got["t"]) == list(expected["t"]) == [1, 2, 3]
+    assert list(got["d"].dropna()) == list(expected["d"].dropna()) == [1.5]
+    assert list(got["s"].dropna()) == list(expected["s"].dropna()) == ["q"]
+
+
+def test_mode_plan_shape_does_not_grow_with_columns(spark, tmp_path):
+    """One scan and a fixed number of exchanges, however many columns
+    (operators counted as ``scripts/run_queries.py plan`` counts them)."""
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1, "a", 1.0, 2), (2, "b", 1.0, 2)],
+                          "a int, b string, c double, d int").write.parquet(path)
+    df = spark.read.parquet(path)
+
+    def plan(cols):
+        return column_modes(df, cols)._jdf.queryExecution() \
+            .executedPlan().toString()
+
+    one, four = plan(["a"]), plan(["a", "b", "c", "d"])
+    assert one.count("FileScan") == four.count("FileScan") == 1
+    assert one.count("Exchange") == four.count("Exchange")
+    for op in ("BroadcastHashJoin", "SortMergeJoin", "BroadcastNestedLoopJoin"):
+        assert op not in four

@@ -109,6 +109,52 @@ def test_audit_counts_match_pandas(spark, tmp_path, keep):
     assert row["dupes"] == expected.duplicated(subset=job.primary_key).sum() == 3
 
 
+HOSTILE_HEADER = "DateTime,Sensor.id,PM2.5,a`b Join\n"
+
+
+def test_hostile_header_drain(spark, tmp_path):
+    """Headers with a dot, a backtick and a space reach Spark only as
+    quoted identifiers on the whole path: load, dedupe, MERGE and the
+    descriptive, mode and hourly stats."""
+    import os
+
+    inbox = tmp_path / "input"
+    inbox.mkdir()
+    (inbox / "a.csv").write_text(
+        HOSTILE_HEADER + "2021-10-01 00:00:00,S1,1.0,x\n"
+        "2021-10-01 00:30:00,S1,2.0,y\n2021-10-01 00:00:00,S2,3.0,x\n")
+    (inbox / "b.csv").write_text(
+        HOSTILE_HEADER + "2021-10-01 00:00:00,S1,9.0,z\n"
+        "2021-10-01 01:00:00,S2,4.0,x\n")
+    os.utime(inbox / "a.csv", (1, 1))
+    os.utime(inbox / "b.csv", (2, 2))
+    env = {"inbox": inbox, "sink": ParquetMergeSink(tmp_path / "lake"),
+           "processed": tmp_path / "processed",
+           "problems": tmp_path / "problems"}
+    pipe, job = make_pipeline(
+        spark, env, PrimaryKey="DateTime,Sensor.id",
+        Stats=[{"Kind": "descriptive"}, {"Kind": "mode"},
+               {"Kind": "H", "GroupBy": "Sensor.id"}])
+    result = pipe.run_available()
+    assert len(result.processed) == 2 and not result.quarantined
+
+    sink = env["sink"]
+    data = {(r[0].strftime("%H:%M"), r[1]): (r[2], r[3])
+            for r in sink.read(spark, "air-quality").collect()}
+    assert data == {("00:00", "S1"): (9.0, "z"), ("00:30", "S1"): (2.0, "y"),
+                    ("00:00", "S2"): (3.0, "x"), ("01:00", "S2"): (4.0, "x")}
+    stats = sink.read(spark, "air-quality-stats")
+    assert set(stats.columns) == {"stat", "Sensor.id", "PM2.5", "a`b Join"}
+    assert stats.count() == 11
+    modes = sink.read(spark, "air-quality-mode")
+    assert modes.columns == ["stat", "DateTime", "Sensor.id", "PM2.5", "a`b Join"]
+    hourly = sink.read(spark, "air-quality-H")
+    assert sorted((r[0], r[1].hour, r[2]) for r in hourly.collect()) == [
+        ("S1", 0, 5.5), ("S2", 0, 3.0), ("S2", 1, 4.0)]
+    audit = sink.read(spark, AUDIT_TABLE)
+    assert audit.where("ok AND error IS NULL").count() == 2
+
+
 @pytest.mark.slow
 def test_idempotent_rerun(spark, env):
     pipe, job = make_pipeline(spark, env)
