@@ -71,13 +71,14 @@ def describe_string(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     sum of its counts, unique = number of its values, freq = max count,
     top = the value with the highest count, ties resolved to the smallest
     value (``min_by`` on (-count, value)) — deterministic. An all-null
-    column has no value counts: unique "0", the rest NULL.
+    column has no value counts: count and unique "0" (as pandas reports),
+    top and freq NULL.
     """
     aggs = []
     for i in range(len(cols)):
         mine, v = F.col("__col") == i, F.col(f"_{i}")
         cnt = F.when(mine, F.col("__cnt"))
-        stats = [F.sum(cnt), F.count(F.when(mine, 1)),
+        stats = [F.coalesce(F.sum(cnt), F.lit(0)), F.count(F.when(mine, 1)),
                  F.min_by(v, F.when(mine, F.struct(-F.col("__cnt"), v))),
                  F.max(cnt)]
         aggs += [e.cast("string").alias(f"{i}__{s}")

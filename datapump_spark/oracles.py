@@ -163,7 +163,7 @@ WITH counts AS (
   WHERE event_type IS NOT NULL GROUP BY 1
 )
 SELECT 'event_type' AS "column", s.stat, s.value FROM (
-            SELECT 'count' AS stat, CAST(sum(cnt) AS VARCHAR) AS value FROM counts
+            SELECT 'count' AS stat, CAST(coalesce(sum(cnt), 0) AS VARCHAR) AS value FROM counts
   UNION ALL SELECT 'unique', CAST(count(*) AS VARCHAR) FROM counts
   UNION ALL SELECT 'top', (SELECT v FROM counts ORDER BY cnt DESC, v ASC LIMIT 1)
   UNION ALL SELECT 'freq', CAST(max(cnt) AS VARCHAR) FROM counts

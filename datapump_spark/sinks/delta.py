@@ -34,7 +34,8 @@ read(version=…)       SELECT * FROM … VERSION AS OF n
 versions()            DESCRIBE HISTORY …
 compact()             OPTIMIZE … [ZORDER BY (…)]
 vacuum()              VACUUM … RETAIN n HOURS
-truncate()            DELETE FROM …
+replace()             DELETE FROM … then MERGE INTO … (truncate_sql +
+                      upsert_sql: two Delta commits, one publish here)
 set_properties()      ALTER TABLE … SET TBLPROPERTIES (…)
 stamp_updated()       ALTER TABLE … SET TBLPROPERTIES ('updated_at'=…)
 ====================  =====================================================

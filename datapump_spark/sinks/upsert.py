@@ -227,9 +227,14 @@ class ParquetMergeSink:
             "total_mb": round(total_mb, 3),
         }
 
-    def truncate(self, table: str) -> None:
-        """K3 (datastore_delete-on-Truncate, datapump.py:545-555)."""
-        shutil.rmtree(self.path(table), ignore_errors=True)
+    def replace(self, spark: SparkSession, df: DataFrame, table: str,
+                keys: Sequence[str]) -> None:
+        """K3 truncate + K2 upsert (datastore_delete-on-Truncate, then
+        upsert, datapump.py:545-566) in one publish: ``df`` becomes the
+        table's only rows, in the bucketed layout. The old version stays
+        live until the new one is published, so a batch that fails to
+        read leaves the table as it was."""
+        self._merge_buckets(spark, df, table, list(keys), None)
 
     # ---------------------------------------------------------- metadata (K1/K4)
 
@@ -315,29 +320,35 @@ class ParquetMergeSink:
         keys, seq_cols = list(keys), list(seq_cols)
         payload = [c for c in changes.columns
                    if c not in set(keys) | set(seq_cols) | {op_col}]
-        seq_struct = F.struct(*[F.col(c) for c in seq_cols])
+
+        def cols(names: Sequence[str]) -> list:
+            return [F.col(sql_ident(c)) for c in names]
+
+        seq_struct = F.struct(*cols(seq_cols))
         winners = (
-            changes.groupBy(*keys)
+            changes.groupBy(*cols(keys))
             .agg(F.max_by(
-                F.struct(*[F.col(c) for c in seq_cols + payload],
-                         (F.col(op_col) == delete_op).alias(TOMBSTONE_COL)),
+                F.struct(*cols(seq_cols + payload),
+                         (F.col(sql_ident(op_col)) == delete_op)
+                         .alias(TOMBSTONE_COL)),
                 seq_struct).alias("__w"))
-            .select(*keys,
-                    *[F.col(f"__w.{c}").alias(c) for c in seq_cols + payload],
-                    F.col(f"__w.{TOMBSTONE_COL}").alias(TOMBSTONE_COL))
+            .select(*cols(keys),
+                    *[F.col("__w").getField(c).alias(c)
+                      for c in seq_cols + payload],
+                    F.col("__w").getField(TOMBSTONE_COL).alias(TOMBSTONE_COL))
         )
 
         def merge(current: DataFrame, batch: DataFrame) -> DataFrame:
             # stored row survives unless a batch winner with seq >= its
             # own exists for the key
-            w_seq = batch.select(*keys, seq_struct.alias("__wseq"))
+            w_seq = batch.select(*cols(keys), seq_struct.alias("__wseq"))
             kept = (
                 current.join(F.broadcast(w_seq), on=keys, how="left")
                 .where(F.col("__wseq").isNull()
                        | (F.col("__wseq") < seq_struct))
                 .drop("__wseq")
             )
-            c_seq = current.select(*keys, seq_struct.alias("__cseq"))
+            c_seq = current.select(*cols(keys), seq_struct.alias("__cseq"))
             incoming = (
                 batch.join(F.broadcast(c_seq), on=keys, how="left")
                 .where(F.col("__cseq").isNull()
@@ -350,11 +361,13 @@ class ParquetMergeSink:
 
     def _merge_buckets(self, spark: SparkSession, df: DataFrame, table: str,
                        keys: list[str],
-                       merge: Callable[[DataFrame, DataFrame], DataFrame],
+                       merge: Callable[[DataFrame, DataFrame], DataFrame]
+                       | None,
                        ) -> None:
         """The one MERGE write path. ``merge(current, batch)`` receives
         the stored rows of the buckets the batch touches and the batch,
-        both carrying ``pk_bucket``, and returns those buckets' new rows.
+        both carrying ``pk_bucket``, and returns those buckets' new rows;
+        ``merge=None`` ignores the stored rows (:meth:`replace`).
 
         Bounded cost: the table is partitioned by ``pk_bucket =
         pmod(xxhash64(pk), n_buckets)``; only buckets containing batch keys
@@ -365,7 +378,8 @@ class ParquetMergeSink:
         rewrite per batch. A first write is the batch alone; a table last
         written by :meth:`overwrite` migrates once, every row moved into
         its bucket."""
-        props = self.get_properties(table)
+        # a replace drops the old layout along with the old rows
+        props = self.get_properties(table) if merge is not None else {}
         n = int(props.get("bucket_count", self.n_buckets))
         stored_keys = props.get("bucket_keys")
         if stored_keys is not None and list(stored_keys) != keys:
@@ -375,7 +389,7 @@ class ParquetMergeSink:
 
         cur_dir = self.current_version(table)
         affected = None
-        if cur_dir is None:
+        if cur_dir is None or merge is None:
             merged = bdf
         elif not any(cur_dir.glob(f"{BUCKET_COL}=*")):
             current = self.read(spark, table)

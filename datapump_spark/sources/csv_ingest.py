@@ -15,11 +15,19 @@ Reference behaviors ported:
   improvement over pandas' int→float null promotion, SURVEY §1.2).
 
 Scale: inference is a single global aggregate with partial (map-side) states.
-``ingest_csv`` infers on a LIMIT sample by default
-(``DEFAULT_INFER_SAMPLE_ROWS``) and declares the schema for the full scan, so
-ingestion costs one bounded scan + one full scan at any input size; pass
-``sample_rows=None`` to force exhaustive inference (the oracle-checked
-``q_type_infer`` does). The parse itself never leaves the JVM.
+``ingest_csv`` infers on a sample by default (``DEFAULT_INFER_SAMPLE_ROWS``):
+the first ``ceil(sample_rows / splits)`` rows of every split of the scan
+(Catalyst's per-partition ``LocalLimit``), so the type probes run on
+O(sample_rows) rows spread over every split's task, each task stops reading
+its split at the bound, and nothing is shuffled: inference is one job. The
+bound is per split, not global: an input is inferred from every row only
+when no split holds more than ``ceil(sample_rows / splits)`` rows (any
+single-split file of at most ``sample_rows`` rows). A multi-file glob with
+uneven files can leave rows of its larger files unchecked even when the
+whole input is under ``sample_rows``. The schema is then declared for the
+full scan; pass ``sample_rows=None`` to force exhaustive inference (the
+oracle-checked ``q_type_infer`` does). The parse itself never leaves the
+JVM.
 """
 
 from __future__ import annotations
@@ -109,6 +117,21 @@ def read_csv_raw(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.options(**CSV_OPTIONS).csv(path)
 
 
+def _split_heads(df: DataFrame, n: int) -> DataFrame:
+    """The first ``n`` rows of every partition of ``df``: Catalyst's
+    ``LocalLimit``, which PySpark does not expose on its own (``limit``
+    pairs it with a global limit that gathers the rows into one task).
+    Each task stops reading its split after ``n`` rows."""
+    jvm, jdf = df.sparkSession._jvm, df._jdf
+    bound = jvm.org.apache.spark.sql.catalyst.expressions.Literal(
+        n, jvm.org.apache.spark.sql.types.DataTypes.IntegerType)
+    plan = jvm.org.apache.spark.sql.catalyst.plans.logical.LocalLimit(
+        bound, jdf.logicalPlan())
+    return DataFrame(
+        jvm.org.apache.spark.sql.classic.Dataset.ofRows(jdf.sparkSession(), plan),
+        df.sparkSession)
+
+
 @dataclass(frozen=True)
 class InferredField:
     name: str
@@ -134,13 +157,19 @@ def infer_ckan_fields(
     numeric inference followed by the reference's datetime sniff on object
     columns (datapump.py:153-166). All-null columns degrade to text
     (pandas object → text).
+
+    ``raw`` is a file scan (:func:`read_csv_raw`). With ``sample_rows``
+    only the first ``ceil(sample_rows / splits)`` rows of each split are
+    checked, so a value past that bound in its split cannot change the
+    verdict; ``None`` checks every row.
     """
     if sample_rows:
-        # limit() funnels the sample into ONE task; the parse-heavy aggs
-        # below would then run single-threaded. A 100k-row shuffle is noise
-        # next to millions of strptime attempts, so spread it back out.
-        df = raw.limit(sample_rows).repartition(
-            raw.sparkSession.sparkContext.defaultParallelism)
+        # The first ceil(sample_rows / splits) rows of every split, in the
+        # same job as the aggregate and with no shuffle: limit() would add a
+        # global limit that funnels the sample into one task. The split
+        # count only plans the scan; it runs no job.
+        splits = max(1, raw._jdf.rdd().getNumPartitions())
+        df = _split_heads(raw, -(-sample_rows // splits))
     else:
         df = raw
     aggs = []

@@ -4,7 +4,8 @@ Structured Streaming (SURVEY §3, §7 Phase 2).
 Per job (datapump.py:419-675):
   file source (glob) → typed ingestion (multi-format ts, inferred schema) →
   per-file dedupe by PK (keep first/last in file row order) →
-  foreachBatch: [truncate] → MERGE upsert by PK → audit append →
+  foreachBatch: MERGE upsert by PK (a Truncate job's first file replaces
+  the table in the same publish) → audit append →
   stats recompute ({resource}-stats/-mode/-{kind} tables) →
   archive to processed/ | quarantine to problems/.
 
@@ -30,10 +31,11 @@ from __future__ import annotations
 
 import shutil
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from datapump_spark.functions.sqltext import sql_ident
@@ -90,24 +92,39 @@ class Pipeline:
 
     # ------------------------------------------------------------ ingestion
 
-    def _load_file(self, path: Path) -> tuple[DataFrame, int, int]:
+    def _load_file(self, path: Path) -> tuple[DataFrame,
+                                              Callable[[], tuple[int, int]]]:
         """Read + type + dedupe ONE queue file (the reference's per-file
-        loop, datapump.py:427-456). Returns (df, n_rows, n_dupes)."""
+        loop, datapump.py:427-456). Returns the frame and a thunk giving
+        (n_rows, n_dupes). With a ``Dedupe`` the counts are observed on
+        the first action over the frame (the sink's merge), so call the
+        thunk only after that action has run."""
         raw = read_csv_raw(self.spark, str(path))
         fields = infer_ckan_fields(raw, self.date_formats,
                                    DEFAULT_INFER_SAMPLE_ROWS)
         typed = project_typed(with_file_order(raw), fields, self.date_formats)
         pk = self.job.primary_key
-        # rows and distinct PK groups from one aggregation over per-key
-        # counts (a null key is one group, like pandas' duplicated)
-        n_rows, n_keys = (
-            typed.groupBy(*[F.col(sql_ident(k)) for k in pk])
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .agg(F.sum("cnt"), F.count(F.lit(1))).first())
-        n_rows = n_rows or 0
-        if self.job.dedupe:
-            typed = dedupe_by_key(typed, pk, "__file_order", self.job.dedupe)
-        return typed.drop("__file_order"), n_rows, n_rows - n_keys
+        if not self.job.dedupe:
+            # rows and distinct PK groups from one aggregation over per-key
+            # counts (a null key is one group, like pandas' duplicated)
+            n_rows, n_keys = (
+                typed.groupBy(*[F.col(sql_ident(k)) for k in pk])
+                .agg(F.count(F.lit(1)).alias("cnt"))
+                .agg(F.sum("cnt"), F.count(F.lit(1))).first())
+            n_rows = n_rows or 0
+            return typed.drop("__file_order"), lambda: (n_rows, n_rows - n_keys)
+        # rows before the dedupe and rows after it (one per PK group, a
+        # null key included) are observed on the first action, no own job
+        before, after = Observation(), Observation()
+        typed = dedupe_by_key(typed.observe(before, F.count(F.lit(1)).alias("n")),
+                              pk, "__file_order", self.job.dedupe)
+        typed = typed.observe(after, F.count(F.lit(1)).alias("n"))
+
+        def counts() -> tuple[int, int]:
+            n_rows = before.get["n"]
+            return n_rows, n_rows - after.get["n"]
+
+        return typed.drop("__file_order"), counts
 
     # ------------------------------------------------------------ stats (Entry 3)
 
@@ -136,12 +153,19 @@ class Pipeline:
 
     def _audit(self, file: str, started: float, n_rows: int, n_dupes: int,
                ok: bool, error: str | None = None) -> None:
-        row = self.spark.createDataFrame(
-            [(self.job.qualified_name, file, n_rows, n_dupes,
-              round(time.perf_counter() - started, 3), ok, error)],
-            "job string, file string, processed bigint, dupes bigint, "
-            "elapsed_sec double, ok boolean, error string",
-        ).withColumn("at", F.current_timestamp())
+        # literals over range(1): one JVM-side row, no Python worker
+        # decoding a parallelized local list
+        values = [(self.job.qualified_name, "string", "job"),
+                  (file, "string", "file"),
+                  (n_rows, "bigint", "processed"),
+                  (n_dupes, "bigint", "dupes"),
+                  (round(time.perf_counter() - started, 3), "double",
+                   "elapsed_sec"),
+                  (ok, "boolean", "ok"),
+                  (error, "string", "error")]
+        row = self.spark.range(1).select(
+            *[F.lit(v).cast(t).alias(c) for v, t, c in values],
+            F.current_timestamp().alias("at"))
         # append-only: O(1) parquet files added per event, O(N) total for N
         # files processed (the audit table is never read-union-rewritten)
         self.sink.append(row, AUDIT_TABLE)
@@ -170,12 +194,15 @@ class Pipeline:
         for path in self.queue_files():
             started = time.perf_counter()
             try:
-                df, n_rows, n_dupes = self._load_file(path)
+                df, counts = self._load_file(path)
                 if self.job.truncate and not truncated:
-                    self.sink.truncate(self.job.target_resource)
+                    self.sink.replace(self.spark, df, self.job.target_resource,
+                                      self.job.primary_key)
                     truncated = True
-                self.sink.upsert(self.spark, df, self.job.target_resource,
-                                 self.job.primary_key)
+                else:
+                    self.sink.upsert(self.spark, df, self.job.target_resource,
+                                     self.job.primary_key)
+                n_rows, n_dupes = counts()
                 # K4 metadata stamp + K1 alias (datapump.py:616-630,224-225).
                 # Non-fatal like stats: the data already committed, so a
                 # metadata failure must not quarantine the file or

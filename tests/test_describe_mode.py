@@ -167,9 +167,7 @@ def test_describe_string_two_columns_one_all_null_matches_pandas(spark):
     assert got["n", "unique"] == str(desc_n["unique"]) == "0"
     assert pd.isna(desc_n["top"]) and got["n", "top"] is None
     assert pd.isna(desc_n["freq"]) and got["n", "freq"] is None
-    # the sum over no value counts is NULL (pandas says 0; the SQL oracle
-    # of q_describe_string agrees with NULL)
-    assert got["n", "count"] is None
+    assert got["n", "count"] == str(desc_n["count"]) == "0"
 
 
 def test_mode_all_null_column_next_to_three_way_tie(spark):

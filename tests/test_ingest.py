@@ -74,3 +74,68 @@ def test_sampled_inference_matches_full_on_fixture(spark):
 
     raw = read_csv_raw(spark, IOT_GLOB)
     assert infer_ckan_fields(raw, sample_rows=200) == infer_ckan_fields(raw)
+
+
+@pytest.fixture()
+def small_splits(spark):
+    """Split every file scan into ~4 KB byte ranges for the test."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    yield
+    spark.conf.set(key, old)
+
+
+def _multi_split_csv(tmp_path, text_row=None):
+    """An int, a float, a timestamp and a text column over 3,000 rows;
+    with ``text_row`` the int column holds 'oops' in that row."""
+    rows = [f"{i if i != text_row else 'oops'},{i / 4},"
+            f"2021-10-01 {i % 24:02d}:00:00,t{i % 7}" for i in range(3000)]
+    p = tmp_path / "multi.csv"
+    p.write_text("n,x,ts,s\n" + "\n".join(rows) + "\n")
+    return str(p)
+
+
+def test_sampled_inference_matches_full_on_multi_split_file(spark, tmp_path,
+                                                            small_splits):
+    raw = read_csv_raw(spark, _multi_split_csv(tmp_path))
+    assert raw._jdf.rdd().getNumPartitions() > 1
+    sampled = infer_ckan_fields(raw, sample_rows=200)
+    assert sampled == infer_ckan_fields(raw)
+    assert [f.ckan_type for f in sampled] == ["int", "float", "timestamp",
+                                              "text"]
+
+
+def test_sampled_inference_bounds_every_split(spark, tmp_path, small_splits):
+    """sample_rows=10 checks the first ceil(10 / splits) rows of each
+    split: a text value past that bound in its split leaves the column
+    int, while exhaustive inference sees it."""
+    from pyspark.sql import functions as F
+
+    raw = read_csv_raw(spark, _multi_split_csv(tmp_path, text_row=1500))
+    splits = raw._jdf.rdd().getNumPartitions()
+    assert splits > 1
+    (index,) = (raw.select(F.monotonically_increasing_id()
+                           .bitwiseAND(F.lit((1 << 33) - 1)).alias("i"), "n")
+                .where(F.col("n") == "oops").select("i").first())
+    assert index >= -(-10 // splits)
+    assert infer_ckan_fields(raw, sample_rows=10)[0].ckan_type == "int"
+    assert infer_ckan_fields(raw, sample_rows=None)[0].ckan_type == "text"
+
+
+def test_sampled_inference_bound_is_per_split_on_uneven_glob(spark, tmp_path,
+                                                             small_splits):
+    """The sample bound is per split, not global: over a glob of a
+    10-row and a 190-row file (200 rows, each file its own split),
+    sample_rows=200 checks the first 100 rows of each file, so a text
+    value in row 150 of the larger file leaves the column int while
+    exhaustive inference sees it."""
+    (tmp_path / "a.csv").write_text(
+        "n\n" + "".join(f"{i}\n" for i in range(10)))
+    (tmp_path / "b.csv").write_text("n\n" + "".join(
+        f"{'oops' if i == 150 else i}\n" for i in range(190)))
+    raw = read_csv_raw(spark, str(tmp_path / "*.csv"))
+    assert raw._jdf.rdd().getNumPartitions() == 2
+    assert infer_ckan_fields(raw, sample_rows=200)[0].ckan_type == "int"
+    assert infer_ckan_fields(raw, sample_rows=None)[0].ckan_type == "text"
+    assert infer_ckan_fields(raw, sample_rows=400)[0].ckan_type == "text"

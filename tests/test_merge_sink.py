@@ -119,6 +119,23 @@ def test_key_mismatch_raises(spark, sink):
         sink.upsert(spark, df, "t", ["v"])
 
 
+def test_replace_takes_new_keys_and_bucket_count(spark, tmp_path):
+    """replace() drops the old rows and the old layout: the table is then
+    bucketed by the replacing keys, and upserts by those keys work."""
+    old = ParquetMergeSink(tmp_path / "lake", n_buckets=8)
+    old.upsert(spark, spark.createDataFrame([(1, "a"), (2, "b")],
+                                            "k long, v string"), "t", ["k"])
+    sink = ParquetMergeSink(tmp_path / "lake", n_buckets=4)
+    sink.replace(spark, spark.createDataFrame([(3, "c")], "k long, v string"),
+                 "t", ["v"])
+    assert sink.get_properties("t")["bucket_keys"] == ["v"]
+    assert sink.get_properties("t")["bucket_count"] == 4
+    sink.upsert(spark, spark.createDataFrame([(4, "c"), (5, "d")],
+                                             "k long, v string"), "t", ["v"])
+    assert {r.k: r.v for r in sink.read(spark, "t").collect()} == {
+        4: "c", 5: "d"}
+
+
 def test_compact_append_table(spark, sink):
     # 6 appends × 4 partitions = many small files
     for i in range(6):
