@@ -6,7 +6,9 @@ Per job (datapump.py:419-675):
   per-file dedupe by PK (keep first/last in file row order) →
   foreachBatch: MERGE upsert by PK (a Truncate job's first file replaces
   the table in the same publish) → audit append →
-  stats recompute ({resource}-stats/-mode/-{kind} tables) →
+  stats recompute ({resource}-stats/-mode/-{kind} tables, written
+  concurrently; the last stat of a table name wins; a failing stat is
+  audited after the others are written) →
   archive to processed/ | quarantine to problems/.
 
 Streaming mapping (SURVEY §2.10):
@@ -22,8 +24,10 @@ Streaming mapping (SURVEY §2.10):
 
 Scale: dedupe and MERGE shuffle on the same PK hash — one exchange layout
 reused; stats recompute reads the sink table back (columnar, pruned) instead
-of re-shipping the batch; ``maxFilesPerTrigger`` bounds batch memory at
-production volumes. No collect() of data rows anywhere — only file paths
+of re-shipping the batch, and writes its stats tables concurrently, one
+driver thread per table, since each is an independent read of the same
+table version; ``maxFilesPerTrigger`` bounds batch memory at production
+volumes. No collect() of data rows anywhere — only file paths
 (O(files), driver-side queue bookkeeping) are materialized.
 """
 
@@ -32,9 +36,11 @@ from __future__ import annotations
 import shutil
 import time
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -142,12 +148,36 @@ class Pipeline:
         )
 
     def _recompute_stats(self) -> None:
+        """Rewrite every stats table from one read of the sink table.
+
+        Stats of one table name (two ``H`` stats with different
+        ``GroupBy``, say) are one write: only the last in ``Stats`` is
+        computed. The tables are written concurrently, one driver thread
+        each: every table is its own directory, so the sink's single
+        writer per table holds, and each thread inherits the caller's job
+        group, description and tags. All writes finish before the first
+        failure in ``Stats`` order is raised, so a failing stat does not
+        stop the others.
+        """
         if not self.job.stats:
             return
         data = self.sink.read(self.spark, self.job.target_resource)
-        for stat in self.job.stats:
-            out = self._compute_stat(data, stat)
-            self.sink.overwrite(out, self.job.stat_table_name(stat))
+        last = {self.job.stat_table_name(s): i
+                for i, s in enumerate(self.job.stats)}
+        stats = [self.job.stats[i] for i in sorted(last.values())]
+
+        def write(stat: StatSpec) -> None:
+            self.sink.overwrite(self._compute_stat(data, stat),
+                                self.job.stat_table_name(stat))
+
+        # one wrapper per task: each holds its own copy of the local
+        # properties, in which every SQL query sets its execution id
+        with ThreadPoolExecutor(max_workers=len(stats)) as pool:
+            futures = [pool.submit(
+                inheritable_thread_target(self.spark)(write), stat)
+                for stat in stats]
+        for future in futures:
+            future.result()
 
     # ------------------------------------------------------------ audit (S2.10)
 

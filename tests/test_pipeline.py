@@ -428,3 +428,141 @@ def test_second_file_job_budget(spark, tmp_path):
     assert len(ids) <= SECOND_FILE_JOB_BUDGET, (
         f"{len(ids)} jobs > budget {SECOND_FILE_JOB_BUDGET}:\n"
         + "\n".join(describe(j) for j in ids))
+
+
+def test_stats_of_one_table_are_one_write_last_wins(spark, env, monkeypatch):
+    """Two H stats map to one table: only the last is computed and
+    written, and the table is its freq_resample."""
+    from datapump_spark.operators.resample import freq_resample
+
+    stats = [{"Kind": "H", "GroupBy": "Sensor_id", "DropColumns": "LAT,LONG"},
+             {"Kind": "mode"},
+             {"Kind": "H", "DropColumns": "Sensor_id,LAT,LONG,Remarks"}]
+    pipe, _ = make_pipeline(spark, env, Stats=stats)
+    written = []
+    overwrite = env["sink"].overwrite
+
+    def spy(df, table):
+        written.append(table)
+        overwrite(df, table)
+
+    monkeypatch.setattr(env["sink"], "overwrite", spy)
+    assert len(pipe.run_available().processed) == 2
+    # one write of each table per queue file
+    assert sorted(written) == ["air-quality-H"] * 2 + ["air-quality-mode"] * 2
+
+    sink = env["sink"]
+    data = sink.read(spark, "air-quality").drop("Sensor_id", "LAT", "LONG",
+                                                "Remarks")
+    expected = freq_resample(data, [], "DateTime", "H",
+                             bucket_alias="DateTime")
+    hourly = sink.read(spark, "air-quality-H")
+    assert hourly.columns == expected.columns
+    assert sorted(hourly.collect()) == sorted(expected.collect())
+
+
+FAILING_STAT_CSV = """DateTime,Sensor_id,PM25
+2021-10-01 00:00:00,S01,1.0
+2021-10-01 00:30:00,S01,3.0
+2021-10-01 01:00:00,S02,4.0
+"""
+
+
+def test_failing_stat_leaves_the_others_written(spark, tmp_path):
+    """A descriptive stat whose DropColumns leaves only the timestamp
+    raises; the file still archives, the mode and H tables are written,
+    the audit names the failure once, and no Spark job outlives the
+    drain."""
+    inbox = tmp_path / "input"
+    inbox.mkdir()
+    (inbox / "f.csv").write_text(FAILING_STAT_CSV)
+    sink = ParquetMergeSink(tmp_path / "lake")
+    env = {"inbox": inbox, "sink": sink, "processed": tmp_path / "processed",
+           "problems": tmp_path / "problems"}
+    pipe, _ = make_pipeline(spark, env, Stats=[
+        {"Kind": "descriptive", "DropColumns": "Sensor_id,PM25"},
+        {"Kind": "mode"},
+        {"Kind": "H", "GroupBy": "Sensor_id"}])
+    result = pipe.run_available()
+
+    assert result.processed == [str(env["processed"] / "f.csv")]
+    assert not result.quarantined
+    assert not sink.exists("air-quality-stats")
+    assert sink.read(spark, "air-quality-mode").count() > 0
+    assert sorted((r[0], r[1].hour, r[2])
+                  for r in sink.read(spark, "air-quality-H").collect()) == [
+        ("S01", 0, 2.0), ("S02", 1, 4.0)]
+    errors = [r["error"] for r in sink.read(spark, AUDIT_TABLE).collect()
+              if r["error"] is not None]
+    assert len(errors) == 1
+    assert errors[0].startswith("stats: describe needs"), errors
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert spark.range(3).count() == 3
+
+
+def test_stats_jobs_keep_the_callers_job_group(spark, env):
+    """Every stats job runs under the caller's job group (so under its
+    job tags too), none escapes to the ungrouped jobs, and wrapping the
+    stats threads warns nothing."""
+    import warnings
+
+    pipe, job = make_pipeline(spark, env)
+    assert len(pipe.run_available().processed) == 2
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("stats-g", "stats recompute")
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            pipe._recompute_stats()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert len(tracker.getJobIdsForGroup("stats-g")) >= len(job.stats)
+
+
+def test_streaming_stats_match_batch(spark, tmp_path):
+    """The stats tables a foreachBatch writes (from threads started inside
+    the batch handler) equal the ones run_available writes on the same
+    input."""
+    import os
+
+    tables = {}
+    for mode in ("batch", "stream"):
+        inbox = tmp_path / mode / "input"
+        inbox.mkdir(parents=True)
+        for i, f in enumerate(sorted(FIXTURE_DIR.glob("*.csv"))[:2]):
+            shutil.copy(f, inbox / f.name)
+            os.utime(inbox / f.name, (i + 1, i + 1))
+        env = {"inbox": inbox, "sink": ParquetMergeSink(tmp_path / mode / "lake"),
+               "processed": tmp_path / mode / "processed",
+               "problems": tmp_path / mode / "problems"}
+        pipe, job = make_pipeline(spark, env)
+        if mode == "batch":
+            assert len(pipe.run_available().processed) == 2
+        else:
+            q = pipe.stream(tmp_path / mode / "ckpt").start()
+            assert q.awaitTermination(120)
+            assert q.exception() is None
+        tables[mode] = {
+            t: sorted(env["sink"].read(spark, t).collect())
+            for t in map(job.stat_table_name, job.stats)}
+
+    assert set(tables["batch"]) == {"air-quality-stats", "air-quality-mode",
+                                    "air-quality-H"}
+    # a mean sums the table's rows in storage order, which differs between
+    # one merge of two files and two merges: floats agree to rounding
+    def number(v):
+        try:
+            return float(v) if isinstance(v, str) else v
+        except ValueError:
+            return v
+
+    for t, rows in tables["batch"].items():
+        assert [tuple(map(number, r)) for r in tables["stream"][t]] == [
+            tuple(pytest.approx(v, rel=1e-12) if isinstance(v, float) else v
+                  for v in map(number, r)) for r in rows], t
