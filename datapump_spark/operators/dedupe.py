@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datapump_spark.functions.sqltext import sql_ident
@@ -36,7 +36,8 @@ def dupe_count(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     aggregates in one job (partial aggregation map-side, single shuffle).
     Returns a 1-row DataFrame ``(dupe_count bigint)``.
     """
-    per_key = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"))
+    per_key = df.groupBy(*[F.col(sql_ident(k)) for k in keys]) \
+        .agg(F.count(F.lit(1)).alias("cnt"))
     return per_key.agg(
         F.coalesce(F.sum("cnt") - F.count(F.lit(1)), F.lit(0))
         .cast("bigint").alias("dupe_count")
@@ -46,7 +47,7 @@ def dupe_count(df: DataFrame, keys: Sequence[str]) -> DataFrame:
 def dedupe_by_key(
     df: DataFrame,
     keys: Sequence[str],
-    order_col: str | Column,
+    order_col: str,
     keep: str = "first",
 ) -> DataFrame:
     """Keep exactly one row per key group: the one with min (keep='first')
@@ -59,11 +60,10 @@ def dedupe_by_key(
         return df
     if keep not in ("first", "last"):
         raise ValueError(f"keep must be 'first', 'last' or '' — got {keep!r}")
-    ord_c = F.col(order_col) if isinstance(order_col, str) else order_col
     pick = F.min_by if keep == "first" else F.max_by
     row = F.struct(*[F.col(sql_ident(c)) for c in df.columns])
     out = df.groupBy(*[F.col(sql_ident(k)) for k in keys]) \
-        .agg(pick(row, ord_c).alias("__row"))
+        .agg(pick(row, F.col(sql_ident(order_col))).alias("__row"))
     return out.select("__row.*")
 
 

@@ -397,7 +397,7 @@ def ivfpq_topk(
             sc.removeJobTag(tag)
 
     pool = ThreadPoolExecutor(max_workers=1)
-    q_future = pool.submit(inheritable_thread_target(_collect_queries))
+    q_future = pool.submit(inheritable_thread_target(spark)(_collect_queries))
     pool.shutdown(wait=False)
     try:
         C = _kmeans_centroids(base.select("id", "v"), n_cells, lloyd_iters)

@@ -54,13 +54,11 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
-
-def _qident(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
+from datapump_spark.functions.sqltext import sql_ident
 
 
 def _on_clause(keys: Sequence[str]) -> str:
-    return " AND ".join(f"t.{_qident(k)} = s.{_qident(k)}" for k in keys)
+    return " AND ".join(f"t.{sql_ident(k)} = s.{sql_ident(k)}" for k in keys)
 
 
 class DeltaMergeProfile:
@@ -74,7 +72,7 @@ class DeltaMergeProfile:
         self.source_view = source_view
 
     def _table(self, table: str) -> str:
-        return f"{_qident(self.database)}.{_qident(table)}"
+        return f"{sql_ident(self.database)}.{sql_ident(table)}"
 
     # -- DDL -------------------------------------------------------------
 
@@ -84,7 +82,7 @@ class DeltaMergeProfile:
         sink's affected-bucket rewrite."""
         part = ""
         if partition_by:
-            cols = ", ".join(_qident(c) for c in partition_by)
+            cols = ", ".join(sql_ident(c) for c in partition_by)
             part = f" PARTITIONED BY ({cols})"
         return (f"CREATE OR REPLACE TABLE {self._table(table)} USING DELTA"
                 f"{part} AS SELECT * FROM {self.source_view}")
@@ -117,16 +115,16 @@ class DeltaMergeProfile:
         mismatch (or, with schema.autoMerge, silently add the marker
         column to the production table). ``payload`` is the target's
         non-key non-seq data columns."""
-        seq = [(f"s.{_qident(c)}", f"t.{_qident(c)}") for c in seq_cols]
+        seq = [(f"s.{sql_ident(c)}", f"t.{sql_ident(c)}") for c in seq_cols]
         s_tuple = "(" + ", ".join(a for a, _ in seq) + ")"
         t_tuple = "(" + ", ".join(b for _, b in seq) + ")"
         guard = f"{s_tuple} >= {t_tuple}"
-        ts = f"s.{_qident(tombstone_col)}"
+        ts = f"s.{sql_ident(tombstone_col)}"
         data_cols = [*keys, *seq_cols, *payload]
-        sets = ", ".join(f"t.{_qident(c)} = s.{_qident(c)}"
+        sets = ", ".join(f"t.{sql_ident(c)} = s.{sql_ident(c)}"
                          for c in data_cols if c not in keys)
-        ins_cols = ", ".join(_qident(c) for c in data_cols)
-        ins_vals = ", ".join(f"s.{_qident(c)}" for c in data_cols)
+        ins_cols = ", ".join(sql_ident(c) for c in data_cols)
+        ins_vals = ", ".join(f"s.{sql_ident(c)}" for c in data_cols)
         return (f"MERGE INTO {self._table(table)} t "
                 f"USING {self.source_view} s ON {_on_clause(keys)} "
                 f"WHEN MATCHED AND {ts} AND {guard} THEN DELETE "
@@ -145,7 +143,7 @@ class DeltaMergeProfile:
 
     def compact_sql(self, table: str, zorder_by: Sequence[str] = ()) -> str:
         if zorder_by:
-            cols = ", ".join(_qident(c) for c in zorder_by)
+            cols = ", ".join(sql_ident(c) for c in zorder_by)
             return f"OPTIMIZE {self._table(table)} ZORDER BY ({cols})"
         return f"OPTIMIZE {self._table(table)}"
 

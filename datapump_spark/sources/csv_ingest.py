@@ -62,9 +62,6 @@ DUCKDB_DATE_FORMATS = [
 # inference scan stays O(1) as the input grows.
 DEFAULT_INFER_SAMPLE_ROWS = 100_000
 
-# S4 scan options, shared by the batch reader and the streaming file source
-CSV_OPTIONS = {"header": True, "ignoreLeadingWhiteSpace": True, "nullValue": ""}
-
 
 def _shape_regex(fmt: str) -> str | None:
     """Anchored digit-shape regex for a fixed-width numeric format, or None
@@ -114,7 +111,8 @@ def read_csv_raw(spark: SparkSession, path: str) -> DataFrame:
     (datapump.py:444); empty strings become NULL like pandas' default NaN
     handling of empty fields.
     """
-    return spark.read.options(**CSV_OPTIONS).csv(path)
+    return spark.read.options(header=True, ignoreLeadingWhiteSpace=True,
+                              nullValue="").csv(path)
 
 
 def _split_heads(df: DataFrame, n: int) -> DataFrame:

@@ -1,34 +1,37 @@
 """The job pipeline engine — reference runjob/computestats re-expressed on
 Structured Streaming (SURVEY §3, §7 Phase 2).
 
-Per job (datapump.py:419-675):
-  file source (glob) → typed ingestion (multi-format ts, inferred schema) →
+Per queue file (datapump.py:419-675), in one step both drains share:
+  typed ingestion (multi-format ts, inferred schema) →
   per-file dedupe by PK (keep first/last in file row order) →
-  foreachBatch: MERGE upsert by PK (a Truncate job's first file replaces
-  the table in the same publish) → audit append →
+  MERGE upsert by PK (a Truncate job's first file replaces the table in
+  the same publish) → metadata stamp → audit append →
   stats recompute ({resource}-stats/-mode/-{kind} tables, written
   concurrently; the last stat of a table name wins; a failing stat is
-  audited after the others are written) →
+  audited after the others are written) → catalog sync →
   archive to processed/ | quarantine to problems/.
 
 Streaming mapping (SURVEY §2.10):
-- ``Trigger.AvailableNow`` drains the queue once = the reference's cron
-  invocation; leaving the same code running continuous = the upgrade path.
-- Files process oldest-first (we sort the batch by (mtime, name, row)); the
-  reference's newest-first order makes the OLDEST file win PK collisions —
-  an acknowledged bug we diverge from (SURVEY §1.3 quirk).
-- Checkpointing + idempotent MERGE upgrades at-least-once to exactly-once.
-- Failure quarantine: the file source has no dead-letter, so the batch is
-  driven per-file inside foreachBatch with try/except routing to problems/
-  (SURVEY §7 "What's hard #5").
+- ``run_available`` drains the queue once = the reference's cron
+  invocation; ``stream()`` is its continuous twin, a ``binaryFile``
+  listing of ``InputFile`` (no content read) whose micro-batches run the
+  same per-file step. Both go oldest-first by (mtime, name); the
+  reference's newest-first order makes the OLDEST file win PK collisions
+  — an acknowledged bug we diverge from (SURVEY §1.3 quirk).
+- A failing file is audited and quarantined; the batch goes on.
+- A batch replayed from the checkpoint finds its files archived and the
+  source drops them (``ignoreMissingFiles`` drops one that goes between
+  listing and read), so the replay changes nothing.
+- No Truncate on a stream: it has no drain boundary to truncate at, and
+  a replayed first batch would truncate again; ``stream()`` raises.
 
 Scale: dedupe and MERGE shuffle on the same PK hash — one exchange layout
 reused; stats recompute reads the sink table back (columnar, pruned) instead
 of re-shipping the batch, and writes its stats tables concurrently, one
 driver thread per table, since each is an independent read of the same
-table version; ``maxFilesPerTrigger`` bounds batch memory at production
-volumes. No collect() of data rows anywhere — only file paths
-(O(files), driver-side queue bookkeeping) are materialized.
+table version; ``maxFilesPerTrigger`` bounds a micro-batch's files. No
+collect() of data rows anywhere — only file paths (O(files), driver-side
+queue bookkeeping) are materialized.
 """
 
 from __future__ import annotations
@@ -43,6 +46,7 @@ from pathlib import Path
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from datapump_spark.functions.sqltext import sql_ident
 from datapump_spark.jobspec import JobSpec, StatSpec
@@ -52,7 +56,6 @@ from datapump_spark.operators.mode import column_modes
 from datapump_spark.operators.resample import freq_resample
 from datapump_spark.sinks.upsert import ParquetMergeSink
 from datapump_spark.sources.csv_ingest import (
-    CSV_OPTIONS,
     DEFAULT_DATE_FORMATS,
     DEFAULT_INFER_SAMPLE_ROWS,
     infer_ckan_fields,
@@ -220,104 +223,101 @@ class Pipeline:
             # package is created on demand (datapump.py:509-523)
             self.catalog.ensure_package(self.job.target_org,
                                         self.job.target_package)
-        truncated = False
+        # a Truncate job's first file to commit replaces the table
+        replace = self.job.truncate
         for path in self.queue_files():
-            started = time.perf_counter()
-            try:
-                df, counts = self._load_file(path)
-                if self.job.truncate and not truncated:
-                    self.sink.replace(self.spark, df, self.job.target_resource,
-                                      self.job.primary_key)
-                    truncated = True
-                else:
-                    self.sink.upsert(self.spark, df, self.job.target_resource,
-                                     self.job.primary_key)
-                n_rows, n_dupes = counts()
-                # K4 metadata stamp + K1 alias (datapump.py:616-630,224-225).
-                # Non-fatal like stats: the data already committed, so a
-                # metadata failure must not quarantine the file or
-                # contradict the audit.
-                try:
-                    self.sink.stamp_updated(self.job.target_resource)
-                    self.sink.set_alias(self.job.target_resource,
-                                        self.job.qualified_name)
-                except Exception as meta_err:   # noqa: BLE001
-                    self._audit(str(path), started, n_rows, n_dupes,
-                                ok=True, error=f"metadata: {meta_err}")
-                result.rows_upserted += n_rows
-                self._audit(str(path), started, n_rows, n_dupes, ok=True)
-                # stats failures are NON-fatal and the file still archives
-                # (reference behavior, SURVEY §2.13.9)
-                try:
-                    self._recompute_stats()
-                except Exception as stat_err:   # noqa: BLE001
-                    self._audit(str(path), started, n_rows, n_dupes,
-                                ok=True, error=f"stats: {stat_err}")
-                # K5 view refresh AFTER stats so derived tables exist; its
-                # own non-fatal block so a catalog failure neither blocks
-                # archiving nor masks a stats failure
-                try:
-                    if self.catalog is not None:
-                        self.catalog.sync_job(self.job, self.sink)
-                except Exception as cat_err:    # noqa: BLE001
-                    self._audit(str(path), started, n_rows, n_dupes,
-                                ok=True, error=f"catalog: {cat_err}")
-                dest = self.processed_dir / path.name
-                shutil.move(str(path), dest)
-                result.processed.append(str(dest))
-            except Exception as err:            # noqa: BLE001
-                self._audit(str(path), started, 0, 0, ok=False, error=str(err))
-                dest = self.problems_dir / path.name
-                if path.exists():
-                    shutil.move(str(path), dest)
-                result.quarantined.append(str(dest))
+            if self._process_file(path, result, replace):
+                replace = False
         return result
+
+    def _process_file(self, path: Path, result: PipelineResult,
+                      replace: bool = False) -> bool:
+        """ONE queue file through the reference's per-file loop
+        (datapump.py:427-675), with ``replace`` for a Truncate job's first
+        file. Records it in ``result``; returns whether its rows committed."""
+        started = time.perf_counter()
+        committed = False
+        try:
+            df, counts = self._load_file(path)
+            merge = self.sink.replace if replace else self.sink.upsert
+            merge(self.spark, df, self.job.target_resource,
+                  self.job.primary_key)
+            committed = True
+            n_rows, n_dupes = counts()
+            # K4 metadata stamp + K1 alias (datapump.py:616-630,224-225).
+            # Non-fatal like stats: the data already committed, so a
+            # metadata failure must not quarantine the file or
+            # contradict the audit.
+            try:
+                self.sink.stamp_updated(self.job.target_resource)
+                self.sink.set_alias(self.job.target_resource,
+                                    self.job.qualified_name)
+            except Exception as meta_err:   # noqa: BLE001
+                self._audit(str(path), started, n_rows, n_dupes,
+                            ok=True, error=f"metadata: {meta_err}")
+            result.rows_upserted += n_rows
+            self._audit(str(path), started, n_rows, n_dupes, ok=True)
+            # stats failures are NON-fatal and the file still archives
+            # (reference behavior, SURVEY §2.13.9)
+            try:
+                self._recompute_stats()
+            except Exception as stat_err:   # noqa: BLE001
+                self._audit(str(path), started, n_rows, n_dupes,
+                            ok=True, error=f"stats: {stat_err}")
+            # K5 view refresh AFTER stats so derived tables exist; its
+            # own non-fatal block so a catalog failure neither blocks
+            # archiving nor masks a stats failure
+            try:
+                if self.catalog is not None:
+                    self.catalog.sync_job(self.job, self.sink)
+            except Exception as cat_err:    # noqa: BLE001
+                self._audit(str(path), started, n_rows, n_dupes,
+                            ok=True, error=f"catalog: {cat_err}")
+            dest = self.processed_dir / path.name
+            shutil.move(str(path), dest)
+            result.processed.append(str(dest))
+        except Exception as err:            # noqa: BLE001
+            self._audit(str(path), started, 0, 0, ok=False, error=str(err))
+            dest = self.problems_dir / path.name
+            if path.exists():
+                shutil.move(str(path), dest)
+            result.quarantined.append(str(dest))
+        return committed
 
     # ------------------------------------------------------------ structured streaming
 
-    def stream(self, checkpoint_dir: str | Path, max_files_per_trigger: int | None = None):
-        """Continuous variant: Structured Streaming file source feeding the
-        same MERGE-upsert in foreachBatch. ``start()`` is left to the
+    def stream(self, checkpoint_dir: str | Path,
+               max_files_per_trigger: int | None = None) -> DataStreamWriter:
+        """Continuous variant: a file stream over ``InputFile`` whose
+        micro-batches take their files oldest-first through
+        :meth:`run_available`'s per-file step. ``start()`` is left to the
         caller; AvailableNow drains once, no trigger = run forever."""
-        sample = self.queue_files()
-        if not sample:
-            raise FileNotFoundError(f"no files match {self.job.input_file}")
-        raw = read_csv_raw(self.spark, str(sample[0]))
-        fields = infer_ckan_fields(raw, self.date_formats,
-                                   DEFAULT_INFER_SAMPLE_ROWS)
-        reader = self.spark.readStream.schema(raw.schema).options(**CSV_OPTIONS)
+        if self.job.truncate:
+            raise ValueError(f"{self.job.qualified_name}: Truncate needs a "
+                             "drain boundary; use run_available, not stream")
+        if self.catalog is not None:
+            self.catalog.ensure_package(self.job.target_org,
+                                        self.job.target_package)
+        # the binaryFile source's fixed schema, which a file stream needs
+        reader = self.spark.readStream.format("binaryFile").schema(
+            "path STRING NOT NULL, modificationTime TIMESTAMP NOT NULL, "
+            "length BIGINT NOT NULL, content BINARY").option(
+            "ignoreMissingFiles", True)
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        # carry source-file identity so a multi-file trigger reproduces the
-        # batch path's per-file-dedupe + oldest-first-upsert semantics
-        stream_df = (
-            reader.csv(self.job.input_file)
-            .withColumn("__src_mtime", F.col("_metadata.file_modification_time"))
-            .withColumn("__src_path", F.col("_metadata.file_path"))
-        )
+        # projected before the sink, so the scan never reads file content
+        listing = reader.load(self.job.input_file).select(
+            "path", "modificationTime")
 
         def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-            typed = project_typed(
-                batch_df.withColumn("__row", F.monotonically_increasing_id()),
-                fields, self.date_formats)
-            pk = list(self.job.primary_key)
-            if self.job.dedupe:
-                # 1) reference per-FILE dedupe (keep first/last in file row
-                #    order), 2) the newest file wins the cross-file PK
-                #    collision — exactly run_available's sorted per-file
-                #    dedupe + sequential-upsert outcome, deterministic no
-                #    matter how many files share one trigger
-                typed = dedupe_by_key(typed, pk + ["__src_path"], "__row",
-                                      self.job.dedupe)
-                typed = dedupe_by_key(typed, pk,
-                                      F.struct("__src_mtime", "__src_path"),
-                                      "last")
-            typed = typed.drop("__row", "__src_mtime", "__src_path")
-            self.sink.upsert(self.spark, typed, self.job.target_resource, pk)
-            self._recompute_stats()
+            result = PipelineResult()
+            for r in sorted(batch_df.collect(), key=lambda r: (
+                    r.modificationTime, Path(r.path).name)):
+                # the source reports paths as unencoded ``file:/…`` strings
+                self._process_file(Path(r.path.removeprefix("file:")), result)
 
         return (
-            stream_df.writeStream
+            listing.writeStream
             .foreachBatch(handle_batch)
             .option("checkpointLocation", str(checkpoint_dir))
             .trigger(availableNow=True)

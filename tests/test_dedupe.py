@@ -31,6 +31,9 @@ def test_dupe_count_matches_pandas(df):
     expected = int(pdf.duplicated(subset=["sensor", "ts"], keep="first").sum())
     got = dupe_count(df, ["sensor", "ts"]).collect()[0]["dupe_count"]
     assert got == expected == 3
+    # a key whose name holds a dot, a backtick and a space counts the same
+    odd = df.withColumnRenamed("sensor", "a.b`c Join")
+    assert dupe_count(odd, ["a.b`c Join", "ts"]).first()["dupe_count"] == 3
 
 
 @pytest.mark.parametrize("keep", ["first", "last"])

@@ -528,10 +528,10 @@ def test_stats_jobs_keep_the_callers_job_group(spark, env):
 def test_streaming_stats_match_batch(spark, tmp_path):
     """The stats tables a foreachBatch writes (from threads started inside
     the batch handler) equal the ones run_available writes on the same
-    input."""
+    input, and so do the audit rows."""
     import os
 
-    tables = {}
+    tables, audits = {}, {}
     for mode in ("batch", "stream"):
         inbox = tmp_path / mode / "input"
         inbox.mkdir(parents=True)
@@ -551,11 +551,19 @@ def test_streaming_stats_match_batch(spark, tmp_path):
         tables[mode] = {
             t: sorted(env["sink"].read(spark, t).collect())
             for t in map(job.stat_table_name, job.stats)}
+        audits[mode] = _audit_rows(spark, env)
 
     assert set(tables["batch"]) == {"air-quality-stats", "air-quality-mode",
                                     "air-quality-H"}
-    # a mean sums the table's rows in storage order, which differs between
-    # one merge of two files and two merges: floats agree to rounding
+    assert [r[0] for r in audits["batch"]] == sorted(
+        f.name for f in FIXTURE_DIR.glob("*.csv"))[:2]
+    assert all(r[3] for r in audits["batch"])
+    assert audits["stream"] == audits["batch"]
+
+    # a mean sums the table's rows in the order its part files are read:
+    # equal-size files keep the listing order of their random names and of
+    # the table's bucket directories, so two drains of the same files can
+    # give means that agree to rounding only
     def number(v):
         try:
             return float(v) if isinstance(v, str) else v
@@ -566,3 +574,110 @@ def test_streaming_stats_match_batch(spark, tmp_path):
         assert [tuple(map(number, r)) for r in tables["stream"][t]] == [
             tuple(pytest.approx(v, rel=1e-12) if isinstance(v, float) else v
                   for v in map(number, r)) for r in rows], t
+
+
+def _drain_both(spark, tmp_path, files, **overrides):
+    """Write ``files`` (name -> text or bytes, oldest first) into a
+    batch and a stream inbox and drain each with its own sink: the batch
+    with run_available, the stream with one AvailableNow query. Returns
+    {mode: env} with the stream's env holding its finished query."""
+    import os
+
+    envs = {}
+    for mode in ("batch", "stream"):
+        inbox = tmp_path / mode / "input"
+        inbox.mkdir(parents=True)
+        for i, (name, body) in enumerate(files.items()):
+            f = inbox / name
+            f.write_bytes(body if isinstance(body, bytes) else body.encode())
+            os.utime(f, (i + 1, i + 1))
+        env = {"inbox": inbox, "sink": ParquetMergeSink(tmp_path / mode / "lake"),
+               "processed": tmp_path / mode / "processed",
+               "problems": tmp_path / mode / "problems",
+               "ckpt": tmp_path / mode / "ckpt"}
+        pipe, _ = make_pipeline(spark, env, **{
+            "PrimaryKey": "Id", "Stats": [],
+            "InputFile": str(inbox / "*.csv*"), **overrides})
+        if mode == "batch":
+            pipe.run_available()
+        else:
+            env["query"] = pipe.stream(env["ckpt"]).start()
+            assert env["query"].awaitTermination(120)
+        env["pipe"] = pipe
+        envs[mode] = env
+    return envs
+
+
+def _table(spark, env):
+    return sorted(tuple(r) for r in env["sink"].read(spark, "air-quality")
+                  .collect())
+
+
+def _audit_rows(spark, env):
+    return sorted((Path(r["file"]).name, r["processed"], r["dupes"], r["ok"])
+                  for r in env["sink"].read(spark, AUDIT_TABLE).collect())
+
+
+def test_streaming_reordered_columns_match_batch(spark, tmp_path):
+    """A later file with its columns in another order is typed by its
+    own header on the stream, as in run_available."""
+    envs = _drain_both(spark, tmp_path, {
+        "a.csv": "Id,Val,Num\n1,a,10\n2,b,20\n",
+        "b.csv": "Num,Id,Val\n30,3,c\n"})
+    assert envs["stream"]["query"].exception() is None
+    assert _table(spark, envs["batch"]) == [(1, "a", 10), (2, "b", 20),
+                                            (3, "c", 30)]
+    assert _table(spark, envs["stream"]) == _table(spark, envs["batch"])
+
+
+def test_streaming_quarantines_a_bad_file_and_merges_the_good(spark,
+                                                              tmp_path):
+    """A truncated .csv.gz next to a good file: the stream query ends
+    without error, the good file is merged and archived, the bad one is
+    quarantined, and the audit holds one ok and one failed row — the
+    same outcome as run_available."""
+    import gzip
+
+    packed = gzip.compress(b"Id,Val\n" + b"".join(
+        b"%d,x\n" % i for i in range(1000)))
+    envs = _drain_both(spark, tmp_path, {
+        "a.csv": "Id,Val\n1,a\n2,b\n",
+        "b.csv.gz": packed[:len(packed) // 2]})
+    assert envs["stream"]["query"].exception() is None
+    for mode, env in envs.items():
+        assert _table(spark, env) == [(1, "a"), (2, "b")], mode
+        assert [f.name for f in env["processed"].iterdir()] == ["a.csv"]
+        assert [f.name for f in env["problems"].iterdir()] == ["b.csv.gz"]
+        assert not list(env["inbox"].iterdir())
+        assert _audit_rows(spark, env) == [("a.csv", 2, 0, True),
+                                           ("b.csv.gz", 0, 0, False)], mode
+
+
+def test_stream_refuses_a_truncate_job(spark, env, tmp_path):
+    pipe, _ = make_pipeline(spark, env, Truncate=True)
+    with pytest.raises(ValueError, match="Truncate"):
+        pipe.stream(tmp_path / "ckpt")
+
+
+def test_streaming_replay_changes_nothing(spark, tmp_path):
+    """Files whose names hold a space and a '#' stream and archive. A
+    batch replayed after its commit is lost finds its files archived:
+    it quarantines nothing, audits no failure and leaves the table."""
+    envs = _drain_both(spark, tmp_path, {
+        "a b.csv": "Id,Val\n1,a\n2,b\n", "c#1.csv": "Id,Val\n2,c\n"})
+    env = envs["stream"]
+    assert env["query"].exception() is None
+    assert sorted(f.name for f in env["processed"].iterdir()) == [
+        "a b.csv", "c#1.csv"]
+    table, audit = _table(spark, env), _audit_rows(spark, env)
+    assert table == _table(spark, envs["batch"]) == [(1, "a"), (2, "c")]
+    assert audit == [("a b.csv", 2, 0, True), ("c#1.csv", 1, 0, True)]
+
+    shutil.rmtree(env["ckpt"] / "commits")
+    q = env["pipe"].stream(env["ckpt"]).start()
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+    assert (env["ckpt"] / "commits" / "0").exists()     # batch 0 ran again
+    assert not env["problems"].exists() or not list(env["problems"].iterdir())
+    assert _audit_rows(spark, env) == audit
+    assert _table(spark, env) == table

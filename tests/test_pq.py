@@ -157,11 +157,19 @@ def test_ivfpq_recall_and_knobs(emb):
 
 def test_ivfpq_candidate_generation_is_equi_join(emb):
     """The probe stage must never cross-join the corpus: candidates come
-    from an equi-join on the cell id."""
+    from an equi-join on the cell id. The background query collect is
+    wrapped with the session, so its tags are inherited without a
+    warning."""
+    import warnings
+
     from datapump_spark.operators.pq import ivfpq_topk
 
-    out = ivfpq_topk(emb, k=5, query_max_id=5, n_cells=8, n_probe=2,
-                     rerank_factor=0)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = ivfpq_topk(emb, k=5, query_max_id=5, n_cells=8, n_probe=2,
+                         rerank_factor=0)
+    assert not [w for w in caught
+                if "Tags will not be inherited" in str(w.message)]
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
