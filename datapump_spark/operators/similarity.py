@@ -295,7 +295,7 @@ def lsh_topk(
     evaluations + the candidate stream — never tables × corpus-rescans.
 
     Same output shape as cosine_topk; recall < 1 by design (graded in
-    tests/scripts/ann_recall.py against the exact baseline, not the
+    scripts/ann_recall.py against the exact baseline, not the
     oracle)."""
     dim = vec_dim(df, vec_col, dim)
     tables = [hyperplanes(dim, n_planes, seed + 7919 * t)

@@ -12,9 +12,9 @@ column expressions).
 Plan shape: one aggregate for per-column min/max (a broadcast of one
 row), pure bit-arithmetic projection (codegen'd, no UDF), then
 ``repartitionByRange(zval)`` — a single range-shuffle, exactly what any
-global sort costs. ``scripts/zorder_skipping.py`` measures the payoff:
-row groups actually read for a 2-predicate filter, z-ordered vs
-single-column-sorted layout.
+global sort costs. The payoff is row groups skipped by a 2-predicate
+filter, z-ordered vs single-column-sorted layout (PERF.md, historical
+measurement); ``test_zorder`` pins that both columns stay clustered.
 
 The bit math is integer-exact and engine-agnostic; ``zvalue_sql``
 emits the identical expression in DuckDB syntax so the oracle gate can

@@ -96,23 +96,20 @@ _EMB_DIM: dict[str, int] = {}
 
 
 def _emb_dim(sf_dir: str) -> int:
-    """Embedding dimensionality, peeked driver-side from the first parquet
-    batch (one tiny local read, memoized) — avoids a per-call Spark job in
-    the ANN/projection operators just to learn the vector width."""
+    """Embedding dimensionality, peeked driver-side from the first row
+    (one tiny local read, memoized) — avoids a per-call Spark job in the
+    ANN/projection operators just to learn the vector width. The table
+    may be one file or a directory of part files."""
     if sf_dir not in _EMB_DIM:
-        import pyarrow.parquet as pq
+        import pyarrow.dataset as ds
 
-        f = pq.ParquetFile(f"{sf_dir}/embeddings.parquet")
-        try:
-            batch = next(f.iter_batches(batch_size=1,
-                                        columns=["embedding"]))
-        except StopIteration:
-            # a bare StopIteration would also poison any enclosing
-            # generator (PEP 479) — refuse with a typed error instead
+        head = ds.dataset(f"{sf_dir}/embeddings.parquet").head(
+            1, columns=["embedding"])
+        if head.num_rows == 0:
             raise ValueError(
                 f"{sf_dir}/embeddings.parquet is empty — "
-                "cannot infer embedding dim") from None
-        _EMB_DIM[sf_dir] = len(batch.column(0)[0])
+                "cannot infer embedding dim")
+        _EMB_DIM[sf_dir] = len(head.column(0)[0])
     return _EMB_DIM[sf_dir]
 
 
@@ -912,7 +909,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query
 def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe OR-ed-table LSH approximate top-5 (rows-only check;
-    recall graded in tests/scripts/ann_recall.py against the exact
+    recall graded in scripts/ann_recall.py against the exact
     baseline). Operating point: 6 planes × 4 tables, 8 probes/table ⇒
     recall@10 ≈ 0.72 at ~0.41 expected corpus fraction (sf0.01)."""
     from datapump_spark.operators.similarity import lsh_topk
@@ -3202,8 +3199,8 @@ def q_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) key computation (operators/zorder.py): min/max
     scale l_partkey and l_suppkey to 16 bits each and interleave — the
     multi-column data-skipping layout key. One tiny stats broadcast +
-    pure bit arithmetic; scripts/zorder_skipping.py measures the
-    row-group pruning this layout buys."""
+    pure bit arithmetic; PERF.md records the row-group pruning this
+    layout buys."""
     from datapump_spark.operators.zorder import with_zvalue
 
     li = _t(spark, sf_dir, "lineitem").select(

@@ -33,12 +33,12 @@ def tuned_builder(app_name: str = "datapump-spark") -> SparkSession.Builder:
         # ran 20.2 s vs 9.1 s with the default, because advisory BYTES
         # are a bad proxy for quadratic per-byte compute and the
         # coalescer packed the join into one reducer. Scale wins the
-        # tie (the whole point of the engine); both knobs stay
-        # env-overridable for profiles where bytes DO track compute.
+        # tie (the whole point of the engine). Both are runtime SQL
+        # confs: a profile where bytes DO track compute sets them with
+        # ``spark.conf.set``.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_GRAFT_AQE_ADVISORY", "64MB"))
+                "true")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
         # Deterministic timestamp semantics for the DuckDB oracle and for
         # cross-cluster reproducibility: all sessions run in UTC.
         .config("spark.sql.session.timeZone", "UTC")

@@ -47,7 +47,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datapump_spark.functions.sqltext import sql_ident
+from datapump_spark.functions.sqltext import sql_dq_ident, sql_ident
 
 # Reference description stamp: '… (UPDATED: 2021-01-01 00:00:00)' appended /
 # rewritten in place (datapump.py:616-630, regex datapump.py:618).
@@ -460,14 +460,15 @@ class JdbcUpsertSink:
 
     def upsert_sql(self, table: str, columns: Sequence[str],
                    keys: Sequence[str]) -> str:
-        cols = ", ".join(f'"{c}"' for c in columns)
+        q = sql_dq_ident
+        cols = ", ".join(q(c) for c in columns)
         ph = ", ".join(["?" if self.dialect == "sqlite" else "%s"] * len(columns))
-        pk = ", ".join(f'"{k}"' for k in keys)
+        pk = ", ".join(q(k) for k in keys)
         updates = ", ".join(
-            f'"{c}" = excluded."{c}"' for c in columns if c not in keys
-        ) or f'"{keys[0]}" = excluded."{keys[0]}"'
+            f"{q(c)} = excluded.{q(c)}" for c in columns if c not in keys
+        ) or f"{q(keys[0])} = excluded.{q(keys[0])}"
         return (
-            f'INSERT INTO "{table}" ({cols}) VALUES ({ph}) '
+            f"INSERT INTO {q(table)} ({cols}) VALUES ({ph}) "
             f"ON CONFLICT ({pk}) DO UPDATE SET {updates}"
         )
 

@@ -4,8 +4,9 @@
 deterministic documents-shaped frame (doc_id, text, lang, source,
 n_chars) with a controllable duplicate/near-duplicate rate — WITHOUT
 writing files first. That makes arbitrary-SF scale curves and dedup
-benchmarks one option away (``scripts/scale_curve.py`` replicates
-parquet instead; this source is the cleaner seam for the same need).
+benchmarks one option away (``scripts/run_queries.py replicate`` copies
+the scale-factor parquet instead, so the registered queries run on it
+unchanged; this source is the seam for a pipeline with no files).
 
 Why a Data Source and not ``spark.range().select(udf...)``:
 

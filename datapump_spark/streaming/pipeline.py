@@ -290,8 +290,10 @@ class Pipeline:
                max_files_per_trigger: int | None = None) -> DataStreamWriter:
         """Continuous variant: a file stream over ``InputFile`` whose
         micro-batches take their files oldest-first through
-        :meth:`run_available`'s per-file step. ``start()`` is left to the
-        caller; AvailableNow drains once, no trigger = run forever."""
+        :meth:`run_available`'s per-file step. The writer comes back with
+        ``trigger(availableNow=True)`` set, so ``start()`` drains what is
+        there and stops; a caller that wants it to run continuously calls
+        ``.trigger(processingTime=…)`` on it before ``start()``."""
         if self.job.truncate:
             raise ValueError(f"{self.job.qualified_name}: Truncate needs a "
                              "drain boundary; use run_available, not stream")

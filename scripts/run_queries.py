@@ -1,5 +1,6 @@
 """One runner for the registered queries: time them, time their build,
-or audit their physical plans, in one warmed session.
+or audit their physical plans, in one warmed session — and write the
+scaled copies of the input that the same queries are timed on.
 
   python scripts/run_queries.py time q_a q_b [-k 3]
       k round-robin passes (a stall window hits different queries on
@@ -13,6 +14,12 @@ or audit their physical plans, in one warmed session.
   python scripts/run_queries.py plan [names...] [--out DIR] > PLANS.md
       static physical-plan audit table; --out also writes each query's
       explain('formatted') text to DIR/{name}.txt.
+  python scripts/run_queries.py replicate --mult N --out DIR [--sf SRC]
+      writes a xN copy of the scale-factor directory (see ``replicate``);
+      then ``time --sf DIR q_a -k 1`` times the registered query on it, so
+      the scaled workload is the bench query by construction. At large N
+      run one query per process: shuffle files are reclaimed only when
+      the application exits.
 
 Names default to every registered query (sorted) for build and plan.
 Every subcommand takes --sf (default $SPARK_GRAFT_SF_DIR, else sf0.1, as
@@ -25,9 +32,15 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 import time
 from pathlib import Path
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
@@ -129,6 +142,65 @@ def plan(spark, names, sf, out=None) -> list[str]:
     return lines
 
 
+KEY_SHIFT = 10**10      # multiple of 20 and 64: sample classes survive
+FIXED_TABLES = ("nation", "region")
+FILES_PER_REPLICA = 4
+
+
+def replica(table: pa.Table, r: int) -> pa.Table:
+    """Replica ``r`` of one table. Replica 0 is the source itself. For
+    r >= 1, every int64 ``*key`` / ``*_id`` column is shifted by
+    r * KEY_SHIFT, so joins stay inside a replica and ids below the shift
+    (the ``query_max_id`` query sets) stay in replica 0; every ``text``
+    token is prefixed ``r{r}_``, so shingle and term spaces are disjoint
+    across replicas (``n_chars`` follows the new text); and every
+    ``embedding`` element x_i becomes x_i + cos((r+1)(i+1)), so replicas
+    are not cosine duplicates of each other."""
+    if r == 0:
+        return table
+    cols = {}
+    for field, col in zip(table.schema, table.columns):
+        name = field.name
+        if pa.types.is_int64(field.type) and name.endswith(("key", "_id")):
+            col = pc.add(col, r * KEY_SHIFT)
+        elif name == "text":
+            col = pc.replace_substring_regex(col, r"(\S+)", f"r{r}_\\1")
+        elif name == "n_chars":
+            col = pc.utf8_length(cols["text"]).cast(field.type)
+        elif name == "embedding":
+            arr = col.combine_chunks()
+            x = arr.values.to_numpy(zero_copy_only=False)
+            row = np.asarray(pc.list_parent_indices(arr))
+            i = np.arange(len(x)) - np.asarray(arr.offsets)[row]
+            x = (x + np.cos((r + 1) * (i + 1))).astype(x.dtype)
+            col = pa.ListArray.from_arrays(arr.offsets, x, type=field.type)
+        cols[name] = col
+    return pa.table(cols, schema=table.schema)
+
+
+def replicate(src, out, mult: int) -> None:
+    """Write a xmult copy of the scale-factor directory ``src`` to ``out``.
+    ``nation`` and ``region`` are copied as they are; every other table
+    becomes a directory of ``replica(table, r)`` for r = 0..mult-1, each
+    in FILES_PER_REPLICA files, so a scan is not bound by input
+    parallelism (the source tables are one row group each)."""
+    out = Path(out)
+    out.mkdir(parents=True, exist_ok=True)
+    for path in sorted(Path(src).glob("*.parquet")):
+        dest = out / path.name
+        if path.stem in FIXED_TABLES:
+            (shutil.copytree if path.is_dir() else shutil.copy2)(path, dest)
+            continue
+        table = pq.read_table(path)
+        dest.mkdir()
+        step = -(-table.num_rows // FILES_PER_REPLICA)
+        for r in range(mult):
+            rep = replica(table, r)
+            for j in range(FILES_PER_REPLICA):
+                pq.write_table(rep.slice(j * step, step),
+                               dest / f"part-{r:05d}-{j}.parquet")
+
+
 def main() -> None:
     common = argparse.ArgumentParser(add_help=False)
     common.add_argument("--sf", default=os.environ.get(
@@ -144,7 +216,13 @@ def main() -> None:
     p = sub.add_parser("plan", parents=[common])
     p.add_argument("names", nargs="*")
     p.add_argument("--out")
+    p = sub.add_parser("replicate", parents=[common])
+    p.add_argument("--mult", type=int, required=True)
+    p.add_argument("--out", required=True)
     args = ap.parse_args()
+    if args.cmd == "replicate":
+        replicate(args.sf, args.out, args.mult)
+        return
     names = args.names or sorted(ALL_QUERIES)
 
     spark = start(f"run-queries-{args.cmd}")

@@ -130,3 +130,69 @@ def test_runner_plan_table_and_dumps(spark, sf_dir, tmp_path):
         assert all(c.isdigit() for c in cells[1:6]), row
     for name in RUNNER_NAMES:
         assert (tmp_path / f"{name}.txt").read_text().strip()
+
+
+@pytest.fixture(scope="module")
+def replicated(tmp_path_factory):
+    """sf0.001 replicated x2 by ``run_queries.py replicate``."""
+    out = tmp_path_factory.mktemp("x2")
+    _load_runner().replicate(SF_DIR, out, 2)
+    return out
+
+
+def _replica_rows(out, table, r):
+    import pyarrow.parquet as pq
+
+    return pq.read_table(sorted((out / f"{table}.parquet")
+                                .glob(f"part-{r:05d}-*.parquet")))
+
+
+def test_replicate_shifts_keys_and_keeps_replica_zero(replicated):
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    for path in sorted(Path(SF_DIR).glob("*.parquet")):
+        src = pq.read_table(path)
+        rep = pq.read_table(replicated / path.name)
+        if path.stem in ("nation", "region"):
+            assert rep.equals(src), path.stem
+            continue
+        assert rep.num_rows == 2 * src.num_rows, path.stem
+        assert len(list((replicated / path.name).iterdir())) == 8
+        r0, r1 = (_replica_rows(replicated, path.stem, r) for r in (0, 1))
+        assert r0.equals(src), path.stem
+        keys = [f.name for f in src.schema if str(f.type) == "int64"
+                and f.name.endswith(("key", "_id"))]
+        assert keys, path.stem
+        for k in keys:
+            assert not set(r0[k].to_pylist()) & set(r1[k].to_pylist()), k
+    orders = pq.read_table(replicated / "orders.parquet")
+    lineitem = pq.read_table(replicated / "lineitem.parquet")
+    joined = lineitem.join(orders.select(["o_orderkey"]), "l_orderkey",
+                           "o_orderkey", join_type="inner")
+    assert joined.num_rows == 2 * pq.read_table(
+        f"{SF_DIR}/lineitem.parquet").num_rows
+    r1 = _replica_rows(replicated, "documents", 1)
+    assert pc.all(pc.equal(pc.utf8_length(r1["text"]), r1["n_chars"])).as_py()
+
+
+def test_replicate_tokens_disjoint_and_emb_dim(replicated):
+    tokens = [{t for text in _replica_rows(replicated, "documents", r)
+               ["text"].to_pylist() for t in text.split()} for r in (0, 1)]
+    assert tokens[0] and not tokens[0] & tokens[1]
+    assert queries._emb_dim(str(replicated)) == queries._emb_dim(SF_DIR)
+
+
+def test_emb_dim_refuses_empty_table(tmp_path):
+    import pyarrow.parquet as pq
+
+    src = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    pq.write_table(src.schema.empty_table(), tmp_path / "embeddings.parquet")
+    with pytest.raises(ValueError, match="empty"):
+        queries._emb_dim(str(tmp_path))
+
+
+def test_runner_times_registered_query_on_replica(spark, replicated):
+    build, wall = _load_runner().passes(spark, ["q_ivfpq_topk"],
+                                        str(replicated), 1, run=True)
+    assert wall["q_ivfpq_topk"][0] >= build["q_ivfpq_topk"][0] > 0

@@ -60,3 +60,26 @@ def test_sqlite_duplicate_pk_in_one_batch(spark, tmp_path):
     with sqlite3.connect(db) as conn:
         rows = sorted(conn.execute('SELECT "k", "v" FROM "m"').fetchall())
     assert rows == [(1, "y"), (2, "b")]
+
+
+def test_sqlite_upsert_quotes_hostile_identifiers(spark, tmp_path):
+    """Table and column names holding a double quote and a space: the
+    generated SQL doubles the embedded quote instead of closing the
+    identifier early."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    table, key, val = 'my "t', 'k "id', 'a"b c'
+    db = tmp_path / "hostile.db"
+    with sqlite3.connect(db) as conn:
+        conn.execute('CREATE TABLE "my ""t" ("k ""id" INTEGER PRIMARY KEY, '
+                     '"a""b c" TEXT)')
+    sink = JdbcUpsertSink(partial(sqlite3.connect, str(db)), dialect="sqlite")
+    schema = StructType([StructField(key, LongType()),
+                         StructField(val, StringType())])
+    sink.upsert(spark.createDataFrame([(1, "a"), (2, "b")], schema)
+                .coalesce(1), table, [key])
+    sink.upsert(spark.createDataFrame([(2, "B")], schema).coalesce(1),
+                table, [key])
+    with sqlite3.connect(db) as conn:
+        rows = sorted(conn.execute('SELECT * FROM "my ""t"').fetchall())
+    assert rows == [(1, "a"), (2, "B")]
