@@ -103,9 +103,10 @@ def _emb_dim(sf_dir: str) -> int:
     if sf_dir not in _EMB_DIM:
         import pyarrow.dataset as ds
 
-        head = ds.dataset(f"{sf_dir}/embeddings.parquet").head(
-            1, columns=["embedding"])
-        if head.num_rows == 0:
+        table = ds.dataset(f"{sf_dir}/embeddings.parquet")
+        # a directory without part files has no columns to select
+        head = table.head(1, columns=["embedding"]) if table.files else None
+        if head is None or head.num_rows == 0:
             raise ValueError(
                 f"{sf_dir}/embeddings.parquet is empty — "
                 "cannot infer embedding dim")

@@ -7,19 +7,27 @@ datapump.py:545-555) and metadata stamping (datapump.py:616-630). Spark has
 no native upsert, so two profiles:
 
 - ``ParquetMergeSink`` — lake profile for local/testing: MERGE emulated as
-  anti-join(current-in-affected-buckets, batch-keys) ∪ batch. Tables live
-  in versioned directories behind an atomic pointer file (os.replace), so
-  a crash never leaves a missing/torn table, and upserted tables are
-  partitioned by a PK hash bucket (``pk_bucket``) so a batch rewrites ONLY
-  the buckets containing its keys — unaffected buckets are hardlinked into
-  the new version, byte-identical, O(1) data movement. ``upsert`` and the
-  CDC ``apply_cdc`` share that one bucket-rewrite path and differ only in
-  the per-bucket merge, so both accept a table in either layout (a table
-  last written by ``overwrite`` is migrated into buckets). At production scale
-  the same call shape maps to Delta ``MERGE INTO`` (log-backed ACID,
-  partition-pruned merge-on-read); this class documents the seam and keeps
-  semantics testable with zero extra dependencies. Single-writer: version
-  GC assumes no concurrent reader holds a superseded version (Delta's log
+  anti-join(overlapping stored files, batch keys) ∪ batch. Tables live in
+  versioned directories behind an atomic pointer file (os.replace), so a
+  crash never leaves a missing/torn table. Upserted tables are
+  partitioned by a PK hash bucket (``pk_bucket``), and every published
+  version carries a ``_manifest.json`` (Spark skips ``_`` files): the
+  table schema plus, per data file, the min and max of the leading PK
+  column. A batch reads and rewrites ONLY the stored files that lie in a
+  bucket holding one of its keys AND whose key range overlaps the
+  batch's; every other file is hardlinked into the new version,
+  byte-identical, O(1) data movement. So a time-ordered feed, whose
+  files each overlap the previous window only, costs O(its window) per
+  file, not O(table) — the reference's PK-index cost model. Reads take
+  the schema from the manifest instead of a footer scan. ``upsert`` and
+  the CDC ``apply_cdc`` share that one write path and differ only in the
+  per-file merge, so both accept a table in either layout (a table last
+  written by ``overwrite`` is migrated into buckets). At production
+  scale the same call shape maps to Delta ``MERGE INTO``, whose log
+  holds the same two things (add-file min/max stats for data skipping,
+  the table schema); this class documents the seam and keeps semantics
+  testable with zero extra dependencies. Single-writer: version GC
+  assumes no concurrent reader holds a superseded version (Delta's log
   is the multi-writer answer).
 - ``JdbcUpsertSink`` — CKAN-datastore-parity profile: per-partition batched
   ``INSERT … ON CONFLICT (pk) DO UPDATE`` through a user-supplied DB-API
@@ -28,10 +36,13 @@ no native upsert, so two profiles:
   (the reference's ``to_dict('records')`` full-copy, datapump.py:475, is
   exactly what this avoids).
 
-Scale notes: the merge anti-join shuffles on the PK — the same key the
-dedupe stage already partitioned by, so AQE reuses the exchange; a Delta
-profile would additionally prune merge targets by partition column. JDBC
-batches default to 1000 rows/execute to bound round-trips.
+Scale notes: the manifest's key bounds come from the footers of only the
+files a publish wrote (driver-side, no Spark job), so keeping it is
+O(new files); the bounds need footer min/max, which parquet INT96
+timestamps lack, hence ``TIMESTAMP_MICROS`` in ``session.tuned_builder``
+(a session writing INT96 still merges correctly, reading every file of
+the touched buckets). JDBC batches default to 1000 rows/execute to bound
+round-trips.
 """
 
 from __future__ import annotations
@@ -46,6 +57,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from datapump_spark.functions.sqltext import sql_dq_ident, sql_ident
 
@@ -58,6 +70,28 @@ BUCKET_COL = "pk_bucket"
 # CDC delete marker column (apply_cdc): deletes are retained as marker
 # rows so late out-of-order updates older than the delete stay dead.
 TOMBSTONE_COL = "__tombstone"
+# Per-version manifest: {"schema": data schema (StructType JSON, no
+# pk_bucket), "key": leading PK column or null, "files": {relative path:
+# [min, max] of that column, or null when unknown}}.
+MANIFEST = "_manifest.json"
+# write-time partition column that keeps stored (kept) rows and batch
+# rows in separate files; its directories are flattened before publish
+_SIDE_COL = "__side"
+
+# Leading-key types whose parquet footer min/max orders as Spark orders
+# them, by Spark type: the footer's physical type, a marker its logical
+# type must show, and the Spark expression giving the footer's raw value.
+# Floats (NaN, -0.0), decimals and every other type have no bounds, so
+# their files are always read.
+_BOUNDED_TYPES = {
+    "tinyint": ("INT32", "", lambda c: c),
+    "smallint": ("INT32", "", lambda c: c),
+    "int": ("INT32", "", lambda c: c),
+    "bigint": ("INT64", "", lambda c: c),
+    "date": ("INT32", "Date", F.unix_date),
+    "timestamp": ("INT64", "timeUnit=microseconds", F.unix_micros),
+    "string": ("BYTE_ARRAY", "String", lambda c: c),
+}
 
 
 class ParquetMergeSink:
@@ -68,10 +102,13 @@ class ParquetMergeSink:
         root/<table>/_current            # text: name of the live version
         root/<table>/v-<ns>/             # overwrite(): plain parquet
         root/<table>/v-<ns>/pk_bucket=N/ # upsert(): hash-bucketed parquet
+        root/<table>/v-<ns>/_manifest.json  # upsert()/compact(): schema
+                                         # + per-file leading-key bounds
 
     ``_current`` is flipped with ``os.replace`` (atomic on POSIX), so a
     reader always resolves a complete version; a crash mid-write leaves
     only an orphan ``v-*`` dir that the next successful publish removes.
+    The manifest is written into the new version before the flip.
     """
 
     def __init__(self, root: str | Path, n_buckets: int = 16,
@@ -79,7 +116,7 @@ class ParquetMergeSink:
         """``retain_versions`` > 1 keeps that many published versions on
         disk for time travel (:meth:`read` with ``version=``,
         :meth:`versions`). Retention is CHEAP for upsert tables: a new
-        version hardlinks every unaffected bucket's files, so N retained
+        version hardlinks every file its merge did not rewrite, so N retained
         versions share all unchanged bytes — the storage bill is the
         per-version deltas plus one inode table, the same economics as a
         lakehouse transaction log. Default 1 = publish-and-GC."""
@@ -105,13 +142,6 @@ class ParquetMergeSink:
 
     def read(self, spark: SparkSession, table: str,
              version: str | None = None) -> DataFrame:
-        # mergeSchema: after an add-column upsert, unaffected buckets
-        # still hold old-schema files (hardlinked, deliberately not
-        # rewritten) — without footer merging Spark would resolve the
-        # table schema from an arbitrary file and could silently drop
-        # the new column (schema-evolution test pins this). Delta keeps
-        # schema in the log; a parquet sink pays the footer scan instead.
-        #
         # ``version`` = time travel: any name from :meth:`versions`
         # (requires retain_versions > 1 at write time).
         if version is None:
@@ -122,7 +152,8 @@ class ParquetMergeSink:
             raise ValueError(
                 f"version {version!r} of table {table!r} is not retained "
                 f"(have: {self.versions(table)})")
-        df = spark.read.option("mergeSchema", "true").parquet(str(vdir))
+        # the schema comes from the version's manifest (see _version_schema)
+        df = spark.read.schema(_version_schema(spark, vdir)).parquet(str(vdir))
         return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
 
     def _history_path(self, table: str) -> Path:
@@ -190,6 +221,10 @@ class ParquetMergeSink:
         if cur is None:
             self._swap_write(df, table)
             return
+        # appended files may add columns and carry no key bounds, so the
+        # version drops its manifest first: reads fall back to merging
+        # the footers, and a merge reads every file
+        (cur / MANIFEST).unlink(missing_ok=True)
         df.write.mode("append").parquet(str(cur))
 
     def compact(self, spark: SparkSession, table: str,
@@ -203,27 +238,34 @@ class ParquetMergeSink:
 
         Bucket-partitioned tables keep their ``pk_bucket=…`` layout (the
         rewrite hash-partitions on the bucket column, so each bucket dir
-        lands exactly one file and upsert pruning is preserved). Returns
+        lands exactly one file). The new version gets a manifest whose
+        key bounds come from the new files' footers, so merges still
+        prune files and reads still skip the footer scan. Returns
         ``{files_before, files_after, total_mb}``.
         """
         cur = self.current_version(table)
         if cur is None:
             raise ValueError(f"no such table: {table!r}")
-        files = list(cur.rglob("*.parquet"))
-        total_mb = sum(f.stat().st_size for f in files) / 2**20
+        files = _data_files(cur)
+        total_mb = sum((cur / f).stat().st_size for f in files) / 2**20
         n_out = max(1, -(-int(total_mb) // target_file_mb))
-        df = spark.read.parquet(str(cur))
+        schema = _version_schema(spark, cur)
+        df = spark.read.schema(schema).parquet(str(cur))
         name, vdir = self._new_version(table)
+        key = None
         if any(cur.glob(f"{BUCKET_COL}=*")):
+            key = self.get_properties(table).get("bucket_keys", [None])[0]
             (df.repartition(n_out, F.col(BUCKET_COL))
              .write.mode("overwrite").partitionBy(BUCKET_COL)
              .parquet(str(vdir)))
         else:
             df.repartition(n_out).write.mode("overwrite").parquet(str(vdir))
+        written = _data_files(vdir)
+        _write_manifest(vdir, schema, key, _bounds(vdir, written, schema, key))
         self._publish(table, name)
         return {
             "files_before": len(files),
-            "files_after": len(list(vdir.rglob("*.parquet"))),
+            "files_after": len(written),
             "total_mb": round(total_mb, 3),
         }
 
@@ -283,14 +325,15 @@ class ParquetMergeSink:
         """K2 MERGE: batch rows win on PK collision (reference upsert
         semantics; Delta equivalent: WHEN MATCHED UPDATE ALL / WHEN NOT
         MATCHED INSERT ALL) — anti-join(current, batch keys) ∪ batch over
-        the affected buckets, see :meth:`_merge_buckets`."""
+        the stored files the batch may touch, see :meth:`_merge_buckets`."""
         keys = list(keys)
 
-        def merge(current: DataFrame, batch: DataFrame) -> DataFrame:
+        def merge(current: DataFrame,
+                  batch: DataFrame) -> tuple[DataFrame, DataFrame]:
             kept = current.join(
                 batch.select(*[F.col(sql_ident(k)) for k in keys]).distinct(),
                 on=keys, how="left_anti")
-            return kept.unionByName(batch, allowMissingColumns=True)
+            return kept, batch
 
         self._merge_buckets(spark, df, table, keys, merge)
 
@@ -313,8 +356,9 @@ class ParquetMergeSink:
           state with :meth:`read_state`; compaction may drop tombstones
           older than the feed's reordering horizon.
 
-        Same write path and cost model as :meth:`upsert`: only buckets
-        containing batch keys are rewritten, the rest hardlink forward.
+        Same write path and cost model as :meth:`upsert`: only stored
+        files that may hold batch keys are rewritten, the rest hardlink
+        forward.
         Replaying the same changelog is a no-op (idempotent), which is
         what a streaming foreachBatch needs after a retry."""
         keys, seq_cols = list(keys), list(seq_cols)
@@ -338,7 +382,8 @@ class ParquetMergeSink:
                     F.col("__w").getField(TOMBSTONE_COL).alias(TOMBSTONE_COL))
         )
 
-        def merge(current: DataFrame, batch: DataFrame) -> DataFrame:
+        def merge(current: DataFrame,
+                  batch: DataFrame) -> tuple[DataFrame, DataFrame]:
             # stored row survives unless a batch winner with seq >= its
             # own exists for the key
             w_seq = batch.select(*cols(keys), seq_struct.alias("__wseq"))
@@ -355,29 +400,41 @@ class ParquetMergeSink:
                        | (seq_struct >= F.col("__cseq")))
                 .drop("__cseq")
             )
-            return kept.unionByName(incoming, allowMissingColumns=True)
+            return kept, incoming
 
         self._merge_buckets(spark, winners, table, keys, merge)
 
     def _merge_buckets(self, spark: SparkSession, df: DataFrame, table: str,
                        keys: list[str],
-                       merge: Callable[[DataFrame, DataFrame], DataFrame]
-                       | None,
+                       merge: Callable[[DataFrame, DataFrame],
+                                       tuple[DataFrame, DataFrame]] | None,
                        ) -> None:
         """The one MERGE write path. ``merge(current, batch)`` receives
-        the stored rows of the buckets the batch touches and the batch,
-        both carrying ``pk_bucket``, and returns those buckets' new rows;
-        ``merge=None`` ignores the stored rows (:meth:`replace`).
+        the stored rows the batch may touch and the batch, both carrying
+        ``pk_bucket``, and returns ``(kept, incoming)``: the stored rows
+        that stay and the batch rows that go in. ``merge=None`` ignores
+        the stored rows (:meth:`replace`).
 
         Bounded cost: the table is partitioned by ``pk_bucket =
-        pmod(xxhash64(pk), n_buckets)``; only buckets containing batch keys
-        are scanned (partition-pruned), merged, and rewritten. Unaffected
-        buckets are hardlinked into the new version — byte-identical
-        files, no data copied — matching the reference's incremental
-        upsert cost model (datapump.py:560-566) instead of a full-table
-        rewrite per batch. A first write is the batch alone; a table last
-        written by :meth:`overwrite` migrates once, every row moved into
-        its bucket."""
+        pmod(xxhash64(pk), n_buckets)`` and the live version's manifest
+        holds each file's [min, max] of the leading PK column. One
+        aggregate over the batch (its first action, so it also fills the
+        caller's observations) gives the batch's buckets and its range of
+        that column. Only files in one of those buckets whose range
+        overlaps the batch's, or that have no bounds, are read, merged
+        and rewritten; kept rows and batch rows go to separate new files,
+        so a batch file's range is the batch's own. Every other file is
+        hardlinked into the new version (same inode, no data copied), and
+        a batch that no file overlaps reads nothing and writes only
+        itself: the reference's PK-index upsert cost
+        (datapump.py:560-566), O(the batch's key range), not O(table). A
+        first write is the batch alone; a table last written by
+        :meth:`overwrite` migrates once, every row moved into its bucket.
+
+        The new schema is the table's plus the batch's new columns, in
+        that order, and every written file carries all of it. A batch
+        that gives an existing column another type raises before
+        anything is written, naming the column."""
         # a replace drops the old layout along with the old rows
         props = self.get_properties(table) if merge is not None else {}
         n = int(props.get("bucket_count", self.n_buckets))
@@ -387,38 +444,66 @@ class ParquetMergeSink:
                 f"table {table!r} bucketed by {stored_keys}, merge keyed by {keys}")
         bdf = df.withColumn(BUCKET_COL, self._bucket_expr(keys, n))
 
-        cur_dir = self.current_version(table)
-        affected = None
-        if cur_dir is None or merge is None:
-            merged = bdf
-        elif not any(cur_dir.glob(f"{BUCKET_COL}=*")):
-            current = self.read(spark, table)
-            merged = merge(
-                current.withColumn(BUCKET_COL, self._bucket_expr(keys, n)), bdf)
-        else:
-            affected = sorted(
-                r[BUCKET_COL] for r in bdf.select(BUCKET_COL).distinct().collect())
-            # mergeSchema for the same reason as read(): earlier evolutions
-            # may have left mixed-schema buckets behind
-            current = spark.read.option("mergeSchema", "true").parquet(
-                str(cur_dir))  # includes pk_bucket
-            merged = merge(current.where(F.col(BUCKET_COL).isin(affected)), bdf)
+        cur_dir = self.current_version(table) if merge is not None else None
+        manifest = _read_manifest(cur_dir) if cur_dir is not None else None
+        old = (_version_schema(spark, cur_dir, manifest)
+               if cur_dir is not None else StructType())
+        schema = _table_schema(table, old, df.schema)
+        lead = keys[0]
+        bucketed = cur_dir is not None and any(cur_dir.glob(f"{BUCKET_COL}=*"))
+        sides: list[tuple[str, DataFrame]] = [("b", bdf)]
+        links: dict[str, list | None] = {}
+        if cur_dir is not None and not bucketed:
+            current = spark.read.schema(old).parquet(str(cur_dir))
+            sides = list(zip("kb", merge(
+                current.withColumn(BUCKET_COL, self._bucket_expr(keys, n)),
+                bdf)))
+        elif bucketed:
+            bounded = _BOUNDED_TYPES.get(schema[lead].dataType.simpleString())
+            aggs = [F.collect_set(BUCKET_COL)]
+            if bounded:
+                k = bounded[2](F.col(sql_ident(lead)))
+                aggs += [F.min(k), F.max(k)]
+            row = bdf.agg(*aggs).first()
+            buckets = set(row[0])
+            lo, hi = (row[1], row[2]) if bounded else (None, None)
+            entries = (manifest["files"]
+                       if manifest is not None and manifest["key"] == lead
+                       else dict.fromkeys(_data_files(cur_dir)))
+            read = []
+            for f, b in entries.items():
+                if (int(f.split("/")[0].split("=")[1]) in buckets
+                        and (b is None or (lo is not None
+                                           and b[0] <= hi and lo <= b[1]))):
+                    read.append(f)
+                else:
+                    links[f] = b
+            if read:
+                current = spark.read.schema(old).option(
+                    "basePath", str(cur_dir)).parquet(
+                    *[str(cur_dir / f) for f in read])
+                sides = list(zip("kb", merge(current, bdf)))
 
         name, vdir = self._new_version(table)
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(str(vdir))
-        if affected is not None:
-            # carry unaffected buckets over via hardlinks (same inode, zero copy)
-            affected_dirs = {f"{BUCKET_COL}={b}" for b in affected}
-            for bucket_dir in cur_dir.glob(f"{BUCKET_COL}=*"):
-                if bucket_dir.name in affected_dirs:
-                    continue
-                dst = vdir / bucket_dir.name
-                dst.mkdir()
-                for fpath in bucket_dir.iterdir():
-                    if fpath.is_file():
-                        (dst / fpath.name).hardlink_to(fpath)
+        frame = None
+        for tag, side in sides:
+            part = side.select(
+                *[F.col(sql_ident(f.name)) if f.name in side.columns
+                  else F.lit(None).cast(f.dataType).alias(f.name)
+                  for f in schema],
+                F.col(BUCKET_COL), F.lit(tag).alias(_SIDE_COL))
+            frame = part if frame is None else frame.unionByName(part)
+        frame.write.mode("overwrite").partitionBy(
+            BUCKET_COL, _SIDE_COL).parquet(str(vdir))
+        written = _flatten_sides(vdir)
+        for f in links:   # same inode, zero copy
+            dst = vdir / f
+            dst.parent.mkdir(exist_ok=True)
+            dst.hardlink_to(cur_dir / f)
+        _write_manifest(vdir, schema, lead,
+                        {**links, **_bounds(vdir, written, schema, lead)})
         self._publish(table, name)
-        if affected is None:   # first write or migration: record the layout
+        if not bucketed:   # first write or migration: record the layout
             self.set_properties(table, bucket_count=n, bucket_keys=keys)
 
     def read_state(self, spark: SparkSession, table: str) -> DataFrame:
@@ -429,6 +514,112 @@ class ParquetMergeSink:
             df = df.where(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))) \
                 .drop(TOMBSTONE_COL)
         return df
+
+
+def _read_manifest(vdir: Path) -> dict | None:
+    p = vdir / MANIFEST
+    return json.loads(p.read_text()) if p.exists() else None
+
+
+def _write_manifest(vdir: Path, schema: StructType, key: str | None,
+                    files: dict) -> None:
+    """Into a version not yet published, so no tmp-and-rename."""
+    (vdir / MANIFEST).write_text(json.dumps(
+        {"schema": schema.jsonValue(), "key": key, "files": files}))
+
+
+def _version_schema(spark: SparkSession, vdir: Path,
+                    manifest: dict | None = None) -> StructType:
+    """A version's data schema (no ``pk_bucket``): from its manifest, or,
+    for a version without one (``overwrite``, ``append``, a table written
+    before manifests), merged from every file footer — a Spark job.
+    Without one of the two, Spark would take the schema of an arbitrary
+    file and could drop a column only newer files carry: after an
+    add-column upsert, files the batch did not touch keep the old schema
+    (hardlinked, deliberately not rewritten)."""
+    manifest = manifest or _read_manifest(vdir)
+    if manifest is not None:
+        return StructType.fromJson(manifest["schema"])
+    merged = spark.read.option("mergeSchema", "true").parquet(str(vdir))
+    return StructType([f for f in merged.schema if f.name != BUCKET_COL])
+
+
+def _table_schema(table: str, old: StructType,
+                  batch: StructType) -> StructType:
+    """``old``'s columns in order, then the batch's new ones. Raises when
+    the batch gives an existing column another type: its files would be
+    unreadable under the table schema (and break a footer merge)."""
+    fields = list(old.fields)
+    have = {f.name: f.dataType.simpleString() for f in fields}
+    for f in batch.fields:
+        got = f.dataType.simpleString()
+        if f.name not in have:
+            fields.append(StructField(f.name, f.dataType, True))
+        elif have[f.name] != got:
+            raise ValueError(
+                f"table {table!r}: column {f.name!r} is {have[f.name]}, "
+                f"the batch gives {got}")
+    return StructType(fields)
+
+
+def _data_files(vdir: Path) -> list[str]:
+    """Parquet data files of a version, relative to it."""
+    return sorted(str(p.relative_to(vdir)) for p in vdir.rglob("*.parquet")
+                  if not p.name.startswith((".", "_")))
+
+
+def _flatten_sides(vdir: Path) -> list[str]:
+    """Move each ``pk_bucket=N/__side=S/part-…`` written by a merge up to
+    ``pk_bucket=N/S-part-…`` (one task can write both sides' files of a
+    bucket under one name); returns the new relative paths."""
+    moved = []
+    for side_dir in vdir.glob(f"{BUCKET_COL}=*/{_SIDE_COL}=*"):
+        tag = side_dir.name.split("=", 1)[1]
+        for f in side_dir.glob("*.parquet"):
+            dst = side_dir.parent / f"{tag}-{f.name}"
+            f.rename(dst)
+            moved.append(str(dst.relative_to(vdir)))
+        shutil.rmtree(side_dir)
+    return moved
+
+
+def _bounds(vdir: Path, files: Sequence[str], schema: StructType,
+            key: str | None) -> dict:
+    """Manifest entries of freshly written files: [min, max] of ``key``
+    from each footer, or None where the key type has no usable bounds."""
+    bounded = (_BOUNDED_TYPES.get(schema[key].dataType.simpleString())
+               if key is not None else None)
+    return {f: _file_bounds(vdir / f, key, *bounded[:2]) if bounded else None
+            for f in files}
+
+
+def _file_bounds(path: Path, key: str, physical: str,
+                 marker: str) -> list | None:
+    """[min, max] of column ``key`` in one parquet file, raw footer values
+    (no data read); None when a row group has no min/max for it (INT96
+    timestamps, an all-null group) or its encoding is not the expected
+    one."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    idx = [i for i in range(md.num_columns) if md.schema.column(i).path == key]
+    if not idx or md.schema.column(idx[0]).physical_type != physical \
+            or marker not in str(md.schema.column(idx[0]).logical_type):
+        return None
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        st = md.row_group(g).column(idx[0]).statistics
+        if st is None or not st.has_min_max:
+            return None
+        a, b = st.min_raw, st.max_raw
+        if isinstance(a, bytes):
+            try:
+                a, b = a.decode(), b.decode()
+            except UnicodeDecodeError:
+                return None
+        lo = a if lo is None else min(lo, a)
+        hi = b if hi is None else max(hi, b)
+    return None if lo is None else [lo, hi]
 
 
 def _replace_text(dst: Path, text: str) -> None:

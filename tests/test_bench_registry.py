@@ -192,6 +192,12 @@ def test_emb_dim_refuses_empty_table(tmp_path):
         queries._emb_dim(str(tmp_path))
 
 
+def test_emb_dim_refuses_directory_without_part_files(tmp_path):
+    (tmp_path / "embeddings.parquet").mkdir()
+    with pytest.raises(ValueError, match="is empty — cannot infer embedding dim"):
+        queries._emb_dim(str(tmp_path))
+
+
 def test_runner_times_registered_query_on_replica(spark, replicated):
     build, wall = _load_runner().passes(spark, ["q_ivfpq_topk"],
                                         str(replicated), 1, run=True)

@@ -122,7 +122,7 @@ FIRST_CSV = """DateTime,Sensor_id,PM25
 def test_audit_counts_of_second_file_match_pandas(spark, tmp_path, keep,
                                                   prior):
     """The counts of a file merged into an existing table: a bucketed one
-    (observed on the sink's affected-bucket collect) or one last written
+    (observed on the sink's bucket-and-range aggregate) or one last written
     by overwrite (observed on the migrating write). Dedupe '' counts with
     its own aggregation."""
     import os
@@ -387,7 +387,7 @@ def test_streaming_multi_file_trigger_matches_batch(spark, tmp_path):
 
 
 # Spark jobs one queue file may run on the paper's path (header, type
-# inference, affected-bucket collect, merge write, audit append) in the
+# inference, bucket-and-range aggregate, merge write, audit append) in the
 # test session. Measured at this bound; raise it only with a reason.
 SECOND_FILE_JOB_BUDGET = 12
 
