@@ -45,7 +45,7 @@ def tuned_builder(app_name: str = "datapump-spark") -> SparkSession.Builder:
         # Parquet timestamps as INT64 micros. Spark 4.1's default, INT96,
         # gets no min/max in the footer, so ParquetMergeSink could not
         # bound a timestamp-keyed file and would read every file of the
-        # buckets a batch touches. This session conf gives exact INT64
+        # table on each merge. This session conf gives exact INT64
         # min/max; a per-write ``.option(...)`` does not override it
         # (measured, Spark 4.1.2). Reads take either encoding.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

@@ -22,8 +22,7 @@ Spark-first mapping (the SURVEY §1.1 table):
   :class:`~datapump_spark.sinks.upsert.ParquetMergeSink` table's *current
   version* directory. Views rather than external tables because the sink
   publishes versioned directories behind a pointer — each publish re-points
-  the view (a catalog-only operation, no data movement). The internal
-  ``pk_bucket`` partition column is projected away.
+  the view (a catalog-only operation, no data movement).
 - **alias** (K1, ``{org}-{package}-{resource}``, datapump.py:224-225) → a
   view in the ``default`` database selecting from the resource view.
 
@@ -46,7 +45,7 @@ import re
 from pyspark.sql import SparkSession
 
 from datapump_spark.jobspec import JobSpec
-from datapump_spark.sinks.upsert import BUCKET_COL, ParquetMergeSink
+from datapump_spark.sinks.upsert import ParquetMergeSink
 
 _NAME_RE = re.compile(r"^[A-Za-z0-9_-]+$")
 _ORG_MARKER_PREFIX = "_dp_org__"
@@ -120,12 +119,9 @@ class SparkCatalogNamespace:
         loc = sink.current_version(table)
         if loc is None:
             raise NamespaceError(f"sink table {table!r} does not exist")
-        cols = self.spark.read.parquet(str(loc)).columns
-        proj = ", ".join(f"`{c}`" for c in cols if c != BUCKET_COL)
         name = f"`{db}`.`{_ident(resource)}`"
         self.spark.sql(
-            f"CREATE OR REPLACE VIEW {name} AS "
-            f"SELECT {proj} FROM parquet.`{loc}`")
+            f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM parquet.`{loc}`")
         return name
 
     def register_alias(self, alias: str, org: str, package: str,

@@ -41,7 +41,8 @@ stamp_updated()       ALTER TABLE … SET TBLPROPERTIES ('updated_at'=…)
 v-<ns>/_manifest.json one ``_delta_log`` commit: ``files`` [min, max] of
                       the leading PK = each ``add`` action's
                       ``stats.minValues/maxValues`` (data skipping);
-                      ``schema`` = the ``metaData`` action's schemaString
+                      ``schema`` = the ``metaData`` action's schemaString;
+                      ``keys`` = the MERGE ``ON`` columns
 ====================  =====================================================
 
 The manifest is the piece of Delta's log this sink keeps: MERGE reads
@@ -52,8 +53,10 @@ improves the hand-built sink where it is weakest: the transaction log
 replaces the single-writer pointer file (multi-writer optimistic
 concurrency), its stats cover every column, not just the leading key,
 and OPTIMIZE/VACUUM run incrementally instead of rewriting versions.
-The pk_bucket hash-partitioning carries over unchanged as a MERGE
-pruning key (``ON`` conjunct below).
+Neither profile hash-partitions by key: file-level min/max stats are the
+only MERGE pruning, and ``compact()``'s range clustering on the leading
+key is ``compact_sql(table, zorder_by=[leading key])``, which keeps a
+time-ordered feed's MERGE to the files of its window.
 """
 
 from __future__ import annotations
@@ -85,9 +88,9 @@ class DeltaMergeProfile:
     # -- DDL -------------------------------------------------------------
 
     def create_sql(self, table: str, partition_by: Sequence[str] = ()) -> str:
-        """overwrite()/first-write twin. Partitioning by the PK hash
-        bucket keeps the MERGE partition-pruned like the parquet sink's
-        bucket filter (which then also prunes by key range)."""
+        """overwrite()/first-write twin. ``partition_by`` suits a
+        low-cardinality column; MERGE pruning by key needs none, it
+        comes from the file stats (module docstring)."""
         part = ""
         if partition_by:
             cols = ", ".join(sql_ident(c) for c in partition_by)

@@ -9,23 +9,24 @@ no native upsert, so two profiles:
 - ``ParquetMergeSink`` — lake profile for local/testing: MERGE emulated as
   anti-join(overlapping stored files, batch keys) ∪ batch. Tables live in
   versioned directories behind an atomic pointer file (os.replace), so a
-  crash never leaves a missing/torn table. Upserted tables are
-  partitioned by a PK hash bucket (``pk_bucket``), and every published
-  version carries a ``_manifest.json`` (Spark skips ``_`` files): the
-  table schema plus, per data file, the min and max of the leading PK
-  column. A batch reads and rewrites ONLY the stored files that lie in a
-  bucket holding one of its keys AND whose key range overlaps the
-  batch's; every other file is hardlinked into the new version,
-  byte-identical, O(1) data movement. So a time-ordered feed, whose
-  files each overlap the previous window only, costs O(its window) per
-  file, not O(table) — the reference's PK-index cost model. Reads take
-  the schema from the manifest instead of a footer scan. ``upsert`` and
-  the CDC ``apply_cdc`` share that one write path and differ only in the
-  per-file merge, so both accept a table in either layout (a table last
-  written by ``overwrite`` is migrated into buckets). At production
-  scale the same call shape maps to Delta ``MERGE INTO``, whose log
-  holds the same two things (add-file min/max stats for data skipping,
-  the table schema); this class documents the seam and keeps semantics
+  crash never leaves a missing/torn table. Every version a merge
+  publishes is flat data files plus a ``_manifest.json`` (Spark skips
+  ``_`` files): the table schema, the table's keys, and per data file the
+  min and max of the leading key. A batch reads and rewrites ONLY the
+  stored files whose key range overlaps the batch's; every other file is
+  hardlinked into the new version, byte-identical, O(1) data movement.
+  So a time-ordered feed, whose files each overlap the previous window
+  only, costs O(its window) per file, not O(table) — the reference's
+  PK-index cost model. Reads take the schema from the manifest instead
+  of a footer scan. ``upsert`` and the CDC ``apply_cdc`` share that one
+  write path and differ only in the per-file merge; a version whose
+  manifest records no keys (``overwrite``, ``append``, or the
+  hash-bucketed ``pk_bucket=N/`` layout this sink wrote before) is read
+  whole and rewritten flat by its next merge. At production scale the
+  same call shape maps to Delta ``MERGE INTO``, whose log holds the same
+  things (add-file min/max stats for data skipping, the table schema) and
+  whose ``OPTIMIZE ZORDER BY`` is :meth:`ParquetMergeSink.compact`'s
+  range clustering; this class documents the seam and keeps semantics
   testable with zero extra dependencies. Single-writer: version GC
   assumes no concurrent reader holds a superseded version (Delta's log
   is the multi-writer answer).
@@ -40,14 +41,18 @@ Scale notes: the manifest's key bounds come from the footers of only the
 files a publish wrote (driver-side, no Spark job), so keeping it is
 O(new files); the bounds need footer min/max, which parquet INT96
 timestamps lack, hence ``TIMESTAMP_MICROS`` in ``session.tuned_builder``
-(a session writing INT96 still merges correctly, reading every file of
-the touched buckets). JDBC batches default to 1000 rows/execute to bound
-round-trips.
+(a session writing INT96 still merges correctly, reading every file).
+A batch spread over the whole key range reads every file, and a tiny
+random-key batch rewrites each file its range falls in, whole; the
+number of files a merge writes follows its write tasks (about two per
+queue file: kept rows and batch rows). JDBC batches default to 1000
+rows/execute to bound round-trips.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import re
 import shutil
 import time
@@ -66,13 +71,15 @@ from datapump_spark.functions.sqltext import sql_dq_ident, sql_ident
 _UPDATED_RE = re.compile(r" \(UPDATED: (.*?)\)$")
 
 
+# partition column of the hash-bucketed layout this sink wrote before
+# its manifests kept keys: hidden by read(), gone after the next merge
 BUCKET_COL = "pk_bucket"
 # CDC delete marker column (apply_cdc): deletes are retained as marker
 # rows so late out-of-order updates older than the delete stay dead.
 TOMBSTONE_COL = "__tombstone"
-# Per-version manifest: {"schema": data schema (StructType JSON, no
-# pk_bucket), "key": leading PK column or null, "files": {relative path:
-# [min, max] of that column, or null when unknown}}.
+# Per-version manifest: {"schema": data schema (StructType JSON), "keys":
+# the table's PK columns or null (unkeyed), "files": {data file name:
+# [min, max] of the leading key, or null when unknown}}.
 MANIFEST = "_manifest.json"
 # write-time partition column that keeps stored (kept) rows and batch
 # rows in separate files; its directories are flattened before publish
@@ -100,10 +107,9 @@ class ParquetMergeSink:
     On-disk layout (crash-atomic via the pointer file)::
 
         root/<table>/_current            # text: name of the live version
-        root/<table>/v-<ns>/             # overwrite(): plain parquet
-        root/<table>/v-<ns>/pk_bucket=N/ # upsert(): hash-bucketed parquet
-        root/<table>/v-<ns>/_manifest.json  # upsert()/compact(): schema
-                                         # + per-file leading-key bounds
+        root/<table>/v-<ns>/             # parquet data files
+        root/<table>/v-<ns>/_manifest.json  # merges/compact(): schema,
+                                         # keys, per-file key bounds
 
     ``_current`` is flipped with ``os.replace`` (atomic on POSIX), so a
     reader always resolves a complete version; a crash mid-write leaves
@@ -111,8 +117,7 @@ class ParquetMergeSink:
     The manifest is written into the new version before the flip.
     """
 
-    def __init__(self, root: str | Path, n_buckets: int = 16,
-                 retain_versions: int = 1):
+    def __init__(self, root: str | Path, retain_versions: int = 1):
         """``retain_versions`` > 1 keeps that many published versions on
         disk for time travel (:meth:`read` with ``version=``,
         :meth:`versions`). Retention is CHEAP for upsert tables: a new
@@ -121,7 +126,6 @@ class ParquetMergeSink:
         per-version deltas plus one inode table, the same economics as a
         lakehouse transaction log. Default 1 = publish-and-GC."""
         self.root = Path(root)
-        self.n_buckets = n_buckets
         self.retain_versions = max(1, int(retain_versions))
         self.root.mkdir(parents=True, exist_ok=True)
 
@@ -153,8 +157,8 @@ class ParquetMergeSink:
                 f"version {version!r} of table {table!r} is not retained "
                 f"(have: {self.versions(table)})")
         # the schema comes from the version's manifest (see _version_schema)
-        df = spark.read.schema(_version_schema(spark, vdir)).parquet(str(vdir))
-        return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
+        return spark.read.schema(_version_schema(spark, vdir)).parquet(
+            str(vdir)).drop(BUCKET_COL)
 
     def _history_path(self, table: str) -> Path:
         return self.path(table) / "_history"
@@ -228,7 +232,7 @@ class ParquetMergeSink:
         df.write.mode("append").parquet(str(cur))
 
     def compact(self, spark: SparkSession, table: str,
-                target_file_mb: int = 128) -> dict:
+                target_file_mb: float = 128) -> dict:
         """Bin-pack small part files into ~``target_file_mb`` outputs (the
         Delta ``OPTIMIZE`` seam). The append path (audit logs) and
         per-batch upserts accumulate files whose open/footer overhead
@@ -236,11 +240,12 @@ class ParquetMergeSink:
         coalesced and flips the pointer atomically — readers see either
         the old layout or the new one, never a partial rewrite.
 
-        Bucket-partitioned tables keep their ``pk_bucket=…`` layout (the
-        rewrite hash-partitions on the bucket column, so each bucket dir
-        lands exactly one file). The new version gets a manifest whose
-        key bounds come from the new files' footers, so merges still
-        prune files and reads still skip the footer scan. Returns
+        A keyed table is range-partitioned and sorted on its leading key
+        (``OPTIMIZE ZORDER BY``), so the new files hold disjoint key
+        ranges and the next merge of a time-ordered feed rewrites only
+        the file its window overlaps. The new version gets a manifest
+        whose key bounds come from the new files' footers, so merges
+        still prune files and reads still skip the footer scan. Returns
         ``{files_before, files_after, total_mb}``.
         """
         cur = self.current_version(table)
@@ -248,20 +253,20 @@ class ParquetMergeSink:
             raise ValueError(f"no such table: {table!r}")
         files = _data_files(cur)
         total_mb = sum((cur / f).stat().st_size for f in files) / 2**20
-        n_out = max(1, -(-int(total_mb) // target_file_mb))
-        schema = _version_schema(spark, cur)
-        df = spark.read.schema(schema).parquet(str(cur))
-        name, vdir = self._new_version(table)
-        key = None
-        if any(cur.glob(f"{BUCKET_COL}=*")):
-            key = self.get_properties(table).get("bucket_keys", [None])[0]
-            (df.repartition(n_out, F.col(BUCKET_COL))
-             .write.mode("overwrite").partitionBy(BUCKET_COL)
-             .parquet(str(vdir)))
+        n_out = max(1, math.ceil(total_mb / target_file_mb))
+        manifest = _read_manifest(cur)
+        keys = manifest.get("keys") if manifest is not None else None
+        schema = _version_schema(spark, cur, manifest)
+        df = spark.read.schema(schema).parquet(str(cur)).drop(BUCKET_COL)
+        if keys:
+            lead = F.col(sql_ident(keys[0]))
+            df = df.repartitionByRange(n_out, lead).sortWithinPartitions(lead)
         else:
-            df.repartition(n_out).write.mode("overwrite").parquet(str(vdir))
+            df = df.repartition(n_out)
+        name, vdir = self._new_version(table)
+        df.write.mode("overwrite").parquet(str(vdir))
         written = _data_files(vdir)
-        _write_manifest(vdir, schema, key, _bounds(vdir, written, schema, key))
+        _write_manifest(vdir, schema, keys, _bounds(vdir, written, schema, keys))
         self._publish(table, name)
         return {
             "files_before": len(files),
@@ -273,10 +278,11 @@ class ParquetMergeSink:
                 keys: Sequence[str]) -> None:
         """K3 truncate + K2 upsert (datastore_delete-on-Truncate, then
         upsert, datapump.py:545-566) in one publish: ``df`` becomes the
-        table's only rows, in the bucketed layout. The old version stays
-        live until the new one is published, so a batch that fails to
-        read leaves the table as it was."""
-        self._merge_buckets(spark, df, table, list(keys), None)
+        table's only rows, keyed by ``keys`` — the new keys are in the
+        manifest of the version the pointer flips to. The old version
+        stays live until the new one is published, so a batch that fails
+        to read leaves the table as it was."""
+        self._merge_files(spark, df, table, list(keys), None)
 
     # ---------------------------------------------------------- metadata (K1/K4)
 
@@ -316,16 +322,12 @@ class ParquetMergeSink:
         """Full-refresh write (stats tables are replaced per run, K6)."""
         self._swap_write(df, table)
 
-    def _bucket_expr(self, keys: Sequence[str], n: int):
-        return F.pmod(F.xxhash64(*[F.col(sql_ident(k)) for k in keys]),
-                      F.lit(n)).cast("int")
-
     def upsert(self, spark: SparkSession, df: DataFrame, table: str,
                keys: Sequence[str]) -> None:
         """K2 MERGE: batch rows win on PK collision (reference upsert
         semantics; Delta equivalent: WHEN MATCHED UPDATE ALL / WHEN NOT
         MATCHED INSERT ALL) — anti-join(current, batch keys) ∪ batch over
-        the stored files the batch may touch, see :meth:`_merge_buckets`."""
+        the stored files the batch may touch, see :meth:`_merge_files`."""
         keys = list(keys)
 
         def merge(current: DataFrame,
@@ -335,14 +337,14 @@ class ParquetMergeSink:
                 on=keys, how="left_anti")
             return kept, batch
 
-        self._merge_buckets(spark, df, table, keys, merge)
+        self._merge_files(spark, df, table, keys, merge)
 
     def apply_cdc(self, spark: SparkSession, changes: DataFrame, table: str,
                   keys: Sequence[str], seq_cols: Sequence[str],
                   op_col: str = "op", delete_op: str = "D") -> None:
         """MERGE a CDC changelog batch: WHEN MATCHED AND op='D' DELETE /
         WHEN MATCHED UPDATE ALL / WHEN NOT MATCHED INSERT — the Delta
-        ``foreachBatch + MERGE`` CDC recipe on the bucketed sink.
+        ``foreachBatch + MERGE`` CDC recipe on this sink.
 
         Sequence-aware and tombstone-retaining, so it is correct under
         out-of-order delivery ACROSS batches, not just within one:
@@ -402,87 +404,71 @@ class ParquetMergeSink:
             )
             return kept, incoming
 
-        self._merge_buckets(spark, winners, table, keys, merge)
+        self._merge_files(spark, winners, table, keys, merge)
 
-    def _merge_buckets(self, spark: SparkSession, df: DataFrame, table: str,
-                       keys: list[str],
-                       merge: Callable[[DataFrame, DataFrame],
-                                       tuple[DataFrame, DataFrame]] | None,
-                       ) -> None:
+    def _merge_files(self, spark: SparkSession, df: DataFrame, table: str,
+                     keys: list[str],
+                     merge: Callable[[DataFrame, DataFrame],
+                                     tuple[DataFrame, DataFrame]] | None,
+                     ) -> None:
         """The one MERGE write path. ``merge(current, batch)`` receives
-        the stored rows the batch may touch and the batch, both carrying
-        ``pk_bucket``, and returns ``(kept, incoming)``: the stored rows
-        that stay and the batch rows that go in. ``merge=None`` ignores
-        the stored rows (:meth:`replace`).
+        the stored rows the batch may touch and the batch, and returns
+        ``(kept, incoming)``: the stored rows that stay and the batch
+        rows that go in. ``merge=None`` ignores the stored rows
+        (:meth:`replace`).
 
-        Bounded cost: the table is partitioned by ``pk_bucket =
-        pmod(xxhash64(pk), n_buckets)`` and the live version's manifest
-        holds each file's [min, max] of the leading PK column. One
+        Bounded cost: the live version's manifest holds the table's keys
+        and each data file's [min, max] of the leading key. One
         aggregate over the batch (its first action, so it also fills the
-        caller's observations) gives the batch's buckets and its range of
-        that column. Only files in one of those buckets whose range
-        overlaps the batch's, or that have no bounds, are read, merged
-        and rewritten; kept rows and batch rows go to separate new files,
-        so a batch file's range is the batch's own. Every other file is
-        hardlinked into the new version (same inode, no data copied), and
-        a batch that no file overlaps reads nothing and writes only
-        itself: the reference's PK-index upsert cost
-        (datapump.py:560-566), O(the batch's key range), not O(table). A
-        first write is the batch alone; a table last written by
-        :meth:`overwrite` migrates once, every row moved into its bucket.
+        caller's observations) gives the batch's range of that column.
+        Only files whose range overlaps the batch's, or that have no
+        bounds, are read, merged and rewritten; kept rows and batch rows
+        go to separate new files, so a batch file's range is the batch's
+        own. Every other file is hardlinked into the new version (same
+        inode, no data copied), and a batch that no file overlaps reads
+        nothing and writes only itself: the reference's PK-index upsert
+        cost (datapump.py:560-566), O(the batch's key range), not
+        O(table). A first write is the batch alone; a version whose
+        manifest records no keys (see the module docstring) is read
+        whole and rewritten flat once.
 
-        The new schema is the table's plus the batch's new columns, in
-        that order, and every written file carries all of it. A batch
-        that gives an existing column another type raises before
-        anything is written, naming the column."""
-        # a replace drops the old layout along with the old rows
-        props = self.get_properties(table) if merge is not None else {}
-        n = int(props.get("bucket_count", self.n_buckets))
-        stored_keys = props.get("bucket_keys")
-        if stored_keys is not None and list(stored_keys) != keys:
-            raise ValueError(
-                f"table {table!r} bucketed by {stored_keys}, merge keyed by {keys}")
-        bdf = df.withColumn(BUCKET_COL, self._bucket_expr(keys, n))
-
+        A merge keyed otherwise than the table raises before anything is
+        written, naming both key lists. The new schema is the table's
+        plus the batch's new columns, in that order, and every written
+        file carries all of it. A batch that gives an existing column
+        another type raises before anything is written, naming the
+        column."""
+        # a replace drops the old keys along with the old rows
         cur_dir = self.current_version(table) if merge is not None else None
         manifest = _read_manifest(cur_dir) if cur_dir is not None else None
+        stored_keys = manifest.get("keys") if manifest is not None else None
+        if stored_keys is not None and stored_keys != keys:
+            raise ValueError(f"table {table!r} is keyed by {stored_keys}, "
+                             f"the merge by {keys}")
         old = (_version_schema(spark, cur_dir, manifest)
                if cur_dir is not None else StructType())
         schema = _table_schema(table, old, df.schema)
-        lead = keys[0]
-        bucketed = cur_dir is not None and any(cur_dir.glob(f"{BUCKET_COL}=*"))
-        sides: list[tuple[str, DataFrame]] = [("b", bdf)]
+        sides: list[tuple[str, DataFrame]] = [("b", df)]
         links: dict[str, list | None] = {}
-        if cur_dir is not None and not bucketed:
-            current = spark.read.schema(old).parquet(str(cur_dir))
-            sides = list(zip("kb", merge(
-                current.withColumn(BUCKET_COL, self._bucket_expr(keys, n)),
-                bdf)))
-        elif bucketed:
-            bounded = _BOUNDED_TYPES.get(schema[lead].dataType.simpleString())
-            aggs = [F.collect_set(BUCKET_COL)]
-            if bounded:
-                k = bounded[2](F.col(sql_ident(lead)))
-                aggs += [F.min(k), F.max(k)]
-            row = bdf.agg(*aggs).first()
-            buckets = set(row[0])
-            lo, hi = (row[1], row[2]) if bounded else (None, None)
-            entries = (manifest["files"]
-                       if manifest is not None and manifest["key"] == lead
-                       else dict.fromkeys(_data_files(cur_dir)))
-            read = []
-            for f, b in entries.items():
-                if (int(f.split("/")[0].split("=")[1]) in buckets
-                        and (b is None or (lo is not None
-                                           and b[0] <= hi and lo <= b[1]))):
-                    read.append(f)
-                else:
-                    links[f] = b
+        if cur_dir is not None:
+            read = [cur_dir]   # no keys recorded: read whole, write flat
+            if stored_keys is not None:
+                bounded = _BOUNDED_TYPES.get(
+                    schema[keys[0]].dataType.simpleString())
+                lo = hi = None
+                if bounded:
+                    k = bounded[2](F.col(sql_ident(keys[0])))
+                    lo, hi = df.agg(F.min(k), F.max(k)).first()
+                read = []
+                for f, b in manifest["files"].items():
+                    if b is None or (lo is not None
+                                     and b[0] <= hi and lo <= b[1]):
+                        read.append(cur_dir / f)
+                    else:
+                        links[f] = b
             if read:
-                current = spark.read.schema(old).option(
-                    "basePath", str(cur_dir)).parquet(
-                    *[str(cur_dir / f) for f in read])
-                sides = list(zip("kb", merge(current, bdf)))
+                current = spark.read.schema(old).parquet(*map(str, read))
+                sides = list(zip("kb", merge(current.drop(BUCKET_COL), df)))
 
         name, vdir = self._new_version(table)
         frame = None
@@ -491,24 +477,19 @@ class ParquetMergeSink:
                 *[F.col(sql_ident(f.name)) if f.name in side.columns
                   else F.lit(None).cast(f.dataType).alias(f.name)
                   for f in schema],
-                F.col(BUCKET_COL), F.lit(tag).alias(_SIDE_COL))
+                F.lit(tag).alias(_SIDE_COL))
             frame = part if frame is None else frame.unionByName(part)
-        frame.write.mode("overwrite").partitionBy(
-            BUCKET_COL, _SIDE_COL).parquet(str(vdir))
+        frame.write.mode("overwrite").partitionBy(_SIDE_COL).parquet(str(vdir))
         written = _flatten_sides(vdir)
         for f in links:   # same inode, zero copy
-            dst = vdir / f
-            dst.parent.mkdir(exist_ok=True)
-            dst.hardlink_to(cur_dir / f)
-        _write_manifest(vdir, schema, lead,
-                        {**links, **_bounds(vdir, written, schema, lead)})
+            (vdir / f).hardlink_to(cur_dir / f)
+        _write_manifest(vdir, schema, keys,
+                        {**links, **_bounds(vdir, written, schema, keys)})
         self._publish(table, name)
-        if not bucketed:   # first write or migration: record the layout
-            self.set_properties(table, bucket_count=n, bucket_keys=keys)
 
     def read_state(self, spark: SparkSession, table: str) -> DataFrame:
-        """Live CDC state: the table minus tombstone marker rows (and
-        minus the physical bucket/marker columns)."""
+        """Live CDC state: the table minus tombstone marker rows and
+        minus the marker column."""
         df = self.read(spark, table)
         if TOMBSTONE_COL in df.columns:
             df = df.where(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))) \
@@ -521,11 +502,11 @@ def _read_manifest(vdir: Path) -> dict | None:
     return json.loads(p.read_text()) if p.exists() else None
 
 
-def _write_manifest(vdir: Path, schema: StructType, key: str | None,
-                    files: dict) -> None:
+def _write_manifest(vdir: Path, schema: StructType,
+                    keys: Sequence[str] | None, files: dict) -> None:
     """Into a version not yet published, so no tmp-and-rename."""
     (vdir / MANIFEST).write_text(json.dumps(
-        {"schema": schema.jsonValue(), "key": key, "files": files}))
+        {"schema": schema.jsonValue(), "keys": keys, "files": files}))
 
 
 def _version_schema(spark: SparkSession, vdir: Path,
@@ -569,28 +550,28 @@ def _data_files(vdir: Path) -> list[str]:
 
 
 def _flatten_sides(vdir: Path) -> list[str]:
-    """Move each ``pk_bucket=N/__side=S/part-…`` written by a merge up to
-    ``pk_bucket=N/S-part-…`` (one task can write both sides' files of a
-    bucket under one name); returns the new relative paths."""
+    """Move each ``__side=S/part-…`` written by a merge up to
+    ``S-part-…`` (one task can write both sides' files under one name);
+    returns the new file names."""
     moved = []
-    for side_dir in vdir.glob(f"{BUCKET_COL}=*/{_SIDE_COL}=*"):
+    for side_dir in vdir.glob(f"{_SIDE_COL}=*"):
         tag = side_dir.name.split("=", 1)[1]
         for f in side_dir.glob("*.parquet"):
-            dst = side_dir.parent / f"{tag}-{f.name}"
-            f.rename(dst)
-            moved.append(str(dst.relative_to(vdir)))
+            f.rename(vdir / f"{tag}-{f.name}")
+            moved.append(f"{tag}-{f.name}")
         shutil.rmtree(side_dir)
     return moved
 
 
 def _bounds(vdir: Path, files: Sequence[str], schema: StructType,
-            key: str | None) -> dict:
-    """Manifest entries of freshly written files: [min, max] of ``key``
-    from each footer, or None where the key type has no usable bounds."""
-    bounded = (_BOUNDED_TYPES.get(schema[key].dataType.simpleString())
-               if key is not None else None)
-    return {f: _file_bounds(vdir / f, key, *bounded[:2]) if bounded else None
-            for f in files}
+            keys: Sequence[str] | None) -> dict:
+    """Manifest entries of freshly written files: [min, max] of the
+    leading key from each footer, or None for an unkeyed table or where
+    the key type has no usable bounds."""
+    bounded = (_BOUNDED_TYPES.get(schema[keys[0]].dataType.simpleString())
+               if keys else None)
+    return {f: _file_bounds(vdir / f, keys[0], *bounded[:2]) if bounded
+            else None for f in files}
 
 
 def _file_bounds(path: Path, key: str, physical: str,

@@ -10,7 +10,7 @@ import pytest
 
 from datapump_spark.jobspec import JobSpec
 from datapump_spark.sinks.catalog import NamespaceError, SparkCatalogNamespace
-from datapump_spark.sinks.upsert import BUCKET_COL, ParquetMergeSink
+from datapump_spark.sinks.upsert import ParquetMergeSink
 from datapump_spark.streaming.pipeline import Pipeline
 
 FIXTURE_DIR = Path(__file__).parent / "data" / "iot"
@@ -76,7 +76,7 @@ def test_pipeline_sync_registers_views(spark, ns, tmp_path):
 
     res = spark.sql("SELECT * FROM `cat_org__cat_pkg`.`cat_res`")
     assert res.count() == sink.read(spark, "cat-res").count() > 0
-    assert BUCKET_COL not in res.columns           # internal column hidden
+    assert res.columns == sink.read(spark, "cat-res").columns
     # derived stats table + global alias view (K1/K6)
     assert spark.sql("SELECT * FROM `cat_org__cat_pkg`.`cat_res_stats`").count() > 0
     alias = spark.sql("SELECT * FROM `default`.`cat_org_cat_pkg_cat_res`")

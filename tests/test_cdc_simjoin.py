@@ -160,7 +160,7 @@ def _expected_state():
 def test_apply_cdc_micro_batches_match_batch(spark, tmp_path):
     from datapump_spark.sinks.upsert import ParquetMergeSink
 
-    sink = ParquetMergeSink(tmp_path / "sink", n_buckets=4)
+    sink = ParquetMergeSink(tmp_path / "sink")
     rows = _cdc_rows()
     # three micro-batches, INCLUDING out-of-order delivery across batches
     for lo, hi in [(0, 4), (4, 8), (8, 10)]:
@@ -175,7 +175,7 @@ def test_apply_cdc_micro_batches_match_batch(spark, tmp_path):
 def test_apply_cdc_replay_idempotent(spark, tmp_path):
     from datapump_spark.sinks.upsert import ParquetMergeSink
 
-    sink = ParquetMergeSink(tmp_path / "sink", n_buckets=4)
+    sink = ParquetMergeSink(tmp_path / "sink")
     b = spark.createDataFrame(_cdc_rows(),
                               "k long, seq long, op string, v string")
     sink.apply_cdc(spark, b, "t", ["k"], ["seq"])
@@ -189,12 +189,14 @@ def test_apply_cdc_replay_idempotent(spark, tmp_path):
 
 
 def test_apply_cdc_migrates_overwrite_layout(spark, tmp_path):
-    """A table last written by overwrite() has no pk_bucket directories;
-    apply_cdc migrates it into buckets on the way, exactly as upsert
-    does (one merge write path)."""
-    from datapump_spark.sinks.upsert import BUCKET_COL, ParquetMergeSink
+    """A table last written by overwrite() records no keys; apply_cdc
+    reads it whole and publishes it keyed, exactly as upsert does (one
+    merge write path)."""
+    import json
 
-    sink = ParquetMergeSink(tmp_path / "sink", n_buckets=4)
+    from datapump_spark.sinks.upsert import MANIFEST, ParquetMergeSink
+
+    sink = ParquetMergeSink(tmp_path / "sink")
     sink.overwrite(spark.createDataFrame(
         [(1, 1, "a"), (2, 1, "b")], "k long, seq long, v string"), "t")
     changes = spark.createDataFrame(
@@ -204,7 +206,8 @@ def test_apply_cdc_migrates_overwrite_layout(spark, tmp_path):
     got = {(r["k"], r["seq"], r["v"])
            for r in sink.read_state(spark, "t").collect()}
     assert got == {(2, 2, "B"), (3, 1, "c")}
-    assert any(sink.current_version("t").glob(f"{BUCKET_COL}=*"))
+    manifest = json.loads((sink.current_version("t") / MANIFEST).read_text())
+    assert manifest["keys"] == ["k"]
 
 
 def test_apply_cdc_hostile_names(spark, tmp_path):
@@ -213,7 +216,7 @@ def test_apply_cdc_hostile_names(spark, tmp_path):
     delete round-trip through read_state."""
     from datapump_spark.sinks.upsert import ParquetMergeSink
 
-    sink = ParquetMergeSink(tmp_path / "sink", n_buckets=4)
+    sink = ParquetMergeSink(tmp_path / "sink")
     schema = "`k.k` long, seq long, op string, `a``b Join` string"
     for rows in ([(1, 1, "I", "a"), (2, 1, "I", "b"), (3, 1, "I", "c")],
                  [(1, 2, "U", "A"), (2, 2, "D", None)]):
@@ -241,7 +244,7 @@ def test_apply_cdc_streaming_foreachbatch(spark, tmp_path):
         spark.createDataFrame(rows[lo:hi],
                               "k long, seq long, op string, v string") \
             .coalesce(1).write.parquet(str(src / f"b{i}"))
-    sink = ParquetMergeSink(tmp_path / "sink", n_buckets=4)
+    sink = ParquetMergeSink(tmp_path / "sink")
     stream = (
         spark.readStream.schema("k long, seq long, op string, v string")
         .option("maxFilesPerTrigger", 1)

@@ -1,12 +1,12 @@
 """ParquetMergeSink: file-pruned bounded upsert + versioned atomic publish.
 
 The scale contract: each published version carries a ``_manifest.json``
-with the table schema and every data file's [min, max] of the leading PK
-column. A merge reads and rewrites ONLY the files in a bucket holding one
-of its keys whose range overlaps the batch's; every other file is carried
-into the new version as a hardlink (same inode, byte-identical), so a
-time-ordered feed costs O(its window) per file, not O(table). Reads take
-the schema from the manifest, not from a footer-scan job.
+with the table schema, its keys and every data file's [min, max] of the
+leading PK column. A merge reads and rewrites ONLY the files whose range
+overlaps the batch's; every other file is carried into the new version
+as a hardlink (same inode, byte-identical), so a time-ordered feed costs
+O(its window) per file, not O(table). Reads take the schema from the
+manifest, not from a footer-scan job.
 """
 
 from __future__ import annotations
@@ -33,73 +33,66 @@ from datapump_spark.sinks.upsert import (
 )
 
 
-def _files(vdir, skip_buckets=()):
-    out = {}
-    for bucket_dir in sorted(vdir.glob(f"{BUCKET_COL}=*")):
-        if bucket_dir.name in skip_buckets:
-            continue
-        for f in sorted(bucket_dir.iterdir()):
-            if f.is_file():
-                st = f.stat()
-                out[f"{bucket_dir.name}/{f.name}"] = (st.st_ino, st.st_size)
-    return out
-
-
 @pytest.fixture()
 def sink(tmp_path):
-    return ParquetMergeSink(tmp_path / "lake", n_buckets=8)
+    return ParquetMergeSink(tmp_path / "lake")
 
 
-def test_upsert_rewrites_only_affected_buckets(spark, sink):
-    df1 = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(64)], "k long, v string")
-    sink.upsert(spark, df1, "t", ["k"])
-    v1 = sink.current_version("t")
-    assert v1 is not None and any(v1.glob(f"{BUCKET_COL}=*"))
+def _four_files(spark, sink):
+    """Table ``t`` of keys 0..63 in four one-file upserts with the
+    disjoint ranges [0, 15], [16, 31], [32, 47], [48, 63]."""
+    for lo in range(0, 64, 16):
+        sink.upsert(spark, spark.range(lo, lo + 16, numPartitions=1)
+                    .selectExpr("id AS k", "concat('v', id) AS v"), "t", ["k"])
+    files = _manifest(sink, "t")["files"]
+    assert sorted(files.values()) == [[lo, lo + 15] for lo in range(0, 64, 16)]
+    return files, _inodes(sink.current_version("t"))
 
-    # one-key batch touches exactly one bucket
-    df2 = spark.createDataFrame([(3, "NEW")], "k long, v string")
-    sink.upsert(spark, df2, "t", ["k"])
-    v2 = sink.current_version("t")
-    assert v2 != v1
 
-    import pyspark.sql.functions as F
-    affected = {
-        f"{BUCKET_COL}={r[0]}"
-        for r in df2.select(
-            F.pmod(F.xxhash64("k"), F.lit(8)).cast("int")).collect()
-    }
-    assert len(affected) == 1
-    before = _files(v1, skip_buckets=affected) if v1.exists() else None
-    after = _files(v2, skip_buckets=affected)
-    # v1 is GC'd after publish; the hardlinked files preserve the inode, so
-    # compare against what the new version holds: every unaffected bucket
-    # must still be present and the affected bucket must carry the new row
-    assert len(after) >= 1
+def _file_of(files, key):
+    return next(p for p, (lo, hi) in files.items() if lo <= key <= hi)
 
+
+def test_upsert_rewrites_only_the_overlapping_file(spark, sink):
+    """A one-key batch reads the one file whose range holds its key and
+    writes that file's other rows and the batch row anew; every other
+    file keeps its inode."""
+    files, before = _four_files(spark, sink)
+    sink.upsert(spark, spark.createDataFrame([(20, "NEW")], "k long, v string"),
+                "t", ["k"])
+    after = _inodes(sink.current_version("t"))
+    hit = _file_of(files, 20)
+    assert {p: before[p] for p in files if p != hit}.items() <= after.items()
+    new = {p for p, ino in after.items() if ino not in before.values()}
+    assert hit not in after and len(new) == 2
+    assert sorted(p[:2] for p in new) == ["b-", "k-"]
+    new_files = _manifest(sink, "t")["files"]
+    assert sorted(new_files[p] for p in new) == [[16, 31], [20, 20]]
     rows = {r.k: r.v for r in sink.read(spark, "t").collect()}
-    assert rows[3] == "NEW" and rows[5] == "v5" and len(rows) == 64
+    assert rows[20] == "NEW" and rows[5] == "v5" and len(rows) == 64
 
 
-def test_unaffected_bucket_files_are_hardlinks(spark, sink, tmp_path):
-    df1 = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(64)], "k long, v string")
-    sink.upsert(spark, df1, "t", ["k"])
-    v1 = sink.current_version("t")
-    snapshot = _files(v1)
+def test_untouched_files_are_hardlinks(spark, sink):
+    """A batch beyond every range reads nothing and keeps all four files
+    by inode; one spanning a range boundary rewrites exactly the two
+    files on either side of it."""
+    files, before = _four_files(spark, sink)
+    sink.upsert(spark, spark.createDataFrame([(1000, "far")], "k long, v string"),
+                "t", ["k"])
+    after = _inodes(sink.current_version("t"))
+    # identical inode ⇒ byte-identical, zero data copied
+    assert before.items() <= after.items() and len(after) == 5
 
-    df2 = spark.createDataFrame([(3, "NEW")], "k long, v string")
-    sink.upsert(spark, df2, "t", ["k"])
-    v2 = sink.current_version("t")
-    after = _files(v2)
-
-    import pyspark.sql.functions as F
-    bucket3 = f"{BUCKET_COL}={df2.select(F.pmod(F.xxhash64('k'), F.lit(8)).cast('int')).first()[0]}"
-    untouched_before = {k: v for k, v in snapshot.items() if not k.startswith(bucket3 + "/")}
-    untouched_after = {k: v for k, v in after.items() if not k.startswith(bucket3 + "/")}
-    # identical inode + size ⇒ byte-identical, zero data copied
-    assert untouched_before == untouched_after
-    assert any(k.startswith(bucket3 + "/") for k in after)
+    sink.upsert(spark, spark.createDataFrame([(31, "x"), (32, "y")],
+                                             "k long, v string"), "t", ["k"])
+    final = _inodes(sink.current_version("t"))
+    hit = {_file_of(files, 31), _file_of(files, 32)}
+    assert {p: ino for p, ino in after.items() if p not in hit}.items() \
+        <= final.items()
+    assert not hit & set(final)
+    rows = {r.k: r.v for r in sink.read(spark, "t").collect()}
+    assert (rows[31], rows[32], rows[1000], rows[30]) == ("x", "y", "far", "v30")
+    assert len(rows) == 65
 
 
 def test_versioned_publish_single_live_version(spark, sink):
@@ -112,22 +105,51 @@ def test_versioned_publish_single_live_version(spark, sink):
     assert (tdir / "_current").read_text().strip() == versions[0].name
 
 
+def _bucketed_version(spark, sink, table, rows, manifest=False):
+    """Publish ``rows`` (k, v) in the hash-bucketed layout this sink wrote
+    before its manifests kept keys: ``pk_bucket=N/`` directories, with no
+    manifest or (``manifest=True``) one naming only the leading key."""
+    vdir = sink.path(table) / "v-1"
+    df = spark.createDataFrame(rows, "k long, v string")
+    (df.withColumn(BUCKET_COL, F.pmod(F.xxhash64("k"), F.lit(4)).cast("int"))
+     .write.partitionBy(BUCKET_COL).parquet(str(vdir)))
+    if manifest:
+        (vdir / MANIFEST).write_text(json.dumps({
+            "schema": df.schema.jsonValue(), "key": "k",
+            "files": dict.fromkeys(_inodes(vdir))}))
+    (sink.path(table) / "_current").write_text(vdir.name)
+    assert any(sink.current_version(table).glob(f"{BUCKET_COL}=*"))
+
+
 def test_read_hides_bucket_column(spark, sink):
-    df = spark.createDataFrame([(1, "a")], "k long, v string")
-    sink.upsert(spark, df, "t", ["k"])
+    _bucketed_version(spark, sink, "t", [(1, "a"), (2, "b")])
     assert sorted(sink.read(spark, "t").columns) == ["k", "v"]
+
+
+@pytest.mark.parametrize("manifest", [False, True])
+def test_bucketed_version_is_rewritten_flat_by_its_next_merge(
+        spark, sink, manifest):
+    _bucketed_version(spark, sink, "t", [(i, f"v{i}") for i in range(20)],
+                      manifest)
+    sink.upsert(spark, spark.createDataFrame([(3, "NEW"), (99, "new")],
+                                             "k long, v string"), "t", ["k"])
+    vdir = sink.current_version("t")
+    assert not [p for p in vdir.iterdir() if p.is_dir()]
+    assert _manifest(sink, "t")["keys"] == ["k"]
+    assert set(_manifest(sink, "t")["files"]) == set(_inodes(vdir))
+    rows = {r.k: r.v for r in sink.read(spark, "t").collect()}
+    assert rows == {**{i: f"v{i}" for i in range(20)}, 3: "NEW", 99: "new"}
 
 
 def test_migration_from_overwrite_layout(spark, sink):
     df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
     sink.overwrite(df1, "t")
     v1 = sink.current_version("t")
-    assert not any(v1.glob(f"{BUCKET_COL}=*"))  # plain layout
+    assert not (v1 / MANIFEST).exists()  # no keys recorded
 
     df2 = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
-    sink.upsert(spark, df2, "t", ["k"])  # migrates to bucketed
-    v2 = sink.current_version("t")
-    assert any(v2.glob(f"{BUCKET_COL}=*"))
+    sink.upsert(spark, df2, "t", ["k"])  # read whole, rewritten keyed
+    assert _manifest(sink, "t")["keys"] == ["k"]
     rows = {r.k: r.v for r in sink.read(spark, "t").collect()}
     assert rows == {1: "a", 2: "B", 3: "c"}
 
@@ -135,21 +157,36 @@ def test_migration_from_overwrite_layout(spark, sink):
 def test_key_mismatch_raises(spark, sink):
     df = spark.createDataFrame([(1, "a")], "k long, v string")
     sink.upsert(spark, df, "t", ["k"])
-    with pytest.raises(ValueError, match="bucketed by"):
+    live = sink.current_version("t")
+    with pytest.raises(ValueError,
+                       match=r"keyed by \['k'\], the merge by \['v'\]"):
         sink.upsert(spark, df, "t", ["v"])
+    assert [d for d in sink.path("t").glob("v-*")] == [live]
 
 
-def test_replace_takes_new_keys_and_bucket_count(spark, tmp_path):
-    """replace() drops the old rows and the old layout: the table is then
-    bucketed by the replacing keys, and upserts by those keys work."""
-    old = ParquetMergeSink(tmp_path / "lake", n_buckets=8)
-    old.upsert(spark, spark.createDataFrame([(1, "a"), (2, "b")],
-                                            "k long, v string"), "t", ["k"])
-    sink = ParquetMergeSink(tmp_path / "lake", n_buckets=4)
-    sink.replace(spark, spark.createDataFrame([(3, "c")], "k long, v string"),
-                 "t", ["v"])
-    assert sink.get_properties("t")["bucket_keys"] == ["v"]
-    assert sink.get_properties("t")["bucket_count"] == 4
+def test_replace_publishes_new_keys_with_its_data(spark, sink, monkeypatch):
+    """replace() drops the old rows and the old keys: the table is then
+    keyed by the replacing keys, and upserts by those keys work. The keys
+    live in the manifest, so a replace that fails before its publish
+    leaves the old rows AND the old keys."""
+    from datapump_spark.sinks import upsert as upsert_mod
+
+    sink.upsert(spark, spark.createDataFrame([(1, "a"), (2, "b")],
+                                             "k long, v string"), "t", ["k"])
+    batch = spark.createDataFrame([(3, "c")], "k long, v string")
+
+    def broken_footer(*_a, **_k):
+        raise OSError("footer unreadable")
+
+    monkeypatch.setattr(upsert_mod, "_file_bounds", broken_footer)
+    with pytest.raises(OSError, match="footer unreadable"):
+        sink.replace(spark, batch, "t", ["v"])
+    monkeypatch.undo()
+    assert _manifest(sink, "t")["keys"] == ["k"]
+    assert {r.k for r in sink.read(spark, "t").collect()} == {1, 2}
+
+    sink.replace(spark, batch, "t", ["v"])
+    assert _manifest(sink, "t")["keys"] == ["v"]
     sink.upsert(spark, spark.createDataFrame([(4, "c"), (5, "d")],
                                              "k long, v string"), "t", ["v"])
     assert {r.k: r.v for r in sink.read(spark, "t").collect()} == {
@@ -173,23 +210,34 @@ def test_compact_append_table(spark, sink):
     assert len(vdirs) == 1
 
 
-def test_compact_preserves_bucket_layout(spark, sink):
-    df = spark.range(100).selectExpr("id AS pk", "id * 3 AS v")
-    sink.upsert(spark, df.repartition(8), "t", ["pk"])
-    sink.upsert(spark, df.limit(5).repartition(8), "t", ["pk"])
-    stats = sink.compact(spark, "t")
-    cur = sink.current_version("t")
-    buckets = list(cur.glob(f"{BUCKET_COL}=*"))
-    assert buckets, "bucket layout lost by compaction"
-    for b in buckets:
-        assert len(list(b.glob("*.parquet"))) == 1
-    assert stats["files_after"] == len(buckets)
+def test_compact_clusters_by_the_leading_key(spark, sink):
+    """A time-ordered table compacted into several files: the files hold
+    disjoint key ranges, so merging the next window rewrites only the
+    file that overlaps it and the rest keep their inodes."""
+    for lo in range(0, 400, 50):   # windows overlapping their predecessor
+        sink.upsert(spark, spark.range(max(0, lo - 10), lo + 50)
+                    .selectExpr("id AS pk", f"id + {lo} AS v"), "t", ["pk"])
+    want = {r.pk: r.v for r in sink.read(spark, "t").collect()}
+    vdir = sink.current_version("t")
+    total_mb = sum(p.stat().st_size for p in vdir.glob("*.parquet")) / 2**20
+    stats = sink.compact(spark, "t", target_file_mb=total_mb / 3.5)
+    assert stats["files_after"] == 4 < stats["files_before"]
+    ranges = sorted(_manifest(sink, "t")["files"].values())
+    assert len(ranges) == 4
+    assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:]))
+    assert _manifest(sink, "t")["keys"] == ["pk"]
+    assert {r.pk: r.v for r in sink.read(spark, "t").collect()} == want
+
+    files = _manifest(sink, "t")["files"]
+    before = _inodes(sink.current_version("t"))
+    sink.upsert(spark, spark.range(390, 440).selectExpr("id AS pk", "-id AS v"),
+                "t", ["pk"])
+    after = _inodes(sink.current_version("t"))
+    last = _file_of(files, 399)
+    assert {p: before[p] for p in files if p != last}.items() <= after.items()
+    assert last not in after
     got = {r.pk: r.v for r in sink.read(spark, "t").collect()}
-    assert got == {i: i * 3 for i in range(100)}
-    # a further upsert still prunes (properties survived compaction)
-    sink.upsert(spark, spark.range(3).selectExpr("id AS pk", "id AS v"), "t", ["pk"])
-    got = {r.pk: r.v for r in sink.read(spark, "t").collect()}
-    assert got[0] == 0 and got[99] == 297
+    assert got == {**want, **{k: -k for k in range(390, 440)}}
 
 
 def test_compact_missing_table_raises(spark, sink):
@@ -201,19 +249,19 @@ def test_schema_evolution_add_and_missing_column(spark, sink):
     """Reference gap closed (SURVEY §1.2 'no schema evolution'): a batch
     with a NEW column merges (old rows null); a batch MISSING a column
     merges (nulls); read() must see the union schema even though
-    unaffected buckets still hold old-schema hardlinked files."""
+    untouched files still hold old-schema hardlinked rows."""
     base = spark.createDataFrame(
         [(i, f"v{i}") for i in range(64)], "k long, v string")
     sink.upsert(spark, base, "t", ["k"])
 
-    # add a column, touching only one key (one bucket rewritten)
+    # add a column, touching only one key (one file rewritten)
     plus = spark.createDataFrame([(3, "v3b", 9.5)],
                                  "k long, v string, score double")
     sink.upsert(spark, plus, "t", ["k"])
     got = {r["k"]: r for r in sink.read(spark, "t").collect()}
     assert set(sink.read(spark, "t").columns) == {"k", "v", "score"}
     assert got[3]["score"] == 9.5 and got[3]["v"] == "v3b"
-    assert got[5]["score"] is None          # old-schema bucket row
+    assert got[5]["score"] is None          # row of an untouched file
     assert len(got) == 64
 
     # batch missing 'v': nulls, not failure
@@ -228,7 +276,7 @@ def test_schema_evolution_add_and_missing_column(spark, sink):
 def test_time_travel_and_vacuum(spark, tmp_path):
     from datapump_spark.sinks.upsert import ParquetMergeSink
 
-    sink = ParquetMergeSink(tmp_path / "tt", n_buckets=4, retain_versions=3)
+    sink = ParquetMergeSink(tmp_path / "tt", retain_versions=3)
     for i in range(3):
         batch = spark.createDataFrame(
             [(k, f"v{i}") for k in range(5)], "k long, val string")
@@ -255,28 +303,20 @@ def test_time_travel_and_vacuum(spark, tmp_path):
 
 
 def test_time_travel_hardlink_economics(spark, tmp_path):
-    """Retained versions share unchanged bucket files by inode."""
-    import os
-
-    from datapump_spark.sinks.upsert import BUCKET_COL, ParquetMergeSink
-
-    sink = ParquetMergeSink(tmp_path / "tt", n_buckets=8, retain_versions=2)
-    base = spark.createDataFrame([(k, "a") for k in range(200)],
-                                 "k long, val string")
-    sink.upsert(spark, base, "t", ["k"])
+    """Retained versions share unchanged files by inode."""
+    sink = ParquetMergeSink(tmp_path / "tt", retain_versions=2)
+    for lo in (0, 100):
+        sink.upsert(spark, spark.range(lo, lo + 100).selectExpr(
+            "id AS k", "'a' AS val"), "t", ["k"])
     sink.upsert(spark, spark.createDataFrame([(0, "b")], "k long, val string"),
                 "t", ["k"])
     v_old, v_new = (sink.path("t") / v for v in sink.versions("t"))
-    shared = 0
-    for bucket in v_new.glob(f"{BUCKET_COL}=*"):
-        old_bucket = v_old / bucket.name
-        if not old_bucket.exists():
-            continue
-        old_inodes = {os.stat(f).st_ino for f in old_bucket.iterdir()
-                      if f.is_file()}
-        shared += sum(os.stat(f).st_ino in old_inodes
-                      for f in bucket.iterdir() if f.is_file())
-    assert shared > 0   # unaffected buckets carried by hardlink, not copy
+    shared = set(_inodes(v_old).values()) & set(_inodes(v_new).values())
+    # the 100..199 window's files are carried by hardlink, not copy
+    assert shared and all(p.stat().st_nlink == 2 for p in v_new.glob("*.parquet")
+                          if p.stat().st_ino in shared)
+    assert {r["val"] for r in sink.read(spark, "t", version=v_old.name)
+            .collect()} == {"a"}
 
 
 # ------------------------------------------------------------- the manifest
@@ -319,7 +359,7 @@ def test_manifest_read_runs_no_job_and_overwrite_reads_through_footers(
     sink.upsert(spark, spark.createDataFrame(
         [(i, f"v{i}") for i in range(20)], "k long, v string"), "t", ["k"])
     m = _manifest(sink, "t")
-    assert m["key"] == "k" and m["files"]
+    assert m["keys"] == ["k"] and m["files"]
     assert all(lo <= hi for lo, hi in m["files"].values())
     assert _jobs(spark, lambda: sink.read(spark, "t")) == 0
     # an overwrite version has no manifest: reads merge the footers
@@ -433,7 +473,8 @@ def test_time_ordered_drain_rewrites_only_the_previous_window(
     """Six generator IoT files, each window overlapping a third of the
     previous one, drained one by one: file k's merge reads only the batch
     files of file k-1, keeps every other file by inode, and writes kept
-    and batch rows to separate files."""
+    and batch rows to separate files, at most two data files per queue
+    file."""
     from datapump_spark.jobspec import JobSpec
     from datapump_spark.streaming.pipeline import Pipeline
 
@@ -467,9 +508,10 @@ def test_time_ordered_drain_rewrites_only_the_previous_window(
         assert read == prev_batch, k   # only file k-1's batch files
         written = {p for p in new if new_inodes[p] not in
                    set(old_inodes.values())}
-        batch_files = {p for p in written if p.split("/")[1].startswith("b-")}
+        assert 1 <= len(written) <= 2, (k, written)
+        batch_files = {p for p in written if p.startswith("b-")}
         kept_files = written - batch_files
-        assert all(p.split("/")[1].startswith("k-") for p in kept_files)
+        assert all(p.startswith("k-") for p in kept_files)
         for p in batch_files:
             assert lo <= new[p][0] <= new[p][1] <= hi, (k, p)
         for p in kept_files:   # no kept row shares a file with the batch
@@ -499,7 +541,7 @@ def test_randomized_upserts_and_cdc_match_the_replay(spark, tmp_path):
     skips a file holding a batch key) and the manifest schema equals a
     footer-merged read's."""
     rng = random.Random(11)
-    sink = ParquetMergeSink(tmp_path / "lake", n_buckets=4)
+    sink = ParquetMergeSink(tmp_path / "lake")
     cols = ["k", "s", "v"]
     table: list[tuple] = []
 
@@ -532,17 +574,17 @@ def test_randomized_upserts_and_cdc_match_the_replay(spark, tmp_path):
         elif len(cols) == 4:
             rows = [r + (None,) for r in rows]
         before = _inodes(sink.current_version("t")) if table else {}
+        ranges = _manifest(sink, "t")["files"] if table else {}
         sink.upsert(spark, df, "t", ["k", "s"])
         batch_keys = {r[:2] for r in rows if _key_ok(r[:2])}
         table = [r for r in table
                  if not (_key_ok(r[:2]) and r[:2] in batch_keys)] + rows
         assert check("t", cols) == Counter(table), i
-        if len(rows) == 1:   # one key, one bucket: other buckets untouched
-            bucket = spark.createDataFrame([rows[0][:2]], "k long, s string").select(
-                F.pmod(F.xxhash64("k", "s"), F.lit(4))).first()[0]
+        if len(rows) == 1:   # one key: files not holding it untouched
             after = _inodes(sink.current_version("t"))
             for p, ino in before.items():
-                if not p.startswith(f"{BUCKET_COL}={bucket}/"):
+                if ranges[p] is not None and not (
+                        ranges[p][0] <= rows[0][0] <= ranges[p][1]):
                     assert after[p] == ino, p
 
     # CDC: one winner per key by seq; stale changes lose; deletes are

@@ -121,9 +121,9 @@ FIRST_CSV = """DateTime,Sensor_id,PM25
     ("last", "overwrite")])
 def test_audit_counts_of_second_file_match_pandas(spark, tmp_path, keep,
                                                   prior):
-    """The counts of a file merged into an existing table: a bucketed one
-    (observed on the sink's bucket-and-range aggregate) or one last written
-    by overwrite (observed on the migrating write). Dedupe '' counts with
+    """The counts of a file merged into an existing table: a keyed one
+    (observed on the sink's key-range aggregate) or one last written by
+    overwrite (observed on the migrating write). Dedupe '' counts with
     its own aggregation."""
     import os
     from datetime import datetime
@@ -387,13 +387,13 @@ def test_streaming_multi_file_trigger_matches_batch(spark, tmp_path):
 
 
 # Spark jobs one queue file may run on the paper's path (header, type
-# inference, bucket-and-range aggregate, merge write, audit append) in the
+# inference, key-range aggregate, merge write, audit append) in the
 # test session. Measured at this bound; raise it only with a reason.
 SECOND_FILE_JOB_BUDGET = 12
 
 
 def test_second_file_job_budget(spark, tmp_path):
-    """A second queue file into an existing bucketed table (Stats=[])
+    """A second queue file into an existing keyed table (Stats=[])
     stays within its job budget: the audit counts ride on the merge's
     first action and type inference is one job."""
     import uuid
@@ -561,9 +561,9 @@ def test_streaming_stats_match_batch(spark, tmp_path):
     assert audits["stream"] == audits["batch"]
 
     # a mean sums the table's rows in the order its part files are read:
-    # equal-size files keep the listing order of their random names and of
-    # the table's bucket directories, so two drains of the same files can
-    # give means that agree to rounding only
+    # equal-size files keep the listing order of their random names, so
+    # two drains of the same files can give means that agree to rounding
+    # only
     def number(v):
         try:
             return float(v) if isinstance(v, str) else v
