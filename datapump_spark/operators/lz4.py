@@ -1,31 +1,14 @@
-"""Pure-Python LZ4 codec — block format and frame format — closing the
-``.jsonl.lz4`` ingestion seam (compressed-corpus interchange) with no
-native dependency.
+"""LZ4 frames through the liblz4 that pyarrow bundles: ``.jsonl.lz4``
+corpora and ``.tar.lz4`` archives.
 
-Surface:
-- :func:`decode_lz4_block` — LZ4 block format (the raw
-  token/literals/offset/match stream; also Parquet's ``LZ4_RAW``).
-- :func:`encode_lz4_block` — greedy hash-table compressor emitting
-  spec-conforming blocks (honors the 12-byte match limit and the
-  5-literal tail rule, so real liblz4 decodes them).
-- :func:`decode_lz4_frame` / :func:`encode_lz4_frame` — LZ4 frame
-  format (magic ``0x184D2204``): frame descriptor with header
-  checksum, independent AND linked blocks (64 KB carry-over window),
-  stored blocks, optional block checksums, optional content size and
-  content checksum, skippable frames; legacy frames (``0x184C2102``,
-  the ``lz4 -l`` / old-kernel format — conformance-pinned against the
-  in-container lz4 CLI) decode too. Predefined dictionaries (DictID)
-  are refused honestly.
-- :func:`xxh32` — pure-Python XXH32 (the frame checksum primitive;
-  sibling of zstd.py's xxh64).
-
-Like zstd/snappy/brotli (and UNLIKE the MP3/VP8 stand-in tables),
-this codec is CONFORMANCE-TESTED against the reference
-implementation: ``pyarrow.Codec('lz4')`` / ``Codec('lz4_raw')``
-bundle real liblz4, so tests pin byte-exact decode of foreign liblz4
-output (frame and block) and liblz4's decode of this encoder's
-output, both directions, over corpora that exercise overlap copies,
-long literal/match length extensions and stored blocks.
+:func:`decode_lz4_frame` reads concatenated and skippable frames with
+liblz4, which checks the header, block and content checksums and the
+content size; every failure raises UnsupportedMediaError (see
+:func:`~datapump_spark.operators.codecs.decode_arrow`). Legacy frames
+(magic ``0x184C2102``, ``lz4 -l`` and old kernels), which liblz4's frame
+API rejects, decode block by block with :func:`decode_lz4_block`: pyarrow's
+``lz4_raw`` needs the decoded size up front and the legacy format does
+not record it. :func:`encode_lz4_frame` is the writer twin.
 
 Reference parity note: the reference (datapump.py) has no compressed
 container surface; charter extension.
@@ -33,84 +16,21 @@ container surface; charter extension.
 
 from __future__ import annotations
 
-from datapump_spark.operators.codecs import UnsupportedMediaError
+from datapump_spark.operators.codecs import UnsupportedMediaError, decode_arrow
 
 _MAGIC_FRAME = 0x184D2204
 _MAGIC_LEGACY = 0x184C2102
-_MASK32 = 0xFFFFFFFF
-
-# ---------------------------------------------------------------------------
-# XXH32 (frame header / block / content checksums)
-# ---------------------------------------------------------------------------
-
-_P1 = 0x9E3779B1
-_P2 = 0x85EBCA77
-_P3 = 0xC2B2AE3D
-_P4 = 0x27D4EB2F
-_P5 = 0x165667B1
+_LEGACY_BLOCK = 8 << 20   # a legacy block's plaintext size limit
 
 
-def _rotl32(x: int, r: int) -> int:
-    return ((x << r) | (x >> (32 - r))) & _MASK32
-
-
-def xxh32(data: bytes, seed: int = 0) -> int:
-    """XXH32 of ``data`` — the LZ4 frame checksum primitive."""
+def decode_lz4_block(data: bytes, max_output: int = 1 << 31) -> bytes:
+    """Decode one LZ4 block (token, literals, offset, match); more than
+    ``max_output`` bytes of output raise before they are written."""
+    buf = bytearray()
     n = len(data)
     i = 0
-    if n >= 16:
-        v1 = (seed + _P1 + _P2) & _MASK32
-        v2 = (seed + _P2) & _MASK32
-        v3 = seed
-        v4 = (seed - _P1) & _MASK32
-        limit = n - 16
-        while i <= limit:
-            v1 = (_rotl32((v1 + int.from_bytes(data[i:i + 4], "little")
-                           * _P2) & _MASK32, 13) * _P1) & _MASK32
-            v2 = (_rotl32((v2 + int.from_bytes(data[i + 4:i + 8], "little")
-                           * _P2) & _MASK32, 13) * _P1) & _MASK32
-            v3 = (_rotl32((v3 + int.from_bytes(data[i + 8:i + 12], "little")
-                           * _P2) & _MASK32, 13) * _P1) & _MASK32
-            v4 = (_rotl32((v4 + int.from_bytes(data[i + 12:i + 16], "little")
-                           * _P2) & _MASK32, 13) * _P1) & _MASK32
-            i += 16
-        h = (_rotl32(v1, 1) + _rotl32(v2, 7) + _rotl32(v3, 12)
-             + _rotl32(v4, 18)) & _MASK32
-    else:
-        h = (seed + _P5) & _MASK32
-    h = (h + n) & _MASK32
-    while i + 4 <= n:
-        h = (_rotl32((h + int.from_bytes(data[i:i + 4], "little")
-                      * _P3) & _MASK32, 17) * _P4) & _MASK32
-        i += 4
     while i < n:
-        h = (_rotl32((h + data[i] * _P5) & _MASK32, 11) * _P1) & _MASK32
-        i += 1
-    h ^= h >> 15
-    h = (h * _P2) & _MASK32
-    h ^= h >> 13
-    h = (h * _P3) & _MASK32
-    h ^= h >> 16
-    return h
-
-
-# ---------------------------------------------------------------------------
-# Block format (LZ4 Block Format spec, also Parquet LZ4_RAW)
-# ---------------------------------------------------------------------------
-
-
-def decode_lz4_block(data: bytes, max_output: int = 1 << 31,
-                     history: bytes = b"") -> bytes:
-    """Decode one LZ4 block. ``history`` is the prior-plaintext window
-    for frame-linked blocks (match offsets may reach into it); the
-    return value is this block's plaintext only."""
-    hlen = len(history)
-    buf = bytearray(history)
-    src = data
-    n = len(src)
-    i = 0
-    while i < n:
-        token = src[i]
+        token = data[i]
         i += 1
         lit = token >> 4
         if lit == 15:
@@ -118,22 +38,22 @@ def decode_lz4_block(data: bytes, max_output: int = 1 << 31,
                 if i >= n:
                     raise UnsupportedMediaError(
                         "lz4: truncated literal length")
-                b = src[i]
+                b = data[i]
                 i += 1
                 lit += b
                 if b != 255:
                     break
         if i + lit > n:
             raise UnsupportedMediaError("lz4: literals overrun block")
-        buf += src[i:i + lit]
-        if len(buf) - hlen > max_output:
+        if len(buf) + lit > max_output:
             raise UnsupportedMediaError("lz4: output exceeds decode cap")
+        buf += data[i:i + lit]
         i += lit
         if i >= n:
             break  # last sequence is literals-only
         if i + 2 > n:
             raise UnsupportedMediaError("lz4: truncated match offset")
-        offset = src[i] | (src[i + 1] << 8)
+        offset = data[i] | (data[i + 1] << 8)
         i += 2
         if offset == 0 or offset > len(buf):
             raise UnsupportedMediaError("lz4: invalid match offset")
@@ -143,247 +63,46 @@ def decode_lz4_block(data: bytes, max_output: int = 1 << 31,
                 if i >= n:
                     raise UnsupportedMediaError(
                         "lz4: truncated match length")
-                b = src[i]
+                b = data[i]
                 i += 1
                 mlen += b
                 if b != 255:
                     break
-        if len(buf) - hlen + mlen > max_output:
+        if len(buf) + mlen > max_output:
             raise UnsupportedMediaError("lz4: output exceeds decode cap")
         start = len(buf) - offset
         if offset >= mlen:
             buf += buf[start:start + mlen]
-        else:  # overlapping copy: byte-wise semantics
-            for k in range(mlen):
-                buf.append(buf[start + k])
-    return bytes(buf[hlen:])
-
-
-def encode_lz4_block(data: bytes) -> bytes:
-    """Greedy hash-table LZ4 block compressor (spec-conforming: no
-    match starts within the last 12 bytes, matches stop 5 bytes before
-    the end, final sequence is literals-only)."""
-    n = len(data)
-    if n == 0:
-        return b"\x00"
-    out = bytearray()
-    table: dict[int, int] = {}
-    anchor = 0
-    i = 0
-    # match search stops at n-12 (MFLIMIT); matches may not cover the
-    # last 5 bytes
-    limit = n - 12
-    match_end_cap = n - 5
-    while i <= limit:
-        h = int.from_bytes(data[i:i + 4], "little")
-        cand = table.get(h)
-        table[h] = i
-        if (cand is not None and i - cand <= 0xFFFF
-                and data[cand:cand + 4] == data[i:i + 4]):
-            # extend match forward
-            mlen = 4
-            while (i + mlen < match_end_cap
-                   and data[cand + mlen] == data[i + mlen]):
-                mlen += 1
-            _emit_sequence(out, data, anchor, i, i - cand, mlen)
-            i += mlen
-            anchor = i
-        else:
-            i += 1
-    # trailing literals
-    _emit_literals(out, data, anchor, n)
-    return bytes(out)
-
-
-def _emit_len(out: bytearray, v: int) -> None:
-    while v >= 255:
-        out.append(255)
-        v -= 255
-    out.append(v)
-
-
-def _emit_sequence(out: bytearray, data: bytes, anchor: int, i: int,
-                   offset: int, mlen: int) -> None:
-    lit = i - anchor
-    token_lit = 15 if lit >= 15 else lit
-    token_mat = 15 if mlen - 4 >= 15 else mlen - 4
-    out.append((token_lit << 4) | token_mat)
-    if lit >= 15:
-        _emit_len(out, lit - 15)
-    out += data[anchor:i]
-    out.append(offset & 0xFF)
-    out.append(offset >> 8)
-    if mlen - 4 >= 15:
-        _emit_len(out, mlen - 4 - 15)
-
-
-def _emit_literals(out: bytearray, data: bytes, anchor: int, end: int) -> None:
-    lit = end - anchor
-    token_lit = 15 if lit >= 15 else lit
-    out.append(token_lit << 4)
-    if lit >= 15:
-        _emit_len(out, lit - 15)
-    out += data[anchor:end]
-
-
-# ---------------------------------------------------------------------------
-# Frame format (LZ4 Frame Format spec v1.6.x)
-# ---------------------------------------------------------------------------
-
-_BD_SIZES = {4: 1 << 16, 5: 1 << 18, 6: 1 << 20, 7: 1 << 22}
+        else:  # overlapping: the last offset bytes repeat
+            buf += (buf[start:] * (mlen // offset + 1))[:mlen]
+    return bytes(buf)
 
 
 def decode_lz4_frame(data: bytes, max_output: int = 1 << 31) -> bytes:
-    """Decode a sequence of LZ4 frames (skippable frames skipped)."""
+    """Decode a sequence of LZ4 frames, at most ``max_output`` bytes."""
+    if int.from_bytes(data[:4], "little") != _MAGIC_LEGACY:
+        return decode_arrow("lz4", data, max_output)
+    # legacy frame: [u32 csize, block] entries, ended by EOF or the
+    # magic of a next frame
     out = bytearray()
-    i = 0
-    n = len(data)
-    while i < n:
-        if i + 4 > n:
-            raise UnsupportedMediaError("lz4: truncated frame magic")
-        magic = int.from_bytes(data[i:i + 4], "little")
-        i += 4
-        if (magic & 0xFFFFFFF0) == 0x184D2A50:  # skippable frame
-            if i + 4 > n:
-                raise UnsupportedMediaError("lz4: truncated skippable frame")
-            size = int.from_bytes(data[i:i + 4], "little")
-            i += 4 + size
-            continue
-        if magic == _MAGIC_LEGACY:
-            # legacy frame (``lz4 -l`` / old kernels): bare sequence of
-            # [u32 csize, block] entries, 8 MiB plaintext per block, no
-            # checksums, terminated by EOF or a next frame magic
-            while i + 4 <= n:
-                csize = int.from_bytes(data[i:i + 4], "little")
-                if csize == _MAGIC_FRAME or csize == _MAGIC_LEGACY \
-                        or (csize & 0xFFFFFFF0) == 0x184D2A50:
-                    break  # start of the next frame
-                i += 4
-                if i + csize > n:
-                    raise UnsupportedMediaError(
-                        "lz4: truncated legacy block")
-                plain = decode_lz4_block(
-                    data[i:i + csize],
-                    max_output=max_output - len(out))
-                if len(plain) > (8 << 20):
-                    raise UnsupportedMediaError(
-                        "lz4: legacy block exceeds 8 MiB")
-                out += plain
-                i += csize
-            continue
-        if magic != _MAGIC_FRAME:
-            raise UnsupportedMediaError(
-                f"lz4: bad frame magic 0x{magic:08x}")
-        i = _decode_one_frame(data, i, out, max_output)
-    return bytes(out)
-
-
-def _decode_one_frame(data: bytes, i: int, out: bytearray,
-                      max_output: int) -> int:
-    n = len(data)
-    desc_start = i
-    if i + 2 > n:
-        raise UnsupportedMediaError("lz4: truncated frame descriptor")
-    flg = data[i]
-    bd = data[i + 1]
-    i += 2
-    if (flg >> 6) != 0b01:
-        raise UnsupportedMediaError(f"lz4: unsupported frame version {flg >> 6}")
-    b_indep = bool(flg & 0x20)
-    b_checksum = bool(flg & 0x10)
-    c_size = bool(flg & 0x08)
-    c_checksum = bool(flg & 0x04)
-    dict_id = bool(flg & 0x01)
-    block_max = _BD_SIZES.get((bd >> 4) & 0x7)
-    if block_max is None:
-        raise UnsupportedMediaError(f"lz4: reserved block max size in BD 0x{bd:02x}")
-    content_size = None
-    if c_size:
-        if i + 8 > n:
-            raise UnsupportedMediaError("lz4: truncated content size")
-        content_size = int.from_bytes(data[i:i + 8], "little")
-        i += 8
-    if dict_id:
-        raise UnsupportedMediaError(
-            "lz4: predefined dictionaries not supported")
-    if i >= n:
-        raise UnsupportedMediaError("lz4: truncated header checksum")
-    hc = data[i]
-    i += 1
-    expect = (xxh32(data[desc_start:i - 1]) >> 8) & 0xFF
-    if hc != expect:
-        raise UnsupportedMediaError(
-            f"lz4: frame header checksum mismatch ({hc:#04x} != {expect:#04x})")
-    frame_start_len = len(out)
-    while True:
-        if i + 4 > n:
-            raise UnsupportedMediaError("lz4: truncated block size")
-        bsize = int.from_bytes(data[i:i + 4], "little")
-        i += 4
-        if bsize == 0:  # EndMark
+    i = 4
+    while i + 4 <= len(data):
+        csize = int.from_bytes(data[i:i + 4], "little")
+        if csize in (_MAGIC_FRAME, _MAGIC_LEGACY) \
+                or (csize & 0xFFFFFFF0) == 0x184D2A50:
             break
-        stored = bool(bsize & 0x80000000)
-        bsize &= 0x7FFFFFFF
-        if bsize > block_max:
-            raise UnsupportedMediaError("lz4: block exceeds declared max size")
-        if i + bsize > n:
-            raise UnsupportedMediaError("lz4: truncated block data")
-        block = data[i:i + bsize]
-        i += bsize
-        if b_checksum:
-            if i + 4 > n:
-                raise UnsupportedMediaError("lz4: truncated block checksum")
-            bc = int.from_bytes(data[i:i + 4], "little")
-            i += 4
-            if bc != xxh32(block):
-                raise UnsupportedMediaError("lz4: block checksum mismatch")
-        if stored:
-            plain = block
-        else:
-            history = b"" if b_indep else bytes(out[-(1 << 16):])
-            plain = decode_lz4_block(
-                block, max_output=max_output - (len(out) - frame_start_len),
-                history=history)
-        out += plain
-        if len(out) - frame_start_len > max_output:
-            raise UnsupportedMediaError("lz4: output exceeds decode cap")
-    produced = len(out) - frame_start_len
-    if content_size is not None and produced != content_size:
-        raise UnsupportedMediaError(
-            f"lz4: content size mismatch ({produced} != {content_size})")
-    if c_checksum:
-        if i + 4 > n:
-            raise UnsupportedMediaError("lz4: truncated content checksum")
-        cc = int.from_bytes(data[i:i + 4], "little")
         i += 4
-        if cc != xxh32(bytes(out[frame_start_len:])):
-            raise UnsupportedMediaError("lz4: content checksum mismatch")
-    return i
+        if i + csize > len(data):
+            raise UnsupportedMediaError("lz4: truncated legacy block")
+        out += decode_lz4_block(
+            data[i:i + csize], min(_LEGACY_BLOCK, max_output - len(out)))
+        i += csize
+    rest = data[i:]
+    return bytes(out) + (decode_lz4_frame(rest, max_output - len(out))
+                         if rest else b"")
 
 
-def encode_lz4_frame(data: bytes, block_max_id: int = 4,
-                     content_checksum: bool = True) -> bytes:
-    """Write one LZ4 frame: independent compressed blocks (stored when
-    compression expands), content size, optional content checksum."""
-    if block_max_id not in _BD_SIZES:
-        raise ValueError(f"block_max_id must be 4..7, got {block_max_id}")
-    block_max = _BD_SIZES[block_max_id]
-    flg = 0x40 | 0x20 | 0x08 | (0x04 if content_checksum else 0)
-    bd = block_max_id << 4
-    desc = bytes([flg, bd]) + len(data).to_bytes(8, "little")
-    out = bytearray(_MAGIC_FRAME.to_bytes(4, "little"))
-    out += desc
-    out.append((xxh32(desc) >> 8) & 0xFF)
-    for pos in range(0, len(data), block_max):
-        chunk = data[pos:pos + block_max]
-        comp = encode_lz4_block(chunk)
-        if len(comp) >= len(chunk):
-            out += (len(chunk) | 0x80000000).to_bytes(4, "little")
-            out += chunk
-        else:
-            out += len(comp).to_bytes(4, "little")
-            out += comp
-    out += (0).to_bytes(4, "little")  # EndMark
-    if content_checksum:
-        out += xxh32(data).to_bytes(4, "little")
-    return bytes(out)
+def encode_lz4_frame(data: bytes) -> bytes:
+    import pyarrow as pa
+
+    return pa.compress(data, codec="lz4", asbytes=True)

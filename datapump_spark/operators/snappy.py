@@ -1,29 +1,13 @@
-"""Pure-Python raw Snappy codec (round 10).
+"""Raw (unframed) snappy through the libsnappy that pyarrow bundles: the
+Avro ``avro.codec: snappy`` blocks and ``.jsonl.snappy`` corpora.
 
-Snappy is the default block codec of much of the Hadoop/Avro world;
-until now Avro containers with ``avro.codec: snappy`` were refused
-honestly (no python-snappy in this container, and pip installs are
-out of scope). The raw format is small and fully public
-(google/snappy format_description.txt):
-
-- preamble: uncompressed length as a little-endian varint;
-- element tags in the low 2 bits of the tag byte:
-  00 literal  (length (tag>>2)+1; values 60-63 mean 1-4 extra
-               little-endian length bytes),
-  01 copy     (length ((tag>>2) & 7) + 4, 11-bit offset
-               ((tag>>5) << 8) | next byte),
-  10 copy     (length (tag>>2)+1, 16-bit little-endian offset),
-  11 copy     (length (tag>>2)+1, 32-bit little-endian offset);
-- copies may overlap forward (offset < length replicates), offset 0
-  is invalid, and a copy may not reach before the output start.
-
-The encoder twin is a greedy hash-table matcher (the classic snappy
-shape: 4-byte probes, 64 KiB block fragments) that emits genuine
-copy elements of all three widths, so the decoder faces real
-back-references in round trips — plus hand-built foreign-style
-streams in the tests for the paths a greedy encoder rarely emits
-(overlapping RLE copies, 4-byte-offset copies, multi-byte literal
-lengths).
+A raw snappy buffer starts with its decoded length as a little-endian
+varint. :func:`snappy_decompress` reads it first and refuses a length
+past the cap or past the format's maximum expansion (a 3-byte copy
+element writes at most 64 bytes), so no declared length sizes an
+allocation; libsnappy then decodes into exactly that many bytes. Every
+failure raises UnsupportedMediaError naming snappy.
+:func:`snappy_compress` is the writer twin.
 
 Reference parity note: the reference has no compression surface;
 charter extension closing a COVERAGE.md format seam.
@@ -31,136 +15,37 @@ charter extension closing a COVERAGE.md format seam.
 
 from __future__ import annotations
 
+from datapump_spark.operators.codecs import UnsupportedMediaError
 
-def _uvarint(b: bytes, i: int) -> tuple[int, int]:
-    v = shift = 0
+
+def snappy_decompress(b: bytes, max_output: int | None = None) -> bytes:
+    """Decompress one raw snappy buffer, at most ``max_output`` bytes
+    (None: no cap)."""
+    import pyarrow as pa
+
+    n = shift = i = 0
     while True:
-        if i >= len(b):
-            raise ValueError("truncated snappy varint")
-        byte = b[i]
-        i += 1
-        v |= (byte & 0x7F) << shift
-        if not byte & 0x80:
-            return v, i
+        if i >= len(b) or shift > 28:
+            raise UnsupportedMediaError("snappy: bad length varint")
+        n |= (b[i] & 0x7F) << shift
         shift += 7
-        if shift > 35:
-            raise ValueError("snappy varint overflow")
-
-
-def snappy_decompress(b: bytes) -> bytes:
-    """Decompress one raw (unframed) snappy buffer."""
-    n, i = _uvarint(b, 0)
-    out = bytearray()
-    while i < len(b):
-        tag = b[i]
         i += 1
-        kind = tag & 3
-        if kind == 0:                        # literal
-            ln = tag >> 2
-            if ln >= 60:
-                nb = ln - 59
-                if i + nb > len(b):
-                    raise ValueError("truncated snappy literal length")
-                ln = int.from_bytes(b[i:i + nb], "little")
-                i += nb
-            ln += 1
-            if i + ln > len(b):
-                raise ValueError("truncated snappy literal")
-            out += b[i:i + ln]
-            i += ln
-            continue
-        if kind == 1:                        # copy, 11-bit offset
-            ln = ((tag >> 2) & 7) + 4
-            if i >= len(b):
-                raise ValueError("truncated snappy copy")
-            off = ((tag >> 5) << 8) | b[i]
-            i += 1
-        elif kind == 2:                      # copy, 16-bit offset
-            ln = (tag >> 2) + 1
-            if i + 2 > len(b):
-                raise ValueError("truncated snappy copy")
-            off = int.from_bytes(b[i:i + 2], "little")
-            i += 2
-        else:                                # copy, 32-bit offset
-            ln = (tag >> 2) + 1
-            if i + 4 > len(b):
-                raise ValueError("truncated snappy copy")
-            off = int.from_bytes(b[i:i + 4], "little")
-            i += 4
-        if off == 0 or off > len(out):
-            raise ValueError("snappy copy offset out of range")
-        # overlapping copies replicate (offset < length)
-        start = len(out) - off
-        for k in range(ln):
-            out.append(out[start + k])
-    if len(out) != n:
-        raise ValueError(
-            f"snappy length mismatch: header {n}, decoded {len(out)}")
-    return bytes(out)
-
-
-def _emit_literal(out: bytearray, lit: bytes) -> None:
-    n = len(lit) - 1
-    if n < 60:
-        out.append(n << 2)
-    else:
-        nb = (n.bit_length() + 7) // 8
-        out.append((59 + nb) << 2)
-        out += n.to_bytes(nb, "little")
-    out += lit
-
-
-def _emit_copy(out: bytearray, off: int, ln: int) -> None:
-    # split long matches; keep >= 4 bytes in the tail so every piece
-    # is expressible as a copy element
-    while ln > 0:
-        piece = min(ln, 64)
-        if ln - piece in (1, 2, 3):
-            piece = ln - 4
-        if 4 <= piece <= 11 and off < (1 << 11):
-            out.append(1 | ((piece - 4) << 2) | ((off >> 8) << 5))
-            out.append(off & 0xFF)
-        elif off < (1 << 16):
-            out.append(2 | ((piece - 1) << 2))
-            out += off.to_bytes(2, "little")
-        else:
-            out.append(3 | ((piece - 1) << 2))
-            out += off.to_bytes(4, "little")
-        ln -= piece
+        if not b[i - 1] & 0x80:
+            break
+    if n * 3 > (len(b) - i) * 64:
+        raise UnsupportedMediaError(
+            f"snappy: declared length {n} exceeds what {len(b) - i} "
+            "input bytes can decode to")
+    if max_output is not None and n > max_output:
+        raise UnsupportedMediaError("snappy: output exceeds decode cap")
+    try:
+        return pa.Codec("snappy").decompress(b, decompressed_size=n,
+                                             asbytes=True)
+    except (OSError, pa.ArrowException) as exc:
+        raise UnsupportedMediaError(f"snappy: {exc}") from exc
 
 
 def snappy_compress(b: bytes) -> bytes:
-    """Greedy hash-table snappy encoder (fixture/sink twin)."""
-    out = bytearray()
-    n = len(b)
-    nb = bytearray()
-    v = n
-    while True:
-        if v < 0x80:
-            nb.append(v)
-            break
-        nb.append((v & 0x7F) | 0x80)
-        v >>= 7
-    out += nb
-    i = 0
-    lit_start = 0
-    table: dict[bytes, int] = {}
-    while i + 4 <= n:
-        key = b[i:i + 4]
-        cand = table.get(key)
-        table[key] = i
-        if cand is not None and i - cand < (1 << 31):
-            # extend the match
-            ln = 4
-            while i + ln < n and b[cand + ln] == b[i + ln] and ln < 65536:
-                ln += 1
-            if i > lit_start:
-                _emit_literal(out, b[lit_start:i])
-            _emit_copy(out, i - cand, ln)
-            i += ln
-            lit_start = i
-        else:
-            i += 1
-    if lit_start < n:
-        _emit_literal(out, b[lit_start:n])
-    return bytes(out)
+    import pyarrow as pa
+
+    return pa.compress(b, codec="snappy", asbytes=True)

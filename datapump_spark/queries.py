@@ -4294,8 +4294,7 @@ def q_opus_tone(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scaled_events_avro(sf_dir: str, n_rows: int = 20000) -> str:
     """Materialize (once) the first ``n_rows`` events as FOUR Avro
     container files — quarters in codec null, deflate, snappy (r10)
-    and zstd (r11: the pure-Python RFC 8878 decoder) — so one scan
-    witnesses every block decoder."""
+    and zstd (r11) — so one scan witnesses every block decoder."""
     import os
     import shutil
 
@@ -4340,7 +4339,8 @@ def q_avro_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Avro object-container read gate (sources/avro.py, round 9):
     container magic + metadata map, zigzag varints, sync-framed
     blocks, null, deflate, snappy AND zstd codecs (the fixture splits
-    the slice across all four), nullable-union fields — decoded records must
+    the slice across all four; snappy and zstd decode through pyarrow's
+    bundled libsnappy / libzstd), nullable-union fields — decoded records must
     reproduce EXACTLY the events slice the oracle re-selects. Native
     types ride through (no string coercion), unlike the XLSX twin."""
     from datapump_spark.sources.avro import read_avro
@@ -4355,9 +4355,9 @@ def scaled_events_jsonl(sf_dir: str, n_rows: int = 21000) -> str:
     """Materialize (once) the first ``n_rows`` events as EIGHT JSONL
     part-files — eighths in plain text, gzip, bz2, xz, lzma-alone
     (stdlib reference compressors) and zstd, LZ4 frame, brotli
-    (pyarrow's bundled reference codecs — FOREIGN bytes for the three
-    pure-Python decoders) — so one scan witnesses the whole
-    compressed-corpus dispatch (sources/jsonl.py:decompress_auto)."""
+    (pyarrow's bundled reference codecs, which also decode them) — so
+    one scan witnesses the whole compressed-corpus dispatch
+    (sources/jsonl.py:decompress_auto)."""
     import json
     import os
     import shutil
@@ -4414,10 +4414,9 @@ def scaled_events_jsonl(sf_dir: str, n_rows: int = 21000) -> str:
 def q_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed-JSONL corpus read gate (sources/jsonl.py, round 12):
     per-file magic dispatch over plain / gzip / bz2 / xz / lzma-alone
-    / zstd / LZ4 frame / brotli — zstd, lz4 and brotli decoded by the
-    conformance-pinned pure-Python codecs FROM FOREIGN REFERENCE BYTES
-    (pyarrow's bundled libzstd / liblz4 / libbrotli compressed the
-    fixture) — Arrow-batched decode, then JVM-side from_json with an
+    / zstd / LZ4 frame / brotli — zstd, lz4 and brotli compressed and
+    decoded by pyarrow's bundled libzstd / liblz4 / libbrotli —
+    Arrow-batched decode, then JVM-side from_json with an
     explicit schema (no inference pass). Decoded rows must reproduce
     EXACTLY the events slice the oracle re-selects."""
     from datapump_spark.sources.jsonl import read_jsonl_compressed

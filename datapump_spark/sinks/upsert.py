@@ -81,6 +81,10 @@ TOMBSTONE_COL = "__tombstone"
 # the table's PK columns or null (unkeyed), "files": {data file name:
 # [min, max] of the leading key, or null when unknown}}.
 MANIFEST = "_manifest.json"
+# Parquet schema summary of a merge-published version: Spark's schema
+# inference without mergeSchema (the catalog's resource views) reads it
+# before any data file, whose schema may predate an added column.
+SUMMARY = "_common_metadata"
 # write-time partition column that keeps stored (kept) rows and batch
 # rows in separate files; its directories are flattened before publish
 _SIDE_COL = "__side"
@@ -110,6 +114,8 @@ class ParquetMergeSink:
         root/<table>/v-<ns>/             # parquet data files
         root/<table>/v-<ns>/_manifest.json  # merges/compact(): schema,
                                          # keys, per-file key bounds
+        root/<table>/v-<ns>/_common_metadata  # merges: parquet schema
+                                         # summary (catalog views)
 
     ``_current`` is flipped with ``os.replace`` (atomic on POSIX), so a
     reader always resolves a complete version; a crash mid-write leaves
@@ -226,9 +232,10 @@ class ParquetMergeSink:
             self._swap_write(df, table)
             return
         # appended files may add columns and carry no key bounds, so the
-        # version drops its manifest first: reads fall back to merging
-        # the footers, and a merge reads every file
+        # version drops its manifest and schema summary first: reads fall
+        # back to merging the footers, and a merge reads every file
         (cur / MANIFEST).unlink(missing_ok=True)
+        (cur / SUMMARY).unlink(missing_ok=True)
         df.write.mode("append").parquet(str(cur))
 
     def compact(self, spark: SparkSession, table: str,
@@ -297,7 +304,7 @@ class ParquetMergeSink:
 
     def set_properties(self, table: str, **props) -> None:
         merged = {**self.get_properties(table), **props}
-        self._meta_path(table).write_text(json.dumps(merged, sort_keys=True))
+        _replace_text(self._meta_path(table), json.dumps(merged, sort_keys=True))
 
     def stamp_updated(self, table: str, when: datetime | None = None) -> None:
         """K4: rewrite the description's ``(UPDATED: ts)`` suffix in place
@@ -483,6 +490,11 @@ class ParquetMergeSink:
         written = _flatten_sides(vdir)
         for f in links:   # same inode, zero copy
             (vdir / f).hardlink_to(cur_dir / f)
+        if written:   # every written file carries the whole table schema
+            import pyarrow.parquet as pq
+
+            pq.write_metadata(pq.read_schema(vdir / written[0]),
+                              vdir / SUMMARY)
         _write_manifest(vdir, schema, keys,
                         {**links, **_bounds(vdir, written, schema, keys)})
         self._publish(table, name)

@@ -1,8 +1,8 @@
 """Archive ingestion (round 9; family completed round 12): ZIP, TAR
-(``.tar`` / ``.tar.{gz,bz2,xz}`` via stdlib, ``.tar.{zst,lz4,Z}`` via
-the pure-Python conformance-pinned decoders, ``.tar.lzma`` via
-LZMA_ALONE), 7z (sources/sevenzip.py), cpio and ISO 9660
-(sources/cpio_iso.py).
+(``.tar`` / ``.tar.{gz,bz2,xz}`` via stdlib, ``.tar.{zst,lz4}`` via
+pyarrow's bundled libzstd / liblz4, ``.tar.Z`` via the pure-Python
+LZW decoder, ``.tar.lzma`` via LZMA_ALONE), 7z (sources/sevenzip.py),
+cpio and ISO 9660 (sources/cpio_iso.py).
 
 Crawl and document dumps routinely arrive as archives — a directory
 of ``.zip`` bundles, ``.tar.gz`` shards, ``.7z`` collections — and a
@@ -123,9 +123,9 @@ def _sniff_archive(data: bytes) -> str | None:
             or data[:6] == b"\xfd7zXZ\x00":
         return "tar"                    # compressed tar (r:* sniffs)
     if data[:4] == b"\x28\xb5\x2f\xfd":
-        return "tar+zstd"               # .tar.zst (r12: pure-Python zstd)
+        return "tar+zstd"               # .tar.zst (libzstd via pyarrow)
     if data[:4] == b"\x04\x22\x4d\x18":
-        return "tar+lz4"                # .tar.lz4 (r12: pure-Python lz4)
+        return "tar+lz4"                # .tar.lz4 (liblz4 via pyarrow)
     if data[:2] == b"\x1f\x9d":
         return "tar+Z"                  # .tar.Z (r12: pure-Python LZW)
     if len(data) > 262 and data[257:262] == b"ustar":
@@ -139,8 +139,8 @@ def read_archive_members(spark: SparkSession, path: str, *,
                          on_error: str = "null") -> DataFrame:
     """One row per archive MEMBER: (archive_path, member_path,
     member_bytes, member_size, mtime). ZIP, 7z (sources/sevenzip.py,
-    r12) and TAR (plain/gz/bz2/xz via stdlib; zst/lz4 via the r12
-    pure-Python conformance-pinned decoders) are sniffed per file by
+    r12) and TAR (plain/gz/bz2/xz via stdlib; zst/lz4 via pyarrow's
+    bundled libzstd / liblz4) are sniffed per file by
     magic — a directory can mix all of them.
     Oversized members (``max_member_bytes``) and, under
     ``on_error='null'``, unreadable archives yield rows with NULL

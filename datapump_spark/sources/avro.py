@@ -9,11 +9,10 @@ metadata map (schema JSON, codec), sync-marker-framed data blocks,
 zigzag-varint primitives, and recursive datum decoding.
 
 Scope (honest seams recorded in COVERAGE.md): codecs null,
-deflate (raw zlib), zstd (r11, pure-Python RFC 8878 decoder in
-operators/zstd.py, conformance-pinned against libzstd) and snappy
-(r10, pure-Python raw codec in
-operators/snappy.py with the spec's big-endian CRC32 of the
-uncompressed block); schemas of records over primitives, nullable
+deflate (raw zlib), zstd (operators/zstd.py) and snappy
+(operators/snappy.py, with the spec's big-endian CRC32 of the
+uncompressed block), both through pyarrow's bundled libzstd and
+libsnappy; schemas of records over primitives, nullable
 ``["null", T]`` unions, enums, fixed, arrays, maps, and NESTED
 records (nested output as Spark structs); bzip2 and xz blocks decode
 through the stdlib bz2/lzma reference implementations (r11) — every
@@ -172,7 +171,7 @@ def iter_avro_records(b: bytes):
             block = zlib.decompress(block, wbits=-15)
         elif codec == "snappy":
             # spec: raw-snappy block + 4-byte BIG-endian CRC32 of the
-            # UNCOMPRESSED data (r10, operators/snappy.py)
+            # UNCOMPRESSED data (operators/snappy.py)
             from datapump_spark.operators.snappy import snappy_decompress
             if len(block) < 4:
                 raise ValueError("truncated snappy Avro block")
@@ -182,8 +181,8 @@ def iter_avro_records(b: bytes):
                 raise ValueError("snappy Avro block CRC32 mismatch")
         elif codec == "zstd":
             # spec: each block is one zstd frame, no extra CRC (the
-            # frame's own checksum applies when present) — r11,
-            # operators/zstd.py, conformance-pinned vs libzstd
+            # frame's own checksum applies when present) —
+            # operators/zstd.py, pyarrow's bundled libzstd
             from datapump_spark.operators.zstd import decode_zstd
             block = decode_zstd(block)
         elif codec == "bzip2":              # r11: stdlib bz2

@@ -14,8 +14,8 @@ decodes the wire layers for real and flags what it cannot decode:
   after a complete member — both happen in real crawls);
 - ``deflate`` both zlib-wrapped (the RFC meaning) and raw-DEFLATE (the
   infamous server bug — tried second);
-- ``br`` via the pure-Python RFC 7932 decoder in ``operators.brotli``,
-  conformance-pinned against pyarrow's bundled reference libbrotli;
+- ``br`` via ``operators.brotli``, pyarrow's bundled reference
+  libbrotli;
 - chained encodings applied in reverse header order;
 - charset from ``Content-Type`` honored when Python knows the codec
   (lenient, malformed bytes replaced), UTF-8 otherwise.

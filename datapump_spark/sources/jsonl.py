@@ -30,8 +30,9 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 CORRUPT_COL = "_corrupt_record"
 
-# Magic prefixes for the compressed-corpus dispatch (brotli has no
-# magic — it dispatches on the ``.br`` extension).
+# Magic prefixes for the compressed-corpus dispatch (brotli and raw
+# snappy have no magic — they dispatch on the ``.br`` and ``.snappy``
+# extensions).
 _GZIP_MAGIC = b"\x1f\x8b"
 _BZ2_MAGIC = b"BZh"
 _XZ_MAGIC = b"\xfd7zXZ\x00"
@@ -40,23 +41,23 @@ _LZ4_MAGIC = b"\x04\x22\x4d\x18"
 
 
 def _cap_decompress(obj, payload: bytes, cap: int, label: str) -> bytes:
-    """Drain a stdlib decompressobj with a bomb cap (the HTTP-path
-    pattern, sources/http.py): refuse before materializing > cap."""
-    out = obj.decompress(payload, cap + 1)
-    if len(out) > cap:
-        from datapump_spark.operators.codecs import UnsupportedMediaError
+    """Drain a stdlib decompressobj under the shared bomb cap
+    (``operators.codecs.read_capped``): refuse before materializing
+    more than ``cap`` bytes."""
+    from datapump_spark.operators.codecs import read_capped
 
-        raise UnsupportedMediaError(f"{label}: output exceeds decode cap")
-    return out
+    return read_capped(lambda n: obj.decompress(payload, n), cap, label)
 
 
 def decompress_auto(name: str, payload: bytes,
                     max_bytes: int = 1 << 28) -> bytes:
-    """Decompress one corpus file by magic (gzip multi-member, bz2, xz
-    via stdlib; zstd / LZ4 frame / brotli / Unix compress .Z via the
-    pure-Python conformance-pinned decoders), ``.br`` / ``.lzma`` by
-    extension, plain text passthrough. UnsupportedMediaError on
-    unrecognized binary."""
+    """Decompress one corpus file: gzip multi-member, bz2 and xz (stdlib),
+    zstd and LZ4 frame (pyarrow's bundled reference libraries) and Unix
+    compress .Z (``operators.lzw``) by magic; brotli ``.br`` and raw
+    snappy ``.snappy`` (pyarrow) and ``.lzma`` (stdlib) by extension;
+    plain text passes through. UnsupportedMediaError on unrecognized
+    binary, on output past ``max_bytes`` and on every decode failure of
+    the pyarrow codecs."""
     from datapump_spark.operators.codecs import UnsupportedMediaError
 
     if payload[:2] == _GZIP_MAGIC:
@@ -97,6 +98,10 @@ def decompress_auto(name: str, payload: bytes,
         from datapump_spark.operators.brotli import decode_brotli
 
         return decode_brotli(payload, max_output=max_bytes)
+    if name.endswith(".snappy"):
+        from datapump_spark.operators.snappy import snappy_decompress
+
+        return snappy_decompress(payload, max_output=max_bytes)
     if name.endswith(".lzma"):
         import lzma
 
@@ -122,7 +127,7 @@ def read_jsonl_compressed(
 ) -> DataFrame:
     """Scan JSONL in any per-file compression Spark's own line reader
     can't split or (locally) decode: ``.jsonl{,.gz,.bz2,.xz,.zst,.lz4,
-    .br,.Z,.lzma}``, dispatched per file on magic bytes so mixed
+    .br,.snappy,.Z,.lzma}``, dispatched per file on magic bytes so mixed
     directories —
     the normal state of a long-lived corpus — need one scan.
 

@@ -9,9 +9,9 @@ EncodedHeader), describing pack streams, folders (coder chains),
 substreams (solid blocks hold many files) and file metadata.
 
 Codecs: Copy, LZMA1, LZMA2, Delta (stdlib ``lzma`` raw filters —
-real liblzma), Deflate (zlib), BZip2 (bz2), Zstandard (the
-conformance-pinned pure-Python decoder, operators/zstd.py — the
-04F71101 method id libarchive and 7-Zip-zstd emit). Multi-coder
+real liblzma), Deflate (zlib), BZip2 (bz2), Zstandard
+(operators/zstd.py, pyarrow's bundled libzstd — the 04F71101 method
+id libarchive and 7-Zip-zstd emit). Multi-coder
 branch graphs, BCJ executable filters, PPMd and AES-encrypted
 entries are refused honestly (UnsupportedMediaError) — text-corpus
 archives don't use them; executables do.

@@ -87,3 +87,28 @@ def test_pipeline_sync_registers_views(spark, ns, tmp_path):
     assert pipe.run_available().processed
     assert (spark.sql("SELECT * FROM `cat_org__cat_pkg`.`cat_res`").count()
             == sink.read(spark, "cat-res").count())
+
+
+def test_resource_view_shows_columns_only_new_files_carry(spark, ns, tmp_path):
+    """After an add-column upsert the files it did not touch keep the
+    old schema; the resource view must still show the new column. Each
+    merge writes a ``_common_metadata`` summary, which Spark's schema
+    inference reads before any data file. Three add-column rounds: a
+    view that took one data file's schema would have to pick the newest
+    file every time."""
+    sink = ParquetMergeSink(tmp_path / "lake")
+    for lo in range(0, 600, 100):
+        sink.upsert(spark, spark.range(lo, lo + 50, numPartitions=1)
+                    .selectExpr("id AS k", "id * 2 AS a"), "t", ["k"])
+    ns.create_org("cat-org")
+    for col, lo in (("b", 300), ("c", 100), ("d", 500)):
+        sink.upsert(spark, spark.range(lo, lo + 10, numPartitions=1)
+                    .selectExpr("id AS k", "id * 2 AS a", f"'{col}' AS {col}"),
+                    "t", ["k"])
+        name = ns.register_resource("cat-org", "cat-pkg", "cat-res", sink, "t")
+        view = spark.sql(f"SELECT * FROM {name}")
+        assert view.columns == sink.read(spark, "t").columns
+        assert view.count() == 300
+    # appended files carry no summary guarantee: append drops it
+    sink.append(spark.range(600, 605).selectExpr("id AS k"), "t")
+    assert not (sink.current_version("t") / "_common_metadata").exists()

@@ -177,6 +177,6 @@ def test_decompress_auto_bomb_guards():
     }
     for name, payload in cases.items():
         with pytest.raises(ValueError, match="cap|exceeds"):
-            # UnsupportedMediaError and BrotliError both subclass it
+            # UnsupportedMediaError subclasses it
             decompress_auto(name, payload, max_bytes=4096)
         assert decompress_auto(name, payload) == big

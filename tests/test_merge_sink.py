@@ -405,6 +405,26 @@ def test_append_into_a_manifest_version_drops_the_manifest(spark, sink):
     assert {r.id for r in rows if r.extra == "late"} == {10, 11}
 
 
+def test_properties_write_is_atomic(sink, monkeypatch):
+    """A properties write that fails part-way leaves the old properties
+    readable; a torn sidecar would fail every later stamp_updated."""
+    sink.set_properties("t", description="feed")
+    real = Path.write_text
+
+    def torn(self, text, *args, **kwargs):
+        real(self, text[:len(text) // 2], *args, **kwargs)
+        raise OSError("disk full")
+
+    monkeypatch.setattr(Path, "write_text", torn)
+    with pytest.raises(OSError, match="disk full"):
+        sink.set_properties("t", description="feed v2", alias="x")
+    monkeypatch.undo()
+    assert sink.get_properties("t") == {"description": "feed"}
+    sink.stamp_updated("t")
+    assert sink.get_properties("t")["description"].startswith(
+        "feed (UPDATED: ")
+
+
 def test_type_conflict_fails_before_publish(spark, sink):
     sink.upsert(spark, spark.createDataFrame(
         [(i, float(i)) for i in range(10)], "k long, x double"), "t", ["k"])

@@ -1,12 +1,14 @@
-"""Raw snappy codec gates (operators/snappy.py, round 10): round
-trips, the spec's element grammar on hand-built foreign-style
-streams (overlapping RLE copies, 32-bit-offset copies, multi-byte
-literal lengths), and honest failures."""
+"""Raw snappy gates (operators/snappy.py, decoded by the libsnappy
+pyarrow bundles): round trips, the spec's element grammar on
+hand-built foreign-style streams (overlapping RLE copies,
+32-bit-offset copies, multi-byte literal lengths), and refusals, each
+an UnsupportedMediaError naming snappy."""
 
 from __future__ import annotations
 
 import pytest
 
+from datapump_spark.operators.codecs import UnsupportedMediaError
 from datapump_spark.operators.snappy import (
     snappy_compress,
     snappy_decompress,
@@ -48,23 +50,47 @@ def test_hand_built_foreign_streams():
 
 
 def test_honest_failures():
-    with pytest.raises(ValueError, match="varint"):
+    with pytest.raises(UnsupportedMediaError, match="snappy: .*varint"):
         snappy_decompress(b"")
-    with pytest.raises(ValueError, match="length mismatch"):
+    # libsnappy reports every malformed stream as "Corrupt"
+    with pytest.raises(UnsupportedMediaError, match="snappy: Corrupt"):
+        # declared length 5, one byte decoded
         snappy_decompress(bytes([5]) + bytes([0 << 2]) + b"x")
-    with pytest.raises(ValueError, match="offset"):
+    with pytest.raises(UnsupportedMediaError, match="snappy: Corrupt"):
         # copy reaching before the output start
         snappy_decompress(bytes([5]) + bytes([0 << 2]) + b"x"
                           + bytes([1 | (0 << 2)]) + b"\x05")
-    with pytest.raises(ValueError, match="truncated"):
+    with pytest.raises(UnsupportedMediaError, match="snappy: Corrupt"):
+        # truncated literal
         snappy_decompress(bytes([10]) + bytes([9 << 2]) + b"ab")
 
 
+def test_refusals_name_snappy_through_both_entry_points():
+    """Output over the cap, a truncated stream, trailing garbage and a
+    hostile length preamble (4 GiB declared by 3 input bytes, refused
+    without allocating it) raise UnsupportedMediaError naming snappy
+    from snappy_decompress and from the corpus dispatch (raw snappy is
+    dispatched on the ``.snappy`` extension)."""
+    from datapump_spark.sources.jsonl import decompress_auto
+
+    big = snappy_compress(b"s" * 100_000)
+    cases = [(big, 1000, "cap"), (big[:-3], None, "Corrupt"),
+             (big + b"garbage!", None, "Corrupt"),
+             (b"\xff\xff\xff\xff\x0fabc", None, "declared length")]
+    for payload, cap, cause in cases:
+        with pytest.raises(UnsupportedMediaError,
+                           match=f"snappy: .*{cause}"):
+            snappy_decompress(payload, max_output=cap)
+        with pytest.raises(UnsupportedMediaError,
+                           match=f"snappy: .*{cause}"):
+            decompress_auto("c.jsonl.snappy", payload,
+                            max_bytes=cap or 1 << 28)
+    assert decompress_auto("c.jsonl.snappy", big) == b"s" * 100_000
+
+
 def test_conformance_vs_libsnappy():
-    """r11: pyarrow bundles reference libsnappy — pin both directions
-    with foreign bytes (the r10 module predates noticing the
-    in-container reference; this upgrades its evidence from
-    self-consistent to conformance-tested)."""
+    """pyarrow bundles reference libsnappy: its output decodes, and its
+    one-shot API reads the writer twin's output."""
     import random
 
     import pyarrow as pa
