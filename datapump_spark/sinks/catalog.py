@@ -116,8 +116,8 @@ class SparkCatalogNamespace:
         """(Re-)point the resource view at the sink table's current
         version. Called after every publish — catalog-only cost. Spark
         takes the view's schema from the version's ``_common_metadata``
-        summary (written by every merge), so a column only the newest
-        files carry is in the view."""
+        summary (every sink version has one: its manifest's schema), so a
+        column only the newest files carry is in the view."""
         db = self.ensure_package(org, package)
         loc = sink.current_version(table)
         if loc is None:

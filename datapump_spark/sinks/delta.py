@@ -38,11 +38,11 @@ replace()             DELETE FROM … then MERGE INTO … (truncate_sql +
                       upsert_sql: two Delta commits, one publish here)
 set_properties()      ALTER TABLE … SET TBLPROPERTIES (…)
 stamp_updated()       ALTER TABLE … SET TBLPROPERTIES ('updated_at'=…)
-v-<ns>/_manifest.json one ``_delta_log`` commit: ``files`` [min, max] of
-                      the leading PK = each ``add`` action's
+v-<ns>/_manifest.json every publish's ``_delta_log`` commit: ``files``
+                      [min, max] of the leading PK = each ``add``'s
                       ``stats.minValues/maxValues`` (data skipping);
-                      ``schema`` = the ``metaData`` action's schemaString;
-                      ``keys`` = the MERGE ``ON`` columns
+                      ``schema`` = the ``metaData`` schemaString;
+                      ``keys`` = the MERGE ``ON`` columns (null: unkeyed)
 ====================  =====================================================
 
 The manifest is the piece of Delta's log this sink keeps: MERGE reads

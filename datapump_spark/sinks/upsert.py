@@ -9,7 +9,7 @@ no native upsert, so two profiles:
 - ``ParquetMergeSink`` — lake profile for local/testing: MERGE emulated as
   anti-join(overlapping stored files, batch keys) ∪ batch. Tables live in
   versioned directories behind an atomic pointer file (os.replace), so a
-  crash never leaves a missing/torn table. Every version a merge
+  crash never leaves a missing/torn table. Every version any write
   publishes is flat data files plus a ``_manifest.json`` (Spark skips
   ``_`` files): the table schema, the table's keys, and per data file the
   min and max of the leading key. A batch reads and rewrites ONLY the
@@ -17,19 +17,18 @@ no native upsert, so two profiles:
   hardlinked into the new version, byte-identical, O(1) data movement.
   So a time-ordered feed, whose files each overlap the previous window
   only, costs O(its window) per file, not O(table) — the reference's
-  PK-index cost model. Reads take the schema from the manifest instead
-  of a footer scan. ``upsert`` and the CDC ``apply_cdc`` share that one
+  PK-index cost model. Reads take the schema from the manifest, never
+  from a footer scan. ``upsert`` and the CDC ``apply_cdc`` share that one
   write path and differ only in the per-file merge; a version whose
-  manifest records no keys (``overwrite``, ``append``, or the
-  hash-bucketed ``pk_bucket=N/`` layout this sink wrote before) is read
-  whole and rewritten flat by its next merge. At production scale the
-  same call shape maps to Delta ``MERGE INTO``, whose log holds the same
-  things (add-file min/max stats for data skipping, the table schema) and
-  whose ``OPTIMIZE ZORDER BY`` is :meth:`ParquetMergeSink.compact`'s
-  range clustering; this class documents the seam and keeps semantics
-  testable with zero extra dependencies. Single-writer: version GC
-  assumes no concurrent reader holds a superseded version (Delta's log
-  is the multi-writer answer).
+  manifest records no keys (``overwrite``, ``append``) is read whole by
+  its next merge. At production scale the same call shape maps to Delta
+  ``MERGE INTO``, whose log holds the same things (add-file min/max
+  stats for data skipping, the table schema) and whose ``OPTIMIZE
+  ZORDER BY`` is :meth:`ParquetMergeSink.compact`'s range clustering;
+  this class documents the seam and keeps semantics testable with zero
+  extra dependencies. Single-writer: version GC assumes no concurrent
+  reader holds a superseded version (Delta's log is the multi-writer
+  answer).
 - ``JdbcUpsertSink`` — CKAN-datastore-parity profile: per-partition batched
   ``INSERT … ON CONFLICT (pk) DO UPDATE`` through a user-supplied DB-API
   connection factory (no driver baked into the engine). Writes happen on
@@ -65,26 +64,24 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from datapump_spark.functions.sqltext import sql_dq_ident, sql_ident
+from datapump_spark.operators.cdc import TOMBSTONE_COL, latest_changes
 
 # Reference description stamp: '… (UPDATED: 2021-01-01 00:00:00)' appended /
 # rewritten in place (datapump.py:616-630, regex datapump.py:618).
 _UPDATED_RE = re.compile(r" \(UPDATED: (.*?)\)$")
 
 
-# partition column of the hash-bucketed layout this sink wrote before
-# its manifests kept keys: hidden by read(), gone after the next merge
-BUCKET_COL = "pk_bucket"
-# CDC delete marker column (apply_cdc): deletes are retained as marker
-# rows so late out-of-order updates older than the delete stay dead.
-TOMBSTONE_COL = "__tombstone"
 # Per-version manifest: {"schema": data schema (StructType JSON), "keys":
-# the table's PK columns or null (unkeyed), "files": {data file name:
-# [min, max] of the leading key, or null when unknown}}.
+# the table's PK columns, "files": {data file name: [min, max] of the
+# leading key, or null when unknown}}; keys and files are null for an
+# unkeyed table.
 MANIFEST = "_manifest.json"
-# Parquet schema summary of a merge-published version: Spark's schema
-# inference without mergeSchema (the catalog's resource views) reads it
-# before any data file, whose schema may predate an added column.
+# Parquet schema summary of every version: the manifest's schema, which
+# Spark's schema inference (the catalog's resource views) reads before
+# any data file, whose schema may predate an added column.
 SUMMARY = "_common_metadata"
+# footer key-value entry Spark reads its own schema JSON from
+_SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
 # write-time partition column that keeps stored (kept) rows and batch
 # rows in separate files; its directories are flattened before publish
 _SIDE_COL = "__side"
@@ -112,15 +109,16 @@ class ParquetMergeSink:
 
         root/<table>/_current            # text: name of the live version
         root/<table>/v-<ns>/             # parquet data files
-        root/<table>/v-<ns>/_manifest.json  # merges/compact(): schema,
-                                         # keys, per-file key bounds
-        root/<table>/v-<ns>/_common_metadata  # merges: parquet schema
+        root/<table>/v-<ns>/_manifest.json  # schema, keys, per-file
+                                         # key bounds
+        root/<table>/v-<ns>/_common_metadata  # the schema as a parquet
                                          # summary (catalog views)
 
     ``_current`` is flipped with ``os.replace`` (atomic on POSIX), so a
     reader always resolves a complete version; a crash mid-write leaves
     only an orphan ``v-*`` dir that the next successful publish removes.
-    The manifest is written into the new version before the flip.
+    Every write publishes both metadata files into its new version
+    before the flip; an append that adds columns replaces them in place.
     """
 
     def __init__(self, root: str | Path, retain_versions: int = 1):
@@ -162,9 +160,7 @@ class ParquetMergeSink:
             raise ValueError(
                 f"version {version!r} of table {table!r} is not retained "
                 f"(have: {self.versions(table)})")
-        # the schema comes from the version's manifest (see _version_schema)
-        return spark.read.schema(_version_schema(spark, vdir)).parquet(
-            str(vdir)).drop(BUCKET_COL)
+        return spark.read.schema(_read_manifest(vdir)[0]).parquet(str(vdir))
 
     def _history_path(self, table: str) -> Path:
         return self.path(table) / "_history"
@@ -219,6 +215,7 @@ class ParquetMergeSink:
         """Write a fresh full version and flip the pointer to it."""
         name, vdir = self._new_version(table)
         df.write.mode("overwrite").parquet(str(vdir))
+        _write_metadata(vdir, _table_schema(table, StructType(), df.schema))
         self._publish(table, name)
 
     def append(self, df: DataFrame, table: str) -> None:
@@ -226,17 +223,20 @@ class ParquetMergeSink:
         live version in place — O(batch) I/O per event, never a
         read-union-rewrite. Appended files become visible as they land;
         fine for logs, use upsert/overwrite for tables needing snapshot
-        isolation."""
+        isolation. New columns widen the version's metadata; a changed
+        column type or a keyed table raises before anything is written."""
         cur = self.current_version(table)
         if cur is None:
             self._swap_write(df, table)
             return
-        # appended files may add columns and carry no key bounds, so the
-        # version drops its manifest and schema summary first: reads fall
-        # back to merging the footers, and a merge reads every file
-        (cur / MANIFEST).unlink(missing_ok=True)
-        (cur / SUMMARY).unlink(missing_ok=True)
+        old, manifest = _read_manifest(cur)
+        if manifest["keys"] is not None:
+            raise ValueError(f"table {table!r} is keyed by "
+                             f"{manifest['keys']}: upsert into it, not append")
+        schema = _table_schema(table, old, df.schema)
         df.write.mode("append").parquet(str(cur))
+        if len(schema) > len(old):
+            _write_metadata(cur, schema)
 
     def compact(self, spark: SparkSession, table: str,
                 target_file_mb: float = 128) -> dict:
@@ -250,9 +250,8 @@ class ParquetMergeSink:
         A keyed table is range-partitioned and sorted on its leading key
         (``OPTIMIZE ZORDER BY``), so the new files hold disjoint key
         ranges and the next merge of a time-ordered feed rewrites only
-        the file its window overlaps. The new version gets a manifest
-        whose key bounds come from the new files' footers, so merges
-        still prune files and reads still skip the footer scan. Returns
+        the file its window overlaps; its manifest's key bounds come
+        from the new files' footers. Returns
         ``{files_before, files_after, total_mb}``.
         """
         cur = self.current_version(table)
@@ -261,10 +260,9 @@ class ParquetMergeSink:
         files = _data_files(cur)
         total_mb = sum((cur / f).stat().st_size for f in files) / 2**20
         n_out = max(1, math.ceil(total_mb / target_file_mb))
-        manifest = _read_manifest(cur)
-        keys = manifest.get("keys") if manifest is not None else None
-        schema = _version_schema(spark, cur, manifest)
-        df = spark.read.schema(schema).parquet(str(cur)).drop(BUCKET_COL)
+        schema, manifest = _read_manifest(cur)
+        keys = manifest["keys"]
+        df = spark.read.schema(schema).parquet(str(cur))
         if keys:
             lead = F.col(sql_ident(keys[0]))
             df = df.repartitionByRange(n_out, lead).sortWithinPartitions(lead)
@@ -273,7 +271,8 @@ class ParquetMergeSink:
         name, vdir = self._new_version(table)
         df.write.mode("overwrite").parquet(str(vdir))
         written = _data_files(vdir)
-        _write_manifest(vdir, schema, keys, _bounds(vdir, written, schema, keys))
+        _write_metadata(vdir, schema, keys,
+                        _bounds(vdir, written, schema, keys) if keys else None)
         self._publish(table, name)
         return {
             "files_before": len(files),
@@ -355,8 +354,8 @@ class ParquetMergeSink:
 
         Sequence-aware and tombstone-retaining, so it is correct under
         out-of-order delivery ACROSS batches, not just within one:
-        - the batch collapses to one winner per key (sortless max_by on
-          ``seq_cols``, including delete-then-reinsert ordering),
+        - the batch collapses to one winner per key
+          (``operators.cdc.latest_changes``),
         - a winner only replaces the stored row when its sequence is ≥
           the stored one (stale changes are ignored, whole-row-wise),
         - deletes are stored as ``__tombstone`` marker rows (payload
@@ -365,31 +364,16 @@ class ParquetMergeSink:
           state with :meth:`read_state`; compaction may drop tombstones
           older than the feed's reordering horizon.
 
-        Same write path and cost model as :meth:`upsert`: only stored
-        files that may hold batch keys are rewritten, the rest hardlink
-        forward.
-        Replaying the same changelog is a no-op (idempotent), which is
-        what a streaming foreachBatch needs after a retry."""
+        Same write path and cost model as :meth:`upsert`. Replaying the
+        same changelog is a no-op (idempotent), which is what a
+        streaming foreachBatch needs after a retry."""
         keys, seq_cols = list(keys), list(seq_cols)
-        payload = [c for c in changes.columns
-                   if c not in set(keys) | set(seq_cols) | {op_col}]
 
         def cols(names: Sequence[str]) -> list:
             return [F.col(sql_ident(c)) for c in names]
 
         seq_struct = F.struct(*cols(seq_cols))
-        winners = (
-            changes.groupBy(*cols(keys))
-            .agg(F.max_by(
-                F.struct(*cols(seq_cols + payload),
-                         (F.col(sql_ident(op_col)) == delete_op)
-                         .alias(TOMBSTONE_COL)),
-                seq_struct).alias("__w"))
-            .select(*cols(keys),
-                    *[F.col("__w").getField(c).alias(c)
-                      for c in seq_cols + payload],
-                    F.col("__w").getField(TOMBSTONE_COL).alias(TOMBSTONE_COL))
-        )
+        winners = latest_changes(changes, keys, seq_cols, op_col, delete_op)
 
         def merge(current: DataFrame,
                   batch: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -436,29 +420,25 @@ class ParquetMergeSink:
         nothing and writes only itself: the reference's PK-index upsert
         cost (datapump.py:560-566), O(the batch's key range), not
         O(table). A first write is the batch alone; a version whose
-        manifest records no keys (see the module docstring) is read
-        whole and rewritten flat once.
+        manifest records no keys is read whole.
 
-        A merge keyed otherwise than the table raises before anything is
-        written, naming both key lists. The new schema is the table's
-        plus the batch's new columns, in that order, and every written
-        file carries all of it. A batch that gives an existing column
-        another type raises before anything is written, naming the
-        column."""
+        The new schema is the table's plus the batch's new columns, in
+        that order, and every written file carries all of it. Other keys
+        than the table's, or another type for an existing column, raise
+        before anything is written."""
         # a replace drops the old keys along with the old rows
         cur_dir = self.current_version(table) if merge is not None else None
-        manifest = _read_manifest(cur_dir) if cur_dir is not None else None
-        stored_keys = manifest.get("keys") if manifest is not None else None
+        old, manifest = (_read_manifest(cur_dir) if cur_dir is not None
+                         else (StructType(), {}))
+        stored_keys = manifest.get("keys")
         if stored_keys is not None and stored_keys != keys:
             raise ValueError(f"table {table!r} is keyed by {stored_keys}, "
                              f"the merge by {keys}")
-        old = (_version_schema(spark, cur_dir, manifest)
-               if cur_dir is not None else StructType())
         schema = _table_schema(table, old, df.schema)
         sides: list[tuple[str, DataFrame]] = [("b", df)]
         links: dict[str, list | None] = {}
         if cur_dir is not None:
-            read = [cur_dir]   # no keys recorded: read whole, write flat
+            read = [cur_dir]   # no keys recorded: read whole
             if stored_keys is not None:
                 bounded = _BOUNDED_TYPES.get(
                     schema[keys[0]].dataType.simpleString())
@@ -475,7 +455,7 @@ class ParquetMergeSink:
                         links[f] = b
             if read:
                 current = spark.read.schema(old).parquet(*map(str, read))
-                sides = list(zip("kb", merge(current.drop(BUCKET_COL), df)))
+                sides = list(zip("kb", merge(current, df)))
 
         name, vdir = self._new_version(table)
         frame = None
@@ -490,12 +470,7 @@ class ParquetMergeSink:
         written = _flatten_sides(vdir)
         for f in links:   # same inode, zero copy
             (vdir / f).hardlink_to(cur_dir / f)
-        if written:   # every written file carries the whole table schema
-            import pyarrow.parquet as pq
-
-            pq.write_metadata(pq.read_schema(vdir / written[0]),
-                              vdir / SUMMARY)
-        _write_manifest(vdir, schema, keys,
+        _write_metadata(vdir, schema, keys,
                         {**links, **_bounds(vdir, written, schema, keys)})
         self._publish(table, name)
 
@@ -509,39 +484,39 @@ class ParquetMergeSink:
         return df
 
 
-def _read_manifest(vdir: Path) -> dict | None:
+def _read_manifest(vdir: Path) -> tuple[StructType, dict]:
+    """A version's data schema and manifest. The schema is the
+    manifest's: files an add-column merge did not touch keep the old
+    schema, so Spark's pick of one file's schema could drop the new
+    column."""
     p = vdir / MANIFEST
-    return json.loads(p.read_text()) if p.exists() else None
+    if not p.exists():
+        raise ValueError(f"version {vdir} has no {MANIFEST}")
+    manifest = json.loads(p.read_text())
+    return StructType.fromJson(manifest["schema"]), manifest
 
 
-def _write_manifest(vdir: Path, schema: StructType,
-                    keys: Sequence[str] | None, files: dict) -> None:
-    """Into a version not yet published, so no tmp-and-rename."""
-    (vdir / MANIFEST).write_text(json.dumps(
+def _write_metadata(vdir: Path, schema: StructType,
+                    keys: Sequence[str] | None = None,
+                    files: dict | None = None) -> None:
+    """Write a version's manifest and its schema summary, each
+    atomically: an append that adds columns replaces a live version's."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    summary = to_arrow_schema(schema).with_metadata(
+        {_SPARK_SCHEMA_KEY: schema.json()})
+    _replace_file(vdir / SUMMARY,
+                  lambda tmp: pq.write_metadata(summary, str(tmp)))
+    _replace_text(vdir / MANIFEST, json.dumps(
         {"schema": schema.jsonValue(), "keys": keys, "files": files}))
-
-
-def _version_schema(spark: SparkSession, vdir: Path,
-                    manifest: dict | None = None) -> StructType:
-    """A version's data schema (no ``pk_bucket``): from its manifest, or,
-    for a version without one (``overwrite``, ``append``, a table written
-    before manifests), merged from every file footer — a Spark job.
-    Without one of the two, Spark would take the schema of an arbitrary
-    file and could drop a column only newer files carry: after an
-    add-column upsert, files the batch did not touch keep the old schema
-    (hardlinked, deliberately not rewritten)."""
-    manifest = manifest or _read_manifest(vdir)
-    if manifest is not None:
-        return StructType.fromJson(manifest["schema"])
-    merged = spark.read.option("mergeSchema", "true").parquet(str(vdir))
-    return StructType([f for f in merged.schema if f.name != BUCKET_COL])
 
 
 def _table_schema(table: str, old: StructType,
                   batch: StructType) -> StructType:
     """``old``'s columns in order, then the batch's new ones. Raises when
     the batch gives an existing column another type: its files would be
-    unreadable under the table schema (and break a footer merge)."""
+    unreadable under the table schema."""
     fields = list(old.fields)
     have = {f.name: f.dataType.simpleString() for f in fields}
     for f in batch.fields:
@@ -556,8 +531,8 @@ def _table_schema(table: str, old: StructType,
 
 
 def _data_files(vdir: Path) -> list[str]:
-    """Parquet data files of a version, relative to it."""
-    return sorted(str(p.relative_to(vdir)) for p in vdir.rglob("*.parquet")
+    """Names of a version's parquet data files."""
+    return sorted(p.name for p in vdir.glob("*.parquet")
                   if not p.name.startswith((".", "_")))
 
 
@@ -576,12 +551,11 @@ def _flatten_sides(vdir: Path) -> list[str]:
 
 
 def _bounds(vdir: Path, files: Sequence[str], schema: StructType,
-            keys: Sequence[str] | None) -> dict:
+            keys: Sequence[str]) -> dict:
     """Manifest entries of freshly written files: [min, max] of the
-    leading key from each footer, or None for an unkeyed table or where
-    the key type has no usable bounds."""
-    bounded = (_BOUNDED_TYPES.get(schema[keys[0]].dataType.simpleString())
-               if keys else None)
+    leading key from each footer, or None where the key type has no
+    usable bounds."""
+    bounded = _BOUNDED_TYPES.get(schema[keys[0]].dataType.simpleString())
     return {f: _file_bounds(vdir / f, keys[0], *bounded[:2]) if bounded
             else None for f in files}
 
@@ -615,11 +589,19 @@ def _file_bounds(path: Path, key: str, physical: str,
     return None if lo is None else [lo, hi]
 
 
-def _replace_text(dst: Path, text: str) -> None:
-    """Write ``text`` to ``dst`` atomically (tmp file + os.replace)."""
+def _replace_file(dst: Path, write: Callable[[Path], object]) -> None:
+    """Write ``dst`` atomically: ``write(tmp)``, then os.replace. The tmp
+    file is removed when either raises."""
     tmp = dst.with_name(f".{dst.name}-{time.time_ns()}")
-    tmp.write_text(text)
-    tmp.replace(dst)
+    try:
+        write(tmp)
+        tmp.replace(dst)
+    finally:
+        tmp.unlink(missing_ok=True)
+
+
+def _replace_text(dst: Path, text: str) -> None:
+    _replace_file(dst, lambda tmp: tmp.write_text(text))
 
 
 def dedupe_batch_by_pk(batch: list[tuple], key_idx: Sequence[int]) -> list[tuple]:

@@ -124,8 +124,8 @@ def _sniff_archive(data: bytes) -> str | None:
         return "tar"                    # compressed tar (r:* sniffs)
     if data[:4] == b"\x28\xb5\x2f\xfd":
         return "tar+zstd"               # .tar.zst (libzstd via pyarrow)
-    if data[:4] == b"\x04\x22\x4d\x18":
-        return "tar+lz4"                # .tar.lz4 (liblz4 via pyarrow)
+    if data[:4] in (b"\x04\x22\x4d\x18", b"\x02\x21\x4c\x18"):
+        return "tar+lz4"                # .tar.lz4 (frame or legacy)
     if data[:2] == b"\x1f\x9d":
         return "tar+Z"                  # .tar.Z (r12: pure-Python LZW)
     if len(data) > 262 and data[257:262] == b"ustar":

@@ -29,16 +29,23 @@ extension.
 
 from __future__ import annotations
 
+import bz2
 import io
 import json
+import lzma
 import struct
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datapump_spark.operators.codecs import UnsupportedMediaError
+from datapump_spark.operators.codecs import UnsupportedMediaError, read_capped
 
 _MAGIC = b"Obj\x01"
+# decoded-size cap of one data block: the decompression-bomb guard
+BLOCK_DECODE_CAP = 1 << 28
+_STDLIB_CODECS = {"deflate": lambda: zlib.decompressobj(wbits=-15),
+                  "bzip2": bz2.BZ2Decompressor,
+                  "xz": lambda: lzma.LZMADecompressor(format=lzma.FORMAT_XZ)}
 
 
 class _Reader:
@@ -163,12 +170,16 @@ def iter_avro_records(b: bytes):
     every yield so callers can consume it without a separate header
     pass; use :func:`parse_avro_header` for schema-only access)."""
     schema, codec, r, sync = parse_avro_header(b)
+    cap = BLOCK_DECODE_CAP
     while r.i < len(b):
         n_rec = r.long()
         size = r.long()
         block = r.raw(size)
-        if codec == "deflate":
-            block = zlib.decompress(block, wbits=-15)
+        if codec in _STDLIB_CODECS:
+            d = _STDLIB_CODECS[codec]()
+            block = read_capped(lambda n: d.decompress(block, n), cap, codec)
+            if not d.eof:
+                raise UnsupportedMediaError(f"{codec}: truncated Avro block")
         elif codec == "snappy":
             # spec: raw-snappy block + 4-byte BIG-endian CRC32 of the
             # UNCOMPRESSED data (operators/snappy.py)
@@ -176,7 +187,7 @@ def iter_avro_records(b: bytes):
             if len(block) < 4:
                 raise ValueError("truncated snappy Avro block")
             crc = int.from_bytes(block[-4:], "big")
-            block = snappy_decompress(block[:-4])
+            block = snappy_decompress(block[:-4], max_output=cap)
             if zlib.crc32(block) & 0xFFFFFFFF != crc:
                 raise ValueError("snappy Avro block CRC32 mismatch")
         elif codec == "zstd":
@@ -184,13 +195,7 @@ def iter_avro_records(b: bytes):
             # frame's own checksum applies when present) —
             # operators/zstd.py, pyarrow's bundled libzstd
             from datapump_spark.operators.zstd import decode_zstd
-            block = decode_zstd(block)
-        elif codec == "bzip2":              # r11: stdlib bz2
-            import bz2
-            block = bz2.decompress(block)
-        elif codec == "xz":                 # r11: stdlib lzma
-            import lzma
-            block = lzma.decompress(block, format=lzma.FORMAT_XZ)
+            block = decode_zstd(block, max_output=cap)
         if r.raw(16) != sync:
             raise ValueError("Avro sync marker mismatch")
         br = _Reader(block)
@@ -359,10 +364,8 @@ def encode_avro(schema: dict, records, codec: str = "null") -> bytes:
         from datapump_spark.operators.zstd import encode_zstd
         block = encode_zstd(block)
     elif codec == "bzip2":
-        import bz2
         block = bz2.compress(block)
     elif codec == "xz":
-        import lzma
         block = lzma.compress(block, format=lzma.FORMAT_XZ)
     sync = bytes(range(16))
     wire_codec = "zstandard" if codec == "zstd" else codec

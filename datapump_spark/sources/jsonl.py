@@ -37,7 +37,7 @@ _GZIP_MAGIC = b"\x1f\x8b"
 _BZ2_MAGIC = b"BZh"
 _XZ_MAGIC = b"\xfd7zXZ\x00"
 _ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
-_LZ4_MAGIC = b"\x04\x22\x4d\x18"
+_LZ4_MAGICS = (b"\x04\x22\x4d\x18", b"\x02\x21\x4c\x18")  # frame, legacy
 
 
 def _cap_decompress(obj, payload: bytes, cap: int, label: str) -> bytes:
@@ -86,7 +86,7 @@ def decompress_auto(name: str, payload: bytes,
         from datapump_spark.operators.zstd import decode_zstd
 
         return decode_zstd(payload, max_output=max_bytes)
-    if payload[:4] == _LZ4_MAGIC:
+    if payload[:4] in _LZ4_MAGICS:
         from datapump_spark.operators.lz4 import decode_lz4_frame
 
         return decode_lz4_frame(payload, max_output=max_bytes)

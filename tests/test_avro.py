@@ -116,6 +116,7 @@ def test_bzip2_and_xz_codecs_round_trip():
     named codec is now readable; corrupt blocks fail loudly."""
     import bz2
     import lzma
+    import zlib
 
     for codec in ("bzip2", "xz"):
         b = encode_avro(SCHEMA, RECS, codec)
@@ -127,14 +128,34 @@ def test_bzip2_and_xz_codecs_round_trip():
     _, _, r, sync = parse_avro_header(null_file)
     n, size = r.long(), r.long()
     raw = r.raw(size)
+    co = zlib.compressobj(wbits=-15)
     for codec, comp in (("bzip2", bz2.compress(raw)),
-                        ("xz", lzma.compress(raw))):
+                        ("xz", lzma.compress(raw)),
+                        ("deflate", co.compress(raw) + co.flush())):
         base = encode_avro(SCHEMA, RECS, codec)
         hdr = base[:base.index(bytes(range(16))) + 16]
         foreign = hdr + _zigzag(n) + _zigzag(len(comp)) + comp + sync
         assert [rec for _, rec in iter_avro_records(foreign)] == RECS
+        # a block cut short is refused, not decoded in part
+        cut = hdr + _zigzag(n) + _zigzag(len(comp) - 2) + comp[:-2] + sync
+        with pytest.raises(UnsupportedMediaError, match=f"{codec}: truncated"):
+            list(iter_avro_records(cut))
     # corrupt xz payload raises
     b = bytearray(encode_avro(SCHEMA, RECS, "xz"))
     b[-20] ^= 0xFF
     with pytest.raises(Exception):
         list(iter_avro_records(bytes(b)))
+
+
+@pytest.mark.parametrize("codec", ["deflate", "bzip2", "xz", "zstd", "snappy"])
+def test_block_decode_cap_names_the_codec(monkeypatch, codec):
+    """Every codec decodes a block under ``BLOCK_DECODE_CAP`` and refuses
+    one past it (a decompression bomb) with an error naming the codec."""
+    from datapump_spark.sources import avro
+
+    b = encode_avro(SCHEMA, RECS * 50, codec)
+    monkeypatch.setattr(avro, "BLOCK_DECODE_CAP", 1 << 20)
+    assert [r for _, r in iter_avro_records(b)] == RECS * 50
+    monkeypatch.setattr(avro, "BLOCK_DECODE_CAP", 100)
+    with pytest.raises(UnsupportedMediaError, match=f"{codec}: .*cap"):
+        list(iter_avro_records(b))

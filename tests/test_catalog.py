@@ -92,10 +92,11 @@ def test_pipeline_sync_registers_views(spark, ns, tmp_path):
 def test_resource_view_shows_columns_only_new_files_carry(spark, ns, tmp_path):
     """After an add-column upsert the files it did not touch keep the
     old schema; the resource view must still show the new column. Each
-    merge writes a ``_common_metadata`` summary, which Spark's schema
-    inference reads before any data file. Three add-column rounds: a
-    view that took one data file's schema would have to pick the newest
-    file every time."""
+    version carries a ``_common_metadata`` summary of its manifest's
+    schema, which Spark's schema inference reads before any data file.
+    Three add-column rounds: a view that took one data file's schema
+    would have to pick the newest file every time. An append that adds
+    a column widens the summary too."""
     sink = ParquetMergeSink(tmp_path / "lake")
     for lo in range(0, 600, 100):
         sink.upsert(spark, spark.range(lo, lo + 50, numPartitions=1)
@@ -109,6 +110,7 @@ def test_resource_view_shows_columns_only_new_files_carry(spark, ns, tmp_path):
         view = spark.sql(f"SELECT * FROM {name}")
         assert view.columns == sink.read(spark, "t").columns
         assert view.count() == 300
-    # appended files carry no summary guarantee: append drops it
-    sink.append(spark.range(600, 605).selectExpr("id AS k"), "t")
-    assert not (sink.current_version("t") / "_common_metadata").exists()
+    sink.append(spark.range(2).selectExpr("id AS k"), "log")
+    sink.append(spark.range(2, 3).selectExpr("id AS k", "'x' AS note"), "log")
+    name = ns.register_resource("cat-org", "cat-pkg", "cat-log", sink, "log")
+    assert spark.sql(f"SELECT * FROM {name}").columns == ["k", "note"]

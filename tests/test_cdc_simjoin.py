@@ -12,6 +12,13 @@ import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 
 # ---------------------------------------------------------------- CDC
@@ -36,14 +43,20 @@ def test_apply_changes_latest_wins_and_tombstones(spark):
 
 
 def test_apply_changes_multi_seq_and_payload_inference(spark):
+    """Also under a dotted key, a backticked sequence column and a
+    dotted payload with a space: names reach Spark only quoted."""
     from datapump_spark.operators.cdc import apply_changes
 
     rows = [(1, 10, 1, "U", 5.0), (1, 10, 2, "U", 7.0),
-            (1, 9, 99, "D", 0.0)]
-    df = spark.createDataFrame(
-        rows, "k long, ts long, sub long, op string, v double")
-    out = apply_changes(df, ["k"], ["ts", "sub"]).collect()
-    assert len(out) == 1 and out[0]["v"] == 7.0 and out[0]["sub"] == 2
+            (1, 9, 99, "D", 0.0), (2, 1, 1, "U", 1.0), (2, 2, 1, "D", 0.0)]
+    for k, ts, v in (("k", "ts", "v"), ("k.k", "t`s", "v.v a")):
+        df = spark.createDataFrame(rows, StructType([
+            StructField(k, LongType()), StructField(ts, LongType()),
+            StructField("sub", LongType()), StructField("op", StringType()),
+            StructField(v, DoubleType())]))
+        out = apply_changes(df, [k], [ts, "sub"]).collect()
+        assert out[0].__fields__ == [k, ts, "sub", v]
+        assert len(out) == 1 and out[0][v] == 7.0 and out[0]["sub"] == 2
 
 
 # --------------------------------------------------------- sparse cosine

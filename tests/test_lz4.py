@@ -228,7 +228,8 @@ def test_refusals_name_lz4_through_both_entry_points():
     hostile block sizes (a frame block or a legacy block declaring
     ~2 GiB / ~4 GiB after a few input bytes, refused without allocating
     them) raise UnsupportedMediaError naming lz4 from decode_lz4_frame
-    and, for modern frames, from the corpus dispatch."""
+    and from the corpus dispatch, which sniffs both frame magics."""
+    from datapump_spark.sources.archives import _sniff_archive
     from datapump_spark.sources.jsonl import decompress_auto
 
     big = encode_lz4_frame(b"q" * 100_000)
@@ -241,6 +242,12 @@ def test_refusals_name_lz4_through_both_entry_points():
             decode_lz4_frame(payload, max_output=cap or 1 << 31)
         with pytest.raises(UnsupportedMediaError, match=f"lz4: .*{cause}"):
             decompress_auto("c.jsonl.lz4", payload, max_bytes=cap or 1 << 28)
-    # the corpus dispatch sniffs only the modern frame magic
+    legacy = _LEGACY + (0xFFFFFFF0).to_bytes(4, "little") + b"abc"
     with pytest.raises(UnsupportedMediaError, match="lz4: truncated legacy"):
-        decode_lz4_frame(_LEGACY + (0xFFFFFFF0).to_bytes(4, "little") + b"abc")
+        decode_lz4_frame(legacy)
+    with pytest.raises(UnsupportedMediaError, match="lz4: truncated legacy"):
+        decompress_auto("c.jsonl.lz4", legacy)
+    block = _RAW.compress(b'{"a": 1}\n' * 50, asbytes=True)
+    assert decompress_auto("c.jsonl.lz4", _legacy_frame([block])) == \
+        b'{"a": 1}\n' * 50
+    assert _sniff_archive(_legacy_frame([block])) == "tar+lz4"

@@ -14,6 +14,7 @@ from __future__ import annotations
 import importlib.util
 import json
 import random
+import re
 import shutil
 import sys
 import uuid
@@ -26,8 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from datapump_spark.sinks.upsert import (
-    BUCKET_COL,
     MANIFEST,
+    SUMMARY,
     TOMBSTONE_COL,
     ParquetMergeSink,
 )
@@ -105,47 +106,11 @@ def test_versioned_publish_single_live_version(spark, sink):
     assert (tdir / "_current").read_text().strip() == versions[0].name
 
 
-def _bucketed_version(spark, sink, table, rows, manifest=False):
-    """Publish ``rows`` (k, v) in the hash-bucketed layout this sink wrote
-    before its manifests kept keys: ``pk_bucket=N/`` directories, with no
-    manifest or (``manifest=True``) one naming only the leading key."""
-    vdir = sink.path(table) / "v-1"
-    df = spark.createDataFrame(rows, "k long, v string")
-    (df.withColumn(BUCKET_COL, F.pmod(F.xxhash64("k"), F.lit(4)).cast("int"))
-     .write.partitionBy(BUCKET_COL).parquet(str(vdir)))
-    if manifest:
-        (vdir / MANIFEST).write_text(json.dumps({
-            "schema": df.schema.jsonValue(), "key": "k",
-            "files": dict.fromkeys(_inodes(vdir))}))
-    (sink.path(table) / "_current").write_text(vdir.name)
-    assert any(sink.current_version(table).glob(f"{BUCKET_COL}=*"))
-
-
-def test_read_hides_bucket_column(spark, sink):
-    _bucketed_version(spark, sink, "t", [(1, "a"), (2, "b")])
-    assert sorted(sink.read(spark, "t").columns) == ["k", "v"]
-
-
-@pytest.mark.parametrize("manifest", [False, True])
-def test_bucketed_version_is_rewritten_flat_by_its_next_merge(
-        spark, sink, manifest):
-    _bucketed_version(spark, sink, "t", [(i, f"v{i}") for i in range(20)],
-                      manifest)
-    sink.upsert(spark, spark.createDataFrame([(3, "NEW"), (99, "new")],
-                                             "k long, v string"), "t", ["k"])
-    vdir = sink.current_version("t")
-    assert not [p for p in vdir.iterdir() if p.is_dir()]
-    assert _manifest(sink, "t")["keys"] == ["k"]
-    assert set(_manifest(sink, "t")["files"]) == set(_inodes(vdir))
-    rows = {r.k: r.v for r in sink.read(spark, "t").collect()}
-    assert rows == {**{i: f"v{i}" for i in range(20)}, 3: "NEW", 99: "new"}
-
-
 def test_migration_from_overwrite_layout(spark, sink):
     df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
     sink.overwrite(df1, "t")
-    v1 = sink.current_version("t")
-    assert not (v1 / MANIFEST).exists()  # no keys recorded
+    m = _manifest(sink, "t")
+    assert (m["keys"], m["files"]) == (None, None)  # no keys recorded
 
     df2 = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
     sink.upsert(spark, df2, "t", ["k"])  # read whole, rewritten keyed
@@ -161,6 +126,10 @@ def test_key_mismatch_raises(spark, sink):
     with pytest.raises(ValueError,
                        match=r"keyed by \['k'\], the merge by \['v'\]"):
         sink.upsert(spark, df, "t", ["v"])
+    files = _inodes(live)
+    with pytest.raises(ValueError, match=r"keyed by \['k'\]: upsert"):
+        sink.append(df, "t")   # would bypass the key
+    assert _inodes(live) == files
     assert [d for d in sink.path("t").glob("v-*")] == [live]
 
 
@@ -345,8 +314,7 @@ def _jobs(spark, fn):
 
 def _merged_read_schema(spark, vdir):
     df = spark.read.option("mergeSchema", "true").parquet(str(vdir))
-    return [(f.name, f.dataType.simpleString())
-            for f in df.drop(BUCKET_COL).schema]
+    return [(f.name, f.dataType.simpleString()) for f in df.schema]
 
 
 def _manifest_schema(sink, table):
@@ -354,19 +322,33 @@ def _manifest_schema(sink, table):
             StructType.fromJson(_manifest(sink, table)["schema"])]
 
 
-def test_manifest_read_runs_no_job_and_overwrite_reads_through_footers(
-        spark, sink):
+def test_read_runs_no_job_on_every_kind_of_version(spark, sink):
+    """Merged, overwritten, appended (first and widening appends) and
+    compacted versions all carry the manifest and the schema summary,
+    so reading any of them runs no Spark job."""
+    def check(table):
+        vdir = sink.current_version(table)
+        assert (vdir / MANIFEST).exists() and (vdir / SUMMARY).exists()
+        assert _manifest_schema(sink, table) == _merged_read_schema(spark, vdir)
+        assert _jobs(spark, lambda: sink.read(spark, table)) == 0
+
     sink.upsert(spark, spark.createDataFrame(
         [(i, f"v{i}") for i in range(20)], "k long, v string"), "t", ["k"])
     m = _manifest(sink, "t")
     assert m["keys"] == ["k"] and m["files"]
     assert all(lo <= hi for lo, hi in m["files"].values())
-    assert _jobs(spark, lambda: sink.read(spark, "t")) == 0
-    # an overwrite version has no manifest: reads merge the footers
+    check("t")
     sink.overwrite(spark.createDataFrame([(1, 2.5)], "a long, b double"), "s")
-    assert not (sink.current_version("s") / MANIFEST).exists()
-    assert _jobs(spark, lambda: sink.read(spark, "s")) == 1
+    check("s")
     assert [tuple(r) for r in sink.read(spark, "s").collect()] == [(1, 2.5)]
+    sink.append(spark.range(3).selectExpr("id"), "audit")
+    check("audit")
+    sink.append(spark.range(3, 5).selectExpr("id", "'x' AS note"), "audit")
+    check("audit")
+    sink.compact(spark, "audit")
+    check("audit")
+    assert sorted(tuple(r) for r in sink.read(spark, "audit").collect()) == [
+        (0, None), (1, None), (2, None), (3, "x"), (4, "x")]
 
 
 def test_compact_writes_a_manifest_that_still_prunes(spark, sink):
@@ -392,17 +374,53 @@ def test_compact_writes_a_manifest_that_still_prunes(spark, sink):
     assert before.items() <= after.items()
 
 
-def test_append_into_a_manifest_version_drops_the_manifest(spark, sink):
+def test_append_widens_the_manifest_only_when_columns_grow(spark, sink):
+    """An append keeps the version's metadata: it rewrites it only for a
+    new column, so an audit append stays O(batch). Another type for an
+    existing column raises before anything is written."""
     for i in range(2):
         sink.append(spark.range(i * 5, i * 5 + 5).selectExpr("id"), "audit")
     sink.compact(spark, "audit")
-    assert (sink.current_version("audit") / MANIFEST).exists()
-    sink.append(spark.range(10, 12).selectExpr("id", "'late' AS extra"),
+    vdir = sink.current_version("audit")
+    stamp = (vdir / MANIFEST).stat().st_ino
+    sink.append(spark.range(10, 11).selectExpr("id"), "audit")
+    assert (vdir / MANIFEST).stat().st_ino == stamp
+    sink.append(spark.range(11, 13).selectExpr("id", "'late' AS extra"),
                 "audit")
-    assert not (sink.current_version("audit") / MANIFEST).exists()
+    assert (vdir / MANIFEST).stat().st_ino != stamp
+    assert _manifest_schema(sink, "audit") == [("id", "bigint"),
+                                               ("extra", "string")]
+    assert (_manifest(sink, "audit")["keys"],
+            _manifest(sink, "audit")["files"]) == (None, None)
     rows = sink.read(spark, "audit").collect()
-    assert sorted(r.id for r in rows) == list(range(12))
-    assert {r.id for r in rows if r.extra == "late"} == {10, 11}
+    assert sorted(r.id for r in rows) == list(range(13))
+    assert {r.id for r in rows if r.extra == "late"} == {11, 12}
+
+    files = _inodes(vdir)
+    with pytest.raises(ValueError,
+                       match="'extra' is string, the batch gives int"):
+        sink.append(spark.range(13, 14).selectExpr("id", "1 AS extra"),
+                    "audit")
+    assert _inodes(vdir) == files and sink.current_version("audit") == vdir
+    assert len(sink.read(spark, "audit").collect()) == 13
+
+
+def test_version_without_a_manifest_raises_naming_it(spark, sink):
+    """Every write publishes a manifest, so a version without one (built
+    here by hand) is refused by name rather than guessed at."""
+    vdir = sink.path("t") / "v-1"
+    spark.createDataFrame([(1, "a")], "k long, v string").write.parquet(
+        str(vdir))
+    (sink.path("t") / "_current").write_text(vdir.name)
+    batch = spark.createDataFrame([(2, "b")], "k long, v string")
+    for write in (lambda: sink.read(spark, "t"),
+                  lambda: sink.upsert(spark, batch, "t", ["k"]),
+                  lambda: sink.append(batch, "t"),
+                  lambda: sink.compact(spark, "t")):
+        with pytest.raises(ValueError,
+                           match=re.escape(f"{vdir} has no {MANIFEST}")):
+            write()
+    assert [d.name for d in sink.path("t").glob("v-*")] == ["v-1"]
 
 
 def test_properties_write_is_atomic(sink, monkeypatch):
@@ -420,6 +438,8 @@ def test_properties_write_is_atomic(sink, monkeypatch):
         sink.set_properties("t", description="feed v2", alias="x")
     monkeypatch.undo()
     assert sink.get_properties("t") == {"description": "feed"}
+    # the torn tmp file is removed, not left next to the sidecar
+    assert [p.name for p in sink.root.iterdir()] == [".t.meta.json"]
     sink.stamp_updated("t")
     assert sink.get_properties("t")["description"].startswith(
         "feed (UPDATED: ")
