@@ -32,7 +32,10 @@ upsert()              MERGE INTO … WHEN MATCHED UPDATE SET * /
 apply_cdc()           MERGE INTO … with sequence guard + tombstone DELETE
 read(version=…)       SELECT * FROM … VERSION AS OF n
 versions()            DESCRIBE HISTORY …
-compact()             OPTIMIZE … [ZORDER BY (…)]
+merge's ``c`` side    auto compaction (``delta.autoOptimize.autoCompact``),
+                      which rewrites small files into larger ones
+compact()             OPTIMIZE … ZORDER BY (leading key); unkeyed:
+                      OPTIMIZE …
 vacuum()              VACUUM … RETAIN n HOURS
 replace()             DELETE FROM … then MERGE INTO … (truncate_sql +
                       upsert_sql: two Delta commits, one publish here)
@@ -56,7 +59,10 @@ and OPTIMIZE/VACUUM run incrementally instead of rewriting versions.
 Neither profile hash-partitions by key: file-level min/max stats are the
 only MERGE pruning, and ``compact()``'s range clustering on the leading
 key is ``compact_sql(table, zorder_by=[leading key])``, which keeps a
-time-ordered feed's MERGE to the files of its window.
+time-ordered feed's MERGE to the files of its window. A merge that finds
+more than ``COLD_FILES`` small files below its batch compacts them the
+same way as a third side of its own write, where Delta's auto
+compaction rewrites small files in a job after the commit.
 """
 
 from __future__ import annotations

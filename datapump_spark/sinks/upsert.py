@@ -23,9 +23,10 @@ no native upsert, so two profiles:
   manifest records no keys (``overwrite``, ``append``) is read whole by
   its next merge. At production scale the same call shape maps to Delta
   ``MERGE INTO``, whose log holds the same things (add-file min/max
-  stats for data skipping, the table schema) and whose ``OPTIMIZE
-  ZORDER BY`` is :meth:`ParquetMergeSink.compact`'s range clustering;
-  this class documents the seam and keeps semantics testable with zero
+  stats for data skipping, the table schema); the merge's compaction of
+  its cold files is Delta's auto-compaction and
+  :meth:`ParquetMergeSink.compact` its ``OPTIMIZE ZORDER BY``. This
+  class documents the seam and keeps semantics testable with zero
   extra dependencies. Single-writer: version GC assumes no concurrent
   reader holds a superseded version (Delta's log is the multi-writer
   answer).
@@ -42,10 +43,15 @@ O(new files); the bounds need footer min/max, which parquet INT96
 timestamps lack, hence ``TIMESTAMP_MICROS`` in ``session.tuned_builder``
 (a session writing INT96 still merges correctly, reading every file).
 A batch spread over the whole key range reads every file, and a tiny
-random-key batch rewrites each file its range falls in, whole; the
-number of files a merge writes follows its write tasks (about two per
-queue file: kept rows and batch rows). JDBC batches default to 1000
-rows/execute to bound round-trips.
+random-key batch rewrites each file its range falls in, whole. A merge
+writes about two files (kept rows and batch rows) and replaces the
+ones it read, so a time-ordered feed adds one file per queue file.
+The merge itself bounds that: once more than ``COLD_FILES`` files lie
+wholly below the batch and under half of ``TARGET_FILE_MB``, the same
+write rewrites them as a few range-partitioned target-size files, so
+such a feed's table holds at most ``COLD_FILES`` small files below its
+window, and a row is compacted again only while its file is small.
+JDBC batches default to 1000 rows/execute to bound round-trips.
 """
 
 from __future__ import annotations
@@ -82,9 +88,17 @@ MANIFEST = "_manifest.json"
 SUMMARY = "_common_metadata"
 # footer key-value entry Spark reads its own schema JSON from
 _SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
-# write-time partition column that keeps stored (kept) rows and batch
-# rows in separate files; its directories are flattened before publish
+# write-time partition column that keeps a merge's sides in separate
+# files: ``k`` stored rows kept from the batch's window, ``b`` the batch,
+# ``c`` cold files compacted; its directories are flattened before publish
 _SIDE_COL = "__side"
+# A merge compacts its cold files (wholly below the batch's leading key
+# and under half of TARGET_FILE_MB) once there are more than COLD_FILES
+# of them. Compaction writes ceil(size / TARGET_FILE_MB) files, so each
+# of several outputs holds about half a target or more and is seldom
+# cold again.
+TARGET_FILE_MB = 128
+COLD_FILES = 16
 
 # Leading-key types whose parquet footer min/max orders as Spark orders
 # them, by Spark type: the footer's physical type, a marker its logical
@@ -154,6 +168,8 @@ class ParquetMergeSink:
         # (requires retain_versions > 1 at write time).
         if version is None:
             vdir = self.current_version(table)
+            if vdir is None:
+                raise ValueError(f"no such table: {table!r}")
         elif version in self.versions(table):
             vdir = self.path(table) / version
         else:
@@ -238,42 +254,25 @@ class ParquetMergeSink:
         if len(schema) > len(old):
             _write_metadata(cur, schema)
 
-    def compact(self, spark: SparkSession, table: str,
-                target_file_mb: float = 128) -> dict:
-        """Bin-pack small part files into ~``target_file_mb`` outputs (the
-        Delta ``OPTIMIZE`` seam). The append path (audit logs) and
-        per-batch upserts accumulate files whose open/footer overhead
-        eventually dominates scans; compaction rewrites the live version
-        coalesced and flips the pointer atomically — readers see either
-        the old layout or the new one, never a partial rewrite.
-
-        A keyed table is range-partitioned and sorted on its leading key
-        (``OPTIMIZE ZORDER BY``), so the new files hold disjoint key
-        ranges and the next merge of a time-ordered feed rewrites only
-        the file its window overlaps; its manifest's key bounds come
-        from the new files' footers. Returns
-        ``{files_before, files_after, total_mb}``.
-        """
+    def compact(self, spark: SparkSession, table: str) -> dict:
+        """Rewrite every data file of the live version as the merge
+        rewrites its cold files (the Delta ``OPTIMIZE`` seam): one write
+        of ceil(size / ``TARGET_FILE_MB``) files, range-partitioned and
+        sorted on a keyed table's leading key (``OPTIMIZE ZORDER BY``),
+        so the new files hold disjoint key ranges; an unkeyed table (an
+        audit log) is only repartitioned. The pointer flips atomically,
+        so readers see the old layout or the new one. Tombstone rows are
+        rows like any other and stay. Returns ``{files_before,
+        files_after, total_mb}``."""
         cur = self.current_version(table)
         if cur is None:
             raise ValueError(f"no such table: {table!r}")
-        files = _data_files(cur)
-        total_mb = sum((cur / f).stat().st_size for f in files) / 2**20
-        n_out = max(1, math.ceil(total_mb / target_file_mb))
         schema, manifest = _read_manifest(cur)
+        files = _data_files(cur)
         keys = manifest["keys"]
-        df = spark.read.schema(schema).parquet(str(cur))
-        if keys:
-            lead = F.col(sql_ident(keys[0]))
-            df = df.repartitionByRange(n_out, lead).sortWithinPartitions(lead)
-        else:
-            df = df.repartition(n_out)
-        name, vdir = self._new_version(table)
-        df.write.mode("overwrite").parquet(str(vdir))
-        written = _data_files(vdir)
-        _write_metadata(vdir, schema, keys,
-                        _bounds(vdir, written, schema, keys) if keys else None)
-        self._publish(table, name)
+        side, total_mb = _compacted(spark, cur, files, schema, keys)
+        written = self._write_sides(table, schema, keys, [("c", side)], {},
+                                    None)
         return {
             "files_before": len(files),
             "files_after": len(written),
@@ -361,8 +360,8 @@ class ParquetMergeSink:
         - deletes are stored as ``__tombstone`` marker rows (payload
           nulls) rather than physical removals, so a late update older
           than an applied delete is correctly discarded. Read the live
-          state with :meth:`read_state`; compaction may drop tombstones
-          older than the feed's reordering horizon.
+          state with :meth:`read_state`; compaction, the merge's and
+          :meth:`compact`'s, keeps tombstone rows like any other row.
 
         Same write path and cost model as :meth:`upsert`. Replaying the
         same changelog is a no-op (idempotent), which is what a
@@ -422,6 +421,14 @@ class ParquetMergeSink:
         O(table). A first write is the batch alone; a version whose
         manifest records no keys is read whole.
 
+        Bounded file count: a hardlinked file whose range lies wholly
+        below the batch's minimum and that is smaller than half of
+        ``TARGET_FILE_MB`` is cold. Once there are more than
+        ``COLD_FILES`` cold files, they become a third side of the same
+        write, compacted as :meth:`compact` compacts a whole table, so
+        they never share a file with the window's kept rows or the
+        batch, and the compacted files stay clear of later batches.
+
         The new schema is the table's plus the batch's new columns, in
         that order, and every written file carries all of it. Other keys
         than the table's, or another type for an existing column, raise
@@ -437,6 +444,7 @@ class ParquetMergeSink:
         schema = _table_schema(table, old, df.schema)
         sides: list[tuple[str, DataFrame]] = [("b", df)]
         links: dict[str, list | None] = {}
+        cold: list[str] = []
         if cur_dir is not None:
             read = [cur_dir]   # no keys recorded: read whole
             if stored_keys is not None:
@@ -453,10 +461,28 @@ class ParquetMergeSink:
                         read.append(cur_dir / f)
                     else:
                         links[f] = b
+                cold = [f for f, b in links.items() if lo is not None
+                        and b[1] < lo and (cur_dir / f).stat().st_size
+                        < TARGET_FILE_MB * 2**19]
             if read:
                 current = spark.read.schema(old).parquet(*map(str, read))
                 sides = list(zip("kb", merge(current, df)))
+        if len(cold) > COLD_FILES:
+            sides.append(("c", _compacted(spark, cur_dir, cold, old, keys)[0]))
+            for f in cold:
+                del links[f]
+        self._write_sides(table, schema, keys, sides, links, cur_dir)
 
+    def _write_sides(self, table: str, schema: StructType,
+                     keys: list[str] | None,
+                     sides: Sequence[tuple[str, DataFrame]],
+                     links: dict, cur_dir: Path | None) -> list[str]:
+        """The one write of a keyed table's new version (and of a
+        compaction): every side's rows, widened to ``schema``, in one
+        job partitioned by ``_SIDE_COL``, so no file mixes two sides;
+        then ``links`` (manifest entries of ``cur_dir`` files) are
+        hardlinked in, the manifest written and the version published.
+        Returns the names of the files written."""
         name, vdir = self._new_version(table)
         frame = None
         for tag, side in sides:
@@ -470,9 +496,10 @@ class ParquetMergeSink:
         written = _flatten_sides(vdir)
         for f in links:   # same inode, zero copy
             (vdir / f).hardlink_to(cur_dir / f)
-        _write_metadata(vdir, schema, keys,
+        _write_metadata(vdir, schema, keys, None if keys is None else
                         {**links, **_bounds(vdir, written, schema, keys)})
         self._publish(table, name)
+        return written
 
     def read_state(self, spark: SparkSession, table: str) -> DataFrame:
         """Live CDC state: the table minus tombstone marker rows and
@@ -528,6 +555,22 @@ def _table_schema(table: str, old: StructType,
                 f"table {table!r}: column {f.name!r} is {have[f.name]}, "
                 f"the batch gives {got}")
     return StructType(fields)
+
+
+def _compacted(spark: SparkSession, vdir: Path, files: Sequence[str],
+               schema: StructType,
+               keys: Sequence[str] | None) -> tuple[DataFrame, float]:
+    """The compaction side: the rows of ``files`` (of ``vdir``) as
+    ceil(size / ``TARGET_FILE_MB``) partitions, range-partitioned and
+    sorted on the leading key, or only repartitioned when ``keys`` is
+    None; and their size in MiB."""
+    mb = sum((vdir / f).stat().st_size for f in files) / 2**20
+    n = max(1, math.ceil(mb / TARGET_FILE_MB))
+    df = spark.read.schema(schema).parquet(*[str(vdir / f) for f in files])
+    if keys is None:
+        return df.repartition(n), mb
+    lead = F.col(sql_ident(keys[0]))
+    return df.repartitionByRange(n, lead).sortWithinPartitions(lead), mb
 
 
 def _data_files(vdir: Path) -> list[str]:

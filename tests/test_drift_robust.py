@@ -139,24 +139,6 @@ def test_heavy_hitters_lower_bound_mode(spark):
     assert n // 2 - math.ceil(n / 101) <= cand["hot"] <= n // 2
 
 
-# ------------------------------------------------------------------ UDTF
-
-def test_sentence_split_udtf_equals_native(spark):
-    from datapump_spark.functions.udtfs import (
-        split_sentences_native, split_sentences_udtf)
-
-    rows = [(1, "One two. Three four! Five?  Six."),
-            (2, "No terminator here"),
-            (3, ""), (4, None)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    u = {tuple(r) for r in
-         split_sentences_udtf(df, "text", ["doc_id"]).collect()}
-    n = {tuple(r) for r in
-         split_sentences_native(df, "text", ["doc_id"]).collect()}
-    assert u == n
-    assert (1, 1, "Three four!") in u and (2, 0, "No terminator here") in u
-
-
 # ------------------------------------------------------------- media dir
 
 def test_media_dir_source(spark, tmp_path):
@@ -199,26 +181,6 @@ def test_media_dir_mtime_filter(spark, tmp_path):
     assert read_media_dir(spark, str(d),
                           modified_after="2100-01-01 00:00:00").count() == 0
     assert read_media_dir(spark, str(d)).count() == 1
-
-
-def test_geometric_mean_udaf_equals_native(spark):
-    from datapump_spark.functions.udtfs import (
-        geometric_mean_native, geometric_mean_udaf)
-    from pyspark.sql import functions as F
-
-    rows = [("a", float(v)) for v in (1, 2, 4, 8)] + \
-           [("b", float(v)) for v in (3, 9, 27)]
-    df = spark.createDataFrame(rows, "g string, v double")
-    udaf = geometric_mean_udaf()
-    got = {r["g"]: r["gm"] for r in
-           df.groupBy("g").agg(udaf("v").alias("gm")).collect()}
-    want = {r["g"]: r["gm"] for r in
-            df.groupBy("g").agg(
-                geometric_mean_native(F.col("v")).alias("gm")).collect()}
-    assert set(got) == set(want)
-    for g in want:
-        assert abs(got[g] - want[g]) < 1e-9
-    assert abs(got["a"] - (1 * 2 * 4 * 8) ** 0.25) < 1e-9
 
 
 def test_weighted_sample_k_properties(spark):

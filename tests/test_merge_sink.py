@@ -26,6 +26,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from datapump_spark.sinks import upsert
 from datapump_spark.sinks.upsert import (
     MANIFEST,
     SUMMARY,
@@ -169,7 +170,7 @@ def test_compact_append_table(spark, sink):
             "id", "id * 2 AS v").repartition(4)
         sink.append(df, "audit")
     before = sink.read(spark, "audit").collect()
-    stats = sink.compact(spark, "audit", target_file_mb=128)
+    stats = sink.compact(spark, "audit")
     assert stats["files_before"] >= 20
     assert stats["files_after"] == 1
     after = sink.read(spark, "audit").collect()
@@ -179,17 +180,19 @@ def test_compact_append_table(spark, sink):
     assert len(vdirs) == 1
 
 
-def test_compact_clusters_by_the_leading_key(spark, sink):
+def test_compact_clusters_by_the_leading_key(spark, sink, monkeypatch):
     """A time-ordered table compacted into several files: the files hold
     disjoint key ranges, so merging the next window rewrites only the
-    file that overlaps it and the rest keep their inodes."""
+    file that overlaps it and the rest keep their inodes. A later merge
+    compacts only the small files below it, never the larger ones."""
     for lo in range(0, 400, 50):   # windows overlapping their predecessor
         sink.upsert(spark, spark.range(max(0, lo - 10), lo + 50)
                     .selectExpr("id AS pk", f"id + {lo} AS v"), "t", ["pk"])
     want = {r.pk: r.v for r in sink.read(spark, "t").collect()}
     vdir = sink.current_version("t")
     total_mb = sum(p.stat().st_size for p in vdir.glob("*.parquet")) / 2**20
-    stats = sink.compact(spark, "t", target_file_mb=total_mb / 3.5)
+    monkeypatch.setattr(upsert, "TARGET_FILE_MB", total_mb / 3.5)
+    stats = sink.compact(spark, "t")
     assert stats["files_after"] == 4 < stats["files_before"]
     ranges = sorted(_manifest(sink, "t")["files"].values())
     assert len(ranges) == 4
@@ -208,10 +211,33 @@ def test_compact_clusters_by_the_leading_key(spark, sink):
     got = {r.pk: r.v for r in sink.read(spark, "t").collect()}
     assert got == {**want, **{k: -k for k in range(390, 440)}}
 
+    # a merge compacts only its cold files: those below the batch and
+    # under half a target; the three larger compacted files stay
+    big = {p: ino for p, ino in after.items() if p in files}
+    small = set(after) - set(big)
+    size = {p: (sink.current_version("t") / p).stat().st_size for p in after}
+    assert max(size[p] for p in small) < min(size[p] for p in big)
+    monkeypatch.setattr(upsert, "TARGET_FILE_MB",
+                        2 * min(size[p] for p in big) / 2**20)
+    monkeypatch.setattr(upsert, "COLD_FILES", len(small) - 1)
+    sink.upsert(spark, spark.range(1000, 1010).selectExpr("id AS pk", "-id AS v"),
+                "t", ["pk"])
+    final = _inodes(sink.current_version("t"))
+    ranges = _manifest(sink, "t")["files"]
+    assert big.items() <= final.items() and not small & set(final)
+    c_files = sorted(ranges[p] for p in set(final) - set(big)
+                     if p.startswith("c-"))
+    assert c_files[0][0] == 300 and c_files[-1][1] == 439
+    assert all(a[1] < b[0] for a, b in zip(c_files, c_files[1:]))
+    got = {r.pk: r.v for r in sink.read(spark, "t").collect()}
+    assert got == {**want, **{k: -k for k in [*range(390, 440),
+                                               *range(1000, 1010)]}}
+
 
 def test_compact_missing_table_raises(spark, sink):
-    with pytest.raises(ValueError):
-        sink.compact(spark, "nope")
+    for op in (sink.compact, sink.read):
+        with pytest.raises(ValueError, match="no such table: 'nope'"):
+            op(spark, "nope")
 
 
 def test_schema_evolution_add_and_missing_column(spark, sink):
@@ -514,10 +540,14 @@ def test_time_ordered_drain_rewrites_only_the_previous_window(
     previous one, drained one by one: file k's merge reads only the batch
     files of file k-1, keeps every other file by inode, and writes kept
     and batch rows to separate files, at most two data files per queue
-    file."""
+    file. With ``COLD_FILES`` at 2, a merge that finds more files wholly
+    below its window also compacts them, in the same write, into files
+    of disjoint ranges below the window, so the table never holds more
+    than ``COLD_FILES`` + 2 files."""
     from datapump_spark.jobspec import JobSpec
     from datapump_spark.streaming.pipeline import Pipeline
 
+    monkeypatch.setattr(upsert, "COLD_FILES", 2)
     gen = _load_gen(monkeypatch)
     files = gen.iot_files(tmp_path / "stage", seed=3, n_files=6)
     inbox = tmp_path / "inbox"
@@ -530,6 +560,7 @@ def test_time_ordered_drain_rewrites_only_the_previous_window(
     pipe = Pipeline(spark, job, sink, tmp_path / "done", tmp_path / "bad")
     expected: dict = {}
     prev_batch: set[str] = set()
+    compactions = []
     for k, f in enumerate(files):
         lo = _micros(min(r[0] for r in f.rows))
         hi = _micros(max(r[0] for r in f.rows))
@@ -541,24 +572,36 @@ def test_time_ordered_drain_rewrites_only_the_previous_window(
         new = _manifest(sink, "air")["files"]
         new_inodes = _inodes(sink.current_version("air"))
         assert set(new) == set(new_inodes)
+        assert len(new) <= upsert.COLD_FILES + 2, (k, sorted(new))
+        cold = {p for p, (a, b) in old.items() if b < lo}
+        compacted = cold if len(cold) > upsert.COLD_FILES else set()
         outside = {p for p, (a, b) in old.items() if b < lo or a > hi}
-        for p in outside:   # every file outside the window kept by inode
+        for p in outside - compacted:   # kept by inode
             assert new_inodes.get(p) == old_inodes[p], (k, p)
         read = set(old) - set(new)
-        assert read == prev_batch, k   # only file k-1's batch files
+        assert read == prev_batch | compacted, k
         written = {p for p in new if new_inodes[p] not in
                    set(old_inodes.values())}
-        assert 1 <= len(written) <= 2, (k, written)
         batch_files = {p for p in written if p.startswith("b-")}
-        kept_files = written - batch_files
+        c_files = {p for p in written if p.startswith("c-")}
+        kept_files = written - batch_files - c_files
+        assert 1 <= len(written - c_files) <= 2, (k, written)
         assert all(p.startswith("k-") for p in kept_files)
         for p in batch_files:
             assert lo <= new[p][0] <= new[p][1] <= hi, (k, p)
         for p in kept_files:   # no kept row shares a file with the batch
             assert new[p][1] < lo, (k, p)
+        assert bool(c_files) == bool(compacted), k
+        if compacted:   # disjoint ranges, all below the window
+            ranges = sorted(new[p] for p in c_files)
+            assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:])), k
+            assert ranges[-1][1] < lo and ranges[0][0] == min(
+                old[p][0] for p in compacted), k
+            compactions.append(k)
         prev_batch = batch_files
         for row in f.rows:
             expected[(row[0], row[1])] = row
+    assert compactions == [4], compactions
     want = {(ts.strftime("%Y-%m-%d %H:%M:%S"), *rest)
             for (ts, *rest) in expected.values()}
     got = sink.read(spark, "air").select(
@@ -573,13 +616,16 @@ def _key_ok(key):
     return all(v is not None for v in key)
 
 
-def test_randomized_upserts_and_cdc_match_the_replay(spark, tmp_path):
+def test_randomized_upserts_and_cdc_match_the_replay(spark, tmp_path,
+                                                      monkeypatch):
     """Random batches: keys spread over old files, in-batch duplicates,
     null leading keys, a one-key batch, an added and a missing column;
-    then CDC batches with out-of-order sequences and tombstones. After
+    then CDC batches with out-of-order sequences and tombstones. The last
+    batch of each kind lies above every stored key, so with
+    ``COLD_FILES`` at 1 its merge compacts the whole table below it. After
     every merge the table equals a pure-Python replay (pruning never
     skips a file holding a batch key) and the manifest schema equals a
-    footer-merged read's."""
+    footer-merged read's; compaction keeps every tombstone row."""
     rng = random.Random(11)
     sink = ParquetMergeSink(tmp_path / "lake")
     cols = ["k", "s", "v"]
@@ -601,6 +647,7 @@ def test_randomized_upserts_and_cdc_match_the_replay(spark, tmp_path):
                  for _ in range(3)]   # in-batch duplicate keys
         batches.append(rows)
     batches.insert(3, [(batches[0][0][0] or 7, "s1", "one-key")])
+    batches.append([(300 + j, f"s{j % 3}", "high") for j in range(5)])
     for i, rows in enumerate(batches):
         df = spark.createDataFrame(rows, "k long, s string, v string")
         if i == 4:   # an added column
@@ -615,29 +662,39 @@ def test_randomized_upserts_and_cdc_match_the_replay(spark, tmp_path):
             rows = [r + (None,) for r in rows]
         before = _inodes(sink.current_version("t")) if table else {}
         ranges = _manifest(sink, "t")["files"] if table else {}
+        if i == len(batches) - 1:
+            monkeypatch.setattr(upsert, "COLD_FILES", 1)
         sink.upsert(spark, df, "t", ["k", "s"])
         batch_keys = {r[:2] for r in rows if _key_ok(r[:2])}
         table = [r for r in table
                  if not (_key_ok(r[:2]) and r[:2] in batch_keys)] + rows
         assert check("t", cols) == Counter(table), i
+        after = _inodes(sink.current_version("t"))
         if len(rows) == 1:   # one key: files not holding it untouched
-            after = _inodes(sink.current_version("t"))
             for p, ino in before.items():
                 if ranges[p] is not None and not (
                         ranges[p][0] <= rows[0][0] <= ranges[p][1]):
                     assert after[p] == ino, p
+    # the high batch compacted every older file into c- files
+    assert len(before) > 1 and not set(before) & set(after)
+    assert {p[:2] for p in after} == {"b-", "c-"}
+    monkeypatch.setattr(upsert, "COLD_FILES", 16)
 
     # CDC: one winner per key by seq; stale changes lose; deletes are
     # tombstone rows; unique seqs so every winner is defined
     state: dict[int, tuple] = {}
     seq = list(range(1, 400))
     rng.shuffle(seq)
-    for i in range(5):
+    for i in range(6):
         changes = []
         for _ in range(rng.randrange(5, 30)):
             key = rng.randrange(0, 60)
             op = "D" if rng.random() < 0.25 else "U"
             changes.append((key, seq.pop(), op, f"c{i}"))
+        if i == 5:   # above every key, updates only: compacts the rest
+            changes = [(100 + j, seq.pop(), "U", "high") for j in range(3)]
+            monkeypatch.setattr(upsert, "COLD_FILES", 1)
+            before = _inodes(sink.current_version("c"))
         sink.apply_cdc(spark, spark.createDataFrame(
             changes, "id long, seq long, op string, val string"),
             "c", ["id"], ["seq"])
@@ -647,3 +704,12 @@ def test_randomized_upserts_and_cdc_match_the_replay(spark, tmp_path):
                 state[key] = (key, w[1], w[3], w[2] == "D")
         got = check("c", ["id", "seq", "val", TOMBSTONE_COL])
         assert got == Counter(state.values()), i
+    after = _inodes(sink.current_version("c"))
+    assert len(before) > 1 and not set(before) & set(after)
+    assert any(p.startswith("c-") for p in after)
+    tombstones = sum(v[3] for v in state.values())
+    assert tombstones > 0
+    sink.compact(spark, "c")
+    got = check("c", ["id", "seq", "val", TOMBSTONE_COL])
+    assert got == Counter(state.values())
+    assert sink.read(spark, "c").where(TOMBSTONE_COL).count() == tombstones
