@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from datapump_spark.cachescope import scoped_persist
+from datapump_spark.functions.sqltext import sql_ident
 from datapump_spark.operators.dedup_fuzzy import normalize_text
 
 
@@ -37,7 +38,7 @@ def fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Distinct content fingerprints of a corpus — the index an
     incremental pipeline persists (bucketed by ``fp``) between batches."""
     return df.select(
-        F.md5(normalize_text(F.col(text_col))).alias("fp")
+        F.md5(normalize_text(F.col(sql_ident(text_col)))).alias("fp")
     ).distinct()
 
 
@@ -55,8 +56,8 @@ def incremental_dedup(
     or the persisted index). Returns the surviving batch rows with their
     ``fp`` appended, so callers can append them straight onto the index.
     """
-    fp = F.md5(normalize_text(F.col(text_col)))
-    w = Window.partitionBy("fp").orderBy(F.col(id_col).asc())
+    fp = F.md5(normalize_text(F.col(sql_ident(text_col))))
+    w = Window.partitionBy("fp").orderBy(F.col(sql_ident(id_col)).asc())
     firsts = (
         batch.withColumn("fp", fp)
         .withColumn("__rn", F.row_number().over(w))

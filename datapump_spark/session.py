@@ -4,7 +4,10 @@ The same config set is intended to behave well from local[32] tests up to a
 1000-executor cluster: AQE handles runtime partition coalescing and skew
 splitting, so the static ``spark.sql.shuffle.partitions`` only needs to be an
 upper bound; broadcast threshold is left at default (10 MB) because dimension
-broadcasting in the operators is explicit via ``F.broadcast``.
+broadcasting in the operators is explicit via ``F.broadcast``. Cached
+plans keep their shuffle partitioning (Spark's default
+``canChangeCachedPlanOutputPartitioning=false``); only the corpus
+stream's own session lets AQE coalesce them (PERF.md ledger).
 """
 
 from __future__ import annotations

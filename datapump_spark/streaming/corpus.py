@@ -3,7 +3,9 @@ pipeline — new documents arrive as files, each micro-batch is quality-
 gated and deduplicated against everything already admitted, and the
 survivors append to the corpus.
 
-    doc files ──readStream──▶ gopher quality gate
+    doc files ──readStream──▶ gopher keep verdict per raw row (scan splits)
+        ─▶ doc_id collapse (max text wins, its verdict rides along)
+        ─▶ keep filter
         ─▶ incremental_dedup vs the corpus's fp column (operators/incremental)
         ─▶ corpus append (partitioned by batch id)
         ─▶ audit row (n_in / n_low_quality / n_dup / n_admitted)
@@ -15,12 +17,15 @@ first run's decisions. The corpus keeps each doc's ``fp`` and is its own
 exact-dup index; only the optional signature and gram indexes, whose
 rows do not fit the corpus row, are separate stores.
 
-At 100 TB: the corpus's ``fp`` column is the only cross-batch state of
-the exact gate and it shuffles nothing on read here (the anti-join ships
-the daily batch to the index's buckets; see operators/incremental
-docstring); the corpus write is an append of already-filtered data.
-State never lives in the streaming state store, so checkpoints stay
-tiny.
+At 100 TB: the quality gate is a per-row projection in the scan's
+splits, before the collapse, so its regex work spreads over every input
+split and never sits in a shuffle stage; the collapse then moves one
+boolean more per row and the gate adds no join. The corpus's ``fp``
+column is the only cross-batch state of the exact gate and it shuffles
+nothing on read here (the anti-join ships the daily batch to the
+index's buckets; see operators/incremental docstring); the corpus write
+is an append of already-filtered data. State never lives in the
+streaming state store, so checkpoints stay tiny.
 """
 
 from __future__ import annotations
@@ -33,7 +38,7 @@ from pyspark.sql import functions as F
 
 from datapump_spark.cachescope import release_scope, scoped_persist
 from datapump_spark.operators.incremental import incremental_dedup
-from datapump_spark.operators.quality import gopher_filter
+from datapump_spark.operators.quality import with_gopher_keep
 from datapump_spark.streaming.batches import read_before, write_batch
 
 DOC_SCHEMA = ("doc_id bigint, text string, lang string, source string")
@@ -100,6 +105,23 @@ class StreamingCorpusIngest:
         return str(Path(self.out_dir) / "gram_index")
 
     def _handle_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        # Let AQE coalesce the shuffles of this batch's cached frames:
+        # with the static shuffle.partitions every action over them runs
+        # one task per partition on a few hundred docs. batch_df's
+        # session is the clone Spark makes for the streaming query, so
+        # the caller's session and every cache outside the stream keep
+        # Spark's default (PERF.md ledger: coalescing cached plans
+        # globally slows compute-dense queries).
+        batch_df.sparkSession.conf.set(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+            "true")
+        if self.recipe is None:
+            # the gopher verdict on the raw rows, in the scan's splits;
+            # it reads only text, so the collapse's winner carries its
+            # own verdict as __keep
+            batch_df = with_gopher_keep(batch_df, "text", "__keep",
+                                        min_words=self.min_words,
+                                        **self.gopher_kwargs)
         # one row per doc id per batch: every downstream gate (and the
         # append-only corpus sink) assumes unique ids; a duplicated id in
         # one batch (re-crawled URI in a WET shard, a re-sent jsonl row)
@@ -117,11 +139,7 @@ class StreamingCorpusIngest:
                 streams = pretrain_corpus(batch_df, recipe=self.recipe)
                 good = scoped_persist(streams["clean"])
             else:
-                q = gopher_filter(batch_df, "doc_id", "text",
-                                  min_words=self.min_words,
-                                  **self.gopher_kwargs)
-                good = scoped_persist(batch_df.join(
-                    q.where(F.col("keep")).select("doc_id"), "doc_id", "semi"))
+                good = batch_df.where("__keep").drop("__keep")
             n_good = good.count()
             admitted = scoped_persist(incremental_dedup(
                 good, read_before(self.spark, self.corpus_dir, "fp string",

@@ -158,3 +158,35 @@ def test_incremental_span_dedup_two_batches(spark):
     # doc 11: 'fresh' was novel and doc 10 holds its first occurrence ->
     # doc 11's copy is an in-batch dup and is cut; its own tail survives
     assert out2[11] == (6, " ".join(f"z{j}" for j in range(7)))
+
+
+def test_hostile_names_give_the_plain_results(spark):
+    """Caller-supplied id and text names reach F.col quoted: a dotted id
+    and a text name with a backtick and a space give the verdicts and
+    the admitted rows of the plain names."""
+    from datapump_spark.operators.quality import gopher_filter
+
+    id_col, text_col = "a.b", "t`x Join"
+
+    good = ("the quick brown fox jumps over the lazy dog while the "
+            "small bird sings")
+    rows = [(1, good), (2, "too short"), (3, good.upper()),
+            (4, "the cat sat"), (5, good + " and more")]
+    plain = _docs(spark, rows)
+    hostile = plain.toDF(id_col, text_col)
+    corpus = _docs(spark, [(9, "The cat sat.")])
+
+    def verdicts(df, i, t):
+        return sorted(map(tuple, gopher_filter(df, i, t, min_words=10)
+                          .collect()))
+
+    assert verdicts(hostile, id_col, text_col) == \
+        verdicts(plain, "doc_id", "text")
+
+    def admitted(df, i, t):
+        fps = fingerprints(corpus.toDF("doc_id", t), t)
+        return sorted(map(tuple, incremental_dedup(df, fps, i, t)
+                          .collect()))
+
+    assert admitted(hostile, id_col, text_col) == \
+        admitted(plain, "doc_id", "text")

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from datapump_spark.operators.packing import pack_concat_chunks, pack_greedy_bins
 from datapump_spark.operators.pii import PII_PATTERNS, pii_redact
-from datapump_spark.operators.quality import gopher_filter
+from datapump_spark.operators.quality import gopher_filter, with_gopher_keep
 
 BUDGET = 1024
 
@@ -73,6 +73,21 @@ def test_gopher_thresholds_drive_keep(docs):
                         min_stop_hits=0, max_dup_word_frac=1.0,
                         max_dup_2gram_frac=1.0)
     assert lax.where(~F.col("keep")).count() == 0
+
+
+@pytest.mark.parametrize("thresholds", [{}, {"min_words": 10,
+                                             "min_stop_hits": 5}])
+def test_row_verdict_is_gopher_filter_keep(docs, thresholds):
+    """with_gopher_keep (the streaming corpus's gate on raw rows) and
+    gopher_filter take one verdict: the same keep for every doc, and the
+    row keeps its own columns only."""
+    rows = with_gopher_keep(docs, "text", "__keep", **thresholds)
+    assert rows.columns == docs.columns + ["__keep"]
+    got = sorted(map(tuple, rows.select("doc_id", "__keep").collect()))
+    want = sorted(map(tuple, gopher_filter(docs, **thresholds)
+                      .select("doc_id", "keep").collect()))
+    assert got == want
+    assert {k for _, k in got} == {True, False}
 
 
 def test_pii_redact_leaves_no_matches(spark, sf_dir):

@@ -358,3 +358,79 @@ def test_compressed_jsonl_dropbox(spark, tmp_path):
              spark.read.parquet(ingest.audit_dir).collect()}
     assert audit[0]["n_admitted"] == 2
     assert audit[1]["n_dup"] == 1 and audit[1]["n_admitted"] == 1
+
+
+def test_resent_id_verdict_is_the_winners(spark, tmp_path):
+    """A doc_id re-sent in one batch with a good text and a short
+    low-quality text that sorts above it is low quality and not
+    admitted, in either row order: the verdict is the one of the row the
+    collapse keeps (max text), not of any row of the id."""
+    short = "zz short"                      # sorts above GOOD, fails the gate
+    top = f"zebras and {GOOD}"              # sorts above "too short", passes
+    inp = tmp_path / "in"
+    inp.mkdir()
+    _write(inp, "b0.json", 1_000_000_000, [
+        _doc(1), _doc(1, short),            # good row first
+        _doc(2, short), _doc(2),            # order reversed
+        _doc(3, "too short"), _doc(3, top),  # the good text wins
+    ])
+    ingest = StreamingCorpusIngest(spark, str(inp), str(tmp_path / "out"))
+    ingest.drain(tmp_path / "cp")
+    corpus = spark.read.parquet(ingest.corpus_dir)
+    assert [(r["doc_id"], r["text"]) for r in corpus.collect()] == [(3, top)]
+    assert "__keep" not in corpus.columns
+    assert _audit(spark, ingest) == [(0, 3, 2, 0, 1)]
+
+
+CACHED_COALESCE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+@pytest.fixture()
+def shuffle32(spark):
+    """The session at the static 32 shuffle partitions of tuned_builder
+    (the suite runs at 4). A direct ``_handle_batch`` call runs on the
+    caller's session, so its cached-plan flag is restored too."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    yield spark
+    spark.conf.set("spark.sql.shuffle.partitions", old)
+    spark.conf.unset(CACHED_COALESCE)
+
+
+def test_batch_runs_in_a_handful_of_tasks(shuffle32, tmp_path):
+    """A 400-doc batch runs in at most 40 tasks at 32 shuffle
+    partitions: the gate runs in the scan's split and the batch's cached
+    shuffles coalesce (one task per partition made ~300)."""
+    from datapump_spark.streaming.corpus import DOC_SCHEMA
+
+    spark = shuffle32
+    inp = tmp_path / "in"
+    inp.mkdir()
+    _write(inp, "b0.json", 1_000_000_000,
+           [_doc(i, "too short" if i % 10 == 0 else
+                 f"{GOOD} extra{i % 350}") for i in range(400)])
+    batch = spark.read.schema(DOC_SCHEMA).json(str(inp))
+    ingest = StreamingCorpusIngest(spark, str(inp), str(tmp_path / "out"))
+    sc = spark.sparkContext
+    sc.setJobGroup("corpus-batch-tasks", "one corpus micro-batch")
+    try:
+        ingest._handle_batch(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    tasks = sum(tracker.getStageInfo(s).numCompletedTasks
+                for j in tracker.getJobIdsForGroup("corpus-batch-tasks")
+                for s in tracker.getJobInfo(j).stageIds
+                if tracker.getStageInfo(s) is not None)
+    assert 0 < tasks <= 40
+    assert _audit(spark, ingest) == [(0, 400, 40, 45, 315)]
+
+
+def test_drain_leaves_the_callers_cached_plans_alone(shuffle32, ingest,
+                                                      tmp_path):
+    """The coalescing flag is set on the streaming query's own session:
+    after a drain the caller's session still reads Spark's default."""
+    ingest.drain(tmp_path / "cp")
+    assert _audit(shuffle32, ingest) == [(0, 3, 1, 0, 2), (1, 3, 0, 2, 1)]
+    assert shuffle32.conf.get(CACHED_COALESCE) == "false"
