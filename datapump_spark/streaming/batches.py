@@ -9,6 +9,10 @@ A batch reads a store's earlier state with :func:`read_before`, which
 sees only partitions ``< batch_id``. Batch b's decisions then depend on
 batches 0..b-1 alone, so a replay repeats them whether or not b's own
 or later partitions are already on disk.
+
+Both ingests drain through :func:`await_drain`; the corpus ingest and
+streaming/pipeline.py write their one-row audit frames with
+:func:`literal_row`.
 """
 
 from __future__ import annotations
@@ -17,6 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 
 def write_batch(df: DataFrame, batch_id: int, path: str) -> None:
@@ -35,3 +40,22 @@ def read_before(spark: SparkSession, path: str, schema: str,
         return spark.createDataFrame([], schema)
     return (spark.read.schema(f"{schema}, __batch_id int").parquet(path)
             .where(F.col("__batch_id") < batch_id).drop("__batch_id"))
+
+
+def literal_row(spark: SparkSession,
+                fields: list[tuple[object, str, str]]) -> DataFrame:
+    """One row of ``(value, type, name)`` literals over ``range(1)``: a
+    JVM-side row, with no job to parallelize a local list."""
+    return spark.range(1).select(
+        *[F.lit(v).cast(t).alias(c) for v, t, c in fields])
+
+
+def await_drain(q: StreamingQuery, timeout: float,
+                checkpoint_dir: str | os.PathLike) -> None:
+    """Wait for the AvailableNow query ``q`` to finish. Past ``timeout``
+    seconds it is stopped and :class:`TimeoutError` is raised, so a slow
+    drain never returns with its query still running on the checkpoint."""
+    if not q.awaitTermination(timeout):
+        q.stop()
+        raise TimeoutError(f"drain of checkpoint {checkpoint_dir} did not "
+                           f"finish in {timeout} s; its query was stopped")

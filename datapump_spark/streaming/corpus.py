@@ -4,11 +4,18 @@ gated and deduplicated against everything already admitted, and the
 survivors append to the corpus.
 
     doc files ──readStream──▶ gopher keep verdict per raw row (scan splits)
-        ─▶ doc_id collapse (max text wins, its verdict rides along)
-        ─▶ keep filter
+        ─▶ doc_id collapse (max text wins, its verdict rides along) ◀ n_in
+        ─▶ keep filter                                              ◀ n_good
         ─▶ incremental_dedup vs the corpus's fp column (operators/incremental)
-        ─▶ corpus append (partitioned by batch id)
+        ─▶ corpus append (partitioned by batch id)                  ◀ n_adm
         ─▶ audit row (n_in / n_low_quality / n_dup / n_admitted)
+
+The three counts (◀) are ``Observation`` metrics, filled by the first
+action over each frame (the corpus write, or an eager checkpoint before
+it: the recipe's input, the near-dup and span gates) and read only after
+the corpus write returns; the audit row is then literals over
+``range(1)``. On the exact-only path the corpus write is the batch's
+one pass over the data.
 
 Exactly-once without MERGE: every store uses the batch layout of
 streaming/batches.py, so a replayed batch (after a crash between writes,
@@ -33,18 +40,28 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from datapump_spark.cachescope import release_scope, scoped_persist
+from datapump_spark.cachescope import release_scope
 from datapump_spark.operators.incremental import incremental_dedup
 from datapump_spark.operators.quality import with_gopher_keep
-from datapump_spark.streaming.batches import read_before, write_batch
+from datapump_spark.streaming.batches import (
+    await_drain,
+    literal_row,
+    read_before,
+    write_batch,
+)
 
 DOC_SCHEMA = ("doc_id bigint, text string, lang string, source string")
 # the near-dup gate's persisted MinHash signature index
 MH_COLS = [f"mh{i}" for i in range(16)]
 SIG_SCHEMA = "doc_id bigint, " + ", ".join(f"{c} bigint" for c in MH_COLS)
+
+
+def _observe_rows(df: DataFrame, obs: Observation) -> DataFrame:
+    """``df`` with its row count observed as ``obs.get["n"]``."""
+    return df.observe(obs, F.count(F.lit(1)).alias("n"))
 
 
 @dataclass
@@ -105,13 +122,14 @@ class StreamingCorpusIngest:
         return str(Path(self.out_dir) / "gram_index")
 
     def _handle_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        # Let AQE coalesce the shuffles of this batch's cached frames:
-        # with the static shuffle.partitions every action over them runs
-        # one task per partition on a few hundred docs. batch_df's
-        # session is the clone Spark makes for the streaming query, so
-        # the caller's session and every cache outside the stream keep
-        # Spark's default (PERF.md ledger: coalescing cached plans
-        # globally slows compute-dense queries).
+        # Let AQE coalesce the shuffles of the frames the operators cache
+        # (the near-dup and span gates persist inside): with the static
+        # shuffle.partitions every action over them runs one task per
+        # partition on a few hundred docs. batch_df's session is the
+        # clone Spark makes for the streaming query, so the caller's
+        # session and every cache outside the stream keep Spark's
+        # default (PERF.md ledger: coalescing cached plans globally
+        # slows compute-dense queries).
         batch_df.sparkSession.conf.set(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
             "true")
@@ -127,33 +145,47 @@ class StreamingCorpusIngest:
         # one batch (re-crawled URI in a WET shard, a re-sent jsonl row)
         # collapses deterministically (max text wins)
         others = [c for c in batch_df.columns if c != "doc_id"]
-        batch_df = scoped_persist(
-            batch_df.groupBy("doc_id")
-            .agg(F.max_by(F.struct(*others), F.col("text")).alias("__r"))
-            .select("doc_id", "__r.*"))
+        batch_df = (batch_df.groupBy("doc_id")
+                    .agg(F.max_by(F.struct(*others), F.col("text"))
+                         .alias("__r"))
+                    .select("doc_id", "__r.*"))
+        # the audit counts, observed by the first action over each frame
+        # (module docstring); none of them runs a job of its own
+        in_obs, good_obs, adm_obs = Observation(), Observation(), Observation()
+        batch_df = _observe_rows(batch_df, in_obs)
         try:
-            n_in = batch_df.count()
             if self.recipe is not None:
                 from datapump_spark.recipes import pretrain_corpus
 
-                streams = pretrain_corpus(batch_df, recipe=self.recipe)
-                good = scoped_persist(streams["clean"])
+                # the recipe reads the batch many times, some of them in
+                # its own eager actions over frames it persists: cut the
+                # lineage here (the checkpoint fills the n_in
+                # observation), so no observation sits under its caches
+                good = pretrain_corpus(batch_df.localCheckpoint(eager=True),
+                                       recipe=self.recipe)["clean"]
             else:
                 good = batch_df.where("__keep").drop("__keep")
-            n_good = good.count()
-            admitted = scoped_persist(incremental_dedup(
-                good, read_before(self.spark, self.corpus_dir, "fp string",
-                                  batch_id)))
+            admitted = incremental_dedup(
+                _observe_rows(good, good_obs),
+                read_before(self.spark, self.corpus_dir, "fp string",
+                            batch_id))
+            if (self.near_dup_threshold is not None
+                    or self.span_dedup_n is not None):
+                # the near-dup and span gates read the batch several
+                # times, some of them under caches of their own: cut the
+                # lineage once (the checkpoint fills the n_in and n_good
+                # observations), so no observation sits under a cache
+                admitted = admitted.localCheckpoint(eager=True)
             sigs = None
             if self.near_dup_threshold is not None:
                 from datapump_spark.operators.incremental import (
                     incremental_near_dup,
                 )
 
-                # localCheckpoint (NOT persist): the corpus write below
-                # refreshes a path this plan read, which drops a cache
-                # built on it; the signature write after it would then
-                # rerun the MinHash pass. Cutting lineage keeps one pass.
+                # localCheckpoint (NOT persist): the corpus and signature
+                # writes both read it, and the signature write refreshes
+                # the index path this plan read, which drops a cache
+                # built on it. Cutting lineage keeps one MinHash pass.
                 admitted2 = incremental_near_dup(
                     admitted, read_before(self.spark, self.sig_index_dir,
                                           SIG_SCHEMA, batch_id),
@@ -179,35 +211,37 @@ class StreamingCorpusIngest:
                                           "gram bigint", batch_id),
                     n=self.span_dedup_n).localCheckpoint(eager=True)
                 survivors = spans.where(F.col("clean_text") != "")
-                admitted = (
-                    admitted.drop("text")
-                    .join(survivors.select(
+                admitted = admitted.drop("text").join(
+                    survivors.select(
                         "doc_id", F.col("clean_text").alias("text")),
-                        "doc_id")
-                    .localCheckpoint(eager=True))
+                    "doc_id")
                 grams_out = gram_index(
                     survivors.select(
                         "doc_id", F.col("clean_text").alias("text")),
                     n=self.span_dedup_n)
-            n_adm = admitted.count()
-
-            # nothing may read `admitted` after this write: it refreshes
-            # the corpus path that `admitted`'s plan read
-            write_batch(admitted, batch_id, self.corpus_dir)
+            # one query reads the corpus (read_before: partitions below
+            # batch_id, listed at planning) and overwrites this batch's
+            # partition (staged under .spark-staging-*), and its job
+            # fills the observations read below
+            write_batch(_observe_rows(admitted, adm_obs), batch_id,
+                        self.corpus_dir)
             if sigs is not None:
                 write_batch(sigs, batch_id, self.sig_index_dir)
             if grams_out is not None:
                 write_batch(grams_out, batch_id, self.gram_index_dir)
-            audit = self.spark.createDataFrame(
-                [(n_in, n_in - n_good, n_good - n_adm, n_adm)],
-                "n_in bigint, n_low_quality bigint, n_dup bigint, "
-                "n_admitted bigint")
+            n_in, n_good, n_adm = (o.get["n"]
+                                   for o in (in_obs, good_obs, adm_obs))
+            audit = literal_row(self.spark, [
+                (n_in, "bigint", "n_in"),
+                (n_in - n_good, "bigint", "n_low_quality"),
+                (n_good - n_adm, "bigint", "n_dup"),
+                (n_adm, "bigint", "n_admitted")])
             write_batch(audit, batch_id, self.audit_dir)
         finally:
-            # this batch's frames and the operators' internal persists
-            # (incremental dedup, quality, fingerprints) share the
-            # session cache scope — release them, on success or failure,
-            # so a long-running stream holds at most one batch's caches
+            # the operators' internal persists (near-dup signatures,
+            # quality, fingerprints) share the session cache scope —
+            # release them, on success or failure, so a long-running
+            # stream holds at most one batch's caches
             release_scope(batch_df.sparkSession)
 
     def stream(self, checkpoint_dir: str | Path):
@@ -258,5 +292,6 @@ class StreamingCorpusIngest:
 
     def drain(self, checkpoint_dir: str | Path, timeout: int = 300) -> None:
         """AvailableNow drain (the cron-equivalent single pass)."""
-        q = self.stream(checkpoint_dir).trigger(availableNow=True).start()
-        q.awaitTermination(timeout)
+        await_drain(self.stream(checkpoint_dir)
+                    .trigger(availableNow=True).start(),
+                    timeout, checkpoint_dir)

@@ -39,7 +39,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datapump_spark.cachescope import release_scope
-from datapump_spark.streaming.batches import read_before, write_batch
+from datapump_spark.streaming.batches import (
+    await_drain,
+    read_before,
+    write_batch,
+)
 
 
 @dataclass
@@ -166,5 +170,5 @@ class StreamingMediaIngest:
         )
 
     def drain(self, checkpoint_dir: str | Path, timeout: int = 300) -> None:
-        q = self.stream(checkpoint_dir).start()
-        q.awaitTermination(timeout)
+        await_drain(self.stream(checkpoint_dir).start(), timeout,
+                    checkpoint_dir)

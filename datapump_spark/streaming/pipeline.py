@@ -62,6 +62,7 @@ from datapump_spark.sources.csv_ingest import (
     project_typed,
     read_csv_raw,
 )
+from datapump_spark.streaming.batches import literal_row
 
 AUDIT_TABLE = "_audit"
 
@@ -186,8 +187,6 @@ class Pipeline:
 
     def _audit(self, file: str, started: float, n_rows: int, n_dupes: int,
                ok: bool, error: str | None = None) -> None:
-        # literals over range(1): one JVM-side row, no Python worker
-        # decoding a parallelized local list
         values = [(self.job.qualified_name, "string", "job"),
                   (file, "string", "file"),
                   (n_rows, "bigint", "processed"),
@@ -196,9 +195,8 @@ class Pipeline:
                    "elapsed_sec"),
                   (ok, "boolean", "ok"),
                   (error, "string", "error")]
-        row = self.spark.range(1).select(
-            *[F.lit(v).cast(t).alias(c) for v, t, c in values],
-            F.current_timestamp().alias("at"))
+        row = literal_row(self.spark, values).withColumn(
+            "at", F.current_timestamp())
         # append-only: O(1) parquet files added per event, O(N) total for N
         # files processed (the audit table is never read-union-rewritten)
         self.sink.append(row, AUDIT_TABLE)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -398,9 +399,11 @@ def shuffle32(spark):
 
 
 def test_batch_runs_in_a_handful_of_tasks(shuffle32, tmp_path):
-    """A 400-doc batch runs in at most 40 tasks at 32 shuffle
-    partitions: the gate runs in the scan's split and the batch's cached
-    shuffles coalesce (one task per partition made ~300)."""
+    """A 400-doc batch runs in at most 40 tasks and 6 jobs at 32
+    shuffle partitions: the gate runs in the scan's split, the audit
+    counts are observed by the corpus write (three count passes made 10
+    jobs), and the batch leaves no persisted frame behind."""
+    from datapump_spark.cachescope import release_scope
     from datapump_spark.streaming.corpus import DOC_SCHEMA
 
     spark = shuffle32
@@ -412,6 +415,11 @@ def test_batch_runs_in_a_handful_of_tasks(shuffle32, tmp_path):
     batch = spark.read.schema(DOC_SCHEMA).json(str(inp))
     ingest = StreamingCorpusIngest(spark, str(inp), str(tmp_path / "out"))
     sc = spark.sparkContext
+    # the batch releases the session's whole cache scope: release what
+    # earlier callers left in it first, so the count is the batch's own
+    release_scope(spark)
+    persistent = sc._jsc.getPersistentRDDs
+    baseline = persistent().size()
     sc.setJobGroup("corpus-batch-tasks", "one corpus micro-batch")
     try:
         ingest._handle_batch(batch, 0)
@@ -419,11 +427,13 @@ def test_batch_runs_in_a_handful_of_tasks(shuffle32, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("corpus-batch-tasks")
     tasks = sum(tracker.getStageInfo(s).numCompletedTasks
-                for j in tracker.getJobIdsForGroup("corpus-batch-tasks")
-                for s in tracker.getJobInfo(j).stageIds
+                for j in jobs for s in tracker.getJobInfo(j).stageIds
                 if tracker.getStageInfo(s) is not None)
     assert 0 < tasks <= 40
+    assert 0 < len(jobs) <= 6
+    assert persistent().size() == baseline
     assert _audit(spark, ingest) == [(0, 400, 40, 45, 315)]
 
 
@@ -434,3 +444,53 @@ def test_drain_leaves_the_callers_cached_plans_alone(shuffle32, ingest,
     ingest.drain(tmp_path / "cp")
     assert _audit(shuffle32, ingest) == [(0, 3, 1, 0, 2), (1, 3, 0, 2, 1)]
     assert shuffle32.conf.get(CACHED_COALESCE) == "false"
+
+
+@pytest.mark.parametrize("kind", ["low_quality", "duplicate", "empty"])
+def test_batch_audit_counts_when_nothing_is_admitted(spark, tmp_path, kind):
+    """A batch that admits nothing still writes its audit row, and its
+    drain finishes in time: every doc low quality, every doc a
+    duplicate of an earlier batch, or an empty input file."""
+    inp = tmp_path / "in"
+    inp.mkdir()
+    _write(inp, "b0.json", 1_000_000_000, [_doc(1), _doc(2)])
+    rows = {"low_quality": [_doc(10, "too short"), _doc(11, "short too")],
+            "duplicate": [_doc(10, f"{GOOD} extra1"),
+                          _doc(11, f"{GOOD} extra2"), _doc(2)],
+            "empty": []}[kind]
+    _write(inp, "b1.json", 1_000_001_000, rows)
+    ingest = StreamingCorpusIngest(spark, str(inp), str(tmp_path / "out"))
+    ingest.drain(tmp_path / "cp", timeout=120)
+    expected = {"low_quality": (1, 2, 2, 0, 0), "duplicate": (1, 3, 0, 3, 0),
+                "empty": (1, 0, 0, 0, 0)}[kind]
+    assert _audit(spark, ingest) == [(0, 2, 0, 0, 2), expected]
+    corpus = spark.read.parquet(ingest.corpus_dir)
+    assert sorted(r["doc_id"] for r in corpus.collect()) == [1, 2]
+
+
+@pytest.mark.parametrize("ingest_cls", ["corpus", "media"])
+def test_drain_past_its_timeout_stops_the_query(spark, tmp_path,
+                                                monkeypatch, ingest_cls):
+    """A drain still running at its timeout stops its query and raises
+    TimeoutError naming the checkpoint, instead of returning with the
+    query left running."""
+    import time
+
+    from datapump_spark.streaming.media import StreamingMediaIngest
+
+    cls = {"corpus": StreamingCorpusIngest,
+           "media": StreamingMediaIngest}[ingest_cls]
+    inp = tmp_path / "in"
+    inp.mkdir()
+    _write(inp, "b0.json", 1_000_000_000, [_doc(1)])
+    monkeypatch.setattr(cls, "_handle_batch",
+                        lambda self, df, batch_id: time.sleep(4))
+    ingest = cls(spark, str(inp), str(tmp_path / "out"))
+    try:
+        with pytest.raises(TimeoutError,
+                           match=re.escape(str(tmp_path / "cp"))):
+            ingest.drain(tmp_path / "cp", timeout=1)
+        assert spark.streams.active == []
+    finally:
+        for q in spark.streams.active:
+            q.stop()
