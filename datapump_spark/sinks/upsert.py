@@ -61,13 +61,23 @@ import math
 import re
 import shutil
 import time
+import uuid
 from collections.abc import Callable, Sequence
 from datetime import datetime, timezone
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import (
+    BooleanType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from datapump_spark.functions.sqltext import sql_dq_ident, sql_ident
 from datapump_spark.operators.cdc import TOMBSTONE_COL, latest_changes
@@ -227,30 +237,44 @@ class ParquetMergeSink:
         name = f"v-{time.time_ns()}"
         return name, tdir / name
 
-    def _swap_write(self, df: DataFrame, table: str) -> None:
-        """Write a fresh full version and flip the pointer to it."""
-        name, vdir = self._new_version(table)
-        df.write.mode("overwrite").parquet(str(vdir))
-        _write_metadata(vdir, _table_schema(table, StructType(), df.schema))
-        self._publish(table, name)
-
     def append(self, df: DataFrame, table: str) -> None:
-        """Append-only tables (e.g. the audit log): add part files to the
-        live version in place — O(batch) I/O per event, never a
-        read-union-rewrite. Appended files become visible as they land;
-        fine for logs, use upsert/overwrite for tables needing snapshot
-        isolation. New columns widen the version's metadata; a changed
-        column type or a keyed table raises before anything is written."""
+        """Append-only tables: add part files to the live version in
+        place — O(batch) I/O per event, never a read-union-rewrite.
+        Appended files become visible as they land; fine for logs, use
+        upsert/overwrite for tables needing snapshot isolation. New
+        columns widen the version's metadata; a changed column type or a
+        keyed table raises before anything is written."""
+        self._append_files(table, df.schema, lambda vdir: df.write.mode(
+            "append").parquet(str(vdir)))
+
+    def append_row(self, fields: Sequence[tuple[object, str, str]],
+                   table: str) -> None:
+        """:meth:`append` of one row of ``(value, type, name)`` triples
+        (the audit log), written by the driver as one parquet file with
+        :func:`write_row`: no Spark job, and the file appears whole or
+        not at all."""
+        self._append_files(table, _row_schema(fields), lambda vdir: write_row(
+            vdir / f"part-{uuid.uuid4().hex}.parquet", fields))
+
+    def _append_files(self, table: str, batch: StructType,
+                      write: Callable[[Path], object]) -> None:
+        """The one append path: ``write(vdir)`` adds files of the
+        ``batch`` columns to the live version, or to a new version
+        published with its manifest on a first write."""
         cur = self.current_version(table)
         if cur is None:
-            self._swap_write(df, table)
+            name, vdir = self._new_version(table)
+            vdir.mkdir()
+            write(vdir)
+            _write_metadata(vdir, _table_schema(table, StructType(), batch))
+            self._publish(table, name)
             return
         old, manifest = _read_manifest(cur)
         if manifest["keys"] is not None:
             raise ValueError(f"table {table!r} is keyed by "
                              f"{manifest['keys']}: upsert into it, not append")
-        schema = _table_schema(table, old, df.schema)
-        df.write.mode("append").parquet(str(cur))
+        schema = _table_schema(table, old, batch)
+        write(cur)
         if len(schema) > len(old):
             _write_metadata(cur, schema)
 
@@ -324,8 +348,12 @@ class ParquetMergeSink:
         self.set_properties(table, alias=alias)
 
     def overwrite(self, df: DataFrame, table: str) -> None:
-        """Full-refresh write (stats tables are replaced per run, K6)."""
-        self._swap_write(df, table)
+        """Full-refresh write (stats tables are replaced per run, K6): a
+        fresh full version, then the pointer flips to it."""
+        name, vdir = self._new_version(table)
+        df.write.mode("overwrite").parquet(str(vdir))
+        _write_metadata(vdir, _table_schema(table, StructType(), df.schema))
+        self._publish(table, name)
 
     def upsert(self, spark: SparkSession, df: DataFrame, table: str,
                keys: Sequence[str]) -> None:
@@ -645,6 +673,33 @@ def _replace_file(dst: Path, write: Callable[[Path], object]) -> None:
 
 def _replace_text(dst: Path, text: str) -> None:
     _replace_file(dst, lambda tmp: tmp.write_text(text))
+
+
+# Spark type name → column type of a driver-written row (write_row)
+_ROW_TYPES = {"string": StringType(), "bigint": LongType(),
+              "int": IntegerType(), "double": DoubleType(),
+              "boolean": BooleanType(), "timestamp": TimestampType()}
+
+
+def _row_schema(fields: Sequence[tuple[object, str, str]]) -> StructType:
+    """The Spark schema of a row of ``(value, type, name)`` triples."""
+    return StructType([StructField(c, _ROW_TYPES[t], True)
+                       for _, t, c in fields])
+
+
+def write_row(dst: Path, fields: Sequence[tuple[object, str, str]]) -> None:
+    """Write one row of ``(value, type, name)`` triples as the parquet
+    file ``dst``, from the driver and atomically (:func:`_replace_file`):
+    a failed write leaves ``dst`` as it was. The types come from
+    ``_ROW_TYPES`` (a timestamp is UTC microseconds, as Spark writes it),
+    so no session is needed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    row = pa.Table.from_pylist([{c: v for v, _, c in fields}],
+                               schema=to_arrow_schema(_row_schema(fields)))
+    _replace_file(dst, lambda tmp: pq.write_table(row, str(tmp)))
 
 
 def dedupe_batch_by_pk(batch: list[tuple], key_idx: Sequence[int]) -> list[tuple]:

@@ -10,18 +10,25 @@ sees only partitions ``< batch_id``. Batch b's decisions then depend on
 batches 0..b-1 alone, so a replay repeats them whether or not b's own
 or later partitions are already on disk.
 
-Both ingests drain through :func:`await_drain`; the corpus ingest and
-streaming/pipeline.py write their one-row audit frames with
-:func:`literal_row`.
+A store of one row per batch (the corpus audit) is written by the
+driver with :func:`write_batch_row`, under the same layout and with the
+same replay rule, and runs no Spark job. Both ingests drain through
+:func:`await_drain`.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from datapump_spark.sinks.upsert import write_row
+
+# the one file of a write_batch_row partition
+ROW_FILE = "part-0.parquet"
 
 
 def write_batch(df: DataFrame, batch_id: int, path: str) -> None:
@@ -42,12 +49,20 @@ def read_before(spark: SparkSession, path: str, schema: str,
             .where(F.col("__batch_id") < batch_id).drop("__batch_id"))
 
 
-def literal_row(spark: SparkSession,
-                fields: list[tuple[object, str, str]]) -> DataFrame:
-    """One row of ``(value, type, name)`` literals over ``range(1)``: a
-    JVM-side row, with no job to parallelize a local list."""
-    return spark.range(1).select(
-        *[F.lit(v).cast(t).alias(c) for v, t, c in fields])
+def write_batch_row(fields: list[tuple[object, str, str]], batch_id: int,
+                    path: str) -> None:
+    """Overwrite this batch's ``__batch_id`` partition of ``path`` with
+    one row of ``(value, type, name)`` triples, written by the driver
+    (:func:`~datapump_spark.sinks.upsert.write_row`) as ``ROW_FILE``: a
+    replay replaces that file atomically. Other parquet files in the
+    partition go first: a :func:`write_batch` of the same store, with its
+    checksum files, or the temporary file of a write that crashed."""
+    part = Path(path) / f"__batch_id={batch_id}"
+    part.mkdir(parents=True, exist_ok=True)
+    for f in part.glob("*.parquet*"):
+        if f.name != ROW_FILE:
+            f.unlink()
+    write_row(part / ROW_FILE, fields)
 
 
 def await_drain(q: StreamingQuery, timeout: float,

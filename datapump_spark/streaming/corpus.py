@@ -13,9 +13,9 @@ survivors append to the corpus.
 The three counts (◀) are ``Observation`` metrics, filled by the first
 action over each frame (the corpus write, or an eager checkpoint before
 it: the recipe's input, the near-dup and span gates) and read only after
-the corpus write returns; the audit row is then literals over
-``range(1)``. On the exact-only path the corpus write is the batch's
-one pass over the data.
+the corpus write returns; the driver then writes the audit row itself
+(streaming/batches.write_batch_row), with no Spark job. On the
+exact-only path the corpus write is the batch's one pass over the data.
 
 Exactly-once without MERGE: every store uses the batch layout of
 streaming/batches.py, so a replayed batch (after a crash between writes,
@@ -48,9 +48,9 @@ from datapump_spark.operators.incremental import incremental_dedup
 from datapump_spark.operators.quality import with_gopher_keep
 from datapump_spark.streaming.batches import (
     await_drain,
-    literal_row,
     read_before,
     write_batch,
+    write_batch_row,
 )
 
 DOC_SCHEMA = ("doc_id bigint, text string, lang string, source string")
@@ -231,12 +231,11 @@ class StreamingCorpusIngest:
                 write_batch(grams_out, batch_id, self.gram_index_dir)
             n_in, n_good, n_adm = (o.get["n"]
                                    for o in (in_obs, good_obs, adm_obs))
-            audit = literal_row(self.spark, [
-                (n_in, "bigint", "n_in"),
-                (n_in - n_good, "bigint", "n_low_quality"),
-                (n_good - n_adm, "bigint", "n_dup"),
-                (n_adm, "bigint", "n_admitted")])
-            write_batch(audit, batch_id, self.audit_dir)
+            write_batch_row([(n_in, "bigint", "n_in"),
+                             (n_in - n_good, "bigint", "n_low_quality"),
+                             (n_good - n_adm, "bigint", "n_dup"),
+                             (n_adm, "bigint", "n_admitted")],
+                            batch_id, self.audit_dir)
         finally:
             # the operators' internal persists (near-dup signatures,
             # quality, fingerprints) share the session cache scope —

@@ -24,6 +24,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datapump_spark.sinks.upsert import write_row
+
 
 class DriftMonitor:
     """Score micro-batches of ``col`` against a baseline distribution.
@@ -106,17 +108,19 @@ class DriftMonitor:
         """A ready-made foreachBatch function: scores each micro-batch
         and appends the record to a parquet audit table (idempotent per
         batch_id: the file name embeds it, so a replayed batch
-        overwrites its own record instead of duplicating)."""
+        overwrites its own record instead of duplicating). The driver
+        writes each record atomically (sinks/upsert.write_row), so a
+        failed write leaves no torn file for later reads to trip on."""
         audit = Path(audit_dir)
         audit.mkdir(parents=True, exist_ok=True)
 
         def handle(batch: DataFrame, batch_id: int) -> None:
             rec = self.score_batch(batch, batch_id)
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            pq.write_table(
-                pa.Table.from_pylist([rec]),
-                audit / f"batch-{batch_id:012d}.parquet")
+            write_row(audit / f"batch-{batch_id:012d}.parquet", [
+                (rec["batch_id"], "bigint", "batch_id"),
+                (rec["n"], "bigint", "n"),
+                (rec["psi"], "double", "psi"),
+                (rec["tvd"], "double", "tvd"),
+                (rec["alert"], "boolean", "alert")])
 
         return handle

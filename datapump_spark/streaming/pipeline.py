@@ -41,6 +41,7 @@ import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 from pathlib import Path
 
 from pyspark import inheritable_thread_target
@@ -62,7 +63,6 @@ from datapump_spark.sources.csv_ingest import (
     project_typed,
     read_csv_raw,
 )
-from datapump_spark.streaming.batches import literal_row
 
 AUDIT_TABLE = "_audit"
 
@@ -187,19 +187,19 @@ class Pipeline:
 
     def _audit(self, file: str, started: float, n_rows: int, n_dupes: int,
                ok: bool, error: str | None = None) -> None:
-        values = [(self.job.qualified_name, "string", "job"),
-                  (file, "string", "file"),
-                  (n_rows, "bigint", "processed"),
-                  (n_dupes, "bigint", "dupes"),
-                  (round(time.perf_counter() - started, 3), "double",
-                   "elapsed_sec"),
-                  (ok, "boolean", "ok"),
-                  (error, "string", "error")]
-        row = literal_row(self.spark, values).withColumn(
-            "at", F.current_timestamp())
-        # append-only: O(1) parquet files added per event, O(N) total for N
-        # files processed (the audit table is never read-union-rewritten)
-        self.sink.append(row, AUDIT_TABLE)
+        # append-only: one parquet file added per event, written by the
+        # driver (no Spark job), O(N) total for N files processed (the
+        # audit table is never read-union-rewritten)
+        self.sink.append_row([
+            (self.job.qualified_name, "string", "job"),
+            (file, "string", "file"),
+            (n_rows, "bigint", "processed"),
+            (n_dupes, "bigint", "dupes"),
+            (round(time.perf_counter() - started, 3), "double",
+             "elapsed_sec"),
+            (ok, "boolean", "ok"),
+            (error, "string", "error"),
+            (datetime.now(timezone.utc), "timestamp", "at")], AUDIT_TABLE)
 
     # ------------------------------------------------------------ queue drain
 

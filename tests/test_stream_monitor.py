@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import random
+from pathlib import Path
 
 import pytest
 
@@ -70,3 +71,33 @@ def test_streaming_foreachbatch_audit(spark, monitor, tmp_path):
     assert len(audit) == 2
     by_alert = sorted(r["alert"] for r in audit)
     assert by_alert == [False, True]    # one clean batch, one shifted
+
+
+def test_failed_audit_write_leaves_no_torn_file(spark, monitor, tmp_path,
+                                                monkeypatch):
+    """A record write that raises after writing part of its file leaves
+    no visible file behind, so the audit table still reads, with its
+    earlier record in the monitor's column types."""
+    import pyarrow.parquet as pq
+
+    audit = tmp_path / "audit"
+    handle = monitor.audit_sink(spark, audit)
+    batch = spark.createDataFrame([(0.1,), (0.2,)], "v double")
+    handle(batch, 0)
+    write_table = pq.write_table
+
+    def torn(table, where, *args, **kwargs):
+        write_table(table, where, *args, **kwargs)
+        data = Path(where).read_bytes()
+        Path(where).write_bytes(data[:len(data) // 2])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", torn)
+    with pytest.raises(OSError, match="disk full"):
+        handle(batch, 1)
+    assert [p.name for p in audit.iterdir()] == ["batch-000000000000.parquet"]
+    df = spark.read.parquet(str(audit))
+    assert df.dtypes == [("batch_id", "bigint"), ("n", "bigint"),
+                         ("psi", "double"), ("tvd", "double"),
+                         ("alert", "boolean")]
+    assert [(r["batch_id"], r["n"]) for r in df.collect()] == [(0, 2)]
